@@ -148,8 +148,7 @@ object BinaryStore {
     */
   def build(emb: DataFrame, dir: String): Unit = {
     val s = emb.sparkSession
-    FlatManifest.prepareBuildDir(s, dir,
-      Set("codes", "vectors", "tombstones"))
+    FlatManifest.prepareBuildDir(s, dir)(Set("codes", "vectors"))
     writeGen(emb, dir, 0L)
     FlatManifest.commit(s, dir, Snap(epoch = 1L, gens = Seq(0L),
       tombs = Nil, ingested = Set.empty, ingestLow = 0L,
@@ -259,14 +258,11 @@ object BinaryStore {
     * `spark.graft.index.retainEpochs` above 1, time-travel epochs'
     * data is protected.
     */
-  def vacuum(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    gcSweep(s, dir).toSeq.sortBy(_._1).toDF("kind", "n_removed")
-  }
+  def vacuum(s: SparkSession, dir: String): DataFrame =
+    FlatManifest.report(s, gcSweep(s, dir))
 
   private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
-    FlatManifest.gcSweep(s, dir, Seq("codes", "vectors"),
-      Seq("tombstones"))
+    FlatManifest.gcSweep(s, dir, Seq("codes", "vectors"))
 
   /** Per-generation occupancy of the committed snapshot: (gen
     * [logical: internal generations read as 0], n_codes) plus the
@@ -418,8 +414,7 @@ object BinaryStore {
     */
   def buildLabeled(emb: DataFrame, dir: String): Unit = {
     val s = emb.sparkSession
-    FlatManifest.prepareBuildDir(s, dir,
-      Set("codes", "vectors", "tombstones"))
+    FlatManifest.prepareBuildDir(s, dir)(Set("codes", "vectors"))
     writeGenLabeled(emb, dir, 0L)
     FlatManifest.commit(s, dir, Snap(epoch = 1L, gens = Seq(0L),
       tombs = Nil, ingested = Set.empty, ingestLow = 0L,

@@ -152,8 +152,7 @@ object IvfBinaryStore {
   def build(emb: DataFrame, dir: String): Unit = {
     val s = emb.sparkSession
     import s.implicits._
-    FlatManifest.prepareBuildDir(s, dir,
-      Set("centroids", "codes", "vectors", "tombstones"))
+    FlatManifest.prepareBuildDir(s, dir)(Set("centroids", "codes", "vectors"))
     val seeds = emb.filter($"vec_id" < 16)
       .select($"vec_id".as("cid"), $"qv".as("cq"))
     val (learned, _) = VectorOps.lloydTrain(emb, seeds,
@@ -266,14 +265,11 @@ object IvfBinaryStore {
   /** Standalone GC sweep — reclaims whatever no RETAINED manifest
     * references.
     */
-  def vacuum(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    gcSweep(s, dir).toSeq.sortBy(_._1).toDF("kind", "n_removed")
-  }
+  def vacuum(s: SparkSession, dir: String): DataFrame =
+    FlatManifest.report(s, gcSweep(s, dir))
 
   private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
-    FlatManifest.gcSweep(s, dir, Seq("codes", "vectors"),
-      Seq("tombstones"))
+    FlatManifest.gcSweep(s, dir, Seq("codes", "vectors"))
 
   /** Per-generation live occupancy plus the (-1, total) rollup —
     * [[addBatch]]'s return surface.

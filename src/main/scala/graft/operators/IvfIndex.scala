@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -19,6 +19,8 @@ import org.apache.spark.sql.expressions.Window
   *     posting generations. The highest committed epoch IS the index.
   *   - `centroids_v<K>/` — immutable centroid-table versions (cid, cq);
   *     the manifest points at exactly one.
+  *   - `pqcodebook_v<K>/` — immutable PQ codebook versions, for the
+  *     compressed store only ([[buildPq]]).
   *   - `postings/cid=<C>/gen=<G>/` — immutable posting generation
   *     directories: (vec_id, qv) partitioned by cell id then
   *     generation. Partitioning by cell id is the scale decision: a
@@ -30,40 +32,20 @@ import org.apache.spark.sql.expressions.Window
   *     and the monotonically decreasing gens compaction/splits mint).
   *   - `tombstones/` — the append-only delete log ([[delete]]).
   *
-  * == Commit protocol (why readers never see a half write) ==
-  * Every mutation follows write-new-files -> commit-manifest ->
-  * garbage-collect, in that order:
-  *   1. New data lands ONLY in directories no committed manifest
-  *      references (a fresh generation dir, a fresh centroid version).
-  *   2. The manifest for epoch N+1 is written to a temp file and
-  *      renamed into place — a single small-file publish (atomic on
-  *      HDFS/local; a single PUT on an object store), with the rename
-  *      return value checked.
-  *   3. Only after the commit are superseded directories deleted.
-  * A crash ANYWHERE before step 2 leaves the highest committed manifest
-  * pointing at exactly the old directories — readers keep serving the
-  * old snapshot and never observe partial state (orphaned uncommitted
-  * files are invisible because [[postings]] filters to the manifest's
-  * valid (cid, gen) set, pushed as a partition-pruning predicate). A
-  * crash after step 2 leaves at worst unreferenced garbage for the next
-  * mutation's GC. NO data directory is ever renamed or rewritten in
-  * place — the object-store-safe discipline (rename-as-copy only ever
-  * touches the one-line manifest). All control-plane I/O goes through
-  * the Hadoop [[FileSystem]] bound to the session's configuration, so
-  * the same code runs against local fs, HDFS, or an object store.
-  *
-  * == Replay idempotency ==
-  * Ingest generations are caller-named (the streaming sink uses
-  * batchId + 1). The manifest records which generations have committed
-  * as a BOUNDED structure — a contiguous high-water mark plus the
-  * out-of-order set above it ([[Snapshot]]) — so a replayed
-  * [[addBatch]] for a committed generation is a metadata no-op even if
-  * compaction has since folded that generation away, and at-least-once
-  * foreachBatch recovery yields exactly-once index contents with O(1)
-  * manifest state for a sequential writer. A replay of an UNcommitted
-  * attempt re-writes the same (cid, gen) partitions via dynamic
-  * partition overwrite, replacing any partial leftovers instead of
-  * appending to them.
+  * == Commit protocol ==
+  * The manifest protocol — write new files, commit the manifest, then
+  * GC; the stale-epoch guard, retention window, crash argument and the
+  * ingest watermark that makes a replayed [[addBatch]] a no-op — is the
+  * shared one in [[ManifestProtocol]]; [[IndexManifest]] supplies only
+  * the index's body keys (`centroids`, `pqcodebook`, `cell=`), and
+  * [[gcSweep]] / [[verifySnapshotData]] its layout's data sweep and
+  * existence check. Index data is never renamed: a mutation writes
+  * fresh partitions, and a replay of an UNcommitted attempt re-writes
+  * the same (cid, gen) partitions via dynamic partition overwrite,
+  * replacing any partial leftovers instead of appending to them.
+  * Readers filter [[postings]] to the manifest's valid (cid, gen) set,
+  * pushed as a partition-pruning predicate, so uncommitted files are
+  * invisible.
   *
   * Operations:
   *   - [[build]]: train to convergence, write both relations, commit
@@ -95,154 +77,66 @@ object IvfIndex {
   private def tombDir(dir: String) = s"$dir/tombstones"
   private def centDir(dir: String, ver: Long) = s"$dir/centroids_v$ver"
 
-  // ---------- control plane: Hadoop FS + manifest ----------
-
-  private def fs(s: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+  // ---------- control plane: the shared manifest protocol ----------
 
   /** One committed index state. `cells` maps cid -> valid physical
-    * generations; `nextInternal` is the next internal generation id
-    * (negative, decreasing — compaction/split outputs, disjoint from
-    * caller gens by sign so an ingest replay can never clobber folded
-    * data); `tombs` is the committed tombstone SET ids (delete batches)
-    * in effect at this epoch — snapshot-scoped, so a time-travel read
-    * never sees a delete committed after its epoch; `pqVer` is the
-    * committed PQ codebook VERSION (0 = uncompressed store) — versioned
-    * like the centroids, so a [[retrainPq]] bumps it and a time-travel
-    * read decodes with the codebook in force at its epoch, never the
-    * latest.
-    *
-    * Ingest replay-dedup state is BOUNDED: `ingestLow` is the
-    * high-water mark below which EVERY generation is committed (the
-    * contiguous prefix), and `ingested` holds only the out-of-order
-    * generations ABOVE it. A sequential writer (the streaming sink:
-    * gen = batchId + 1) keeps `ingested` permanently empty and the
-    * manifest O(1) in stream length — the unbounded
-    * one-long-per-batch-forever growth this replaces was rewritten
-    * into every manifest and re-parsed per serve trigger. Commits
-    * above the mark park in the set until the gap fills, then the
-    * mark advances and absorbs them ([[Snapshot.withIngested]]).
-    * Documented at-least-once window: a generation at or below the
-    * mark is treated as already ingested even if the caller never
-    * actually committed it — callers must name generations
-    * monotonically (the sink does) or accept that skipped ids below
-    * the mark cannot be back-filled.
+    * generations; `pqVer` is the committed PQ codebook VERSION (0 =
+    * uncompressed store) — versioned like the centroids, so a
+    * [[retrainPq]] bumps it and a time-travel read decodes with the
+    * codebook in force at its epoch, never the latest. The shared state
+    * (tombstone sets, ingest watermark, internal generation ids) is
+    * [[ManifestState]]'s.
     */
   private[graft] case class Snapshot(epoch: Long, centroidsVer: Long,
       cells: Map[Long, Seq[Long]], ingested: Set[Long], nextInternal: Long,
-      tombs: Seq[Long] = Nil, pqVer: Long = 0L, ingestLow: Long = 0L) {
-    /** Is `gen` an already-committed ingest generation (replay = no-op)? */
-    def committedIngest(gen: Long): Boolean =
-      gen <= ingestLow || ingested.contains(gen)
-    /** Record `gen` as committed, advancing the contiguous mark through
-      * any previously-parked out-of-order generations it unblocks.
-      */
-    def withIngested(gen: Long): Snapshot = {
-      var set = ingested + gen
-      var low = ingestLow
-      while (set.contains(low + 1)) { low += 1; set -= low }
-      copy(ingested = set, ingestLow = low)
-    }
+      tombs: Seq[Long] = Nil, pqVer: Long = 0L, ingestLow: Long = 0L)
+      extends ManifestState[Snapshot] {
+    protected def withWatermark(ingested: Set[Long], ingestLow: Long) =
+      copy(ingested = ingested, ingestLow = ingestLow)
   }
 
-  private def manifestName(epoch: Long) = f"manifest-$epoch%09d"
-
-  /** How many trailing epochs' DATA the index guarantees readable —
-    * the time-travel window. 1 (the default) = latest snapshot only:
-    * every mutation's GC may immediately reclaim what the new manifest
-    * no longer references, which is the minimal-footprint posture. A
-    * deployment that serves [[serveAt]] reads raises it; GC (inline
-    * after mutations, and [[vacuum]]) then protects everything any
-    * retained manifest references. One spare manifest FILE beyond the
-    * window survives for torn-read recovery, but its data is not
-    * protected — it is recovery metadata, not a snapshot guarantee.
+  /** The index's body keys on the shared protocol: the centroid
+    * version, the PQ codebook version (omitted for an uncompressed
+    * store) and one `cell=<cid>:<gens>` line per cell.
     */
-  private def retainEpochs(s: SparkSession): Int =
-    math.max(1, s.conf.get("spark.graft.index.retainEpochs", "1").toInt)
+  private[graft] object IndexManifest extends ManifestProtocol("index") {
+    type S = Snapshot
 
-  private def parseManifest(s: SparkSession, dir: String,
-      p: Path): Snapshot = {
-    val f = fs(s, dir)
-    val in = f.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val epoch = p.getName.stripPrefix("manifest-").toLong
-    var ver = 0L
-    var pqVer = 0L
-    var ingestLow = 0L
-    var nextInternal = -1L
-    var ingested = Set.empty[Long]
-    var cells = Map.empty[Long, Seq[Long]]
-    var tombs = Seq.empty[Long]
-    text.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { ln =>
-      val Array(k, v) = ln.split("=", 2)
-      k match {
-        case "centroids" => ver = v.toLong
-        case "pqcodebook" => pqVer = v.toLong
-        case "next_internal" => nextInternal = v.toLong
-        case "ingested" =>
-          ingested = if (v.isEmpty) Set.empty
-            else v.split(",").map(_.toLong).toSet
-        case "ingest_low" => ingestLow = v.toLong
-        case "tombs" =>
-          tombs = if (v.isEmpty) Seq.empty
-            else v.split(",").map(_.toLong).toSeq
-        case "cell" =>
-          val Array(cid, gens) = v.split(":", 2)
-          cells += cid.toLong ->
-            (if (gens.isEmpty) Seq.empty[Long]
-             else gens.split(",").map(_.toLong).toSeq)
-        case other => throw new IllegalStateException(
-          s"unknown manifest key '$other' in $p")
-      }
+    protected val layout = Seq("centroids", "pqcodebook", "next_internal",
+      "ingest_low", "ingested", "tombs", "cell")
+
+    protected def body(snap: Snapshot, key: String) = key match {
+      case "centroids" => Seq(snap.centroidsVer.toString)
+      case "pqcodebook" =>
+        if (snap.pqVer > 0) Seq(snap.pqVer.toString) else Nil
+      case "cell" => snap.cells.toSeq.sortBy(_._1)
+        .map { case (cid, gens) => s"$cid:${ids(gens)}" }
     }
-    require(ver > 0, s"manifest $p names no centroid version")
-    Snapshot(epoch, ver, cells, ingested, nextInternal, tombs, pqVer,
-      ingestLow)
+
+    protected def decode(where: String, epoch: Long, sh: Shared,
+        body: Seq[(String, String)]): Snapshot = {
+      def last(k: String) = body.collect { case (`k`, v) => v.toLong }
+        .lastOption.getOrElse(0L)
+      val ver = last("centroids")
+      require(ver > 0, s"manifest $where names no centroid version")
+      val cells = body.collect { case ("cell", v) =>
+        val Array(cid, gens) = v.split(":", 2)
+        cid.toLong -> longs(gens)
+      }.toMap
+      Snapshot(epoch, ver, cells, sh.ingested, sh.nextInternal, sh.tombs,
+        last("pqcodebook"), sh.ingestLow)
+    }
   }
 
-  private def manifestPaths(s: SparkSession, dir: String): Seq[Path] = {
-    val found = fs(s, dir).globStatus(new Path(dir, "manifest-*"))
-    if (found == null) Seq.empty else found.map(_.getPath).toSeq
-  }
+  private[graft] def readSnapshot(s: SparkSession, dir: String): Snapshot =
+    IndexManifest.read(s, dir)
 
-  private[graft] def readSnapshot(s: SparkSession, dir: String): Snapshot = {
-    val paths = manifestPaths(s, dir)
-    require(paths.nonEmpty,
-      s"no committed manifest under $dir — not an index (or build crashed pre-commit)")
-    parseManifest(s, dir,
-      paths.maxBy(_.getName.stripPrefix("manifest-").toLong))
-  }
-
-  /** The snapshot committed AS OF `epoch` — the time-travel read. Fails
-    * loudly if that epoch's manifest has been retired by the retention
-    * window (raise `spark.graft.index.retainEpochs` BEFORE the
-    * mutations whose pre-state you want to serve), and ALSO if the
-    * snapshot's referenced data no longer physically exists: the window
-    * check runs against the CURRENT conf, which can be raised after a
-    * narrower window's GC already reclaimed the epoch's directories — a
-    * pruned scan over missing directories would silently return partial
-    * results, so [[verifySnapshotData]] existence-checks every referenced
-    * path before any serve plans against the snapshot.
+  /** The time-travel read: [[ManifestProtocol.readAt]] with the index's
+    * [[verifySnapshotData]] existence check.
     */
   private[graft] def readSnapshotAt(s: SparkSession, dir: String,
-      epoch: Long): Snapshot = {
-    val p = new Path(dir, manifestName(epoch))
-    require(fs(s, dir).exists(p),
-      s"index $dir has no readable epoch $epoch — outside the " +
-        "retention window (spark.graft.index.retainEpochs) or never " +
-        "committed")
-    val snap = parseManifest(s, dir, p)
-    val latest = readSnapshot(s, dir)
-    require(latest.epoch - epoch < retainEpochs(s),
-      s"epoch $epoch of $dir is outside the retained data window " +
-        s"(latest ${latest.epoch}, retainEpochs ${retainEpochs(s)}) — " +
-        "its manifest file survives for recovery but its data may be " +
-        "GC'd; raise spark.graft.index.retainEpochs before mutating")
-    verifySnapshotData(s, dir, snap)
-    snap
-  }
+      epoch: Long): Snapshot =
+    IndexManifest.readAt(s, dir, epoch)(verifySnapshotData(s, dir, _))
 
   /** Existence check for everything a snapshot references: the centroid
     * version directory, every committed tombstone set, and every
@@ -255,12 +149,11 @@ object IvfIndex {
     */
   private def verifySnapshotData(s: SparkSession, dir: String,
       snap: Snapshot): Unit = {
-    val f = fs(s, dir)
+    val f = IndexManifest.fs(s, dir)
     def gone(what: String): Nothing = throw new IllegalStateException(
       s"index $dir epoch ${snap.epoch}: $what no longer exists — its " +
         "data was reclaimed by GC under an earlier (narrower) " +
-        "spark.graft.index.retainEpochs window; the historical epoch " +
-        "is unserveable")
+        "retention window; the historical epoch is unserveable")
     if (!f.exists(new Path(centDir(dir, snap.centroidsVer))))
       gone(s"centroid version ${snap.centroidsVer}")
     if (snap.pqVer > 0 && !f.exists(new Path(pqCbDir(dir, snap.pqVer))))
@@ -285,78 +178,6 @@ object IvfIndex {
     }
   }
 
-  /** The retained snapshots — every epoch whose DATA the current
-    * retention window guarantees. GC protects exactly their union.
-    */
-  private def retainedSnapshots(s: SparkSession, dir: String): Seq[Snapshot] = {
-    val paths = manifestPaths(s, dir)
-    require(paths.nonEmpty, s"no committed manifest under $dir")
-    val latest = paths.map(_.getName.stripPrefix("manifest-").toLong).max
-    paths.filter(_.getName.stripPrefix("manifest-").toLong >
-        latest - retainEpochs(s))
-      .map(p => parseManifest(s, dir, p))
-  }
-
-  /** Publish a snapshot: temp write + checked rename (step 2 of the
-    * protocol), guarded by an OPTIMISTIC CONCURRENCY check — the
-    * snapshot being committed must still succeed the latest committed
-    * epoch, and the destination must not already exist. Without the
-    * guard, two mutations racing from the same base epoch (say a
-    * manual [[splitCells]] against a live ingest stream) would both
-    * rename to the same manifest name, and POSIX rename REPLACES the
-    * destination silently: the loser's commit — and with it, e.g., an
-    * ingested generation's validity — would vanish while its data
-    * files remain, a lost update the reader could never detect. With
-    * the guard, every non-overlapping race fails LOUDLY on the late
-    * committer (retry = re-read + re-apply); truly simultaneous
-    * commits additionally need a conditional-put / lock primitive,
-    * exactly as for every manifest-pointer table format — the index
-    * assumes one logical writer and turns violations into errors
-    * instead of corruption.
-    *
-    * Superseded manifests beyond the retention window (plus one spare)
-    * are deleted — redundant once a newer epoch exists, but keeping a
-    * spare makes a torn read of the newest file recoverable by hand.
-    */
-  private[graft] def commitSnapshot(s: SparkSession, dir: String,
-      snap: Snapshot): Unit = {
-    val f = fs(s, dir)
-    val tmp = new Path(dir, s".manifest-tmp-${snap.epoch}")
-    val out = f.create(tmp, true)
-    try {
-      val sb = new StringBuilder
-      sb.append(s"centroids=${snap.centroidsVer}\n")
-      if (snap.pqVer > 0) sb.append(s"pqcodebook=${snap.pqVer}\n")
-      sb.append(s"next_internal=${snap.nextInternal}\n")
-      sb.append(s"ingest_low=${snap.ingestLow}\n")
-      sb.append(s"ingested=${snap.ingested.toSeq.sorted.mkString(",")}\n")
-      sb.append(s"tombs=${snap.tombs.sorted.mkString(",")}\n")
-      snap.cells.toSeq.sortBy(_._1).foreach { case (cid, gens) =>
-        sb.append(s"cell=$cid:${gens.sorted.mkString(",")}\n")
-      }
-      out.write(sb.toString.getBytes("UTF-8"))
-    } finally out.close()
-    val committed = f.globStatus(new Path(dir, "manifest-*"))
-    val latest =
-      if (committed == null || committed.isEmpty) 0L
-      else committed.map(_.getPath.getName.stripPrefix("manifest-").toLong).max
-    val dest = new Path(dir, manifestName(snap.epoch))
-    if (latest >= snap.epoch || f.exists(dest)) {
-      f.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"index $dir: epoch ${snap.epoch} is stale (latest committed " +
-          s"$latest) — a concurrent mutation won the race; re-read and " +
-          "re-apply")
-    }
-    require(f.rename(tmp, dest),
-      s"manifest commit failed: rename $tmp -> $dest returned false")
-    val old = f.globStatus(new Path(dir, "manifest-*"))
-    if (old != null) old.map(_.getPath)
-      .filter(_.getName.stripPrefix("manifest-").toLong <
-        snap.epoch - retainEpochs(s))
-      .foreach(p => f.delete(p, false))
-  }
-
   /** The manifest's valid (cid, gen) set as a partition-pruning
     * predicate: a disjunction over cells (bounded by nlists), each
     * restricting `gen` to that cell's committed generations. References
@@ -377,37 +198,18 @@ object IvfIndex {
     * [[verifySnapshotData]]'s strict existence check relies on).
     */
   private def presentCids(s: SparkSession, dir: String): Set[Long] = {
-    val f = fs(s, dir)
+    val f = IndexManifest.fs(s, dir)
     val root = new Path(postDir(dir))
     if (!f.exists(root)) Set.empty
     else f.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
       .filter(_.startsWith("cid=")).map(_.stripPrefix("cid=").toLong).toSet
   }
 
-  /** Prepare a build's target directory. A build OWNS its directory,
-    * but "owns" must not mean "silently destroys whatever path the
-    * caller mistyped": the wipe only proceeds when the directory is
-    * absent, empty, or recognizably an index (every child is a known
-    * index artifact) — anything else fails loudly before a byte is
-    * deleted.
-    */
-  private def prepareBuildDir(s: SparkSession, dir: String): Unit = {
-    val f = fs(s, dir)
-    val p = new Path(dir)
-    if (f.exists(p)) {
-      val foreign = f.listStatus(p).map(_.getPath.getName).filterNot { n =>
-        n.startsWith("manifest-") || n.startsWith(".manifest-tmp-") ||
-          n.startsWith("centroids_v") || n.startsWith("pqcodebook") ||
-          n == "postings" || n == "tombstones" || n == "_SUCCESS"
-      }
-      require(foreign.isEmpty,
-        s"refusing to build into $dir: it contains non-index content " +
-          s"(${foreign.take(5).mkString(", ")}) — builds wipe their " +
-          "target, so the target must be empty or an existing index")
-      f.delete(p, true)
-    }
-    f.mkdirs(p)
-  }
+  /** [[ManifestProtocol.prepareBuildDir]] over the index's artifacts. */
+  private def prepareBuildDir(s: SparkSession, dir: String): Unit =
+    IndexManifest.prepareBuildDir(s, dir)(n =>
+      n.startsWith("centroids_v") || n.startsWith("pqcodebook") ||
+        n == "postings")
 
   private def centroidsOf(s: SparkSession, dir: String,
       snap: Snapshot): DataFrame =
@@ -467,7 +269,7 @@ object IvfIndex {
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("del").parquet(tombDir(dir))
-    commitSnapshot(s, dir, snap.copy(epoch = snap.epoch + 1,
+    IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
       tombs = snap.tombs :+ delId))
   }
 
@@ -526,7 +328,7 @@ object IvfIndex {
       .parquet(postDir(dir))
     val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
     val present = presentCids(s, dir)
-    commitSnapshot(s, dir, Snapshot(1L, 1L,
+    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
       cids.map(c => c -> (if (present.contains(c)) Seq(0L)
         else Seq.empty[Long])).toMap, Set.empty, -1L))
   }
@@ -709,7 +511,7 @@ object IvfIndex {
       .parquet(postDir(dir))
     val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
     val present = presentCids(s, dir)
-    commitSnapshot(s, dir, Snapshot(1L, 1L,
+    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
       cids.map(c => c -> (if (present.contains(c)) Seq(0L)
         else Seq.empty[Long])).toMap, Set.empty, -1L))
   }
@@ -813,7 +615,7 @@ object IvfIndex {
       val touched = ingestFiles(s, dir, newVecs, gen)
       val cells = snap.cells ++ touched.map(c =>
         c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      commitSnapshot(s, dir, snap.withIngested(gen)
+      IndexManifest.commit(s, dir, snap.withIngested(gen)
         .copy(epoch = snap.epoch + 1, cells = cells))
     }
     splitReport(s, dir)
@@ -852,7 +654,7 @@ object IvfIndex {
         .partitionBy("cid", "label", "gen").parquet(postDir(dir))
       val cells = snap.cells ++ touched.map(c =>
         c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      commitSnapshot(s, dir, snap.withIngested(gen)
+      IndexManifest.commit(s, dir, snap.withIngested(gen)
         .copy(epoch = snap.epoch + 1, cells = cells))
     }
     splitReport(s, dir)
@@ -999,7 +801,7 @@ object IvfIndex {
     val present = presentCids(s, dstDir)
     val cells = snap.cells.map { case (c, _) =>
       c -> (if (present.contains(c)) Seq(0L) else Seq.empty[Long]) }
-    commitSnapshot(s, dstDir, Snapshot(1L, 1L, cells, Set.empty,
+    IndexManifest.commit(s, dstDir, Snapshot(1L, 1L, cells, Set.empty,
       snap.nextInternal, Nil, pqVer = if (snap.pqVer > 0) 1L else 0L))
     splitReport(s, dstDir)
   }
@@ -1079,7 +881,7 @@ object IvfIndex {
         // half commits an EMPTY generation list, never a file-less gen.
         // The new cids are fresh, so directory existence IS membership
         // (labeled layouts nest label= between cid= and gen=).
-        val f = fs(s, dir)
+        val f = IndexManifest.fs(s, dir)
         def gensOf(c: Long): Seq[Long] =
           if (f.exists(new Path(postDir(dir), s"cid=$c"))) Seq(g)
           else Seq.empty[Long]
@@ -1090,7 +892,7 @@ object IvfIndex {
       val newVer = snap.centroidsVer + 1
       keptCents.unionByName(newCents)
         .write.mode(SaveMode.Overwrite).parquet(centDir(dir, newVer))
-      commitSnapshot(s, dir, snap.copy(epoch = snap.epoch + 1,
+      IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
         centroidsVer = newVer, cells = cells, nextInternal = intGen))
       // GC strictly after the commit: the old hot-cell directories and
       // the superseded centroid version fall out of the retained set
@@ -1333,7 +1135,7 @@ object IvfIndex {
       .parquet(postDir(dir))
     val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
     val present = presentCids(s, dir)
-    commitSnapshot(s, dir, Snapshot(1L, 1L,
+    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
       cids.map(c => c -> (if (present.contains(c)) Seq(0L)
         else Seq.empty[Long])).toMap, Set.empty, -1L, pqVer = 1L))
   }
@@ -1555,7 +1357,7 @@ object IvfIndex {
         .partitionBy("cid", "gen").parquet(postDir(dir))
       val cells = snap.cells ++ touched.map(c =>
         c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      commitSnapshot(s, dir, snap.withIngested(gen)
+      IndexManifest.commit(s, dir, snap.withIngested(gen)
         .copy(epoch = snap.epoch + 1, cells = cells))
     }
     splitReport(s, dir)
@@ -1601,7 +1403,7 @@ object IvfIndex {
         .partitionBy("cid", "label", "gen").parquet(postDir(dir))
       val cells = snap.cells ++ touched.map(c =>
         c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      commitSnapshot(s, dir, snap.withIngested(gen)
+      IndexManifest.commit(s, dir, snap.withIngested(gen)
         .copy(epoch = snap.epoch + 1, cells = cells))
     }
     splitReport(s, dir)
@@ -1665,7 +1467,7 @@ object IvfIndex {
       .as[Long].collect().toSet
     val cells = snap.cells.map { case (c, _) =>
       c -> (if (touched(c)) Seq(newGen) else Seq.empty[Long]) }
-    commitSnapshot(s, dir, snap.copy(epoch = snap.epoch + 1,
+    IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
       cells = cells, nextInternal = newGen - 1L, tombs = Nil,
       pqVer = newPqVer))
     gcSweep(s, dir)
@@ -1714,7 +1516,7 @@ object IvfIndex {
       .parquet(postDir(dir))
     val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
     val present = presentCids(s, dir)
-    commitSnapshot(s, dir, Snapshot(1L, 1L,
+    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
       cids.map(c => c -> (if (present.contains(c)) Seq(0L)
         else Seq.empty[Long])).toMap, Set.empty, -1L, pqVer = 1L))
   }
@@ -1822,111 +1624,73 @@ object IvfIndex {
     * in-flight commit is never yanked mid-rename). Returns one row per
     * reclaimed path kind: (kind, n_removed).
     *
-    * Scale: one directory listing of the index root + one per cell
+    * Scale: two directory listings of the index root + one per cell
     * directory — metadata-only, no data bytes read; a deployment runs
     * it on the maintenance cadence (after compactions) or from a crash
     * janitor.
     */
-  def vacuum(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    gcSweep(s, dir).toSeq.sortBy(_._1).toDF("kind", "n_removed")
-  }
+  def vacuum(s: SparkSession, dir: String): DataFrame =
+    IndexManifest.report(s, gcSweep(s, dir))
 
-  /** The one GC: reclaim every path no RETAINED manifest references
-    * (see [[retainEpochs]] — with the default window of 1 this is
-    * "everything the latest manifest does not reference", the original
-    * minimal-footprint behavior; with a wider window, time-travel
-    * epochs' data is protected). Runs inline after [[compact]] and
-    * [[splitCells]] and standalone as [[vacuum]]. Metadata-only: one
-    * listing of the index root + one per cell directory.
+  /** The index's data sweep on the shared GC ([[ManifestProtocol.gc]],
+    * which adds the tombstone sets and temp manifests): reclaims posting
+    * generations and whole cell directories no RETAINED manifest
+    * references, and superseded centroid and codebook versions. Runs
+    * inline after [[compact]] and [[splitCells]] and standalone as
+    * [[vacuum]].
     */
-  private def gcSweep(s: SparkSession, dir: String): Map[String, Long] = {
-    val snaps = retainedSnapshots(s, dir)
-    val f = fs(s, dir)
-    val liveCells: Map[Long, Set[Long]] = snaps.flatMap(_.cells.toSeq)
-      .groupBy(_._1).map { case (c, gs) => c -> gs.flatMap(_._2).toSet }
-    val liveCentVers = snaps.map(_.centroidsVer).toSet
-    val livePqVers = snaps.map(_.pqVer).filter(_ > 0).toSet
-    val liveTombs = snaps.flatMap(_.tombs).toSet
-    var orphanGens = 0L
-    var orphanCells = 0L
-    var staleCentroids = 0L
-    var stalePqCodebooks = 0L
-    var tmpManifests = 0L
-    var orphanTombs = 0L
-    val postRoot = new Path(postDir(dir))
-    if (f.exists(postRoot)) {
-      f.listStatus(postRoot).filter(_.isDirectory)
-        .map(_.getPath).filter(_.getName.startsWith("cid=")).foreach { cd =>
-          val cid = cd.getName.stripPrefix("cid=").toLong
-          liveCells.get(cid) match {
-            case None =>
-              require(f.delete(cd, true), s"vacuum failed to delete $cd")
-              orphanCells += 1
-            case Some(gens) =>
-              // plain layout: cid=/gen=; labeled layout: cid=/label=/gen=
-              val genParents = f.listStatus(cd).filter(_.isDirectory)
-                .map(_.getPath)
-                .flatMap(p => if (p.getName.startsWith("label="))
-                  f.listStatus(p).filter(_.isDirectory).map(_.getPath)
-                else Array(p))
-              genParents.filter(_.getName.startsWith("gen=")).foreach { gd =>
-                if (!gens.contains(gd.getName.stripPrefix("gen=").toLong)) {
-                  require(f.delete(gd, true), s"vacuum failed to delete $gd")
-                  orphanGens += 1
+  private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
+    IndexManifest.gc(s, dir) { (f, snaps) =>
+      val liveCells: Map[Long, Set[Long]] = snaps.flatMap(_.cells.toSeq)
+        .groupBy(_._1).map { case (c, gs) => c -> gs.flatMap(_._2).toSet }
+      val liveCentVers = snaps.map(_.centroidsVer).toSet
+      val livePqVers = snaps.map(_.pqVer).filter(_ > 0).toSet
+      var orphanGens = 0L
+      var orphanCells = 0L
+      var staleCentroids = 0L
+      var stalePqCodebooks = 0L
+      val postRoot = new Path(postDir(dir))
+      if (f.exists(postRoot)) {
+        f.listStatus(postRoot).filter(_.isDirectory)
+          .map(_.getPath).filter(_.getName.startsWith("cid=")).foreach { cd =>
+            val cid = cd.getName.stripPrefix("cid=").toLong
+            liveCells.get(cid) match {
+              case None =>
+                require(f.delete(cd, true), s"vacuum failed to delete $cd")
+                orphanCells += 1
+              case Some(gens) =>
+                // plain layout: cid=/gen=; labeled layout: cid=/label=/gen=
+                val genParents = f.listStatus(cd).filter(_.isDirectory)
+                  .map(_.getPath)
+                  .flatMap(p => if (p.getName.startsWith("label="))
+                    f.listStatus(p).filter(_.isDirectory).map(_.getPath)
+                  else Array(p))
+                genParents.filter(_.getName.startsWith("gen=")).foreach { gd =>
+                  if (!gens.contains(gd.getName.stripPrefix("gen=").toLong)) {
+                    require(f.delete(gd, true), s"vacuum failed to delete $gd")
+                    orphanGens += 1
+                  }
                 }
-              }
-          }
-        }
-    }
-    val tombRoot = new Path(tombDir(dir))
-    if (f.exists(tombRoot)) {
-      if (liveTombs.isEmpty) {
-        orphanTombs += f.listStatus(tombRoot)
-          .count(st => st.isDirectory && st.getPath.getName.startsWith("del="))
-        require(f.delete(tombRoot, true),
-          s"vacuum failed to delete $tombRoot")
-      } else {
-        f.listStatus(tombRoot).filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.startsWith("del=")).foreach { dd =>
-            if (!liveTombs.contains(dd.getName.stripPrefix("del=").toLong)) {
-              require(f.delete(dd, true), s"vacuum failed to delete $dd")
-              orphanTombs += 1
             }
           }
       }
-    }
-    f.listStatus(new Path(dir)).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith("centroids_v") &&
-          !liveCentVers.contains(n.stripPrefix("centroids_v").toLong)) {
-        require(f.delete(p, true), s"vacuum failed to delete $p")
-        staleCentroids += 1
-      }
-      if (n.startsWith("pqcodebook_v") &&
-          !livePqVers.contains(n.stripPrefix("pqcodebook_v").toLong)) {
-        require(f.delete(p, true), s"vacuum failed to delete $p")
-        stalePqCodebooks += 1
-      }
-      // only reclaim temp manifests that can never commit: an epoch at
-      // or below the latest committed one would lose the optimistic-
-      // concurrency check anyway. A temp for a FUTURE epoch may belong
-      // to a mutation in flight between create and rename — deleting it
-      // would fail that writer's commit, so leave it for the next sweep.
-      if (n.startsWith(".manifest-tmp-")) {
-        val latestCommitted = snaps.map(_.epoch).max
-        if (n.stripPrefix(".manifest-tmp-").toLong <= latestCommitted) {
-          require(f.delete(p, false), s"vacuum failed to delete $p")
-          tmpManifests += 1
+      f.listStatus(new Path(dir)).map(_.getPath).foreach { p =>
+        val n = p.getName
+        if (n.startsWith("centroids_v") &&
+            !liveCentVers.contains(n.stripPrefix("centroids_v").toLong)) {
+          require(f.delete(p, true), s"vacuum failed to delete $p")
+          staleCentroids += 1
+        }
+        if (n.startsWith("pqcodebook_v") &&
+            !livePqVers.contains(n.stripPrefix("pqcodebook_v").toLong)) {
+          require(f.delete(p, true), s"vacuum failed to delete $p")
+          stalePqCodebooks += 1
         }
       }
+      Map("orphan_gen_dirs" -> orphanGens, "orphan_cell_dirs" -> orphanCells,
+        "stale_centroid_versions" -> staleCentroids,
+        "stale_pq_codebooks" -> stalePqCodebooks)
     }
-    Map("orphan_gen_dirs" -> orphanGens, "orphan_cell_dirs" -> orphanCells,
-      "orphan_tombstone_sets" -> orphanTombs,
-      "stale_centroid_versions" -> staleCentroids,
-      "stale_pq_codebooks" -> stalePqCodebooks,
-      "tmp_manifests" -> tmpManifests)
-  }
 
   /** Physically apply the accumulated tombstones and fold each affected
     * cell's generations into one — the LSM compaction to [[delete]]'s
@@ -1998,12 +1762,12 @@ object IvfIndex {
       // tombstone-set list: the deletes are now physical.
       val cells = snap.cells ++ affectedRows.map { case (c, nAfter) =>
         c -> (if (nAfter > 0) Seq(newGen) else Seq.empty[Long]) }
-      commitSnapshot(s, dir, snap.copy(epoch = snap.epoch + 1,
+      IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
         cells = cells, nextInternal = newGen - 1L, tombs = Nil))
     } else if (snap.tombs.nonEmpty) {
       // tombstoned ids that hit no stored posting: nothing to rewrite,
       // but the mask still costs the serve path — retire it.
-      commitSnapshot(s, dir,
+      IndexManifest.commit(s, dir,
         snap.copy(epoch = snap.epoch + 1, tombs = Nil))
     }
     // GC strictly after the commit — the retention-aware sweep removes
@@ -2318,9 +2082,7 @@ object IvfIndex {
     import s.implicits._
     val emb = VectorOps.quantized(s, d)
     val dir = scratch("q164")
-    val prev = s.conf.getOption("spark.graft.index.retainEpochs")
-    s.conf.set("spark.graft.index.retainEpochs", "8")
-    try {
+    IndexManifest.withRetention(s, 8) {
       build(emb.filter($"vec_id" % 5 =!= 0), dir)
       addBatch(s, dir, emb.filter($"vec_id" % 5 === 0))
       delete(s, dir, emb.filter($"vec_id" % 7 === 0).select($"vec_id"))
@@ -2333,9 +2095,6 @@ object IvfIndex {
         .select($"stage", $"query_id", $"rank", $"neighbor", $"dist",
           $"cell_size")
         .orderBy($"stage", $"query_id", $"rank")
-    } finally {
-      prev.fold(s.conf.unset("spark.graft.index.retainEpochs"))(v =>
-        s.conf.set("spark.graft.index.retainEpochs", v))
     }
   }
 
@@ -2357,9 +2116,7 @@ object IvfIndex {
     val emb = VectorOps.quantized(s, d)
     val dir = scratch("q179")
     val dir2 = scratch("q179_clone")
-    val prev = s.conf.getOption("spark.graft.index.retainEpochs")
-    s.conf.set("spark.graft.index.retainEpochs", "8")
-    try {
+    IndexManifest.withRetention(s, 8) {
       build(emb.filter($"vec_id" % 5 =!= 0), dir)
       addBatch(s, dir, emb.filter($"vec_id" % 5 === 0))
       delete(s, dir, emb.filter($"vec_id" % 7 === 0).select($"vec_id"))
@@ -2367,9 +2124,6 @@ object IvfIndex {
       serve(s, dir2, emb.filter($"vec_id" % 100 === 0))
         .select($"query_id", $"rank", $"neighbor", $"dist", $"cell_size")
         .orderBy($"query_id", $"rank")
-    } finally {
-      prev.fold(s.conf.unset("spark.graft.index.retainEpochs"))(v =>
-        s.conf.set("spark.graft.index.retainEpochs", v))
     }
   }
 
@@ -2402,17 +2156,12 @@ object IvfIndex {
     import s.implicits._
     val emb = VectorOps.quantized(s, d)
     val dir = scratch("q168")
-    val prev = s.conf.getOption("spark.graft.index.retainEpochs")
-    s.conf.set("spark.graft.index.retainEpochs", "8")
-    try {
+    IndexManifest.withRetention(s, 8) {
       build(emb.filter($"vec_id" % 5 =!= 0), dir)
       addBatch(s, dir, emb.filter($"vec_id" % 5 === 0))
       delete(s, dir, emb.filter($"vec_id" % 7 === 0).select($"vec_id"))
       compact(s, dir)
       snapshotDiff(s, dir, 1L, readSnapshot(s, dir).epoch)
-    } finally {
-      prev.fold(s.conf.unset("spark.graft.index.retainEpochs"))(v =>
-        s.conf.set("spark.graft.index.retainEpochs", v))
     }
   }
 

@@ -178,8 +178,7 @@ object MaxSimStore {
     */
   def build(dset: DataFrame, dir: String): Unit = {
     val s = dset.sparkSession
-    FlatManifest.prepareBuildDir(s, dir,
-      Set("chunks", "postings", "df", "tombstones"))
+    FlatManifest.prepareBuildDir(s, dir)(Set("chunks", "postings", "df"))
     // pin the doc set once so the df relation and writeGen's chunk
     // derivation see the SAME materialization (mirrors addBatch)
     val docsCkpt = dset.localCheckpoint(true)
@@ -294,14 +293,11 @@ object MaxSimStore {
   }
 
   /** Standalone GC sweep (the inline one runs after [[compact]]). */
-  def vacuum(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    gcSweep(s, dir).toSeq.sortBy(_._1).toDF("kind", "n_removed")
-  }
+  def vacuum(s: SparkSession, dir: String): DataFrame =
+    FlatManifest.report(s, gcSweep(s, dir))
 
   private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
-    FlatManifest.gcSweep(s, dir, Seq("chunks", "postings", "df"),
-      Seq("tombstones"))
+    FlatManifest.gcSweep(s, dir, Seq("chunks", "postings", "df"))
 
   // ---------- serving ----------
 

@@ -1645,7 +1645,7 @@ object StreamOps {
 
   /** See the retention contract on [[knnIndexServeStream]]. */
   private def requireServeRetention(s: SparkSession): Unit = {
-    val n = s.conf.get("spark.graft.index.retainEpochs", "1").toInt
+    val n = graft.operators.FlatManifest.retainEpochs(s)
     require(n >= 2,
       s"index serve streams need spark.graft.index.retainEpochs >= 2 " +
         s"(got $n): with a 1-epoch window, a concurrent mutating " +
@@ -2133,9 +2133,9 @@ object StreamOps {
     * delete / compact / vacuum), so serves follow the epoch-keyed
     * retention contract shared with the other serve streams: each
     * trigger reads the manifest committed at that moment, and
-    * `graft.store.retainEpochs >= 2` (enforced below) keeps the prior
-    * epoch's generation directories alive for the duration of any
-    * mid-flight batch while maintenance commits land concurrently.
+    * `spark.graft.index.retainEpochs >= 2` (enforced below) keeps the
+    * prior epoch's generation directories alive for the duration of
+    * any mid-flight batch while maintenance commits land concurrently.
     *
     * Scale: per trigger the corpus-side reads are the batch's probed
     * bucket directories (≤ [[graft.operators.MaxSimStore.Buckets]]) and

@@ -220,4 +220,20 @@ class BinaryStoreSpec extends SparkSpec {
       assert(r.getLong(3) == best(r.getLong(0)))
     }
   }
+
+  test("vacuum counts a committed generation's leftover tmp dir as tmp_gen_dirs") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_bin_tmpgen")
+      .toString
+    BinaryStore.build(VectorOps.quantized(spark, sfDir), d) // commits gen 0
+    // the write-then-rename crash window, replayed to a commit since:
+    // the tmp data dir of the committed generation is garbage
+    val leftover = new java.io.File(s"$d/codes/.gen-tmp-0")
+    assert(leftover.mkdirs())
+    val report = BinaryStore.vacuum(spark, d).as[(String, Long)].collect()
+      .toMap
+    assert(report("tmp_gen_dirs") === 1L, report.toString)
+    assert(report("tmp_manifests") === 0L, report.toString)
+    assert(!leftover.exists)
+  }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{IvfIndex, VectorOps}
+import graft.operators.{BinaryStore, FlatManifest, IvfIndex, ManifestState,
+  VectorOps}
 
 /** Persisted-IVF-index evidence: the parquet roundtrip is lossless, the
   * stored-index serve equals an in-memory serve, incremental ingest
@@ -650,23 +651,39 @@ class IvfIndexSpec extends SparkSpec {
   test("a racing commit from a stale epoch fails loudly instead of clobbering") {
     import spark.implicits._
     val emb = VectorOps.quantized(spark, sfDir)
-    val dir = tmp("race") + "/idx"
-    IvfIndex.build(emb.filter($"vec_id" % 5 =!= 0), dir)
-    // two mutations race from the same base snapshot: the first commits
-    val base = IvfIndex.readSnapshot(spark, dir)
-    IvfIndex.addBatch(spark, dir, emb.filter($"vec_id" % 5 === 0))
-    val afterWinner = IvfIndex.postings(spark, dir).count()
-    // ...the second (still holding the stale base) must NOT silently
-    // replace the winner's manifest — that would orphan the ingested
-    // generation while its files remain
-    intercept[java.util.ConcurrentModificationException] {
-      IvfIndex.commitSnapshot(spark, dir,
-        base.copy(epoch = base.epoch + 1))
+    val base = emb.filter($"vec_id" % 5 =!= 0)
+    val batch = emb.filter($"vec_id" % 5 === 0)
+    // per store kind: build, then two mutations race from the same base
+    // snapshot — the first (an ingest of generation 1) commits, and the
+    // returned thunk is the second, still holding the stale base
+    Seq[(String, String => (() => Unit), String => Long,
+        String => ManifestState[_])](
+      ("IvfIndex", { dir =>
+        IvfIndex.build(base, dir)
+        val stale = IvfIndex.readSnapshot(spark, dir)
+        IvfIndex.addBatch(spark, dir, batch)
+        () => IvfIndex.IndexManifest.commit(spark, dir,
+          stale.copy(epoch = stale.epoch + 1))
+      }, IvfIndex.postings(spark, _).count(), IvfIndex.readSnapshot(spark, _)),
+      ("BinaryStore", { dir =>
+        BinaryStore.build(base, dir)
+        val stale = FlatManifest.read(spark, dir)
+        BinaryStore.addBatch(spark, dir, batch, gen = 1L)
+        () => FlatManifest.commit(spark, dir,
+          stale.copy(epoch = stale.epoch + 1))
+      }, BinaryStore.liveCodes(spark, _).count(), FlatManifest.read(spark, _))
+    ).foreach { case (kind, race, live, latest) =>
+      val dir = tmp("race") + "/idx"
+      val staleCommit = race(dir)
+      val afterWinner = live(dir)
+      // ...the second must NOT silently replace the winner's manifest —
+      // that would orphan the ingested generation while its files remain
+      intercept[java.util.ConcurrentModificationException] { staleCommit() }
+      assert(live(dir) === afterWinner,
+        s"$kind: the winning commit must survive the stale committer")
+      assert(latest(dir).committedIngest(1L),
+        s"$kind: the ingested generation must still be committed")
     }
-    assert(IvfIndex.postings(spark, dir).count() === afterWinner,
-      "the winning commit must survive the stale committer")
-    assert(IvfIndex.readSnapshot(spark, dir).committedIngest(1L),
-      "the ingested generation must still be committed")
   }
 
   test("vacuum reclaims exactly the unreferenced directories, contents untouched") {
@@ -840,20 +857,24 @@ class IvfIndexSpec extends SparkSpec {
   test("vacuum leaves an in-flight temp manifest (future epoch), reclaims stale ones") {
     import spark.implicits._
     val emb = VectorOps.quantized(spark, sfDir)
-    val dir = tmp("tmpman") + "/idx"
-    IvfIndex.build(emb, dir) // epoch 1
-    // a stale temp (epoch <= committed head: its commit would lose the
-    // optimistic check anyway) and an in-flight temp for the NEXT epoch
-    // (a concurrent mutation between create and rename)
-    val stale = new java.io.File(dir, ".manifest-tmp-1")
-    val inflight = new java.io.File(dir, ".manifest-tmp-2")
-    assert(stale.createNewFile() && inflight.createNewFile())
-    val report = IvfIndex.vacuum(spark, dir)
-      .as[(String, Long)].collect().toMap
-    assert(report("tmp_manifests") === 1L, report.toString)
-    assert(!stale.exists, "the stale temp must be reclaimed")
-    assert(inflight.exists,
-      "an in-flight temp manifest must never be yanked mid-commit")
+    Seq[(String, String => Unit, String => org.apache.spark.sql.DataFrame)](
+      ("IvfIndex", IvfIndex.build(emb, _), IvfIndex.vacuum(spark, _)),
+      ("BinaryStore", BinaryStore.build(emb, _), BinaryStore.vacuum(spark, _))
+    ).foreach { case (kind, build, vacuum) =>
+      val dir = tmp("tmpman") + "/idx"
+      build(dir) // epoch 1
+      // a stale temp (epoch <= committed head: its commit would lose the
+      // optimistic check anyway) and an in-flight temp for the NEXT epoch
+      // (a concurrent mutation between create and rename)
+      val stale = new java.io.File(dir, ".manifest-tmp-1")
+      val inflight = new java.io.File(dir, ".manifest-tmp-2")
+      assert(stale.createNewFile() && inflight.createNewFile())
+      val report = vacuum(dir).as[(String, Long)].collect().toMap
+      assert(report("tmp_manifests") === 1L, s"$kind: $report")
+      assert(!stale.exists, s"$kind: the stale temp must be reclaimed")
+      assert(inflight.exists,
+        s"$kind: an in-flight temp manifest must never be yanked mid-commit")
+    }
   }
 
   test("ingest replay-dedup state stays O(1) for a sequential writer, bounded under disorder") {

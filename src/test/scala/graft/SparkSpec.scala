@@ -15,13 +15,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * changes other suites' GC behavior (it did: two IvfIndexSpec
     * GC-sensitive cases failed only under full-suite ordering).
     */
-  def withIndexRetention[A](n: Int)(body: => A): A = {
-    val key = "spark.graft.index.retainEpochs"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def withIndexRetention[A](n: Int)(body: => A): A =
+    graft.operators.FlatManifest.withRetention(spark, n)(body)
 }
 
 object SparkSpec {
