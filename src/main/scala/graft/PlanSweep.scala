@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit sweep: per-query physical-operator census over the whole
   * catalog to spot scale hazards — cartesian products, unexpected global
   * sorts, missed broadcasts. Round-2 audit: zero CartesianProduct;
@@ -33,12 +31,7 @@ object PlanSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val prefixes = if (args.length > 1) args(1).split(",").toSeq else Seq("")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val interesting = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
       "SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin", "Sort ",
       "TakeOrderedAndProject", "Exchange", "WindowGroupLimit")

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps formatted physical plans for representative queries → PLANS.md.
   * Usage: runMain graft.Plans [sfDir] [outFile]
@@ -105,13 +104,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus)
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by `runMain graft.Plans`)\n\n")
     sb.append(s"Data: `$sfDir`. Plans are the pre-execution formatted plans; AQE\n")

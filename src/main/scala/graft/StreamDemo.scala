@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.StreamOps
 
@@ -12,13 +11,7 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val eps = args.headOption.map(_.toInt).getOrElse(1000)
     val secs = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val bids = StreamOps.bidStream(spark, eps)
     val q = StreamOps.toMemory(
       StreamOps.tumblingCounts(bids.toDF(), "2 seconds", "0 seconds"),

@@ -25,8 +25,8 @@ object Tables {
     * RESTRICTION (round-14 advice): the cache is keyed on path with no
     * invalidation, so rewriting a path WITH A DIFFERENT SCHEMA inside
     * one JVM would serve the stale StructType. No flow does this
-    * (MakeBigSf reads src, writes dst; regroup_sf.py is out-of-process
-    * and schema-preserving); a tool that regenerates data in place must
+    * (MakeBigSf reads src, writes dst); a tool that regenerates data in
+    * place must
     * call [[clearSchemaCache]] first.
     */
   private val schemaCache =

@@ -8,22 +8,11 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated name-prefix filter (local iteration)
     val prefixes = if (args.length > 2) args(2).split(",").toSeq else Seq("")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // static conf; the 140-query catalog shares many generated-class
-      // shapes (tokenize/hash subtrees) — default cache of 100 thrashes
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
+    val spark = Session.local(Session.cpus,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       // processing-time queries replay a deterministic arrival model here
       // so their DuckDB oracles can recompute them (graft.functions.ProcTime)
-      .config(graft.functions.ProcTime.ModeKey,
-        graft.functions.ProcTime.Deterministic)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      graft.functions.ProcTime.ModeKey -> graft.functions.ProcTime.Deterministic)
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
       .filter { case (name, _) => prefixes.exists(name.startsWith) }

@@ -418,8 +418,8 @@ private[graft] object FlatManifest extends ManifestProtocol("store") {
     * as `<root>/gen=<gen>`. Replaces the previous dynamic-partition-
     * overwrite writes, whose commit stages and moves every partition
     * directory one by one on the driver: for micro-batch generations
-    * that commit path cost ~3× the write itself (round-15 IngestProbe:
-    * 64-bucket vectors write 1.0–2.0 s dyn-overwrite vs 0.4 s
+    * that commit path cost ~3× the write itself (recorded in VERDICT.md,
+    * round 15: 64-bucket vectors write 1.0–2.0 s dyn-overwrite vs 0.4 s
     * tmp+rename at 128 rows). On-disk layout and read semantics are
     * identical (`gen` stays a discovered partition directory; the tmp
     * dir's leading dot hides it from partition discovery). Crash
@@ -481,9 +481,9 @@ private[graft] object FlatManifest extends ManifestProtocol("store") {
     }
 }
 
-/** Scratch directories for catalog entries and bench tools that build a
-  * store as part of their run. Paths are FIXED per (process, name):
-  * stable across Bench reps and repeated in-session Verify runs (the
+/** Scratch directories for catalog entries that build a store as part
+  * of their run. Paths are FIXED per (process, name): stable across
+  * repeated runs of an entry in one JVM (benchmark sweeps, Verify; the
   * builds wipe and rebuild — no accumulation), but suffixed with the
   * Spark application id so two CONCURRENT processes (say a driver
   * Verify beside a builder's local run) can never serve each other's

@@ -1257,11 +1257,12 @@ object IvfIndex {
     * distance is within [[AdaptRatioNum]]/[[AdaptRatioDen]] of the
     * best, never past [[AdaptMaxProbes]] cells. 21/20 is the
     * mass-parity point vs fixed nprobe=2 on the sf0.1 sweep
-    * (AdaptiveProbe): probed mass 4978 vs 4968 with routing ceiling
-    * 490 vs 480‰ and refine-100 recall 480 vs 470‰ — the margin is
-    * small on the near-isotropic synthetic corpus (centroid-distance
-    * ratios cluster near 1, so the rule has little signal to work
-    * with) and is the lever that grows on clustered real embeddings.
+    * (BENCH_SF10.json `adaptive_probe_round12`): probed mass 4978 vs
+    * 4968 with routing ceiling 490 vs 480‰ and refine-100 recall 480
+    * vs 470‰ — the margin is small on the near-isotropic synthetic
+    * corpus (centroid-distance ratios cluster near 1, so the rule has
+    * little signal to work with) and is the lever that grows on
+    * clustered real embeddings.
     */
   private[graft] val AdaptRatioNum = 21L
   private[graft] val AdaptRatioDen = 20L
@@ -1802,7 +1803,7 @@ object IvfIndex {
   }
 
   /** Per-entry scratch index dirs: FIXED per (process, entry) — stable
-    * across Bench reps and repeated in-session Verify runs (re-runs
+    * across repeated runs in one JVM (benchmark sweeps, Verify; re-runs
     * overwrite via build's directory wipe, no accumulation) but
     * distinct across concurrent processes ([[Scratch]]).
     */
@@ -2266,16 +2267,17 @@ object IvfIndex {
     * the query probed — what a perfect ranker over the probed cells
     * would score), all against [[VectorOps.exactTop]] "full".
     *
-    * The two recall levers this table measures (AdaptiveProbe sweep,
-    * sf0.1): SHORTLIST WIDTH is the big one — refine-100 recovers
-    * nearly the whole gap to the routing ceiling at ZERO extra probed
-    * mass (nprobe 2: 370 → 470‰ vs ceiling 480; the round-11 "370 vs
-    * 400 ceiling" reading was a shortlist-25 artifact, not a routing
-    * wall). ADAPTIVE ROUTING then buys a further margin at mass parity
-    * (ratio 21/20: ceiling 490 and refine-100 480 vs fixed-2's
-    * 480/470 at +0.2% mass) — small on this near-isotropic synthetic
-    * corpus, whose centroid-distance margins carry little signal, and
-    * exactly the lever that grows on clustered real-world embeddings.
+    * The two recall levers this table measures (sf0.1 sweep recorded
+    * in BENCH_SF10.json `adaptive_probe_round12`): SHORTLIST WIDTH is
+    * the big one — refine-100 recovers nearly the whole gap to the
+    * routing ceiling at ZERO extra probed mass (nprobe 2: 370 → 470‰
+    * vs ceiling 480; the round-11 "370 vs 400 ceiling" reading was a
+    * shortlist-25 artifact, not a routing wall). ADAPTIVE ROUTING then
+    * buys a further margin at mass parity (ratio 21/20: ceiling 490 and
+    * refine-100 480 vs fixed-2's 480/470 at +0.2% mass) — small on this
+    * near-isotropic synthetic corpus, whose centroid-distance margins
+    * carry little signal, and exactly the lever that grows on clustered
+    * real-world embeddings.
     *
     * Scale: four serves of the SAME store, each partition-pruned to
     * its probe set; the routing/mass/ceiling relations are

@@ -316,7 +316,8 @@ object MaxSimStore {
     // sf10 read checkpoint-once as -5% on the 20k-doc audit batch but
     // WORSE on a 100-doc serving batch (the materialization barrier
     // costs more than the recompute saves) — serve cost is dominated
-    // by the pair-scoring tail either way (MaxSimStoreBench split).
+    // by the pair-scoring tail either way (BENCH_SF10.json
+    // `maxsim_store_split_round12`).
     // query-side df lookup, pruned to the batch's token buckets, the
     // live-generation partials summed
     val qtoks = qtokd.select($"tok").distinct()

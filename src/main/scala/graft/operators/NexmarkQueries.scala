@@ -107,7 +107,7 @@ object NexmarkQueries {
   /** The generated relations are deterministic functions of (N, Eps), and
     * every nx_ query re-derives them from `spark.range` — so cache the
     * materialized Dataset per session (MEMORY_ONLY, ~50k narrow rows):
-    * one generation pass serves all 15 queries in a Verify/Bench run
+    * one generation pass serves all 15 queries in a Verify or benchmark run
     * instead of one per query. The cluster analog is a generated source
     * staged once and read many times.
     */

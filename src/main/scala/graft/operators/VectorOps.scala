@@ -1469,7 +1469,8 @@ object VectorOps {
     * the fixed split-round unroll bound its oracle replays. The cap is
     * what makes intra-cell pair mass LINEAR in corpus size
     * (Σ|cell|² ≤ cap·N) — the q171 gate form's fixed 16-cell quantizer
-    * is quadratic (SemDedupScale: 12.57M → 1.258B pairs for 10×).
+    * is quadratic (12.57M → 1.258B pairs for 10×, BENCH_SF10.json
+    * `semdedup_scaling_round11`).
     * MaxRounds bounds the recursion depth: 16 halvings cover a 2^16×
     * over-cap cell under balanced splits — far past any gated scale —
     * and rounds after convergence are identities, so the oracle can
@@ -1649,7 +1650,8 @@ object VectorOps {
     * they would generate is replaced by group arithmetic. The capped
     * recursion then bounds the REMAINING (distinct-vector) intra-cell
     * pair mass to Σ|cell|² ≤ cap·N_distinct — LINEAR where the q171
-    * gate form is quadratic (SemDedupScale prints both).
+    * gate form is quadratic (both recorded in BENCH_SF10.json
+    * `semdedup_scaling_round12`).
     *
     * Verdicts at document granularity: a non-representative copy
     * always drops (exact duplicate); a representative drops by the

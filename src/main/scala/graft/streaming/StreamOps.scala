@@ -465,14 +465,6 @@ object StreamOps {
       }
   }
 
-  /** Configure a builder for the RocksDB state store provider — the
-    * disk-backed state backend (reference S3/EFS backends, state/mod.rs;
-    * Spark's answer is checkpointed RocksDB instead of remote puts).
-    */
-  def withRocksDBState(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
   /** Streaming NEXMark q5 (hot items): append-mode hopping counts emit
     * each window once its watermark closes; the per-window max is then a
     * small per-batch reduction in foreachBatch — the same
@@ -1393,7 +1385,8 @@ object StreamOps {
     * `shortlist >= index size` the refine pass IS the exact scan, so
     * the stream is bit-equal to [[knnStream]] — the spec pins that —
     * and the shortlist knob trades recall for a memory-bandwidth cut
-    * measured by the StreamBench binary_qps row next to knn_qps.
+    * recorded at 32 cpus as 14.0k binary vs 7.9k exact queries/s
+    * (BENCH_r15.json `binary_qps`, `knn_qps`).
     * Per-event work is stateless (no keyed state, any batching), and a
     * dimension-mismatched query emits the same rank -1 sentinel as
     * [[knnStream]]. Dimensions past 64 would need more code words —
@@ -1550,10 +1543,10 @@ object StreamOps {
     * [[graft.operators.IvfIndex.serveCached]] epoch-key discipline;
     * spec-pinned batch-equal across a mid-stream commit). An
     * unchanged epoch pays ONE fused shortlist+refine job per trigger —
-    * what StreamBench's binary_store_qps row measures against
-    * knn_store_qps. Same retention contract as the index serve
-    * streams: a shared-directory mutator's GC needs one epoch of
-    * slack.
+    * recorded at 32 cpus as 336 vs knn_store's 4.9k queries/s
+    * (BENCH_r15.json `binary_store_qps`). Same retention contract as
+    * the index serve streams: a shared-directory mutator's GC needs one
+    * epoch of slack.
     */
   def binaryStoreServeStream(qs: Dataset[VecEvent], dir: String,
       k: Int = 5, width: Int = 20)(
@@ -1921,29 +1914,6 @@ object StreamOps {
           graft.operators.MaxSimStore.compact(s, dir))
       }
     }
-
-  /** [[binaryStoreServeStream]] for the IVF-ROUTED binary store: per
-    * trigger the batch's queries route through the stored centroids,
-    * Hamming-scan only probed cells' codes, and exact-refine — the
-    * cached composed serve against whatever epoch is committed at that
-    * moment. Same retention contract as every store serve stream.
-    */
-  def ivfBinaryServeStream(qs: Dataset[VecEvent], dir: String,
-      k: Int = 5, nprobe: Int = 2, width: Int = 20)(
-      emit: (DataFrame, Long) => Unit): StreamingQuery = {
-    requireServeRetention(qs.sparkSession)
-    toForeachBatch(qs.toDF(), OutputMode.Append) { (batch, batchId) =>
-      if (!batch.isEmpty) {
-        val s = batch.sparkSession
-        val queries = graft.operators.VectorOps.binaryCodes(
-          batch.select(col("qid").as("vec_id"), col("qv")))
-          .select(col("vec_id").as("query_id"), col("qv").as("q_qv"),
-            col("w0").as("qw0"), col("w1").as("qw1"))
-        emit(graft.operators.IvfBinaryStore.serveCached(s, dir, queries,
-          k, nprobe, width), batchId)
-      }
-    }
-  }
 
   /** One admission verdict of [[semDedupStream]] (public: encoder
     * requirement). `dup_of` = the kept member the newcomer duplicated

@@ -1,0 +1,47 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps `src/main` at one harness: the benchmark lives in `flockbench/`,
+  * so the program carries only its five runnable mains, and every one of
+  * them builds its session through [[Session.local]]. Scans the sources;
+  * starts no Spark session.
+  */
+class HarnessGuardSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private val KeptMains =
+    Set("Verify", "Plans", "PlanSweep", "MakeBigSf", "StreamDemo")
+      .map(n => s"graft/$n.scala")
+
+  /** (path under src/main/scala, text) of every Scala source. */
+  private lazy val sources: Seq[(String, String)] = {
+    assert(Files.isDirectory(root), s"run from the repo root: no $root")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p))
+    finally walk.close()
+  }
+
+  private def count(text: String, re: scala.util.matching.Regex): Int =
+    re.findAllMatchIn(text).size
+
+  test("one SparkSession builder in src/main, the factory's") {
+    val sites = sources
+      .map { case (p, t) => p -> count(t, """SparkSession\.builder\(""".r) }
+      .filter(_._2 > 0)
+    assert(sites == Seq("graft/Session.scala" -> 1),
+      s"builder sites outside graft.Session: $sites")
+  }
+
+  test("def main only in the five kept mains") {
+    val mains = sources
+      .filter { case (_, t) => count(t, """\bdef\s+main\s*\(""".r) > 0 }
+      .map(_._1).toSet
+    assert(mains.subsetOf(KeptMains),
+      s"mains outside ${KeptMains.toSeq.sorted}: ${mains.diff(KeptMains)}")
+  }
+}
