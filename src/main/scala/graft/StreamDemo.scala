@@ -11,40 +11,54 @@ object StreamDemo {
   def main(args: Array[String]): Unit = {
     val eps = args.headOption.map(_.toInt).getOrElse(1000)
     val secs = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = Session.local(Session.cpus)
-    val bids = StreamOps.bidStream(spark, eps)
-    val q = StreamOps.toMemory(
-      StreamOps.tumblingCounts(bids.toDF(), "2 seconds", "0 seconds"),
-      "demo", OutputMode.Complete)
-    // KV-sink path: foreachBatch upserts per-auction counts (DynamoDB-style)
-    val store = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    import org.apache.spark.sql.functions._
-    val kv = StreamOps.toForeachBatch(
-      StreamOps.bidStream(spark, eps).toDF()
-        .groupBy(col("auction")).agg(count(lit(1)).as("n"))) { (batch, _) =>
-      batch.collect().foreach(r => store.put(r.getInt(0), r.getLong(1)))
+    // one run-local checkpoint root, deleted only after the session: a
+    // query's temporary checkpoint is deleted on its stop while its
+    // cancelled micro-batch may still be writing state files into it
+    val ckptRoot = java.nio.file.Files.createTempDirectory("graft_demo_ckpt")
+    val spark = Session.local(Session.cpus,
+      "spark.sql.streaming.checkpointLocation" -> ckptRoot.toString)
+    try {
+      val bids = StreamOps.bidStream(spark, eps)
+      val q = StreamOps.toMemory(
+        StreamOps.tumblingCounts(bids.toDF(), "2 seconds", "0 seconds"),
+        "demo", OutputMode.Complete)
+      // KV-sink path: foreachBatch upserts per-auction counts (DynamoDB-style)
+      val store = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      import org.apache.spark.sql.functions._
+      val kv = StreamOps.toForeachBatch(
+        StreamOps.bidStream(spark, eps).toDF()
+          .groupBy(col("auction")).agg(count(lit(1)).as("n"))) { (batch, _) =>
+        batch.collect().foreach(r => store.put(r.getInt(0), r.getLong(1)))
+      }
+      // stream-stream join path: auctions ⋈ bids with range residual
+      val ssj = StreamOps.toMemory(
+        StreamOps.winningBidJoin(
+          StreamOps.auctionStream(spark, eps).toDF(),
+          StreamOps.bidStream(spark, eps).toDF(),
+          "0 seconds", "1 hour")
+          .select(col("a_id"), col("price")),
+        "ssj", OutputMode.Append)
+      // per-window finalize path: streaming q5 hot items
+      val nWinners = new java.util.concurrent.atomic.AtomicLong()
+      val hot = StreamOps.hotItemsStream(
+        StreamOps.bidStream(spark, eps).toDF(), "0 seconds") { winners =>
+        nWinners.addAndGet(winners.count())
+      }
+      q.awaitTermination(secs * 1000L)
+      val queries = Seq("demo" -> q, "kv" -> kv, "ssj" -> ssj, "hot" -> hot)
+      queries.foreach(_._2.stop())
+      // how far each query got: its last completed micro-batch (-1: none)
+      val batches = queries.map { case (n, sq) =>
+        s"$n:${Option(sq.lastProgress).fold(-1L)(_.batchId)}" }.mkString(",")
+      val out = spark.table("demo")
+      val rows = out.count()
+      // a query stopped before its first batch leaves an empty table
+      val total = out.agg(coalesce(sum("num"), lit(0L))).head().getLong(0)
+      val joinRows = spark.table("ssj").count()
+      println(s"STREAM_DEMO windows=$rows total_bids=$total kv_keys=${store.size} join_rows=$joinRows hot_winners=${nWinners.get()} last_batch=$batches")
+    } finally {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(ckptRoot.toFile)
     }
-    // stream-stream join path: auctions ⋈ bids with range residual
-    val ssj = StreamOps.toMemory(
-      StreamOps.winningBidJoin(
-        StreamOps.auctionStream(spark, eps).toDF(),
-        StreamOps.bidStream(spark, eps).toDF(),
-        "0 seconds", "1 hour")
-        .select(col("a_id"), col("price")),
-      "ssj", OutputMode.Append)
-    // per-window finalize path: streaming q5 hot items
-    val nWinners = new java.util.concurrent.atomic.AtomicLong()
-    val hot = StreamOps.hotItemsStream(
-      StreamOps.bidStream(spark, eps).toDF(), "0 seconds") { winners =>
-      nWinners.addAndGet(winners.count())
-    }
-    q.awaitTermination(secs * 1000L)
-    q.stop(); kv.stop(); ssj.stop(); hot.stop()
-    val out = spark.table("demo")
-    val rows = out.count()
-    val total = out.agg(sum("num")).head().getLong(0)
-    val joinRows = spark.table("ssj").count()
-    println(s"STREAM_DEMO windows=$rows total_bids=$total kv_keys=${store.size} join_rows=$joinRows hot_winners=${nWinners.get()}")
-    spark.stop()
   }
 }

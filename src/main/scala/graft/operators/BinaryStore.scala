@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.FlatManifest.Snap
+import graft.operators.GenStore.Root
 
 /** PERSISTED binary-quantization tier — the serving form of q191's
   * two-stage plan, the layout every modern vector store ships beside
@@ -13,20 +14,14 @@ import graft.operators.FlatManifest.Snap
   *     Stage 1 reads ONLY this relation — at 1B vectors it is 16 GB
   *     against the float tier's 256 GB, and the scan is two
   *     xor+popcount per candidate.
-  *   - `vectors/gen=N/bucket=…/` (vec_id, qv): full-precision vectors
-  *     partitioned by generation and a 64-way id bucket. The refine
-  *     fetch collects the shortlist's bucket set (≤ 64 values,
-  *     driver-bounded) and pushes it as a partition filter, so a small
-  *     serving batch reads a handful of directories — the IvfIndex
-  *     probe-list discipline applied to the refine side.
-  *   - `tombstones/del=…/` (vec_id): logical deletes, masked at serve
-  *     and applied physically by [[compact]].
-  *   - `manifest-…`: the [[FlatManifest]] commit marker — the store
-  *     carries the FULL index lifecycle (exactly-once [[addBatch]],
-  *     [[delete]], [[compact]], time travel via [[serveAt]], GC via
-  *     [[vacuum]]) under the same write-new-files → commit-manifest →
-  *     GC protocol as [[IvfIndex]], so a production corpus refresh is
-  *     an incremental commit, not a full rebuild of the 1-bit tier.
+  *   - `vectors/gen=N/bucket=…/` (vec_id, qv): the bucket-pruned
+  *     refine tier ([[BinaryGenStore]]).
+  *   - `tombstones/del=…/` (vec_id), `manifest-…`: the [[GenStore]]
+  *     lifecycle — exactly-once [[addBatch]], delete, compact, time
+  *     travel via `epoch`, vacuum — under the same write-new-files →
+  *     commit-manifest → GC protocol as [[IvfIndex]], so a production
+  *     corpus refresh is an incremental commit, not a full rebuild of
+  *     the 1-bit tier.
   *
   * Serve shares q191's stage code verbatim ([[VectorOps.hamShortlist]]
   * / [[VectorOps.refineRank]]), so store-serve equality is by
@@ -35,533 +30,144 @@ import graft.operators.FlatManifest.Snap
   * build→ingest→delete→compact sequence against a DuckDB replay of
   * the same lifecycle. Caller contract on ids: vec_ids are unique
   * across live generations (an id re-ingested without an intervening
-  * [[delete]] would rank twice, exactly as in the index's postings).
+  * delete would rank twice, exactly as in the index's postings).
+  *
+  * The LABELED (tenant) layout (`labels` = `label`) applies the
+  * [[IvfIndex.buildLabeled]] pruning discipline: codes partition
+  * `gen=…/label=…`, so a same-label serve's stage-1 scan statically
+  * prunes to the batch's label directories (the unselected tenants'
+  * 1-bit bytes are never opened). Generation stays the TOP level — GC
+  * and the time-travel check find generation directories by name, and
+  * a label-first layout would hide them (the labeled soak caught
+  * exactly that on the first cut). Vectors carry `label` as a data
+  * column (the refine fetch is id-keyed and label-blind — the
+  * shortlist is already same-label). A store is labeled or not for its
+  * lifetime.
   *
   * Scale: a build/ingest is one code-pack map pass plus two
-  * partitioned writes (the vectors write repartitions on bucket — one
-  * file per directory, the q156 small-files lesson), cost tracking the
-  * BATCH, never the corpus; a delete is O(batch) tombstone append; a
-  * compaction reads and rewrites live bytes once; a serve is the codes
-  * scan folding map-side to `width` rows per query plus a
-  * bucket-pruned fetch of shortlist ids only. Nothing driver-sized but
-  * the bucket list and the manifest.
+  * partitioned writes, cost tracking the BATCH, never the corpus; a
+  * serve is the codes scan folding map-side to `width` rows per query
+  * plus a bucket-pruned fetch of shortlist ids only. Nothing
+  * driver-sized but the bucket list and the manifest.
   */
-object BinaryStore {
+private[graft] class BinaryLayout(labels: Seq[String])
+    extends BinaryGenStore(Root("codes", Seq("vec_id", "w0", "w1"), labels),
+      labels) {
 
-  /** Refine-side fan-out: vectors partition into this many id buckets. */
-  val Buckets = 64L
-
-  private def codesDir(dir: String) = s"$dir/codes"
-  private def vecsDir(dir: String) = s"$dir/vectors"
-  private def tombDir(dir: String) = s"$dir/tombstones"
-
-  // ---------- data plane ----------
-
-  /** Write one generation's codes + bucketed vectors (tmp-dir write +
-    * one rename per root — [[FlatManifest.writeGenDir]]: a crashed
-    * attempt's files are replaced by the re-run before its commit,
-    * never read — they are in no manifest).
+  /** The codes write repartitions on label so each directory gets one
+    * file, not one per task (the q156 small-files lesson).
     */
-  private def writeGen(emb: DataFrame, dir: String, gen: Long): Unit = {
+  protected def writeGen(dir: String, snap: Snap, emb: DataFrame,
+      gen: Long): Unit = {
     val s = emb.sparkSession
     import s.implicits._
-    FlatManifest.writeGenDir(
-      VectorOps.binaryCodes(emb).select($"vec_id", $"w0", $"w1"),
-      codesDir(dir), gen)
-    FlatManifest.writeGenDir(
-      emb.select($"vec_id", $"qv",
-          pmod($"vec_id", lit(Buckets)).as("bucket"))
-        .repartition($"bucket"),
-      vecsDir(dir), gen, Seq("bucket"))
+    val packed = VectorOps.binaryCodes(emb.select($"vec_id", $"qv"))
+    writeRoot(codes, dir,
+      if (labels.isEmpty) packed.select($"vec_id", $"w0", $"w1")
+      else packed.join(emb.select($"vec_id", $"label"), "vec_id")
+        .select($"vec_id", $"w0", $"w1", $"label").repartition($"label"),
+      gen)
+    writeVectors(dir, emb, gen)
   }
 
-  private def emptyCodes(s: SparkSession): DataFrame =
-    s.range(0).select(col("id").as("vec_id"), col("id").as("w0"),
-      col("id").as("w1"), col("id").as("gen"))
+  /** Compaction re-packs the live vectors (labels ride along). */
+  protected def fold(dir: String, snap: Snap, counted: DataFrame,
+      masked: DataFrame => DataFrame, gen: Long): Boolean =
+    writeLive(masked(rel(counted.sparkSession, dir, snap, vecRoot))
+      .select(vecRoot.data.map(col): _*))(writeGen(dir, snap, _, gen))
 
-  private def emptyVecs(s: SparkSession): DataFrame =
-    s.range(0).select(col("id").as("vec_id"),
-      array(col("id")).as("qv"), col("id").as("gen"),
-      col("id").as("bucket"))
-
-  private def codesOf(s: SparkSession, dir: String, snap: Snap): DataFrame =
-    if (snap.gens.isEmpty) emptyCodes(s)
-    else s.read.parquet(codesDir(dir))
-      .filter(col("gen").isin(snap.gens: _*))
-
-  private def vectorsOf(s: SparkSession, dir: String,
-      snap: Snap): DataFrame =
-    if (snap.gens.isEmpty) emptyVecs(s)
-    else s.read.parquet(vecsDir(dir))
-      .filter(col("gen").isin(snap.gens: _*))
-
-  private def tombstonesOf(s: SparkSession, dir: String,
-      snap: Snap): Option[DataFrame] =
-    if (snap.tombs.isEmpty) None
-    else Some(s.read.parquet(tombDir(dir))
-      .filter(col("del").isin(snap.tombs: _*)).select(col("vec_id")))
-
-  /** Codes with the snapshot's tombstone mask applied — the relation
-    * stage 1 scans. Broadcast anti-join: the tombstone set is bounded
-    * by delete volume between compactions.
+  /** Build from a quantized corpus (vec_id, qv[, label]) as epoch 1,
+    * generation 0.
     */
-  private def masked(s: SparkSession, dir: String, snap: Snap): DataFrame = {
-    val codes = codesOf(s, dir, snap).select(col("vec_id"), col("w0"),
-      col("w1"))
-    tombstonesOf(s, dir, snap).fold(codes)(t =>
-      codes.join(broadcast(t.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti"))
-  }
-
-  /** The LIVE logical contents (vec_id, w0, w1) of the committed
-    * snapshot — what a serve ranks in stage 1 and the model-spec's
-    * reference set.
-    */
-  def liveCodes(s: SparkSession, dir: String): DataFrame =
-    masked(s, dir, FlatManifest.read(s, dir))
-
-  private def verifyData(s: SparkSession, dir: String)(snap: Snap): Unit = {
-    val f = FlatManifest.fs(s, dir)
-    def gone(what: String): Nothing = throw new IllegalStateException(
-      s"store $dir epoch ${snap.epoch}: $what no longer exists — its " +
-        "data was GC'd under a narrower retention window")
-    snap.gens.foreach { g =>
-      if (!f.exists(new org.apache.hadoop.fs.Path(codesDir(dir), s"gen=$g")))
-        gone(s"codes generation $g")
-      if (!f.exists(new org.apache.hadoop.fs.Path(vecsDir(dir), s"gen=$g")))
-        gone(s"vectors generation $g")
-    }
-    snap.tombs.foreach { t =>
-      if (!f.exists(new org.apache.hadoop.fs.Path(tombDir(dir), s"del=$t")))
-        gone(s"tombstone set $t")
-    }
-  }
-
-  // ---------- lifecycle ----------
-
-  /** Build the store from a quantized corpus (vec_id, qv) as manifest
-    * epoch 1, generation 0. A build OWNS its directory (same safety
-    * rule as the index: wipe only what is recognizably a store) and
-    * invalidates any cached serving relations for it — a same-session
-    * rebuild must never serve the old files (the round-12 advice
-    * finding on the previous epoch-less cache).
-    */
-  def build(emb: DataFrame, dir: String): Unit = {
-    val s = emb.sparkSession
-    FlatManifest.prepareBuildDir(s, dir)(Set("codes", "vectors"))
-    writeGen(emb, dir, 0L)
-    FlatManifest.commit(s, dir, Snap(epoch = 1L, gens = Seq(0L),
-      tombs = Nil, ingested = Set.empty, ingestLow = 0L,
-      nextInternal = -1L))
-    invalidateCache(s, dir)
-  }
-
-  /** Incremental ingest: pack and commit `newVecs` (vec_id, qv) as
-    * generation `gen` (> 0; caller-named so a streaming sink can use
-    * its batch id). Exactly-once under replay: a generation the
-    * manifest has already committed — even one a compaction has since
-    * folded — is a no-op. An EMPTY batch commits its generation id as
-    * ingested without appending a (file-less) generation, so a
-    * replayed empty trigger stays a no-op too. Returns [[genReport]].
-    */
-  def addBatch(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long): DataFrame = {
-    require(gen > 0L,
-      s"ingest generations are caller-named positives (got $gen); " +
-        "internal generations are negative by construction")
-    val snap = FlatManifest.read(s, dir)
-    if (!snap.committedIngest(gen)) {
-      val batch = newVecs.select(col("vec_id"), col("qv"))
-        .localCheckpoint(true)
-      if (batch.isEmpty)
-        FlatManifest.commit(s, dir,
-          snap.withIngested(gen).copy(epoch = snap.epoch + 1))
-      else {
-        writeGen(batch, dir, gen)
-        FlatManifest.commit(s, dir, snap.withIngested(gen)
-          .copy(epoch = snap.epoch + 1,
-            gens = (snap.gens :+ gen).distinct))
-      }
-    }
-    genReport(s, dir)
-  }
-
-  /** Tombstone deletes — the [[IvfIndex.delete]] contract verbatim:
-    * record ids under `tombstones/del=<epoch>/` without touching a
-    * code byte, commit the set in the manifest (snapshot-scoped, so a
-    * [[serveAt]] read of an earlier epoch never sees a later delete).
-    * Masking is a broadcast anti-join bounded by delete volume between
-    * compactions; [[compact]] removes the rows physically.
-    */
-  def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val batch = ids.select(col("vec_id")).localCheckpoint(true)
-    if (batch.isEmpty) return
-    val snap = FlatManifest.read(s, dir)
-    val delId = snap.epoch + 1
-    batch.withColumn("del", lit(delId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("del").parquet(tombDir(dir))
-    FlatManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-      tombs = snap.tombs :+ delId))
-  }
-
-  /** Physically apply the tombstones and fold all live generations
-    * into one internal generation — one filtered rewrite of the codes
-    * and vectors relations, the manifest swap retires the old
-    * generations, and only then does GC reclaim their directories (a
-    * crash at any point leaves the previous snapshot fully readable).
-    * Returns the one-row report (n_before, n_removed, n_gens_before,
-    * n_after, compacted).
-    */
-  def compact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val snap = FlatManifest.read(s, dir)
-    val codes = codesOf(s, dir, snap)
-    val tomb = tombstonesOf(s, dir, snap)
-      .map(_.select($"vec_id").distinct().localCheckpoint(true))
-    val Array(stat) = codes
-      .agg(count(lit(1)).as("n_before"),
-        coalesce(countDistinct($"gen"), lit(0L)).as("n_gens"))
-      .collect()
-    val nBefore = stat.getLong(0)
-    val nRemoved = tomb.fold(0L)(t =>
-      codes.join(broadcast(t), "vec_id").count())
-    val doFold = nRemoved > 0 || snap.gens.length > 1
-    if (doFold) {
-      val newGen = snap.nextInternal
-      val live = tomb.fold(vectorsOf(s, dir, snap))(t =>
-        vectorsOf(s, dir, snap)
-          .join(broadcast(t), Seq("vec_id"), "left_anti"))
-        .select($"vec_id", $"qv")
-      val liveCkpt = live.localCheckpoint(true)
-      val any = !liveCkpt.isEmpty
-      if (any) writeGen(liveCkpt, dir, newGen)
-      FlatManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-        gens = if (any) Seq(newGen) else Seq.empty,
-        tombs = Nil, nextInternal = newGen - 1L))
-    } else if (snap.tombs.nonEmpty) {
-      // tombstoned ids that hit no stored code: nothing to rewrite,
-      // but the mask still costs the serve path — retire it
-      FlatManifest.commit(s, dir,
-        snap.copy(epoch = snap.epoch + 1, tombs = Nil))
-    }
-    gcSweep(s, dir)
-    Seq((nBefore, nRemoved, stat.getLong(1), nBefore - nRemoved,
-        if (doFold) 1L else 0L))
-      .toDF("n_before", "n_removed", "n_gens_before", "n_after",
-        "compacted")
-  }
-
-  /** Standalone GC sweep (the inline one runs after [[compact]]):
-    * reclaims whatever no RETAINED manifest references — with
-    * `spark.graft.index.retainEpochs` above 1, time-travel epochs'
-    * data is protected.
-    */
-  def vacuum(s: SparkSession, dir: String): DataFrame =
-    FlatManifest.report(s, gcSweep(s, dir))
-
-  private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
-    FlatManifest.gcSweep(s, dir, Seq("codes", "vectors"))
-
-  /** Per-generation occupancy of the committed snapshot: (gen
-    * [logical: internal generations read as 0], n_codes) plus the
-    * (-1, total-live) rollup — [[addBatch]]'s return surface, the flat
-    * sibling of the index's splitReport.
-    */
-  def genReport(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val snap = FlatManifest.read(s, dir)
-    val live = {
-      val codes = codesOf(s, dir, snap)
-        .withColumn("lgen",
-          when($"gen" <= 0, 0L).otherwise($"gen".cast("long")))
-      tombstonesOf(s, dir, snap).fold(codes)(t =>
-        codes.join(broadcast(t.select($"vec_id").distinct()),
-          Seq("vec_id"), "left_anti"))
-    }
-    val per = live.groupBy($"lgen".as("gen"))
-      .agg(count(lit(1)).as("n_codes"))
-    per.unionByName(per.agg(coalesce(sum($"n_codes"), lit(0L))
-        .as("n_codes"))
-      .select(lit(-1L).as("gen"), $"n_codes"))
-      .orderBy($"gen")
-  }
+  def build(emb: DataFrame, dir: String): Unit =
+    create(emb.sparkSession, dir)(writeGen(dir, GenStore.Fresh, emb, 0L))
 
   // ---------- serving ----------
 
   /** Two-stage serve from the stored relations for a query batch
-    * (query_id, q_qv, qw0, qw1): returns (shortlist, refined) — the
-    * q191 stage shapes, so any consumer (the gate report, a top-k
-    * take of rrank <= k) composes identically on either source.
+    * (query_id, q_qv, qw0, qw1[, label]): returns (shortlist, refined)
+    * — the q191 stage shapes, so any consumer (the gate report, a
+    * top-k take of rrank <= k) composes identically on either source.
     */
   def serveStages(s: SparkSession, dir: String, queries: DataFrame,
       width: Int): (DataFrame, DataFrame) =
-    serveStagesSnap(s, dir, FlatManifest.read(s, dir), queries, width)
+    stagesOf(s, dir, FlatManifest.read(s, dir), queries, width)
 
-  /** [[serveStages]] pinned to a RETAINED epoch — the time-travel read
-    * the manifest protocol makes free: an epoch is just a manifest
-    * file naming immutable generation directories. Tombstone masks are
-    * snapshot-scoped, so an earlier epoch serves rows a later delete
-    * has since removed.
+  /** Labeled: the stage-1 scan filters codes to the BATCH's distinct
+    * labels (a driver-bounded static partition filter on the `label=…`
+    * directories) and the Hamming join matches per-query labels.
     */
-  def serveStagesAt(s: SparkSession, dir: String, epoch: Long,
-      queries: DataFrame, width: Int): (DataFrame, DataFrame) =
-    serveStagesSnap(s, dir,
-      FlatManifest.readAt(s, dir, epoch)(verifyData(s, dir)), queries,
-      width)
-
-  private def serveStagesSnap(s: SparkSession, dir: String, snap: Snap,
+  private def stagesOf(s: SparkSession, dir: String, snap: Snap,
       queries: DataFrame, width: Int): (DataFrame, DataFrame) = {
     import s.implicits._
-    val shortlist = VectorOps.hamShortlist(masked(s, dir, snap), queries,
-      width)
-    // the shortlist is checkpointed and |queries|·width rows — the
-    // bucket set is a driver-bounded (≤ Buckets) partition filter
-    val buckets = shortlist
-      .select(pmod($"neighbor", lit(Buckets)).as("bucket"))
-      .distinct().as[Long].collect().toSeq
-    val vecs = vectorsOf(s, dir, snap)
-      .filter($"bucket".isin(buckets: _*))
-    (shortlist, VectorOps.refineRank(shortlist, vecs, queries))
-  }
-
-  /** Serving-loop cache, keyed by committed EPOCH: every cached serve
-    * re-reads the manifest (one small-file open — the
-    * [[IvfIndex.serveCached]] discipline), so a generation committed
-    * by a concurrent ingest, a delete, or a compaction refreshes the
-    * relations on the very next trigger; an unchanged epoch pays zero
-    * extra jobs. [[build]] additionally drops the entry (a rebuild
-    * restarts epochs at 1, which an epoch equality check alone could
-    * mistake for the cached state). Evicted relations are unpersisted.
-    *
-    * The cached path also skips the per-trigger checkpoint and bucket
-    * collect: with both relations pinned, partition pruning is a disk
-    * win that no longer applies, and the shortlist feeds refine as ONE
-    * fused plan — one job per trigger instead of three (the round-12
-    * serve-gap lead; rows identical either way, spec-pinned).
-    */
-  private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (Long, DataFrame, DataFrame)]()
-
-  private def invalidateCache(s: SparkSession, dir: String): Unit = {
-    val old = relCache.remove((s, dir))
-    if (old != null) { old._2.unpersist(false); old._3.unpersist(false) }
-  }
-
-  private def cachedRels(s: SparkSession, dir: String,
-      snap: Snap): (DataFrame, DataFrame) = {
-    val cur = relCache.get((s, dir))
-    if (cur != null && cur._1 == snap.epoch) (cur._2, cur._3)
-    else {
-      val codes = masked(s, dir, snap).persist()
-      val vecs = vectorsOf(s, dir, snap).select(col("vec_id"), col("qv"))
-        .persist()
-      codes.count(); vecs.count()
-      relCache.put((s, dir), (snap.epoch, codes, vecs))
-      if (cur != null) { cur._2.unpersist(false); cur._3.unpersist(false) }
-      (codes, vecs)
-    }
-  }
-
-  def serveStagesCached(s: SparkSession, dir: String, queries: DataFrame,
-      width: Int): (DataFrame, DataFrame) = {
-    val (codes, vecs) = cachedRels(s, dir, FlatManifest.read(s, dir))
-    val shortlist = VectorOps.hamShortlist(codes, queries, width,
-      checkpoint = false)
-    (shortlist, VectorOps.refineRank(shortlist, vecs, queries))
-  }
-
-  // ---------- labeled (tenant) layout ----------
-
-  /** Labeled sibling of [[writeGen]] — the [[IvfIndex.buildLabeled]]
-    * pruning discipline applied to the flat tier: codes partition
-    * `gen=…/label=…` so a same-label serve's stage-1 scan statically
-    * prunes to the batch's label directories (the unselected tenants'
-    * 1-bit bytes are never opened). Generation stays the TOP level —
-    * [[FlatManifest.gcSweep]] and [[verifyData]] reclaim/check
-    * generation directories by name, and a label-first layout would
-    * hide them (the labeled soak caught exactly that on the first
-    * cut). Vectors keep the (gen, bucket) layout with `label` as a
-    * data column (the refine fetch is id-keyed and label-blind — the
-    * shortlist is already same-label). The codes write repartitions on
-    * label so each directory gets one file, not one per task (the q156
-    * small-files lesson).
-    */
-  private def writeGenLabeled(emb: DataFrame, dir: String,
-      gen: Long): Unit = {
-    val s = emb.sparkSession
-    import s.implicits._
-    FlatManifest.writeGenDir(
-      VectorOps.binaryCodes(emb.select($"vec_id", $"qv"))
-        .join(emb.select($"vec_id", $"label"), "vec_id")
-        .select($"vec_id", $"w0", $"w1", $"label")
-        .repartition($"label"),
-      codesDir(dir), gen, Seq("label"))
-    FlatManifest.writeGenDir(
-      emb.select($"vec_id", $"qv", $"label",
-          pmod($"vec_id", lit(Buckets)).as("bucket"))
-        .repartition($"bucket"),
-      vecsDir(dir), gen, Seq("bucket"))
-  }
-
-  /** Build the LABELED store from (vec_id, qv, label) — same manifest
-    * protocol as [[build]]; the layout is what differs (see
-    * [[writeGenLabeled]]). A store is labeled or not for its lifetime;
-    * mixing entry points corrupts neither (the manifest is shared) but
-    * serves would miss the label columns.
-    */
-  def buildLabeled(emb: DataFrame, dir: String): Unit = {
-    val s = emb.sparkSession
-    FlatManifest.prepareBuildDir(s, dir)(Set("codes", "vectors"))
-    writeGenLabeled(emb, dir, 0L)
-    FlatManifest.commit(s, dir, Snap(epoch = 1L, gens = Seq(0L),
-      tombs = Nil, ingested = Set.empty, ingestLow = 0L,
-      nextInternal = -1L))
-    invalidateCache(s, dir)
-  }
-
-  /** [[addBatch]] for the labeled layout — identical exactly-once
-    * commit protocol, labeled generation files.
-    */
-  def addBatchLabeled(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long): DataFrame = {
-    require(gen > 0L,
-      s"ingest generations are caller-named positives (got $gen)")
-    val snap = FlatManifest.read(s, dir)
-    if (!snap.committedIngest(gen)) {
-      val batch = newVecs.select(col("vec_id"), col("qv"), col("label"))
-        .localCheckpoint(true)
-      if (batch.isEmpty)
-        FlatManifest.commit(s, dir,
-          snap.withIngested(gen).copy(epoch = snap.epoch + 1))
+    def codeRows = rel(s, dir, snap, codes).select(codes.cols.map(col): _*)
+    val shortlist =
+      if (labels.isEmpty)
+        VectorOps.hamShortlist(mask(s, dir, snap, codeRows), queries, width)
       else {
-        writeGenLabeled(batch, dir, gen)
-        FlatManifest.commit(s, dir, snap.withIngested(gen)
-          .copy(epoch = snap.epoch + 1,
-            gens = (snap.gens :+ gen).distinct))
+        val ls = queries.select($"label").distinct().as[Long].collect().toSeq
+        VectorOps.hamShortlistLabeled(
+          mask(s, dir, snap, codeRows.filter($"label".isin(ls: _*))),
+          queries, width)
       }
-    }
-    genReport(s, dir)
+    (shortlist, VectorOps.refineRank(shortlist,
+      refineFetch(s, dir, snap, shortlist), queries))
   }
 
-  /** [[compact]] for the labeled layout: the fold rewrite reads the
-    * label column off the vectors relation and re-emits labeled
-    * generation files, so labels survive compaction ([[delete]] /
-    * [[vacuum]] / [[genReport]] are label-blind and shared).
-    */
-  def compactLabeled(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val snap = FlatManifest.read(s, dir)
-    val codes = codesOf(s, dir, snap)
-    val tomb = tombstonesOf(s, dir, snap)
-      .map(_.select($"vec_id").distinct().localCheckpoint(true))
-    val Array(stat) = codes
-      .agg(count(lit(1)).as("n_before"),
-        coalesce(countDistinct($"gen"), lit(0L)).as("n_gens"))
-      .collect()
-    val nBefore = stat.getLong(0)
-    val nRemoved = tomb.fold(0L)(t =>
-      codes.join(broadcast(t), "vec_id").count())
-    val doFold = nRemoved > 0 || snap.gens.length > 1
-    if (doFold) {
-      val newGen = snap.nextInternal
-      val live = tomb.fold(vectorsOf(s, dir, snap))(t =>
-        vectorsOf(s, dir, snap)
-          .join(broadcast(t), Seq("vec_id"), "left_anti"))
-        .select($"vec_id", $"qv", $"label")
-      val liveCkpt = live.localCheckpoint(true)
-      val any = !liveCkpt.isEmpty
-      if (any) writeGenLabeled(liveCkpt, dir, newGen)
-      FlatManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-        gens = if (any) Seq(newGen) else Seq.empty,
-        tombs = Nil, nextInternal = newGen - 1L))
-    } else if (snap.tombs.nonEmpty) {
-      FlatManifest.commit(s, dir,
-        snap.copy(epoch = snap.epoch + 1, tombs = Nil))
-    }
-    gcSweep(s, dir)
-    Seq((nBefore, nRemoved, stat.getLong(1), nBefore - nRemoved,
-        if (doFold) 1L else 0L))
-      .toDF("n_before", "n_removed", "n_gens_before", "n_after",
-        "compacted")
-  }
-
-  /** Same-label two-stage serve for a labeled query batch (query_id,
-    * q_qv, qw0, qw1, label): the stage-1 scan filters codes to the
-    * BATCH'S distinct labels (a driver-bounded static partition filter
-    * on the `label=…` directories — the [[IvfIndex.serveLabeled]]
-    * pruning discipline), the Hamming join matches per-query labels
-    * exactly, and the refine fetch stays the bucket-pruned id join.
-    */
-  def serveLabeledStages(s: SparkSession, dir: String,
-      queries: DataFrame, width: Int): (DataFrame, DataFrame) =
-    serveLabeledStagesSnap(s, dir, FlatManifest.read(s, dir), queries,
-      width)
-
-  /** [[serveLabeledStages]] pinned to a RETAINED epoch — labeled time
-    * travel, free under the manifest protocol.
-    */
-  def serveLabeledStagesAt(s: SparkSession, dir: String, epoch: Long,
-      queries: DataFrame, width: Int): (DataFrame, DataFrame) =
-    serveLabeledStagesSnap(s, dir,
-      FlatManifest.readAt(s, dir, epoch)(verifyData(s, dir)), queries,
-      width)
-
-  private def serveLabeledStagesSnap(s: SparkSession, dir: String,
-      snap: Snap, queries: DataFrame, width: Int)
-      : (DataFrame, DataFrame) = {
-    import s.implicits._
-    val labels = queries.select($"label").distinct().as[Long].collect()
-      .toSeq
-    val codes = codesOf(s, dir, snap)
-      .filter($"label".isin(labels: _*))
-      .select($"vec_id", $"w0", $"w1", $"label")
-    val maskedCodes = tombstonesOf(s, dir, snap).fold(codes)(t =>
-      codes.join(broadcast(t.select($"vec_id").distinct()),
-        Seq("vec_id"), "left_anti"))
-    val shortlist = VectorOps.hamShortlistLabeled(maskedCodes, queries,
-      width)
-    val buckets = shortlist
-      .select(pmod($"neighbor", lit(Buckets)).as("bucket"))
-      .distinct().as[Long].collect().toSeq
-    val vecs = vectorsOf(s, dir, snap)
-      .filter($"bucket".isin(buckets: _*))
-    (shortlist, VectorOps.refineRank(shortlist, vecs, queries))
-  }
-
-  /** Ranked same-label top-k from the labeled store. */
-  def serveLabeled(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int, width: Int = 20, epoch: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val (_, refined) = epoch.fold(
-      serveLabeledStages(s, dir, queries, width))(e =>
-      serveLabeledStagesAt(s, dir, e, queries, width))
-    refined.filter($"rrank" <= k)
-      .select($"query_id", $"rrank".as("rank"), $"neighbor", $"dist")
-      .orderBy($"query_id", $"rank")
-  }
-
-  /** Ranked top-k from the stored index — the plain serving surface.
-    * `cached = true` pins the store's relations in memory for a
-    * serving loop (the streaming path), refreshed per committed epoch;
-    * the rows are identical either way (spec-pinned). `epoch`
-    * time-travels a retained snapshot (uncached path only — pinning
-    * history in executor memory is a caller decision, not a default).
+  /** Ranked top-k — the plain serving surface. `cached = true` pins the
+    * store's relations for a serving loop (the streaming path); the
+    * rows are identical either way (spec-pinned). `epoch` time-travels
+    * a RETAINED snapshot; tombstone masks are snapshot-scoped, so an
+    * earlier epoch serves rows a later delete has since removed
+    * (uncached only — pinning history in executor memory is a caller
+    * decision, not a default).
+    *
+    * The cached path pins the live codes and vectors per committed
+    * epoch ([[GenStore]]). With both relations pinned, partition pruning
+    * is a disk win that no longer applies, so it also skips the
+    * per-trigger checkpoint and bucket collect: the shortlist feeds
+    * refine as ONE fused plan — one job per trigger instead of three
+    * (the round-12 serve-gap lead).
     */
   def serve(s: SparkSession, dir: String, queries: DataFrame, k: Int,
       width: Int = 20, cached: Boolean = false,
       epoch: Option[Long] = None): DataFrame = {
-    import s.implicits._
     require(epoch.isEmpty || !cached,
       "serve: time-travel reads are uncached by design")
-    val (_, refined) =
-      if (cached) serveStagesCached(s, dir, queries, width)
-      else epoch.fold(serveStages(s, dir, queries, width))(e =>
-        serveStagesAt(s, dir, e, queries, width))
-    refined.filter($"rrank" <= k)
-      .select($"query_id", $"rrank".as("rank"), $"neighbor", $"dist")
-      .orderBy($"query_id", $"rank")
+    val refined =
+      if (cached) {
+        val snap = FlatManifest.read(s, dir)
+        val Seq(codeRows, vecs) = cachedRels(s, dir, snap)(Seq(
+          live(s, dir, snap),
+          rel(s, dir, snap, vecRoot).select(col("vec_id"), col("qv"))))
+        VectorOps.refineRank(VectorOps.hamShortlist(codeRows, queries,
+          width, checkpoint = false), vecs, queries)
+      } else stagesOf(s, dir, snapAt(s, dir, epoch), queries, width)._2
+    topK(refined, k)
   }
+}
+
+/** The 1-bit store ([[BinaryLayout]]); the `*Labeled` entry points run
+  * the same store over the labeled layout. delete, vacuum and
+  * genReport are label-blind and serve both.
+  */
+object BinaryStore extends BinaryLayout(Nil) {
+  private val labeled = new BinaryLayout(Seq("label"))
+
+  def buildLabeled(emb: DataFrame, dir: String): Unit =
+    labeled.build(emb, dir)
+
+  def addBatchLabeled(s: SparkSession, dir: String, newVecs: DataFrame,
+      gen: Long): DataFrame = labeled.addBatch(s, dir, newVecs, gen)
+
+  def compactLabeled(s: SparkSession, dir: String): DataFrame =
+    labeled.compact(s, dir)
+
+  def serveLabeledStages(s: SparkSession, dir: String,
+      queries: DataFrame, width: Int): (DataFrame, DataFrame) =
+    labeled.serveStages(s, dir, queries, width)
+
+  def serveLabeled(s: SparkSession, dir: String, queries: DataFrame,
+      k: Int, width: Int = 20, epoch: Option[Long] = None): DataFrame =
+    labeled.serve(s, dir, queries, k, width, epoch = epoch)
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The state every committed manifest carries, whatever the store
   * layout: the epoch, the committed tombstone-set ids in effect at it
@@ -91,11 +91,11 @@ private[graft] trait ManifestState[S] {
   * unreferenced garbage for the next GC. Data directories are never
   * rewritten in place: the index writes fresh partitions only, and the
   * flat stores publish a generation by one directory rename
-  * ([[FlatManifest.writeGenDir]]) that precedes the commit, so on an
-  * object store the copy it becomes is still invisible until the
-  * manifest names it. All control-plane I/O goes through the Hadoop
-  * [[FileSystem]] bound to the session's configuration, so the same
-  * code runs against local fs, HDFS, or an object store.
+  * ([[GenStore]]) that precedes the commit, so on an object store the
+  * copy it becomes is still invisible until the manifest names it.
+  * All control-plane I/O goes through the Hadoop [[FileSystem]] bound
+  * to the session's configuration, so the same code runs against
+  * local fs, HDFS, or an object store.
   *
   * == Retention ==
   * `spark.graft.index.retainEpochs` ([[retainEpochs]]) is the ONE
@@ -137,7 +137,7 @@ private[graft] abstract class ManifestProtocol(noun: String) {
   private val SharedKeys = Set("tombs", "ingested", "ingest_low",
     "next_internal")
   private val RetainKey = "spark.graft.index.retainEpochs"
-  private val TombRoot = "tombstones"
+  private[graft] val TombRoot = "tombstones"
 
   def fs(s: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -386,7 +386,9 @@ private[graft] abstract class ManifestProtocol(noun: String) {
   * [[IvfBinaryStore]] (codes + bucketed vectors) and [[MaxSimStore]]
   * (chunks + postings + df partials): the data is one generation list
   * (`gens`) per snapshot instead of a per-cell map. Protocol, crash
-  * argument and retention: [[ManifestProtocol]].
+  * argument and retention: [[ManifestProtocol]]; the generation
+  * lifecycle the stores run on it (write, commit, mask, compact, GC,
+  * the serving cache): [[GenStore]], its only writer.
   */
 private[graft] object FlatManifest extends ManifestProtocol("store") {
   type S = Snap
@@ -411,74 +413,6 @@ private[graft] object FlatManifest extends ManifestProtocol("store") {
     Snap(epoch, gens.get, sh.tombs, sh.ingested, sh.ingestLow,
       sh.nextInternal)
   }
-
-  /** Write ONE generation under a data root: the frame (WITHOUT its gen
-    * column) writes plain into `<root>/.gen-tmp-<gen>` — partitioned by
-    * `innerPartitions` if given — and ONE directory rename publishes it
-    * as `<root>/gen=<gen>`. Replaces the previous dynamic-partition-
-    * overwrite writes, whose commit stages and moves every partition
-    * directory one by one on the driver: for micro-batch generations
-    * that commit path cost ~3× the write itself (recorded in VERDICT.md,
-    * round 15: 64-bucket vectors write 1.0–2.0 s dyn-overwrite vs 0.4 s
-    * tmp+rename at 128 rows). On-disk layout and read semantics are
-    * identical (`gen` stays a discovered partition directory; the tmp
-    * dir's leading dot hides it from partition discovery). Crash
-    * discipline is unchanged: nothing under the root is live until the
-    * manifest commits — a crashed attempt's tmp dir is overwritten by
-    * the replay, a rename-then-manifest-crash leaves a gen dir no
-    * manifest references (deleted here before the replay's rename, and
-    * swept by GC otherwise).
-    */
-  def writeGenDir(df: DataFrame, root: String, gen: Long,
-      innerPartitions: Seq[String] = Nil): Unit = {
-    val s = df.sparkSession
-    val f = fs(s, root)
-    val tmp = new Path(root, s".gen-tmp-$gen")
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (innerPartitions.isEmpty) w
-     else w.partitionBy(innerPartitions: _*)).parquet(tmp.toString)
-    val dest = new Path(root, s"gen=$gen")
-    if (f.exists(dest))
-      require(f.delete(dest, true),
-        s"stale uncommitted generation dir $dest could not be replaced")
-    require(f.rename(tmp, dest),
-      s"generation publish failed: rename $tmp -> $dest returned false")
-  }
-
-  /** [[gc]] over the generation-keyed data roots (`codes`, `vectors`,
-    * …): reclaims `gen=` directories no retained manifest references,
-    * and `.gen-tmp-` directories whose generation has committed
-    * (reported as `tmp_gen_dirs`). For roots with nested partitioning
-    * (vectors/gen=N/bucket=B) only the TOP level is generation-keyed,
-    * which is the level GC removes.
-    */
-  def gcSweep(s: SparkSession, dir: String,
-      genRoots: Seq[String]): Map[String, Long] =
-    gc(s, dir) { (f, snaps) =>
-      val liveGens = snaps.flatMap(_.gens).toSet
-      var orphanGens = 0L
-      var tmpGens = 0L
-      genRoots.map(new Path(dir, _)).filter(f.exists).foreach { rp =>
-        f.listStatus(rp).filter(_.isDirectory).map(_.getPath).foreach { gd =>
-          val n = gd.getName
-          if (n.startsWith("gen=") &&
-              !liveGens.contains(n.stripPrefix("gen=").toLong)) {
-            require(f.delete(gd, true), s"gc failed to delete $gd")
-            orphanGens += 1
-          } else if (n.startsWith(".gen-tmp-")) {
-            // a tmp dir survives only a crash between write and rename;
-            // it is garbage once its generation is committed anywhere
-            // (the committing replay wrote and renamed its OWN tmp)
-            val g = n.stripPrefix(".gen-tmp-").toLong
-            if (liveGens.contains(g) || snaps.exists(_.committedIngest(g))) {
-              require(f.delete(gd, true), s"gc failed to delete $gd")
-              tmpGens += 1
-            }
-          }
-        }
-      }
-      Map("orphan_gen_dirs" -> orphanGens, "tmp_gen_dirs" -> tmpGens)
-    }
 }
 
 /** Scratch directories for catalog entries that build a store as part

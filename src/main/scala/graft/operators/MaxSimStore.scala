@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.FlatManifest.Snap
+import graft.operators.GenStore.Root
 
 /** PERSISTED late-interaction (MaxSim) chunk index — the serving form
   * of q178's batch corpus-vs-sample audit: a retrieval deployment
@@ -24,14 +25,12 @@ import graft.operators.FlatManifest.Snap
   *   - `df/gen=…/bucket=…/` (tok, tok_df): PER-GENERATION document-
   *     frequency partials, bucket-partitioned the same way; the
   *     serve-time df is their sum over live generations.
-  *   - `tombstones/del=…/` (doc_id): logical deletes; [[compact]]
-  *     applies them physically.
+  *   - `tombstones/del=…/` (doc_id): logical deletes masked on
+  *     `cdoc`; compaction applies them physically.
   *
-  * Since round 13 the store carries the [[FlatManifest]] lifecycle
-  * ([[addBatch]] / [[delete]] / [[compact]] / [[vacuum]] / epoch
-  * time travel) like [[BinaryStore]] and [[IvfIndex]]. Two routing
-  * statistics are VERSIONED BY COMMIT rather than globally exact —
-  * both deterministic, both replayed by the q203 oracle:
+  * Under the [[GenStore]] lifecycle two routing statistics are
+  * VERSIONED BY COMMIT rather than globally exact — both
+  * deterministic, both replayed by the q203 oracle:
   *
   *   - A generation's posting prefixes (its chunks' "2 rarest
   *     tokens") are chosen under the df IN FORCE AT ITS COMMIT
@@ -39,7 +38,7 @@ import graft.operators.FlatManifest.Snap
   *     engine's posting tiers keep the scoring stats of their build.
   *     Earlier generations' prefixes are NOT rewritten by later
   *     ingests (that would be a corpus-scale rewrite per batch;
-  *     [[compact]] folds files but deliberately preserves committed
+  *     compaction folds files but deliberately preserves committed
   *     prefixes, keeping compaction serve-transparent — pre/post
   *     rows identical, spec-pinned).
   *   - Deletes mask chunks and postings exactly (scoring never sees a
@@ -58,14 +57,12 @@ import graft.operators.FlatManifest.Snap
   * improvement over q178's rule, documented as the one delta.
   *
   * Scale: a build/ingest is the BATCH's chunk pass plus three
-  * partitioned writes (postings/df repartitioned on bucket — one file
-  * per directory, the q156 small-files lesson) and one vocab-scale df
-  * read for the prefix rule; a serve's corpus-side reads are the
+  * partitioned writes and one vocab-scale df read for the prefix rule; a serve's corpus-side reads are the
   * probed bucket directories (≤ 64, typically far fewer) and ONE
   * SHUFFLE_HASH pass of the chunks relation at candidate cardinality;
   * nothing driver-sized but the bucket lists and the manifest.
   */
-object MaxSimStore {
+object MaxSimStore extends GenStore {
 
   /** Token-routing fan-out: postings/df partition into this many md5
     * buckets. 64 keeps directory counts trivial while a small serving
@@ -73,231 +70,80 @@ object MaxSimStore {
     */
   val Buckets = 64L
 
-  private def chunksDir(dir: String) = s"$dir/chunks"
-  private def postDir(dir: String) = s"$dir/postings"
-  private def dfDir(dir: String) = s"$dir/df"
-  private def tombDir(dir: String) = s"$dir/tombstones"
+  private val chunks = Root("chunks", Seq("cdoc", "cc", "vb", "n2b", "m"))
+  private val postings = Root("postings", Seq("cdoc", "cc", "tok"),
+    Seq("bucket"))
+  private val dfParts = Root("df", Seq("tok", "tok_df"), Seq("bucket"))
+  protected val roots = Seq(chunks, postings, dfParts)
+  protected val tombKey = "doc_id"
+  override protected val rowKey = "cdoc"
 
   private def bucketCol(tok: Column): Column =
     conv(substring(md5(tok), 1, 15), 16, 10).cast("long") % Buckets
 
-  // ---------- data plane ----------
-
-  /** Write one generation from a doc batch's derived relations. The
-    * posting prefixes are selected under `dfForPrefix` — the df in
-    * force at this commit (see the class doc's versioning rule).
+  /** `rows` with their token bucket, one file per bucket directory (the
+    * q156 small-files lesson).
     */
-  private def writeGen(dset: DataFrame, dir: String, gen: Long,
-      dfForPrefix: DataFrame): Unit = {
-    val s = dset.sparkSession
+  private def bucketed(rows: DataFrame): DataFrame =
+    rows.withColumn("bucket", bucketCol(col("tok"))).repartition(col("bucket"))
+
+  /** Write one generation from a doc batch. Its posting prefixes are
+    * selected under the df in force at this commit — `snap`'s stored
+    * partials plus the batch's own (see the class doc's versioning
+    * rule); a build's is the corpus's own df, exactly q178's rule.
+    * Cost: the batch's chunk pass + one vocab-scale read of the stored
+    * df partials.
+    */
+  protected def writeGen(dir: String, snap: Snap, docs: DataFrame,
+      gen: Long): Unit = {
+    val s = docs.sparkSession
     import s.implicits._
-    val (vec, mRel, tokd) = TextOps.maxSimChunkRels(dset)
-    FlatManifest.writeGenDir(
-      vec.join(mRel, Seq("doc_id", "h"))
-        .select($"doc_id".as("cdoc"), $"h".as("cc"),
-          $"v".as("vb"), $"n2".as("n2b"), $"m"),
-      chunksDir(dir), gen)
-    FlatManifest.writeGenDir(
-      TextOps.maxSimRarePrefix(tokd, dfForPrefix)
-        .select($"doc_id".as("cdoc"), $"h".as("cc"), $"tok",
-          bucketCol($"tok").as("bucket"))
-        .repartition($"bucket"),
-      postDir(dir), gen, Seq("bucket"))
-    FlatManifest.writeGenDir(
-      tokd.groupBy($"tok").agg(count(lit(1)).as("tok_df"))
-        .select($"tok", $"tok_df", bucketCol($"tok").as("bucket"))
-        .repartition($"bucket"),
-      dfDir(dir), gen, Seq("bucket"))
+    val (vec, mRel, tokd) = TextOps.maxSimChunkRels(docs)
+    val batchDf = tokd.groupBy($"tok").agg(count(lit(1)).as("tok_df"))
+    val dfAtCommit =
+      if (snap.gens.isEmpty) batchDf
+      else rel(s, dir, snap, dfParts).select($"tok", $"tok_df")
+        .unionByName(batchDf)
+        .groupBy($"tok").agg(sum($"tok_df").as("tok_df"))
+    writeRoot(chunks, dir, vec.join(mRel, Seq("doc_id", "h"))
+      .select($"doc_id".as("cdoc"), $"h".as("cc"),
+        $"v".as("vb"), $"n2".as("n2b"), $"m"), gen)
+    writeRoot(postings, dir, bucketed(TextOps.maxSimRarePrefix(tokd,
+      dfAtCommit).select($"doc_id".as("cdoc"), $"h".as("cc"), $"tok")), gen)
+    writeRoot(dfParts, dir, bucketed(batchDf), gen)
   }
 
-  private def emptyChunks(s: SparkSession): DataFrame =
-    s.range(0).select(col("id").as("cdoc"), col("id").as("cc"),
-      array(col("id")).as("vb"), col("id").as("n2b"), col("id").as("m"),
-      col("id").as("gen"))
-
-  private def emptyPostings(s: SparkSession): DataFrame =
-    s.range(0).select(col("id").as("cdoc"), col("id").as("cc"),
-      col("id").cast("string").as("tok"), col("id").as("gen"),
-      col("id").as("bucket"))
-
-  private def emptyDf(s: SparkSession): DataFrame =
-    s.range(0).select(col("id").cast("string").as("tok"),
-      col("id").as("tok_df"), col("id").as("gen"), col("id").as("bucket"))
-
-  private def chunksOf(s: SparkSession, dir: String, snap: Snap): DataFrame =
-    if (snap.gens.isEmpty) emptyChunks(s)
-    else s.read.parquet(chunksDir(dir))
-      .filter(col("gen").isin(snap.gens: _*))
-
-  private def postingsOf(s: SparkSession, dir: String,
-      snap: Snap): DataFrame =
-    if (snap.gens.isEmpty) emptyPostings(s)
-    else s.read.parquet(postDir(dir))
-      .filter(col("gen").isin(snap.gens: _*))
-
-  private def dfPartsOf(s: SparkSession, dir: String,
-      snap: Snap): DataFrame =
-    if (snap.gens.isEmpty) emptyDf(s)
-    else s.read.parquet(dfDir(dir))
-      .filter(col("gen").isin(snap.gens: _*))
-
-  private def tombstonesOf(s: SparkSession, dir: String,
-      snap: Snap): Option[DataFrame] =
-    if (snap.tombs.isEmpty) None
-    else Some(s.read.parquet(tombDir(dir))
-      .filter(col("del").isin(snap.tombs: _*)).select(col("doc_id")))
-
-  private def maskDocs(s: SparkSession, dir: String, snap: Snap,
-      rel: DataFrame): DataFrame =
-    tombstonesOf(s, dir, snap).fold(rel)(t =>
-      rel.join(broadcast(t.select(col("doc_id").as("cdoc")).distinct()),
-        Seq("cdoc"), "left_anti"))
-
-  private def verifyData(s: SparkSession, dir: String)(snap: Snap): Unit = {
-    val f = FlatManifest.fs(s, dir)
-    def gone(what: String): Nothing = throw new IllegalStateException(
-      s"store $dir epoch ${snap.epoch}: $what no longer exists — its " +
-        "data was GC'd under a narrower retention window")
-    snap.gens.foreach { g =>
-      Seq(chunksDir(dir), postDir(dir), dfDir(dir)).foreach { root =>
-        if (!f.exists(new org.apache.hadoop.fs.Path(root, s"gen=$g")))
-          gone(s"generation $g under $root")
-      }
-    }
-    snap.tombs.foreach { t =>
-      if (!f.exists(new org.apache.hadoop.fs.Path(tombDir(dir), s"del=$t")))
-        gone(s"tombstone set $t")
+  /** Chunks and postings rewrite masked (committed prefixes PRESERVED —
+    * compaction is serve-transparent, spec-pinned), the df partials
+    * fold to their sum.
+    */
+  protected def fold(dir: String, snap: Snap, counted: DataFrame,
+      masked: DataFrame => DataFrame, gen: Long): Boolean = {
+    val s = counted.sparkSession
+    import s.implicits._
+    val livePost = masked(rel(s, dir, snap, postings))
+      .select(postings.cols.map(col): _*).localCheckpoint(true)
+    val dfSum = rel(s, dir, snap, dfParts)
+      .groupBy($"tok").agg(sum($"tok_df").as("tok_df"))
+      .withColumn("bucket", bucketCol($"tok")).localCheckpoint(true)
+    writeLive(masked(counted).select(chunks.data.map(col): _*)) { c =>
+      writeRoot(chunks, dir, c, gen)
+      writeRoot(postings, dir, livePost.repartition($"bucket"), gen)
+      writeRoot(dfParts, dir, dfSum.repartition($"bucket"), gen)
     }
   }
-
-  // ---------- lifecycle ----------
 
   /** Build the store from a doc set (doc_id, toks, …) as manifest
-    * epoch 1, generation 0 — prefixes under the corpus's own df,
-    * exactly q178's rule.
+    * epoch 1, generation 0. The doc set is pinned once so the df
+    * relation and the chunk derivation see the SAME materialization.
     */
-  def build(dset: DataFrame, dir: String): Unit = {
-    val s = dset.sparkSession
-    FlatManifest.prepareBuildDir(s, dir)(Set("chunks", "postings", "df"))
-    // pin the doc set once so the df relation and writeGen's chunk
-    // derivation see the SAME materialization (mirrors addBatch)
-    val docsCkpt = dset.localCheckpoint(true)
-    val (_, _, tokd) = TextOps.maxSimChunkRels(docsCkpt)
-    val dfRel = tokd.groupBy(col("tok")).agg(count(lit(1)).as("tok_df"))
-    writeGen(docsCkpt, dir, 0L, dfRel)
-    FlatManifest.commit(s, dir, Snap(epoch = 1L, gens = Seq(0L),
-      tombs = Nil, ingested = Set.empty, ingestLow = 0L,
-      nextInternal = -1L))
-  }
+  def build(dset: DataFrame, dir: String): Unit =
+    create(dset.sparkSession, dir)(
+      writeGen(dir, GenStore.Fresh, dset.localCheckpoint(true), 0L))
 
-  /** Incremental ingest of a doc batch as generation `gen` (> 0,
-    * caller-named), exactly-once under replay. The batch's posting
-    * prefixes are chosen under committed-df + batch-df — the df in
-    * force at this commit (deterministic; the q203 oracle replays the
-    * scope per generation). Cost: the batch's chunk pass + one
-    * vocab-scale read of the stored df partials.
-    */
+  /** Ingest a doc batch as caller generation `gen` ([[GenStore]]). */
   def addBatch(s: SparkSession, dir: String, batch: DataFrame,
-      gen: Long): Unit = {
-    require(gen > 0L,
-      s"ingest generations are caller-named positives (got $gen); " +
-        "internal generations are negative by construction")
-    val snap = FlatManifest.read(s, dir)
-    if (snap.committedIngest(gen)) return
-    val docsCkpt = batch.localCheckpoint(true)
-    if (docsCkpt.isEmpty) {
-      FlatManifest.commit(s, dir,
-        snap.withIngested(gen).copy(epoch = snap.epoch + 1))
-      return
-    }
-    val (_, _, tokd) = TextOps.maxSimChunkRels(docsCkpt)
-    val batchDf = tokd.groupBy(col("tok")).agg(count(lit(1)).as("tok_df"))
-    val dfAtCommit = dfPartsOf(s, dir, snap).select(col("tok"), col("tok_df"))
-      .unionByName(batchDf)
-      .groupBy(col("tok")).agg(sum(col("tok_df")).as("tok_df"))
-    writeGen(docsCkpt, dir, gen, dfAtCommit)
-    FlatManifest.commit(s, dir, snap.withIngested(gen)
-      .copy(epoch = snap.epoch + 1, gens = (snap.gens :+ gen).distinct))
-  }
-
-  /** Tombstone deletes by doc_id — O(batch), masked at serve, applied
-    * physically by [[compact]]. df partials are NOT decremented (see
-    * the class doc).
-    */
-  def delete(s: SparkSession, dir: String, docIds: DataFrame): Unit = {
-    val batch = docIds.select(col("doc_id")).localCheckpoint(true)
-    if (batch.isEmpty) return
-    val snap = FlatManifest.read(s, dir)
-    val delId = snap.epoch + 1
-    batch.withColumn("del", lit(delId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("del").parquet(tombDir(dir))
-    FlatManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-      tombs = snap.tombs :+ delId))
-  }
-
-  /** Fold all live generations into one internal generation with the
-    * tombstones applied physically: chunks and postings rewrite
-    * masked (committed prefixes PRESERVED — compaction is
-    * serve-transparent, spec-pinned), the df partials fold to their
-    * sum. Returns (n_chunks_before, n_chunks_removed, n_gens_before,
-    * n_chunks_after, compacted).
-    */
-  def compact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val snap = FlatManifest.read(s, dir)
-    val chunks = chunksOf(s, dir, snap)
-    val Array(stat) = chunks
-      .agg(count(lit(1)).as("n_before"),
-        coalesce(countDistinct($"gen"), lit(0L)).as("n_gens")).collect()
-    val nBefore = stat.getLong(0)
-    val tomb = tombstonesOf(s, dir, snap)
-      .map(_.select($"doc_id").distinct().localCheckpoint(true))
-    val nRemoved = tomb.fold(0L)(t =>
-      chunks.join(broadcast(t.withColumnRenamed("doc_id", "cdoc")), "cdoc")
-        .count())
-    val doFold = nRemoved > 0 || snap.gens.length > 1
-    if (doFold) {
-      val newGen = snap.nextInternal
-      val liveChunks = maskDocs(s, dir, snap, chunks)
-        .select($"cdoc", $"cc", $"vb", $"n2b", $"m")
-        .localCheckpoint(true)
-      val livePost = maskDocs(s, dir, snap, postingsOf(s, dir, snap))
-        .select($"cdoc", $"cc", $"tok", $"bucket")
-        .localCheckpoint(true)
-      val dfSum = dfPartsOf(s, dir, snap)
-        .groupBy($"tok").agg(sum($"tok_df").as("tok_df"))
-        .select($"tok", $"tok_df", bucketCol($"tok").as("bucket"))
-        .localCheckpoint(true)
-      val any = !liveChunks.isEmpty
-      if (any) {
-        FlatManifest.writeGenDir(liveChunks, chunksDir(dir), newGen)
-        FlatManifest.writeGenDir(livePost.repartition($"bucket"),
-          postDir(dir), newGen, Seq("bucket"))
-        FlatManifest.writeGenDir(dfSum.repartition($"bucket"),
-          dfDir(dir), newGen, Seq("bucket"))
-      }
-      FlatManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-        gens = if (any) Seq(newGen) else Seq.empty,
-        tombs = Nil, nextInternal = newGen - 1L))
-    } else if (snap.tombs.nonEmpty) {
-      FlatManifest.commit(s, dir,
-        snap.copy(epoch = snap.epoch + 1, tombs = Nil))
-    }
-    gcSweep(s, dir)
-    Seq((nBefore, nRemoved, stat.getLong(1), nBefore - nRemoved,
-        if (doFold) 1L else 0L))
-      .toDF("n_before", "n_removed", "n_gens_before", "n_after",
-        "compacted")
-  }
-
-  /** Standalone GC sweep (the inline one runs after [[compact]]). */
-  def vacuum(s: SparkSession, dir: String): DataFrame =
-    FlatManifest.report(s, gcSweep(s, dir))
-
-  private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
-    FlatManifest.gcSweep(s, dir, Seq("chunks", "postings", "df"))
+      gen: Long): Unit = ingest(s, dir, batch, gen)
 
   // ---------- serving ----------
 
@@ -309,8 +155,7 @@ object MaxSimStore {
   def serve(s: SparkSession, dir: String, queryDocs: DataFrame,
       k: Int = 5, epoch: Option[Long] = None): DataFrame = {
     import s.implicits._
-    val snap = epoch.fold(FlatManifest.read(s, dir))(e =>
-      FlatManifest.readAt(s, dir, e)(verifyData(s, dir)))
+    val snap = snapAt(s, dir, epoch)
     val (qvec, qmRel, qtokd) = TextOps.maxSimChunkRels(queryDocs)
     // qtokd deliberately stays LAZY like the corpus side: an A/B at
     // sf10 read checkpoint-once as -5% on the 20k-doc audit batch but
@@ -325,7 +170,7 @@ object MaxSimStore {
       .localCheckpoint(true)
     val qbuckets = qtoks.select($"bucket").distinct()
       .as[Long].collect().toSeq
-    val qdf = dfPartsOf(s, dir, snap)
+    val qdf = rel(s, dir, snap, dfParts)
       .filter($"bucket".isin(qbuckets: _*))
       .join(broadcast(qtoks.select($"tok")), Seq("tok"), "left_semi")
       .groupBy($"tok").agg(sum($"tok_df").as("tok_df"))
@@ -335,67 +180,16 @@ object MaxSimStore {
     // static partition filter; tombstoned docs are masked out
     val pbuckets = qpref.select(bucketCol($"tok").as("b")).distinct()
       .as[Long].collect().toSeq
-    val postings = maskDocs(s, dir, snap,
-      postingsOf(s, dir, snap).filter($"bucket".isin(pbuckets: _*)))
+    val probed = mask(s, dir, snap,
+      rel(s, dir, snap, postings).filter($"bucket".isin(pbuckets: _*)))
     val cand = qpref.select($"doc_id".as("qdoc"), $"h".as("qh"), $"tok")
-      .join(postings.select($"cdoc", $"cc", $"tok"), "tok")
+      .join(probed.select($"cdoc", $"cc", $"tok"), "tok")
       .filter($"qdoc" =!= $"cdoc")
       .select($"qdoc", $"qh", $"cdoc", $"cc").distinct()
     val av = qvec.select($"doc_id".as("qdoc"), $"h".as("qh"),
       $"v".as("va"), $"n2".as("n2a"))
-    val bv = maskDocs(s, dir, snap, chunksOf(s, dir, snap))
+    val bv = mask(s, dir, snap, rel(s, dir, snap, chunks))
       .select($"cdoc", $"cc", $"vb", $"n2b")
-    TextOps.maxSimScore(cand, av, bv, qmRel, k)
-  }
-
-  /** [[serve]] with BOUNDED full-precision scoring mass — the q209
-    * operating point from the stored relations: the probed candidate
-    * pairs are first scored with 4-bit proxy codes (derived map-side
-    * from the stored chunk vectors — one packed long per chunk moves
-    * through the pair join; a deployment can persist the codes as a
-    * sidecar generation to skip even that derivation read), each
-    * query admits its top `docCap` docs by proxy MaxSim, and only the
-    * admitted docs' pairs reach the full-vector scoring join. Same
-    * output shape as [[serve]]; recall vs the uncapped ranking is
-    * measured by the q209 gate entry, so a deployment picks its
-    * docCap from that table.
-    */
-  def serveCapped(s: SparkSession, dir: String, queryDocs: DataFrame,
-      k: Int = 5, docCap: Int = TextOps.MaxSimDocCaps.max.toInt,
-      epoch: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val snap = epoch.fold(FlatManifest.read(s, dir))(e =>
-      FlatManifest.readAt(s, dir, e)(verifyData(s, dir)))
-    val (qvec, qmRel, qtokd) = TextOps.maxSimChunkRels(queryDocs)
-    val qtoks = qtokd.select($"tok").distinct()
-      .withColumn("bucket", bucketCol($"tok"))
-      .localCheckpoint(true)
-    val qbuckets = qtoks.select($"bucket").distinct()
-      .as[Long].collect().toSeq
-    val qdf = dfPartsOf(s, dir, snap)
-      .filter($"bucket".isin(qbuckets: _*))
-      .join(broadcast(qtoks.select($"tok")), Seq("tok"), "left_semi")
-      .groupBy($"tok").agg(sum($"tok_df").as("tok_df"))
-    val qpref = TextOps.maxSimRarePrefix(qtokd, qdf)
-      .localCheckpoint(true)
-    val pbuckets = qpref.select(bucketCol($"tok").as("b")).distinct()
-      .as[Long].collect().toSeq
-    val postings = maskDocs(s, dir, snap,
-      postingsOf(s, dir, snap).filter($"bucket".isin(pbuckets: _*)))
-    val pairs = qpref.select($"doc_id".as("qdoc"), $"h".as("qh"), $"tok")
-      .join(postings.select($"cdoc", $"cc", $"tok"), "tok")
-      .filter($"qdoc" =!= $"cdoc")
-      .select($"qdoc", $"qh", $"cdoc", $"cc").distinct()
-    val corpusChunks = maskDocs(s, dir, snap, chunksOf(s, dir, snap))
-    val cand = TextOps.maxSimProxyAdmit(pairs,
-      qvec.select($"doc_id", $"h", $"v"),
-      corpusChunks.select($"cdoc".as("doc_id"), $"cc".as("h"),
-        $"vb".as("v")),
-      qmRel, docCap)
-      .select($"qdoc", $"qh", $"cdoc", $"cc")
-    val av = qvec.select($"doc_id".as("qdoc"), $"h".as("qh"),
-      $"v".as("va"), $"n2".as("n2a"))
-    val bv = corpusChunks.select($"cdoc", $"cc", $"vb", $"n2b")
     TextOps.maxSimScore(cand, av, bv, qmRel, k)
   }
 }

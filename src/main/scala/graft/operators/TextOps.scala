@@ -2967,9 +2967,11 @@ object TextOps {
     * norm per chunk instead of 19 longs (the very volume ratio that
     * made q178's first relational cut spill at sf10); stage 2 moves
     * full vectors for ≤ docCap docs per query. The exact side remains
-    * in this entry as its audit (the q201/q204 relationship); a
-    * routine serve uses the capped path alone
-    * ([[MaxSimStore.serveCapped]]).
+    * in this entry as its audit (the q201/q204 relationship). The
+    * persisted store serves uncapped ([[MaxSimStore.serve]]): its capped
+    * serve measured slower than the uncapped one on a 4-cpu host (7 vs
+    * 13 queries/s) and was removed, so this entry keeps the only capped
+    * plan.
     */
   private def q209(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -1838,82 +1838,65 @@ object StreamOps {
       }
     }
 
-  /** Condition check + fold shared by the FLAT-manifest ingest sinks:
+  /** The FLAT-store ingest sink shared by the three stores below: each
+    * micro-batch commits as generation batchId + 1 through
+    * [[graft.operators.GenStore]]'s exactly-once ingest — the
+    * manifest's bounded watermark makes a replayed batch a no-op — and
+    * maintenance is CONDITION-driven rather than a blind cadence:
     * compact when live generations exceed `maxGens` (a serve reads one
     * directory set per live generation — the read-amplification bound)
     * or pending tombstone sets exceed `maxTombs` (each pending set
-    * rides every serve's anti-join mask; deletes may arrive out of
-    * band from this stream). Reads ONLY the committed manifest — O(1)
-    * metadata, no data scan — and is idempotent under batch replay.
+    * rides every serve's anti-join mask; deletes may arrive out of band
+    * from this stream). The check reads ONLY the committed manifest —
+    * O(1) metadata, no data scan — and is idempotent under replay.
     */
-  private def flatMaintain(s: SparkSession, dir: String, maxGens: Int,
-      maxTombs: Int)(compact: => Unit): Unit = {
-    val snap = graft.operators.FlatManifest.read(s, dir)
-    if (snap.gens.length > maxGens || snap.tombs.length > maxTombs)
-      compact
-  }
+  private def flatIngestStream(events: DataFrame, dir: String,
+      store: graft.operators.GenStore, maxGens: Int, maxTombs: Int)(
+      rows: DataFrame => DataFrame): StreamingQuery =
+    toForeachBatch(events, OutputMode.Append) { (batch, batchId) =>
+      val s = batch.sparkSession
+      if (!batch.isEmpty) {
+        store.ingest(s, dir, rows(batch), gen = batchId + 1)
+        val snap = graft.operators.FlatManifest.read(s, dir)
+        if (snap.gens.length > maxGens || snap.tombs.length > maxTombs)
+          store.compact(s, dir)
+      }
+    }
 
   /** [[indexIngestStream]] for the FLAT 1-bit store
-    * ([[graft.operators.BinaryStore]]): each micro-batch packs and
-    * commits as generation batchId + 1 — the manifest's bounded
-    * exactly-once state makes a replayed batch a no-op — and
-    * maintenance is CONDITION-driven ([[flatMaintain]]) rather than a
-    * blind cadence. A concurrent [[binaryStoreServeStream]] picks each
-    * committed epoch up on its next trigger (epoch-keyed relation
-    * cache) under the shared retention contract.
+    * ([[graft.operators.BinaryStore]]) on [[flatIngestStream]]. A
+    * concurrent [[binaryStoreServeStream]] picks each committed epoch up
+    * on its next trigger (epoch-keyed relation cache) under the shared
+    * retention contract.
     */
   def binaryIngestStream(vecs: Dataset[IndexVec], dir: String,
       maxGens: Int = 4, maxTombs: Int = 2): StreamingQuery =
-    toForeachBatch(vecs.toDF(), OutputMode.Append) { (batch, batchId) =>
-      val s = batch.sparkSession
-      if (!batch.isEmpty) {
-        graft.operators.BinaryStore.addBatch(s, dir,
-          batch.select(col("vec_id"), col("qv")), gen = batchId + 1)
-        flatMaintain(s, dir, maxGens, maxTombs)(
-          graft.operators.BinaryStore.compact(s, dir))
-      }
-    }
+    flatIngestStream(vecs.toDF(), dir, graft.operators.BinaryStore,
+      maxGens, maxTombs)(identity)
 
   /** [[binaryIngestStream]] for the IVF-ROUTED binary store
     * ([[graft.operators.IvfBinaryStore]]): the batch assigns against
     * the STORED router (fixed at build — cell membership is a pure
-    * function of the vector), lands cell-partitioned under its own
-    * generation, and compacts on the same observed conditions.
+    * function of the vector) and lands cell-partitioned under its own
+    * generation.
     */
   def ivfBinaryIngestStream(vecs: Dataset[IndexVec], dir: String,
       maxGens: Int = 4, maxTombs: Int = 2): StreamingQuery =
-    toForeachBatch(vecs.toDF(), OutputMode.Append) { (batch, batchId) =>
-      val s = batch.sparkSession
-      if (!batch.isEmpty) {
-        graft.operators.IvfBinaryStore.addBatch(s, dir,
-          batch.select(col("vec_id"), col("qv")), gen = batchId + 1)
-        flatMaintain(s, dir, maxGens, maxTombs)(
-          graft.operators.IvfBinaryStore.compact(s, dir))
-      }
-    }
+    flatIngestStream(vecs.toDF(), dir, graft.operators.IvfBinaryStore,
+      maxGens, maxTombs)(identity)
 
-  /** [[indexIngestStream]] for the MaxSim chunk store
+  /** [[flatIngestStream]] for the MaxSim chunk store
     * ([[graft.operators.MaxSimStore]]): each micro-batch of documents
     * chunks, hashes, and vectorizes in flight (batch-bounded work) and
-    * commits as generation batchId + 1 under the df-at-commit prefix
-    * rule (the batch's posting prefixes are chosen under stored + batch
-    * df — deterministic per generation, exactly the q203 oracle's
-    * scope), with the same condition-driven compaction. A replayed
-    * batch is a committed-generation no-op, so the stream is
-    * exactly-once end to end.
+    * commits under the df-at-commit prefix rule (the batch's posting
+    * prefixes are chosen under stored + batch df — deterministic per
+    * generation, exactly the q203 oracle's scope).
     */
   def maxSimIngestStream(docsDs: Dataset[DocEvent], dir: String,
       maxGens: Int = 4, maxTombs: Int = 2): StreamingQuery =
-    toForeachBatch(docsDs.toDF(), OutputMode.Append) { (batch, batchId) =>
-      val s = batch.sparkSession
-      if (!batch.isEmpty) {
-        graft.operators.MaxSimStore.addBatch(s, dir,
-          batch.withColumn("toks", split(col("text"), "\\s+"))
-            .select(col("doc_id"), col("toks")), gen = batchId + 1)
-        flatMaintain(s, dir, maxGens, maxTombs)(
-          graft.operators.MaxSimStore.compact(s, dir))
-      }
-    }
+    flatIngestStream(docsDs.toDF(), dir, graft.operators.MaxSimStore,
+      maxGens, maxTombs)(_.withColumn("toks", split(col("text"), "\\s+"))
+        .select(col("doc_id"), col("toks")))
 
   /** One admission verdict of [[semDedupStream]] (public: encoder
     * requirement). `dup_of` = the kept member the newcomer duplicated

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps `src/main` at one harness: the benchmark lives in `flockbench/`,
   * so the program carries only its five runnable mains, and every one of
-  * them builds its session through [[Session.local]]. Scans the sources;
+  * them builds its session through [[Session.local]]. Also keeps the flat
+  * stores on one generation kernel: manifest commits, generation writes
+  * and the serving cache live only in `GenStore`. Scans the sources;
   * starts no Spark session.
   */
 class HarnessGuardSpec extends AnyFunSuite {
@@ -35,6 +37,17 @@ class HarnessGuardSpec extends AnyFunSuite {
       .filter(_._2 > 0)
     assert(sites == Seq("graft/Session.scala" -> 1),
       s"builder sites outside graft.Session: $sites")
+  }
+
+  test("the flat-store generation lifecycle is written only in GenStore") {
+    val kernel = "graft/operators/GenStore.scala"
+    val copies = for {
+      (p, t) <- sources if p != kernel
+      re <- Seq("""FlatManifest\.commit\(""".r,
+        """FlatManifest\.writeGenDir\(""".r, """\bva[lr]\s+relCache\b""".r)
+      if count(t, re) > 0
+    } yield p -> re.toString
+    assert(copies.isEmpty, s"lifecycle copies outside $kernel: $copies")
   }
 
   test("def main only in the five kept mains") {

@@ -84,25 +84,6 @@ class MaxSimStoreSpec extends SparkSpec {
     assert(top._3 == 200L, s"donor should rank first: $got")
   }
 
-  test("capped serve: wide cap equals uncapped; cap 16 keeps the top-5") {
-    import spark.implicits._
-    val dir = tmp("capped")
-    MaxSimStore.build(corpusDocs, dir)
-    val queries = corpusDocs.filter($"doc_id" % 100 === 0)
-      .localCheckpoint(true)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    val full = rows(MaxSimStore.serve(spark, dir, queries))
-    // a cap wider than the corpus admits everything -> identical rows
-    assert(rows(MaxSimStore.serveCapped(spark, dir, queries,
-      docCap = 1000000)) == full)
-    // admitted docs keep ALL their pairs, so scores are exact and the
-    // fixture's q209 row (recall@5 = 1000 at cap 16) makes the tight
-    // serve row-identical too
-    assert(rows(MaxSimStore.serveCapped(spark, dir, queries,
-      docCap = 16)) == full)
-  }
-
   test("streaming serve equals the batch serve at every batching boundary") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{IvfIndex, VectorOps}
+import graft.operators.{BinaryStore, IvfBinaryStore, IvfIndex, MaxSimStore,
+  TextOps, VectorOps}
 
 /** Snapshot time travel over the IVF store's manifest protocol: with a
   * widened retention window, every epoch's serve must replay
@@ -10,7 +11,8 @@ import graft.operators.{IvfIndex, VectorOps}
   * deletes (tombstone sets are manifest-scoped). Also pins the
   * retention contract: the default window GCs historical data and
   * serveAt fails loudly, and narrowing the window lets vacuum reclaim
-  * while the latest snapshot keeps serving.
+  * while the latest snapshot keeps serving. The flat stores' epoch reads
+  * carry the same data-existence check.
   */
 class TimeTravelSpec extends SparkSpec {
 
@@ -220,6 +222,52 @@ class TimeTravelSpec extends SparkSpec {
         emb.filter($"vec_id" % 100 === 0 && $"vec_id" % 7 =!= 0))
         .count() > 0)
     } finally spark.conf.unset("spark.graft.index.retainEpochs")
+  }
+
+  test("a flat-store time-travel read fails loudly once GC has reclaimed its epoch") {
+    import spark.implicits._
+    val emb = VectorOps.quantized(spark, sfDir)
+    val vq = VectorOps.binaryQueries(emb).limit(4)
+    val docs = TextOps.docs(spark, sfDir)
+    val dq = docs.filter($"doc_id" % 100 === 0)
+    val odd = emb.filter($"vec_id" % 5 === 0)
+    val victims = emb.filter($"vec_id" % 7 === 0).select($"vec_id")
+    // per store: build (epoch 1), add (2), delete (3), compact (4), all
+    // under the DEFAULT window, so compaction's GC reclaims epoch 3's
+    // generations and tombstone set; and a serve at an optional epoch
+    val stores = Seq[(String, String => Unit,
+        (String, Option[Long]) => org.apache.spark.sql.DataFrame)](
+      ("BinaryStore", d => {
+        BinaryStore.build(emb.filter($"vec_id" % 5 =!= 0), d)
+        BinaryStore.addBatch(spark, d, odd, 1L)
+        BinaryStore.delete(spark, d, victims)
+        BinaryStore.compact(spark, d)
+      }, (d, e) => BinaryStore.serve(spark, d, vq, k = 5, epoch = e)),
+      ("IvfBinaryStore", d => {
+        IvfBinaryStore.build(emb.filter($"vec_id" % 5 =!= 0), d)
+        IvfBinaryStore.addBatch(spark, d, odd, 1L)
+        IvfBinaryStore.delete(spark, d, victims)
+        IvfBinaryStore.compact(spark, d)
+      }, (d, e) => IvfBinaryStore.serve(spark, d, vq, k = 5, epoch = e)),
+      ("MaxSimStore", d => {
+        MaxSimStore.build(docs.filter($"doc_id" % 3 =!= 2), d)
+        MaxSimStore.addBatch(spark, d, docs.filter($"doc_id" % 3 === 2), 1L)
+        MaxSimStore.delete(spark, d, docs.filter($"doc_id" % 7 === 0)
+          .select($"doc_id"))
+        MaxSimStore.compact(spark, d)
+      }, (d, e) => MaxSimStore.serve(spark, d, dq, epoch = e)))
+    stores.foreach { case (name, lifecycle, serve) =>
+      val dir = tmp(s"flat_gc_$name")
+      lifecycle(dir)
+      withIndexRetention(8) {
+        val e = intercept[IllegalStateException] {
+          serve(dir, Some(3L)).collect()
+        }
+        assert(e.getMessage.contains("retention window"),
+          s"$name: ${e.getMessage}")
+        assert(serve(dir, None).count() > 0, s"$name: the head must serve")
+      }
+    }
   }
 
   test("a codebook retrain bumps pqVer; asof serves decode with the codebook of their epoch") {
