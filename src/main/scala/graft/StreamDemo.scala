@@ -8,6 +8,9 @@ import graft.streaming.StreamOps
   *   runMain graft.StreamDemo [eventsPerSecond] [seconds]
   */
 object StreamDemo {
+  /** How long past `secs` the demo waits for a query's first data batch. */
+  private val DeadlineSecs = 60L
+
   def main(args: Array[String]): Unit = {
     val eps = args.headOption.map(_.toInt).getOrElse(1000)
     val secs = args.lift(1).map(_.toInt).getOrElse(8)
@@ -44,8 +47,16 @@ object StreamDemo {
         StreamOps.bidStream(spark, eps).toDF(), "0 seconds") { winners =>
         nWinners.addAndGet(winners.count())
       }
-      q.awaitTermination(secs * 1000L)
       val queries = Seq("demo" -> q, "kv" -> kv, "ssj" -> ssj, "hot" -> hot)
+      // run `secs`, then on until every query has finished a data batch
+      // (batch 0 of a rate source is often empty), bounded by a fixed
+      // deadline so a wedged query cannot hang the smoke
+      val start = System.nanoTime()
+      def elapsed = (System.nanoTime() - start) / 1000000000L
+      def fed = queries.forall { case (_, sq) =>
+        Option(sq.lastProgress).exists(_.batchId >= 1) }
+      while (elapsed < secs || (!fed && elapsed < secs + DeadlineSecs))
+        Thread.sleep(100)
       queries.foreach(_._2.stop())
       // how far each query got: its last completed micro-batch (-1: none)
       val batches = queries.map { case (n, sq) =>

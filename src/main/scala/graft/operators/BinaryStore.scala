@@ -158,7 +158,7 @@ object BinaryStore extends BinaryLayout(Nil) {
     labeled.build(emb, dir)
 
   def addBatchLabeled(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long): DataFrame = labeled.addBatch(s, dir, newVecs, gen)
+      gen: Long): Unit = labeled.addBatch(s, dir, newVecs, gen)
 
   def compactLabeled(s: SparkSession, dir: String): DataFrame =
     labeled.compact(s, dir)

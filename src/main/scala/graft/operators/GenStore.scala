@@ -366,13 +366,10 @@ private[graft] abstract class BinaryGenStore(protected val codes: GenStore.Root,
     batch.select(vecRoot.data.map(col): _*)
 
   /** Pack and commit `newVecs` as caller generation `gen` (> 0),
-    * exactly-once ([[GenStore]]). Returns [[genReport]].
+    * exactly-once ([[GenStore]]).
     */
   def addBatch(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long): DataFrame = {
-    ingest(s, dir, newVecs, gen)
-    genReport(s, dir)
-  }
+      gen: Long): Unit = ingest(s, dir, newVecs, gen)
 
   /** The LIVE codes (vec_id, w0, w1 and the inner partition) of the
     * committed snapshot — what a serve ranks in stage 1.

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -21,9 +21,11 @@ import org.apache.spark.sql.expressions.Window
   *     the manifest points at exactly one.
   *   - `pqcodebook_v<K>/` — immutable PQ codebook versions, for the
   *     compressed store only ([[buildPq]]).
-  *   - `postings/cid=<C>/gen=<G>/` — immutable posting generation
-  *     directories: (vec_id, qv) partitioned by cell id then
-  *     generation. Partitioning by cell id is the scale decision: a
+  *   - `postings/cid=<C>/[label=<L>/]gen=<G>/` — immutable posting
+  *     generation directories: (vec_id, payload) partitioned by cell id
+  *     (then label, for a labeled store) then generation; the payload
+  *     is `qv` or a PQ `code` (see Layouts). Partitioning by cell id is
+  *     the scale decision: a
   *     probe touches `nprobe` cell directories out of `nlists`, so the
   *     serve-path scan is bounded by nprobe/nlists of the corpus, and
   *     an ingest batch adds new generation directories without
@@ -31,6 +33,34 @@ import org.apache.spark.sql.expressions.Window
   *     ingest batches; generations <= 0 are internal (the build's gen 0
   *     and the monotonically decreasing gens compaction/splits mint).
   *   - `tombstones/` — the append-only delete log ([[delete]]).
+  *
+  * == Layouts ==
+  * One store, four posting layouts — {raw, PQ} × {plain, labeled}:
+  * {{{
+  *            plain                        labeled
+  *   raw      build / addBatch / serve     buildLabeled / addBatchLabeled /
+  *            (serveAt, serveCached) /     serveLabeled (serveLabeledAt) /
+  *            mergeFrom                    mergeFromLabeled
+  *   PQ       buildPq / addBatchPq /       buildPqLabeled /
+  *            servePq (servePqAt,          addBatchPqLabeled /
+  *            servePqCached)               servePqLabeled
+  * }}}
+  * A layout decides three things and nothing else:
+  *   - the partition columns: `cid[, label], gen`;
+  *   - the payload: `qv`, or `code`, one packed long of PQ codes of the
+  *     residual against the cell's centroid;
+  *   - the write rule: labeled writes repartition by (cid, label) so
+  *     each directory gets one file, plain writes do not
+  *     ([[writePostings]]).
+  * Each entry point delegates to one build, ingest, merge and serve
+  * body. A serve returns (query_id, rank, neighbor, score) — `dist`, or
+  * `adc` for PQ — plus the query's `label` for a labeled layout (which
+  * ranks only same-label rows) and each hit's `cell_size` for raw
+  * plain. A stored index's layout is read from its snapshot (`pqVer` >
+  * 0 is PQ) and one probe for a `label=` directory under a committed
+  * cell; every ingest and merge refuses, before writing, a store of
+  * another layout: a label-blind write into a cid=/label=/gen= tree (or
+  * the reverse) breaks partition discovery on every later read.
   *
   * == Commit protocol ==
   * The manifest protocol — write new files, commit the manifest, then
@@ -76,6 +106,70 @@ object IvfIndex {
   private def postDir(dir: String) = s"$dir/postings"
   private def tombDir(dir: String) = s"$dir/tombstones"
   private def centDir(dir: String, ver: Long) = s"$dir/centroids_v$ver"
+
+  // ---------- posting layouts ----------
+
+  /** One of the four posting layouts (see the header's matrix). */
+  private case class Layout(labeled: Boolean, pq: Boolean) {
+    val carry: Seq[String] = if (labeled) Seq("label") else Nil
+    val keys: Seq[String] = "cid" +: carry
+    val payload: String = if (pq) "code" else "qv"
+    val score: String = if (pq) "adc" else "dist"
+    /** The entry-point suffix: `addBatch` + suffix ingests this layout. */
+    val suffix: String =
+      (if (pq) "Pq" else "") + (if (labeled) "Labeled" else "")
+    override def toString: String =
+      (if (labeled) "LABELED " else "UNLABELED ") + (if (pq) "PQ" else "raw")
+  }
+  private val RawPlain = Layout(labeled = false, pq = false)
+  private val RawLabeled = Layout(labeled = true, pq = false)
+  private val PqPlain = Layout(labeled = false, pq = true)
+  private val PqLabeled = Layout(labeled = true, pq = true)
+
+  /** The `gen=` directories under one cell directory, through the
+    * `label=` level when the layout has one. Metadata only.
+    */
+  private def genDirs(f: FileSystem, cell: Path): Seq[Path] =
+    f.listStatus(cell).toSeq.filter(_.isDirectory).map(_.getPath)
+      .flatMap(p => if (p.getName.startsWith("label="))
+        f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
+      else Seq(p))
+      .filter(_.getName.startsWith("gen="))
+
+  /** The layout of a committed store: PQ when the snapshot names a
+    * codebook version, labeled when the first committed non-empty cell
+    * holds a `label=` level (one [[genDirs]] listing). A store with no
+    * committed postings reads as plain.
+    */
+  private def layoutOf(s: SparkSession, dir: String,
+      snap: Snapshot): Layout = {
+    val f = IndexManifest.fs(s, dir)
+    val labeled = snap.cells.collectFirst {
+      case (c, gens) if gens.nonEmpty => new Path(postDir(dir), s"cid=$c")
+    }.exists(genDirs(f, _).exists(_.getParent.getName.startsWith("label=")))
+    Layout(labeled, snap.pqVer > 0)
+  }
+
+  /** The one posting write: `rows` in layout `lay` land as (vec_id,
+    * payload) under `postings/cid=/[label=/]gen=/`, by dynamic partition
+    * overwrite — a re-run REPLACES a crashed attempt's leftovers in its
+    * own directories and touches no other. Labeled writes repartition
+    * by (cid, label) so each directory gets ONE file: ~8k tiny files at
+    * 32 tasks × 16 cells × 16 labels made the create storm dominate the
+    * labeled build at sf10. Plain writes are NOT repartitioned: 16 cell
+    * dirs × 32 tasks is no storm, and the A/B showed the full-corpus
+    * (vec_id, qv) shuffle costs more than 512 creates save (q152 sf10
+    * 12.0 → 14.3 s with the repartition).
+    */
+  private def writePostings(rows: DataFrame, dir: String,
+      lay: Layout): Unit = {
+    val parts = lay.keys :+ "gen"
+    val out = rows.select(("vec_id" +: lay.payload +: parts).map(col): _*)
+    (if (lay.labeled) out.repartition(lay.keys.map(col): _*) else out)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(parts: _*).parquet(postDir(dir))
+  }
 
   // ---------- control plane: the shared manifest protocol ----------
 
@@ -140,9 +234,8 @@ object IvfIndex {
 
   /** Existence check for everything a snapshot references: the centroid
     * version directory, every committed tombstone set, and every
-    * (cid, gen) posting directory (both the plain cid=/gen= and the
-    * labeled cid=/label=/gen= layouts — one listing per cell, metadata
-    * only, bounded by nlists). Writers never commit a (cid, gen) pair
+    * (cid, gen) posting directory (one [[genDirs]] listing per cell,
+    * bounded by nlists). Writers never commit a (cid, gen) pair
     * without files (emptied cells commit an empty generation LIST), so a
     * missing directory always means reclaimed data, never a legitimately
     * empty partition — the check can be strict.
@@ -166,12 +259,8 @@ object IvfIndex {
       if (gens.nonEmpty) {
         val cd = new Path(postDir(dir), s"cid=$cid")
         if (!f.exists(cd)) gone(s"cell directory cid=$cid")
-        val found = f.listStatus(cd).filter(_.isDirectory).map(_.getPath)
-          .flatMap(p => if (p.getName.startsWith("label="))
-            f.listStatus(p).filter(_.isDirectory).map(_.getPath)
-          else Array(p))
-          .map(_.getName).filter(_.startsWith("gen="))
-          .map(_.stripPrefix("gen=").toLong).toSet
+        val found = genDirs(f, cd)
+          .map(_.getName.stripPrefix("gen=").toLong).toSet
         gens.filterNot(found.contains)
           .foreach(g => gone(s"posting generation cid=$cid/gen=$g"))
       }
@@ -295,17 +384,28 @@ object IvfIndex {
     * commit centroids + cell/generation-partitioned postings (gen 0)
     * as manifest epoch 1. A build OWNS its directory: any prior index
     * state there (including a crashed build's uncommitted files) is
-    * removed first.
+    * removed first. See the header's Layouts.
     */
   def build(emb: DataFrame, dir: String,
-      seedSmallest: Boolean = false): Unit = {
+      seedSmallest: Boolean = false): Unit =
+    buildAs(emb, dir, RawPlain, seedSmallest)
+
+  /** The one build body (see the header's Layouts): seed, train the
+    * coarse centroids to convergence, write them as version 1, for PQ
+    * train and write codebook version 1, write the gen-0 postings and
+    * commit epoch 1 over the cells the write left on disk.
+    */
+  private def buildAs(emb: DataFrame, dir: String, lay: Layout,
+      seedSmallest: Boolean): Unit = {
     val s = emb.sparkSession
     import s.implicits._
     prepareBuildDir(s, dir)
-    // seedSmallest: a SHARD build's id range needn't include 0..15 (a
-    // per-day / per-partition shard starts wherever its slice starts),
-    // so seed on the 16 smallest ids actually present — buildPq's rule,
-    // same driver cost class as the cid collect below
+    // Seed rule: the fixture-contiguous id space seeds on `vec_id < 16`.
+    // A shard or a filtered corpus (q172's budget-admitted release) may
+    // hold few or no ids below 16, so `seedSmallest` seeds on the 16
+    // smallest ids present — a 16-long driver list, same cost class as
+    // the cid collect below — and the PQ codebook reuses those ids, so
+    // both quantizers share one rule.
     val seedF: Column =
       if (seedSmallest) {
         val sids = emb.select($"vec_id").orderBy($"vec_id").limit(16)
@@ -314,23 +414,29 @@ object IvfIndex {
       } else $"vec_id" < 16
     val seeds = emb.filter(seedF)
       .select($"vec_id".as("cid"), $"qv".as("cq"))
-    val (learned, _) = VectorOps.lloydTrain(
-      emb, seeds, VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
+    val (learned, _) = VectorOps.lloydTrain(emb.select($"vec_id", $"qv"),
+      seeds, VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
     learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
       .parquet(centDir(dir, 1L))
-    // NOT repartitioned before the write (unlike buildLabeled): 16 cell
-    // dirs × 32 tasks is no file storm, and the A/B showed the full-
-    // corpus (vec_id, qv) shuffle costs more than 512 creates save
-    // (q152 sf10 12.0 → 14.3 s with the repartition)
-    VectorOps.argminPacked(emb, learned, carryQv = true)
-      .select($"vec_id", $"qv", $"cid", lit(0L).as("gen"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid", "gen")
-      .parquet(postDir(dir))
+    // a label rides the argmin aggregate as a min_by carry — no
+    // join-back exchange
+    val assigned = VectorOps.argminPacked(emb, learned, carryQv = true,
+      carry = lay.carry)
+    val rows = if (!lay.pq) assigned else {
+      // residuals feed BOTH the codebook training and the encode — one
+      // assignment pass, one checkpoint
+      val resid = residualsOf(assigned, learned, lay.carry)
+      val cb = trainPqCodebook(resid.select($"vec_id", $"rv"), seedF)
+      writeCb(s, dir, 1L, cb)
+      resid.withColumn("code", codeCol(cbLiteral(cb), $"rv"))
+    }
+    writePostings(rows.withColumn("gen", lit(0L)), dir, lay)
     val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
     val present = presentCids(s, dir)
     IndexManifest.commit(s, dir, Snapshot(1L, 1L,
       cids.map(c => c -> (if (present.contains(c)) Seq(0L)
-        else Seq.empty[Long])).toMap, Set.empty, -1L))
+        else Seq.empty[Long])).toMap, Set.empty, -1L,
+      pqVer = if (lay.pq) 1L else 0L))
   }
 
   /** Top-k exact-re-rank serve from the stored index: probe the
@@ -339,10 +445,12 @@ object IvfIndex {
     * to its cell's posting count (the occupancy the router balances).
     * Queries broadcast (a serving batch is bounded); postings are the
     * only corpus-sized relation and only probed cells are read.
+    * See the header's Layouts.
     */
   def serve(s: SparkSession, dir: String, queries: DataFrame,
       probes: Int = 2, k: Int = 5): DataFrame =
-    serveSnap(s, dir, readSnapshot(s, dir), queries, probes, k)
+    serveSnap(s, dir, readSnapshot(s, dir), RawPlain, queries,
+      nearest(probes), k)
 
   /** [[serve]] against the snapshot committed AS OF `epoch` — the
     * time-travel read the manifest protocol makes free: an epoch is
@@ -354,50 +462,90 @@ object IvfIndex {
     * epoch's read does not see later deletes — full snapshot
     * isolation, the "reproduce last week's retrieval run" /
     * "A/B the index before and after reindexing" capability.
+    * See the header's Layouts.
     */
   def serveAt(s: SparkSession, dir: String, epoch: Long,
       queries: DataFrame, probes: Int = 2, k: Int = 5): DataFrame =
-    serveSnap(s, dir, readSnapshotAt(s, dir, epoch), queries, probes, k)
+    serveSnap(s, dir, readSnapshotAt(s, dir, epoch), RawPlain, queries,
+      nearest(probes), k)
 
-  private def serveSnap(s: SparkSession, dir: String, snap: Snapshot,
-      queries: DataFrame, probes: Int, k: Int): DataFrame =
-    serveParts(s, centroidsOf(s, dir, snap), masked(s, dir, snap),
-      queries, probes, k)
+  /** The fixed router: each query's `probes` nearest cells. */
+  private def nearest(probes: Int): Column = col("crank") <= probes
 
-  private def serveParts(s: SparkSession, cents: DataFrame,
-      post: DataFrame, queries: DataFrame, probes: Int,
-      k: Int): DataFrame = {
+  /** The per-query (cell score, rank) relation every router selects
+    * probes from: every (query, centroid) pair with its exact int64
+    * centroid distance, its (cdist, cid) rank, and the query's best
+    * cell distance (`cbest`) for ratio rules. |queries| × nlists rows
+    * on the broadcast side — routing metadata, never corpus-sized.
+    */
+  private def scoredCells(s: SparkSession, cents: DataFrame,
+      queries: DataFrame): DataFrame = {
     import s.implicits._
-    val probed = queries.crossJoin(broadcast(cents))
+    queries.crossJoin(broadcast(cents))
       .withColumn("cdist", graft.functions.VectorMath.sqDistLong($"qv", $"cq"))
       .withColumn("crank", row_number().over(
         Window.partitionBy($"vec_id").orderBy($"cdist", $"cid")))
-      .filter($"crank" <= probes)
-      .select($"vec_id".as("query_id"), $"qv".as("probe_qv"), $"cid")
+      .withColumn("cbest",
+        min($"cdist").over(Window.partitionBy($"vec_id")))
+  }
+
+  private def serveSnap(s: SparkSession, dir: String, snap: Snapshot,
+      lay: Layout, queries: DataFrame, route: Column, k: Int): DataFrame =
+    serveTail(s, lay, centroidsOf(s, dir, snap),
+      if (lay.pq) Some(readCb(s, dir, snap.pqVer)) else None,
+      masked(s, dir, snap), queries, route, k)
+
+  /** The one serve tail (see the header's Layouts): the cells `route`
+    * selects from [[scoredCells]], then one bounded per-query top-k over
+    * the probed postings. For a labeled layout the label joins the cell
+    * id as a probe key, so a query ranks only same-label rows; the score
+    * is the exact int64 `dist` against the query vector or, for PQ, the
+    * `adc` through a per-(query, probed cell) lookup table ([[lutCol]])
+    * that rides the broadcast probe side. `cb` is the codebook of a PQ
+    * layout.
+    */
+  private def serveTail(s: SparkSession, lay: Layout, cents: DataFrame,
+      cb: Option[Array[Array[Array[Long]]]], post: DataFrame,
+      queries: DataFrame, route: Column, k: Int): DataFrame = {
+    import s.implicits._
+    val probe =
+      if (lay.pq) lutCol(cbLiteral(cb.get), $"qv", $"cq").as("lut")
+      else $"qv".as("probe_qv")
+    val probed = scoredCells(s, cents, queries).filter(route)
+      .select(Seq($"vec_id".as("query_id"), probe) ++
+        lay.carry.map(col) :+ $"cid": _*)
       .localCheckpoint(true)
-    // The router's probe list IS the pruning predicate: collect the
-    // distinct probed cell ids (bounded by nlists, not by the batch)
-    // and push them as a STATIC partition filter, so the posting scan
-    // plans to nprobe directories — DPP would have to rediscover this
-    // at runtime and its cost heuristics can decline; a serving path
-    // must never fall back to reading every cell.
-    val probedCells = probed.select($"cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    // probed cells only — the report column never needs unprobed counts,
-    // and an unfiltered count would silently re-scan every cell
-    val cellSize = post.filter($"cid".isin(probedCells: _*))
-      .groupBy($"cid").agg(count(lit(1)).as("cell_size"))
-    val w = Window.partitionBy($"query_id").orderBy($"dist", $"neighbor")
-    post.filter($"cid".isin(probedCells: _*))
-      .join(broadcast(probed), Seq("cid"))
+    // The probe list (and a labeled batch's label set) IS the pruning
+    // predicate: collect the distinct keys (bounded by nlists and the
+    // label count, not by the batch) and push them as a STATIC partition
+    // filter, so the posting scan plans to nprobe (× labels) directories
+    // — DPP would have to rediscover this at runtime and its cost
+    // heuristics can decline; a serving path must never fall back to
+    // reading every cell.
+    val pruned = post.filter(lay.keys.map(c => col(c).isin(
+      probed.select(col(c)).distinct().collect().map(_.getLong(0)).toSeq: _*))
+      .reduce(_ && _))
+    val score =
+      if (lay.pq) adcCol.as("adc")
+      else graft.functions.VectorMath.sqDistLong($"qv", $"probe_qv").as("dist")
+    val w = Window.partitionBy($"query_id").orderBy(col(lay.score), $"neighbor")
+    val ranked = pruned.join(broadcast(probed), lay.keys)
       .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id".as("neighbor"), $"cid",
-        graft.functions.VectorMath.sqDistLong($"qv", $"probe_qv").as("dist"))
+      .select(Seq($"query_id") ++ lay.carry.map(col) ++
+        Seq($"vec_id".as("neighbor"), $"cid", score): _*)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter($"rank" <= k)
-      .join(broadcast(cellSize), Seq("cid"))
-      .select($"query_id", $"rank", $"neighbor", $"dist", $"cell_size")
-      .orderBy($"query_id", $"rank")
+    val out =
+      if (lay.labeled) ranked.select($"query_id", $"label", $"neighbor",
+        col(lay.score), $"rank")
+      else if (lay.pq) ranked.select($"query_id", $"rank", $"neighbor", $"adc")
+      else ranked
+        // probed cells only — the report column never needs unprobed
+        // counts, and an unfiltered count would re-scan every cell
+        .join(broadcast(pruned.groupBy($"cid")
+          .agg(count(lit(1)).as("cell_size"))), Seq("cid"))
+        .select($"query_id", $"rank", $"neighbor", $"dist", $"cell_size")
+    out.orderBy($"query_id", $"rank")
   }
 
   // ---------- serve-stream store-metadata cache ----------
@@ -436,34 +584,31 @@ object IvfIndex {
     }
   }
 
-  private def centsDf(s: SparkSession,
-      meta: CachedMeta): DataFrame = {
-    import s.implicits._
-    meta.cents.toSeq.toDF("cid", "cq")
-  }
-
   /** [[serve]] with the per-epoch metadata cache — the streaming serve
     * tier's entry point ([[graft.streaming.StreamOps.knnIndexServeStream]]).
     * Identical results to [[serve]]: the manifest is still read per
     * call, only the unchanged-epoch centroid re-read is skipped.
+    * See the header's Layouts.
     */
   def serveCached(s: SparkSession, dir: String, queries: DataFrame,
-      probes: Int = 2, k: Int = 5): DataFrame = {
-    val snap = readSnapshot(s, dir)
-    val meta = cachedMeta(s, dir, snap, needCb = false)
-    serveParts(s, centsDf(s, meta), masked(s, dir, snap),
-      queries, probes, k)
-  }
+      probes: Int = 2, k: Int = 5): DataFrame =
+    serveCachedAs(s, dir, RawPlain, queries, probes, k)
 
   /** [[servePq]] with the per-epoch metadata cache (centroids AND
     * codebook — the LUT builds from the cached codebook literal).
+    * See the header's Layouts.
     */
   def servePqCached(s: SparkSession, dir: String, queries: DataFrame,
-      probes: Int = 2, k: Int = 5): DataFrame = {
+      probes: Int = 2, k: Int = 5): DataFrame =
+    serveCachedAs(s, dir, PqPlain, queries, probes, k)
+
+  private def serveCachedAs(s: SparkSession, dir: String, lay: Layout,
+      queries: DataFrame, probes: Int, k: Int): DataFrame = {
+    import s.implicits._
     val snap = readSnapshot(s, dir)
-    val meta = cachedMeta(s, dir, snap, needCb = true)
-    servePqParts(s, centsDf(s, meta), meta.cb.get,
-      masked(s, dir, snap), queries, probes, k)
+    val meta = cachedMeta(s, dir, snap, needCb = lay.pq)
+    serveTail(s, lay, meta.cents.toSeq.toDF("cid", "cq"), meta.cb,
+      masked(s, dir, snap), queries, nearest(probes), k)
   }
 
   /** Metadata-filtered index build: the same converged coarse quantizer,
@@ -477,44 +622,11 @@ object IvfIndex {
     * top-k is exact over the matching subset, never starved by
     * rank-then-filter). The label rides through the build's argmin
     * aggregate as a `min_by` carry — no join-back exchange.
+    * See the header's Layouts.
     */
   def buildLabeled(emb: DataFrame, dir: String,
-      seedSmallest: Boolean = false): Unit = {
-    val s = emb.sparkSession
-    import s.implicits._
-    prepareBuildDir(s, dir)
-    // seedSmallest: [[build]]'s shard rule — a labeled per-tenant /
-    // per-day shard's id range needn't include 0..15 (the labeled soak
-    // caught the empty-seed crash here exactly as the raw soak did for
-    // build)
-    val seedF: Column =
-      if (seedSmallest) {
-        val sids = emb.select($"vec_id").orderBy($"vec_id").limit(16)
-          .as[Long].collect()
-        $"vec_id".isInCollection(sids)
-      } else $"vec_id" < 16
-    val seeds = emb.filter(seedF)
-      .select($"vec_id".as("cid"), $"qv".as("cq"))
-    val (learned, _) = VectorOps.lloydTrain(
-      emb.select($"vec_id", $"qv"), seeds,
-      VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
-    learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
-      .parquet(centDir(dir, 1L))
-    // repartition on the partition columns so each (cid, label, gen)
-    // directory gets ONE file instead of one per write task (~8k tiny
-    // files at 32 tasks × 16 cells × 16 labels — the file-create storm
-    // dominated the labeled build's wall at sf10)
-    VectorOps.argminPacked(emb, learned, carryQv = true, carry = Seq("label"))
-      .select($"vec_id", $"qv", $"cid", $"label", lit(0L).as("gen"))
-      .repartition($"cid", $"label")
-      .write.mode(SaveMode.Overwrite).partitionBy("cid", "label", "gen")
-      .parquet(postDir(dir))
-    val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
-    val present = presentCids(s, dir)
-    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
-      cids.map(c => c -> (if (present.contains(c)) Seq(0L)
-        else Seq.empty[Long])).toMap, Set.empty, -1L))
-  }
+      seedSmallest: Boolean = false): Unit =
+    buildAs(emb, dir, RawLabeled, seedSmallest)
 
   /** Filtered top-k serve: each query (vec_id, qv, label) ranks only
     * same-label vectors in its `probes` nearest cells. Both partition
@@ -523,74 +635,52 @@ object IvfIndex {
     * label-concentrated serving batch (the tenant-scoped reality) reads
     * nprobe × |batch labels| directories; the per-query label equality
     * in the join keeps per-query semantics exact even when the batch
-    * spans labels.
+    * spans labels. See the header's Layouts.
     */
   def serveLabeled(s: SparkSession, dir: String, queries: DataFrame,
       probes: Int = 2, k: Int = 5): DataFrame =
-    serveLabeledSnap(s, dir, readSnapshot(s, dir), queries, probes, k)
+    serveSnap(s, dir, readSnapshot(s, dir), RawLabeled, queries,
+      nearest(probes), k)
 
   /** [[serveLabeled]] pinned to a RETAINED epoch — labeled parity for
     * [[serveAt]] (round-13 task: the labeled lifecycle landed in round
     * 12; its time-travel read serves with the centroid version AND
     * tombstone set in force at that epoch, exactly like the unlabeled
-    * path).
+    * path). See the header's Layouts.
     */
   def serveLabeledAt(s: SparkSession, dir: String, epoch: Long,
       queries: DataFrame, probes: Int = 2, k: Int = 5): DataFrame =
-    serveLabeledSnap(s, dir, readSnapshotAt(s, dir, epoch), queries,
-      probes, k)
+    serveSnap(s, dir, readSnapshotAt(s, dir, epoch), RawLabeled, queries,
+      nearest(probes), k)
 
-  private def serveLabeledSnap(s: SparkSession, dir: String,
-      snap: Snapshot, queries: DataFrame, probes: Int,
-      k: Int): DataFrame = {
-    import s.implicits._
-    val cents = centroidsOf(s, dir, snap)
-    val post = masked(s, dir, snap)
-    val probed = queries.crossJoin(broadcast(cents))
-      .withColumn("cdist", graft.functions.VectorMath.sqDistLong($"qv", $"cq"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"cdist", $"cid")))
-      .filter($"crank" <= probes)
-      .select($"vec_id".as("query_id"), $"qv".as("probe_qv"),
-        $"label", $"cid")
-      .localCheckpoint(true)
-    val probedCells = probed.select($"cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val probedLabels = probed.select($"label").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val w = Window.partitionBy($"query_id").orderBy($"dist", $"neighbor")
-    post.filter($"cid".isin(probedCells: _*) &&
-        $"label".isin(probedLabels: _*))
-      .join(broadcast(probed), Seq("cid", "label"))
-      .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"label", $"vec_id".as("neighbor"),
-        graft.functions.VectorMath.sqDistLong($"qv", $"probe_qv").as("dist"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= k)
-      .orderBy($"query_id", $"rank")
-  }
-
-  /** Step 1 of an ingest: assign the batch against the stored centroids
-    * and write its postings under generation `gen` — dynamic partition
-    * overwrite, so re-running a crashed attempt REPLACES its partial
-    * leftovers rather than appending. Returns the touched cell ids
-    * (computed from the materialized assignment, never from a directory
-    * listing — a listing could pick up a crashed attempt's orphans).
-    * Exposed private[graft] so the crash-recovery spec can stop between
-    * the data write and the manifest commit.
+  /** Step 1 of an ingest, in the store's own layout: assign the batch
+    * against the stored centroids, PQ-encode it in the same pass, and
+    * write its postings as generation `gen`. Returns the touched cell
+    * ids (from the materialized assignment, never from a listing, which
+    * could pick up a crashed attempt's orphans). private[graft] so the
+    * crash-recovery spec can stop between data write and commit.
     */
   private[graft] def ingestFiles(s: SparkSession, dir: String,
       newVecs: DataFrame, gen: Long): Seq[Long] = {
     import s.implicits._
-    val assigned = VectorOps.argminPacked(newVecs, centroids(s, dir),
-        carryQv = true)
-      .select($"vec_id", $"qv", $"cid", lit(gen).as("gen"))
+    val snap = readSnapshot(s, dir)
+    val lay = layoutOf(s, dir, snap)
+    val cents = centroidsOf(s, dir, snap)
+    val assigned = VectorOps.argminPacked(
+      newVecs.select(("vec_id" +: "qv" +: lay.carry).map(col): _*), cents,
+      carryQv = true, carry = lay.carry)
+    val rows = if (!lay.pq) assigned else {
+      // the cq join-back rides the k-row broadcast
+      val cbc = cbLiteral(readCb(s, dir, snap.pqVer))
+      assigned.join(broadcast(cents.select($"cid", $"cq")), Seq("cid"))
+        .withColumn("code", codeCol(cbc, residCol($"qv", $"cq")))
+    }
+    val batch = rows.select(("vec_id" +: lay.payload +: lay.keys).map(col) :+
+        lit(gen).as("gen"): _*)
       .localCheckpoint(true) // batch-bounded; feeds both collect + write
-    val touched = assigned.select($"cid".cast("long")).distinct()
+    val touched = batch.select($"cid".cast("long")).distinct()
       .as[Long].collect().toSeq
-    assigned.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cid", "gen").parquet(postDir(dir))
+    writePostings(batch, dir, lay)
     touched
   }
 
@@ -604,13 +694,30 @@ object IvfIndex {
     * batch; the base postings are never read row-wise, only counted.
     * Exactly-once under replay: a generation the manifest has already
     * committed (even one compaction has since folded) is a no-op.
+    * Plain raw stores only: the other layouts refuse toward their own
+    * entry point (see the header's Layouts).
     */
   def addBatch(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long = 1L): DataFrame = {
+      gen: Long = 1L): DataFrame =
+    ingest(s, dir, newVecs, gen, RawPlain)
+
+  /** The one exactly-once ingest body (see the header's Layouts): refuse
+    * a store of another layout, write the batch ([[ingestFiles]]) unless
+    * the manifest already committed `gen`, commit it, and report
+    * occupancy ([[splitReport]]).
+    */
+  private def ingest(s: SparkSession, dir: String, newVecs: DataFrame,
+      gen: Long, lay: Layout): DataFrame = {
+    val who = s"addBatch${lay.suffix}"
     require(gen > 0L,
       s"ingest generations are caller-named positives (got $gen); " +
         "internal generations are negative by construction")
+    require(!lay.labeled || newVecs.columns.contains("label"),
+      s"$who: the batch must carry a label column")
     val snap = readSnapshot(s, dir)
+    val got = layoutOf(s, dir, snap)
+    require(got == lay, s"$who: $dir is a $got store, not $lay — use " +
+      s"addBatch${got.suffix}")
     if (!snap.committedIngest(gen)) {
       val touched = ingestFiles(s, dir, newVecs, gen)
       val cells = snap.cells ++ touched.map(c =>
@@ -629,36 +736,11 @@ object IvfIndex {
     * the same manifest discipline. This closes the labeled store's
     * lifecycle gap — build-once stores can now take incremental
     * tenant-scoped ingest like their unlabeled siblings.
+    * See the header's Layouts.
     */
   def addBatchLabeled(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long = 1L): DataFrame = {
-    import s.implicits._
-    require(gen > 0L,
-      s"ingest generations are caller-named positives (got $gen)")
-    require(newVecs.columns.contains("label"),
-      "addBatchLabeled: the batch must carry a label column")
-    val snap = readSnapshot(s, dir)
-    require(postingsOf(s, dir, snap).columns.contains("label"),
-      s"addBatchLabeled: $dir is not a labeled store — use addBatch")
-    if (!snap.committedIngest(gen)) {
-      val assigned = VectorOps.argminPacked(
-          newVecs.select($"vec_id", $"qv", $"label"),
-          centroidsOf(s, dir, snap), carryQv = true, carry = Seq("label"))
-        .select($"vec_id", $"qv", $"cid", $"label", lit(gen).as("gen"))
-        .localCheckpoint(true)
-      val touched = assigned.select($"cid".cast("long")).distinct()
-        .as[Long].collect().toSeq
-      assigned.repartition($"cid", $"label")
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid", "label", "gen").parquet(postDir(dir))
-      val cells = snap.cells ++ touched.map(c =>
-        c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      IndexManifest.commit(s, dir, snap.withIngested(gen)
-        .copy(epoch = snap.epoch + 1, cells = cells))
-    }
-    splitReport(s, dir)
-  }
+      gen: Long = 1L): DataFrame =
+    ingest(s, dir, newVecs, gen, RawLabeled)
 
   /** [[mergeFrom]] for LABELED stores — the labeled-aware path the
     * label-blind merge refuses toward: the source's masked postings
@@ -667,27 +749,11 @@ object IvfIndex {
     * exactly-once labeled ingest generation ([[addBatchLabeled]]).
     * Both sides must be raw labeled stores; generation collisions fail
     * loudly under the same `allowReplay` contract as [[mergeFrom]].
+    * See the header's Layouts.
     */
   def mergeFromLabeled(s: SparkSession, dstDir: String, srcDir: String,
-      gen: Long, allowReplay: Boolean = false): DataFrame = {
-    val srcSnap = readSnapshot(s, srcDir)
-    require(srcSnap.pqVer == 0L,
-      s"mergeFromLabeled: source $srcDir is a PQ store; raw stores only")
-    val dstSnap = readSnapshot(s, dstDir)
-    require(dstSnap.pqVer == 0L,
-      s"mergeFromLabeled: destination $dstDir is a PQ store; raw stores only")
-    val srcPost = masked(s, srcDir, srcSnap)
-    require(srcPost.columns.contains("label"),
-      s"mergeFromLabeled: source $srcDir is UNLABELED — use mergeFrom")
-    require(postingsOf(s, dstDir, dstSnap).columns.contains("label"),
-      s"mergeFromLabeled: destination $dstDir is UNLABELED — use mergeFrom")
-    require(allowReplay || !dstSnap.committedIngest(gen),
-      s"mergeFromLabeled: destination $dstDir already committed ingest " +
-        s"generation $gen — use a fresh gen per source, or pass " +
-        "allowReplay=true for a recovery replay of the same source")
-    addBatchLabeled(s, dstDir,
-      srcPost.select(col("vec_id"), col("qv"), col("label")), gen)
-  }
+      gen: Long, allowReplay: Boolean = false): DataFrame =
+    merge(s, dstDir, srcDir, gen, allowReplay, RawLabeled)
 
   /** MERGE another raw IVF store's LIVE contents into this one — the
     * shard-consolidation operation a 100 TB deployment runs when index
@@ -725,33 +791,38 @@ object IvfIndex {
     * (one scan, one argmin exchange, one partitioned write); the
     * destination's existing postings are untouched files — merge cost
     * tracks the smaller shard, never the serving store.
+    * See the header's Layouts.
     */
   def mergeFrom(s: SparkSession, dstDir: String, srcDir: String,
-      gen: Long, allowReplay: Boolean = false): DataFrame = {
+      gen: Long, allowReplay: Boolean = false): DataFrame =
+    merge(s, dstDir, srcDir, gen, allowReplay, RawPlain)
+
+  /** The one merge body: both stores must hold the raw layout `lay`,
+    * then the source's masked postings commit into the destination as
+    * one exactly-once ingest generation ([[ingest]]).
+    */
+  private def merge(s: SparkSession, dstDir: String, srcDir: String,
+      gen: Long, allowReplay: Boolean, lay: Layout): DataFrame = {
+    val who = s"mergeFrom${lay.suffix}"
     val srcSnap = readSnapshot(s, srcDir)
-    require(srcSnap.pqVer == 0L,
-      s"mergeFrom: source $srcDir is a PQ store (codebook v${srcSnap.pqVer}); " +
-        "PQ codes are codebook-relative — re-encode from the original " +
-        "vectors instead of merging stores")
     val dstSnap = readSnapshot(s, dstDir)
-    require(dstSnap.pqVer == 0L,
-      s"mergeFrom: destination $dstDir is a PQ store; raw stores only")
-    val srcPost = masked(s, srcDir, srcSnap)
-    require(!srcPost.columns.contains("label"),
-      s"mergeFrom: source $srcDir is a LABELED store — a label-blind " +
-        "merge would silently drop its labels; use mergeFromLabeled")
-    require(!postingsOf(s, dstDir, dstSnap).columns.contains("label"),
-      s"mergeFrom: destination $dstDir is a LABELED store — merging " +
-        "unlabeled cid=/gen= directories into its cid=/label=/gen= " +
-        "tree would corrupt partition discovery for every later read; " +
-        "use mergeFromLabeled")
+    Seq(("source", srcDir, srcSnap), ("destination", dstDir, dstSnap))
+      .foreach { case (role, d, snap) =>
+        val got = layoutOf(s, d, snap)
+        require(!got.pq, s"$who: $role $d is a PQ store (codebook " +
+          s"v${snap.pqVer}); PQ codes are codebook-relative — re-encode " +
+          "from the original vectors instead of merging stores")
+        require(got == lay, s"$who: $role $d is a $got store — use " +
+          s"mergeFrom${got.suffix}")
+      }
     require(allowReplay || !dstSnap.committedIngest(gen),
-      s"mergeFrom: destination $dstDir already committed ingest " +
+      s"$who: destination $dstDir already committed ingest " +
         s"generation $gen (ingest_low=${dstSnap.ingestLow}) — merging " +
         "another source under a reused generation id would be silently " +
         "skipped and its rows lost; use a fresh gen per source, or pass " +
         "allowReplay=true if this IS a recovery replay of the same source")
-    addBatch(s, dstDir, srcPost.select(col("vec_id"), col("qv")), gen)
+    ingest(s, dstDir, masked(s, srcDir, srcSnap)
+      .select(("vec_id" +: "qv" +: lay.carry).map(col): _*), gen, lay)
   }
 
   /** CLONE a retained epoch of `srcDir` as an INDEPENDENT store at
@@ -791,13 +862,8 @@ object IvfIndex {
     if (snap.pqVer > 0)
       s.read.parquet(pqCbDir(srcDir, snap.pqVer))
         .write.mode(SaveMode.Overwrite).parquet(pqCbDir(dstDir, 1L))
-    val post = masked(s, srcDir, snap)
-    val partCols =
-      if (post.columns.contains("label")) Seq("cid", "label", "gen")
-      else Seq("cid", "gen")
-    post.drop("gen").withColumn("gen", lit(0L))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partCols: _*).parquet(postDir(dstDir))
+    writePostings(masked(s, srcDir, snap).withColumn("gen", lit(0L)),
+      dstDir, layoutOf(s, srcDir, snap))
     val present = presentCids(s, dstDir)
     val cells = snap.cells.map { case (c, _) =>
       c -> (if (present.contains(c)) Seq(0L) else Seq.empty[Long]) }
@@ -838,7 +904,7 @@ object IvfIndex {
       // which DROPPED labels and wrote label-less partition dirs into a
       // cid=/label=/gen= tree — the same corruption class the labeled
       // mergeFrom guard closed. Caught by the labeled-store soak.
-      val hasLabel = postingsOf(s, dir, snap).columns.contains("label")
+      val lay = layoutOf(s, dir, snap)
       val cents = centroids(s, dir)
         .select($"cid".cast("long").as("cid"), $"cq")
         .localCheckpoint(true)
@@ -848,8 +914,7 @@ object IvfIndex {
       val keptCents = cents.filter(!$"cid".isin(flagged: _*))
       val newCents = flagged.map { hot =>
         val cell = postings(s, dir).filter($"cid" === hot)
-          .select($"vec_id" +: $"qv" +:
-            (if (hasLabel) Seq($"label") else Nil): _*)
+          .select(("vec_id" +: "qv" +: lay.carry).map(col): _*)
           .localCheckpoint(true)
         val seedIds = cell.select($"vec_id").orderBy($"vec_id").limit(2)
           .as[Long].collect()
@@ -865,18 +930,9 @@ object IvfIndex {
         val g = intGen; intGen -= 1
         val remapped = learned.select(($"cid" + lo).as("cid"), $"cq")
           .localCheckpoint(true)
-        val assigned = VectorOps.argminPacked(cell, learned,
-            carryQv = true, carry = if (hasLabel) Seq("label") else Nil)
-          .select($"vec_id" +: $"qv" +:
-            (if (hasLabel) Seq($"label") else Nil) :+
-            ($"cid" + lo).as("cid") :+ lit(g).as("gen"): _*)
-        (if (hasLabel) assigned.repartition($"cid", $"label")
-         else assigned)
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy((if (hasLabel) Seq("cid", "label", "gen")
-            else Seq("cid", "gen")): _*)
-          .parquet(postDir(dir))
+        writePostings(VectorOps.argminPacked(cell, learned,
+            carryQv = true, carry = lay.carry)
+          .withColumn("cid", $"cid" + lo).withColumn("gen", lit(g)), dir, lay)
         // a degenerate 2-way train can leave one half memberless: that
         // half commits an EMPTY generation list, never a file-less gen.
         // The new cids are fresh, so directory existence IS membership
@@ -912,16 +968,6 @@ object IvfIndex {
     * with no stop decision to replay.
     */
   private[graft] val PqTrainIters = 2
-
-  /** Exact int64 squared distance between two array<long> columns via
-    * higher-order functions — used inside the PQ encode/decode
-    * expressions where the native [[graft.functions.VectorMath]]
-    * expression cannot reach (its inputs there are themselves
-    * expression-built arrays inside a lambda).
-    */
-  private def sqHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, x) => acc + x)
 
   /** The 8×16×8 PQ codebook as a nested array LITERAL column (1024
     * longs, bounded by construction): with the codebook inlined into
@@ -1096,49 +1142,11 @@ object IvfIndex {
     * coarse assignment, residual, and encode ride ONE corpus pass plus
     * the bounded training rounds (encode is a per-row literal-codebook
     * projection — no codebook join on the write path).
+    * See the header's Layouts.
     */
   def buildPq(emb: DataFrame, dir: String,
-      seedSmallest: Boolean = false): Unit = {
-    val s = emb.sparkSession
-    import s.implicits._
-    prepareBuildDir(s, dir)
-    // Seed rule: the fixture-contiguous id space seeds on `vec_id < 16`
-    // (every existing entry's replayed rule). A FILTERED build corpus
-    // (q172's budget-admitted release) may hold few or no ids below 16,
-    // so `seedSmallest` seeds on the 16 smallest ids actually present —
-    // a 16-long driver list, same cost class as the cid collect below —
-    // and reuses those ids for the PQ codebook seeds so both quantizers
-    // share one rule.
-    val seedF: Column =
-      if (seedSmallest) {
-        val sids = emb.select($"vec_id").orderBy($"vec_id").limit(16)
-          .as[Long].collect()
-        $"vec_id".isInCollection(sids)
-      } else $"vec_id" < 16
-    val seeds = emb.filter(seedF)
-      .select($"vec_id".as("cid"), $"qv".as("cq"))
-    val (learned, _) = VectorOps.lloydTrain(
-      emb, seeds, VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
-    learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
-      .parquet(centDir(dir, 1L))
-    // residuals of the build corpus feed BOTH the codebook training and
-    // the encode — one assignment pass, one checkpoint
-    val assigned = VectorOps.argminPacked(emb, learned, carryQv = true)
-      .select($"vec_id", $"qv", $"cid")
-    val resid = residualsOf(assigned, learned)
-    val cb = trainPqCodebook(resid.select($"vec_id", $"rv"), seedF)
-    writeCb(s, dir, 1L, cb)
-    val cbc = cbLiteral(cb)
-    resid.select($"vec_id", codeCol(cbc, $"rv").as("code"), $"cid",
-        lit(0L).as("gen"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cid", "gen")
-      .parquet(postDir(dir))
-    val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
-    val present = presentCids(s, dir)
-    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
-      cids.map(c => c -> (if (present.contains(c)) Seq(0L)
-        else Seq.empty[Long])).toMap, Set.empty, -1L, pqVer = 1L))
-  }
+      seedSmallest: Boolean = false): Unit =
+    buildAs(emb, dir, PqPlain, seedSmallest)
 
   /** Top-k ADC serve from the compressed store: probe as [[serve]],
     * then rank the probed cells' candidates by exact asymmetric
@@ -1153,77 +1161,23 @@ object IvfIndex {
     * are still fully deterministic (integer ADC, (adc, neighbor) ties,
     * and the LUT sum equals the reconstruction distance exactly — the
     * squared distance decomposes over the 8 disjoint subspaces).
+    * See the header's Layouts.
     */
   def servePq(s: SparkSession, dir: String, queries: DataFrame,
       probes: Int = 2, k: Int = 5): DataFrame =
-    servePqSnap(s, dir, readSnapshot(s, dir), queries, probes, k)
+    serveSnap(s, dir, readSnapshot(s, dir), PqPlain, queries,
+      nearest(probes), k)
 
   /** [[servePq]] at a pinned epoch — see [[serveAt]] for the snapshot
     * semantics. The codebook is VERSIONED like the centroids: the
     * snapshot's `pqVer` names the codebook its codes were encoded
     * against, so a historical read after a [[retrainPq]] decodes with
-    * that epoch's codebook, never the latest.
+    * that epoch's codebook, never the latest. See the header's Layouts.
     */
   def servePqAt(s: SparkSession, dir: String, epoch: Long,
       queries: DataFrame, probes: Int = 2, k: Int = 5): DataFrame =
-    servePqSnap(s, dir, readSnapshotAt(s, dir, epoch), queries, probes, k)
-
-  private def servePqSnap(s: SparkSession, dir: String, snap: Snapshot,
-      queries: DataFrame, probes: Int, k: Int): DataFrame =
-    servePqParts(s, centroidsOf(s, dir, snap),
-      readCb(s, dir, snap.pqVer), masked(s, dir, snap), queries, probes, k)
-
-  private def servePqParts(s: SparkSession, cents: DataFrame,
-      cb: Array[Array[Array[Long]]], post: DataFrame,
-      queries: DataFrame, probes: Int, k: Int): DataFrame = {
-    import s.implicits._
-    servePqRouted(s, cb, post,
-      pqScoredCells(s, cents, queries).filter($"crank" <= probes), k)
-  }
-
-  /** The per-query (cell score, rank) relation both PQ routers select
-    * probes from: every (query, centroid) pair with its exact int64
-    * centroid distance, its (cdist, cid) rank, and the query's best
-    * cell distance (`cbest`) for ratio rules. |queries| × nlists rows
-    * on the broadcast side — routing metadata, never corpus-sized.
-    */
-  private def pqScoredCells(s: SparkSession, cents: DataFrame,
-      queries: DataFrame): DataFrame = {
-    import s.implicits._
-    queries.crossJoin(broadcast(cents))
-      .withColumn("cdist", graft.functions.VectorMath.sqDistLong($"qv", $"cq"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"cdist", $"cid")))
-      .withColumn("cbest",
-        min($"cdist").over(Window.partitionBy($"vec_id")))
-  }
-
-  /** ADC rank over an already-routed probe relation (the tail every PQ
-    * serve shares): per-query LUT on the broadcast probe side, probed
-    * cells pushed as a static partition filter, exact integer ADC
-    * top-k.
-    */
-  private def servePqRouted(s: SparkSession,
-      cb: Array[Array[Array[Long]]], post: DataFrame,
-      routedCells: DataFrame, k: Int): DataFrame = {
-    import s.implicits._
-    val cbc = cbLiteral(cb)
-    val probed = routedCells
-      .select($"vec_id".as("query_id"),
-        lutCol(cbc, $"qv", $"cq").as("lut"), $"cid")
-      .localCheckpoint(true)
-    val probedCells = probed.select($"cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val w = Window.partitionBy($"query_id").orderBy($"adc", $"neighbor")
-    post.filter($"cid".isin(probedCells: _*))
-      .join(broadcast(probed), Seq("cid"))
-      .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"vec_id".as("neighbor"), adcCol.as("adc"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= k)
-      .select($"query_id", $"rank", $"neighbor", $"adc")
-      .orderBy($"query_id", $"rank")
-  }
+    serveSnap(s, dir, readSnapshotAt(s, dir, epoch), PqPlain, queries,
+      nearest(probes), k)
 
   /** Distance-ratio-adaptive probe rule: probe a query's cells in
     * centroid-distance order WHILE `cdist · den ≤ cbest · num`, up to
@@ -1241,16 +1195,6 @@ object IvfIndex {
     col("crank") === 1 ||
       (col("crank") <= maxProbes &&
         col("cdist") * den <= col("cbest") * num)
-
-  /** [[servePq]] with the adaptive probe rule ([[adaptiveRule]]). */
-  def servePqAdaptive(s: SparkSession, dir: String, queries: DataFrame,
-      ratioNum: Long = AdaptRatioNum, ratioDen: Long = AdaptRatioDen,
-      maxProbes: Int = AdaptMaxProbes, k: Int = 5): DataFrame = {
-    val snap = readSnapshot(s, dir)
-    servePqRouted(s, readCb(s, dir, snap.pqVer), masked(s, dir, snap),
-      pqScoredCells(s, centroidsOf(s, dir, snap), queries)
-        .filter(adaptiveRule(ratioNum, ratioDen, maxProbes)), k)
-  }
 
   /** The shipped adaptive operating point (q173's adaptive row and its
     * oracle replay both pin these): widen while a cell's centroid
@@ -1320,49 +1264,17 @@ object IvfIndex {
 
   /** Incremental ingest into the COMPRESSED store: one broadcast-argmin
     * pass assigns the batch to the stored cells, the literal-codebook
-    * projection encodes it in the same pass, and the packed-code
-    * postings commit as generation `gen` under the identical manifest
-    * discipline as [[addBatch]] — exactly-once under replay, including
-    * across compactions ([[compact]] is layout-agnostic, so the full
-    * mutable lifecycle holds for the 8-byte postings too). The codebook
-    * is immutable, so ingested codes are directly comparable with the
-    * build's.
+    * projection encodes it in the same pass, and the packed-code postings
+    * commit as generation `gen` under the identical manifest discipline
+    * as [[addBatch]] — exactly-once under replay, including across
+    * compactions ([[compact]] is layout-agnostic, so the full mutable
+    * lifecycle holds for the 8-byte postings too). The codebook is
+    * immutable, so ingested codes are directly comparable with the
+    * build's. See the header's Layouts.
     */
   def addBatchPq(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long = 1L): DataFrame = {
-    import s.implicits._
-    require(gen > 0L,
-      s"ingest generations are caller-named positives (got $gen)")
-    val snap = readSnapshot(s, dir)
-    // a label-blind ingest into a labeled PQ store would drop labels
-    // and write cid=/gen= dirs into the cid=/label=/gen= tree — the
-    // splitCells/mergeFrom corruption class; refuse toward the
-    // labeled-aware path
-    require(!postingsOf(s, dir, snap).columns.contains("label"),
-      s"addBatchPq: $dir is a labeled PQ store — use addBatchPqLabeled")
-    if (!snap.committedIngest(gen)) {
-      val cents = centroidsOf(s, dir, snap)
-      val cbc = cbLiteral(readCb(s, dir, snap.pqVer))
-      // residual encode against the batch's own assigned cells — same
-      // single argmin pass, the cq join-back rides the k-row broadcast
-      val assigned = VectorOps.argminPacked(newVecs, cents, carryQv = true)
-        .join(broadcast(cents.select($"cid", $"cq")), Seq("cid"))
-        .select($"vec_id",
-          codeCol(cbc, residCol($"qv", $"cq")).as("code"), $"cid",
-          lit(gen).as("gen"))
-        .localCheckpoint(true)
-      val touched = assigned.select($"cid".cast("long")).distinct()
-        .as[Long].collect().toSeq
-      assigned.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid", "gen").parquet(postDir(dir))
-      val cells = snap.cells ++ touched.map(c =>
-        c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      IndexManifest.commit(s, dir, snap.withIngested(gen)
-        .copy(epoch = snap.epoch + 1, cells = cells))
-    }
-    splitReport(s, dir)
-  }
+      gen: Long = 1L): DataFrame =
+    ingest(s, dir, newVecs, gen, PqPlain)
 
   /** [[addBatchPq]] for LABELED PQ stores — the matrix's fourth cell
     * ({PQ} × {filtered}) gets its incremental ingest: the batch
@@ -1372,43 +1284,11 @@ object IvfIndex {
     * discipline, with the label riding the argmin aggregate and the
     * cid=/label=/gen= layout preserved (one file per directory — the
     * buildLabeled file-storm rule). Unlabeled stores refuse toward
-    * [[addBatchPq]], mirroring its guard.
+    * [[addBatchPq]], mirroring its guard. See the header's Layouts.
     */
   def addBatchPqLabeled(s: SparkSession, dir: String, newVecs: DataFrame,
-      gen: Long = 1L): DataFrame = {
-    import s.implicits._
-    require(gen > 0L,
-      s"ingest generations are caller-named positives (got $gen)")
-    require(newVecs.columns.contains("label"),
-      "addBatchPqLabeled: the batch must carry a label column")
-    val snap = readSnapshot(s, dir)
-    require(snap.pqVer > 0, s"index $dir is not a PQ store")
-    require(postingsOf(s, dir, snap).columns.contains("label"),
-      s"addBatchPqLabeled: $dir is not a labeled store — use addBatchPq")
-    if (!snap.committedIngest(gen)) {
-      val cents = centroidsOf(s, dir, snap)
-      val cbc = cbLiteral(readCb(s, dir, snap.pqVer))
-      val assigned = VectorOps.argminPacked(
-          newVecs.select($"vec_id", $"qv", $"label"), cents,
-          carryQv = true, carry = Seq("label"))
-        .join(broadcast(cents.select($"cid", $"cq")), Seq("cid"))
-        .select($"vec_id",
-          codeCol(cbc, residCol($"qv", $"cq")).as("code"), $"cid",
-          $"label", lit(gen).as("gen"))
-        .localCheckpoint(true)
-      val touched = assigned.select($"cid".cast("long")).distinct()
-        .as[Long].collect().toSeq
-      assigned.repartition($"cid", $"label")
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid", "label", "gen").parquet(postDir(dir))
-      val cells = snap.cells ++ touched.map(c =>
-        c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      IndexManifest.commit(s, dir, snap.withIngested(gen)
-        .copy(epoch = snap.epoch + 1, cells = cells))
-    }
-    splitReport(s, dir)
-  }
+      gen: Long = 1L): DataFrame =
+    ingest(s, dir, newVecs, gen, PqLabeled)
 
   /** RETRAIN the PQ codebook on the LIVE corpus's residuals and
     * re-encode every live posting under a NEW codebook version — the
@@ -1436,18 +1316,14 @@ object IvfIndex {
     import s.implicits._
     val snap = readSnapshot(s, dir)
     require(snap.pqVer > 0, s"index $dir is not a PQ store")
+    val lay = layoutOf(s, dir, snap)
     val cents = centroidsOf(s, dir, snap)
       .select($"cid".cast("long").as("cid"), $"cq")
     val live = masked(s, dir, snap)
-    val hasLabel = live.columns.contains("label")
-    val keyCols = Seq($"vec_id", $"cid".cast("long").as("cid")) ++
-      (if (hasLabel) Seq($"label".cast("long").as("label")) else Nil)
-    val withV = live.select(keyCols: _*)
+    val withV = live.select(("vec_id" +: lay.keys).map(c =>
+        col(c).cast("long").as(c)): _*)
       .join(corpus.select($"vec_id", $"qv"), Seq("vec_id"))
-    val carried = if (hasLabel) Seq("label") else Nil
-    val resid = residualsOf(
-      withV.select((Seq($"vec_id", $"qv", $"cid") ++ carried.map(col)): _*),
-      cents, carry = carried)
+    val resid = residualsOf(withV, cents, lay.carry)
     val nLive = live.count()
     require(resid.count() == nLive,
       s"retrainPq: corpus covers only ${resid.count()} of $nLive live " +
@@ -1455,15 +1331,9 @@ object IvfIndex {
     val newCb = trainPqCodebook(resid.select($"vec_id", $"rv"))
     val newPqVer = snap.pqVer + 1
     writeCb(s, dir, newPqVer, newCb)
-    val cbc = cbLiteral(newCb)
     val newGen = snap.nextInternal
-    val partCols =
-      if (hasLabel) Seq("cid", "label", "gen") else Seq("cid", "gen")
-    resid.select((Seq($"vec_id", codeCol(cbc, $"rv").as("code"), $"cid") ++
-        carried.map(col) :+ lit(newGen).as("gen")): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*).parquet(postDir(dir))
+    writePostings(resid.withColumn("code", codeCol(cbLiteral(newCb), $"rv"))
+      .withColumn("gen", lit(newGen)), dir, lay)
     val touched = resid.select($"cid".cast("long")).distinct()
       .as[Long].collect().toSet
     val cells = snap.cells.map { case (c, _) =>
@@ -1482,45 +1352,11 @@ object IvfIndex {
     * of 8-logical-byte rows — the tenant-scoped serving path at the
     * compressed footprint. Label rides the argmin aggregate as a
     * min_by carry; the encode is the same single-pass literal-codebook
-    * projection as [[buildPq]].
+    * projection as [[buildPq]]. See the header's Layouts.
     */
   def buildPqLabeled(emb: DataFrame, dir: String,
-      seedSmallest: Boolean = false): Unit = {
-    val s = emb.sparkSession
-    import s.implicits._
-    prepareBuildDir(s, dir)
-    // seedSmallest: the shard-build rule, as in build/buildLabeled
-    val seedF: Column =
-      if (seedSmallest) {
-        val sids = emb.select($"vec_id").orderBy($"vec_id").limit(16)
-          .as[Long].collect()
-        $"vec_id".isInCollection(sids)
-      } else $"vec_id" < 16
-    val seeds = emb.filter(seedF)
-      .select($"vec_id".as("cid"), $"qv".as("cq"))
-    val (learned, _) = VectorOps.lloydTrain(
-      emb.select($"vec_id", $"qv"), seeds,
-      VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
-    learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
-      .parquet(centDir(dir, 1L))
-    val assigned = VectorOps.argminPacked(emb, learned, carryQv = true,
-        carry = Seq("label"))
-      .select($"vec_id", $"qv", $"cid", $"label")
-    val resid = residualsOf(assigned, learned, carry = Seq("label"))
-    val cb = trainPqCodebook(resid.select($"vec_id", $"rv"))
-    writeCb(s, dir, 1L, cb)
-    val cbc = cbLiteral(cb)
-    resid.select($"vec_id", codeCol(cbc, $"rv").as("code"), $"cid",
-        $"label", lit(0L).as("gen"))
-      .repartition($"cid", $"label") // one file per dir — see buildLabeled
-      .write.mode(SaveMode.Overwrite).partitionBy("cid", "label", "gen")
-      .parquet(postDir(dir))
-    val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
-    val present = presentCids(s, dir)
-    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
-      cids.map(c => c -> (if (present.contains(c)) Seq(0L)
-        else Seq.empty[Long])).toMap, Set.empty, -1L, pqVer = 1L))
-  }
+      seedSmallest: Boolean = false): Unit =
+    buildAs(emb, dir, PqLabeled, seedSmallest)
 
   /** Filtered ADC top-k: each query (vec_id, qv, label) ranks only
     * same-label packed codes in its `probes` nearest cells by exact
@@ -1529,39 +1365,12 @@ object IvfIndex {
     * [[serveLabeled]]); the per-query LUT rides the broadcast probe
     * side as in [[servePq]]. Pre-filter semantics: candidates are
     * label-filtered BEFORE ranking, so top-k is exact over the matching
-    * subset.
+    * subset. See the header's Layouts.
     */
   def servePqLabeled(s: SparkSession, dir: String, queries: DataFrame,
-      probes: Int = 2, k: Int = 5): DataFrame = {
-    import s.implicits._
-    val snap = readSnapshot(s, dir)
-    val cents = centroidsOf(s, dir, snap)
-    val cbc = cbLiteral(readCb(s, dir, snap.pqVer))
-    val post = masked(s, dir, snap)
-    val probed = queries.crossJoin(broadcast(cents))
-      .withColumn("cdist", graft.functions.VectorMath.sqDistLong($"qv", $"cq"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"cdist", $"cid")))
-      .filter($"crank" <= probes)
-      .select($"vec_id".as("query_id"),
-        lutCol(cbc, $"qv", $"cq").as("lut"),
-        $"label", $"cid")
-      .localCheckpoint(true)
-    val probedCells = probed.select($"cid").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val probedLabels = probed.select($"label").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val w = Window.partitionBy($"query_id").orderBy($"adc", $"neighbor")
-    post.filter($"cid".isin(probedCells: _*) &&
-        $"label".isin(probedLabels: _*))
-      .join(broadcast(probed), Seq("cid", "label"))
-      .filter($"vec_id" =!= $"query_id")
-      .select($"query_id", $"label", $"vec_id".as("neighbor"),
-        adcCol.as("adc"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= k)
-      .orderBy($"query_id", $"rank")
-  }
+      probes: Int = 2, k: Int = 5): DataFrame =
+    serveSnap(s, dir, readSnapshot(s, dir), PqLabeled, queries,
+      nearest(probes), k)
 
   /** What did the index CHANGE between two epochs — the reindex audit
     * every deployment wants before flipping traffic: per cell, how many
@@ -1660,13 +1469,7 @@ object IvfIndex {
                 require(f.delete(cd, true), s"vacuum failed to delete $cd")
                 orphanCells += 1
               case Some(gens) =>
-                // plain layout: cid=/gen=; labeled layout: cid=/label=/gen=
-                val genParents = f.listStatus(cd).filter(_.isDirectory)
-                  .map(_.getPath)
-                  .flatMap(p => if (p.getName.startsWith("label="))
-                    f.listStatus(p).filter(_.isDirectory).map(_.getPath)
-                  else Array(p))
-                genParents.filter(_.getName.startsWith("gen=")).foreach { gd =>
+                genDirs(f, cd).foreach { gd =>
                   if (!gens.contains(gd.getName.stripPrefix("gen=").toLong)) {
                     require(f.delete(gd, true), s"vacuum failed to delete $gd")
                     orphanGens += 1
@@ -1746,16 +1549,10 @@ object IvfIndex {
     val affected = affectedRows.map(_._1)
     if (affected.nonEmpty) {
       val newGen = snap.nextInternal
-      val partCols =
-        if (post.columns.contains("label")) Seq("cid", "label", "gen")
-        else Seq("cid", "gen")
       val rewritten = post.filter($"cid".isin(affected: _*))
-      tomb.fold(rewritten)(t =>
+      writePostings(tomb.fold(rewritten)(t =>
           rewritten.join(broadcast(t), Seq("vec_id"), "left_anti"))
-        .drop("gen").withColumn("gen", lit(newGen))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCols: _*).parquet(postDir(dir))
+        .withColumn("gen", lit(newGen)), dir, layoutOf(s, dir, snap))
       // a fully-tombstoned cell writes no partition: it commits an
       // EMPTY generation list (the centroid row stays; occupancy reads
       // 0) — never a generation id with no files, so snapshot
@@ -2258,7 +2055,7 @@ object IvfIndex {
 
   /** ANN OPERATING-POINT TABLE — recall vs probe cost on the stored PQ
     * index across the FIXED nprobe levels {1, 2, 4} AND the adaptive
-    * router ([[servePqAdaptive]], reported as nprobe 0): the tuning
+    * router ([[adaptiveRule]], reported as nprobe 0): the tuning
     * table a deployment reads to pick its serving configuration. Per
     * level: probed posting MASS (the scan cost the router actually
     * pays, from the index's own live postings), recall@5 of the pure
@@ -2301,7 +2098,7 @@ object IvfIndex {
     val sizes = live.groupBy($"cid").agg(count(lit(1)).as("csz"))
     val homes = live.select($"vec_id".as("neighbor"), $"cid")
       .localCheckpoint(true)
-    val scoredc = pqScoredCells(s, cents, queries)
+    val scoredc = scoredCells(s, cents, queries)
       .join(broadcast(sizes), Seq("cid"))
       .select($"vec_id", $"cid", $"cdist", $"crank", $"cbest", $"csz")
       .localCheckpoint(true)
@@ -2344,8 +2141,8 @@ object IvfIndex {
     val adaptive = level(0L,
       scoredc.filter(adaptiveRule(AdaptRatioNum, AdaptRatioDen,
         AdaptMaxProbes)),
-      servePqAdaptive(s, dir, queries, AdaptRatioNum, AdaptRatioDen,
-        AdaptMaxProbes, k = 100))
+      serveSnap(s, dir, snap, PqPlain, queries, adaptiveRule(AdaptRatioNum,
+        AdaptRatioDen, AdaptMaxProbes), 100))
     (fixed :+ adaptive).reduce(_ unionByName _).orderBy($"nprobe")
   }
 

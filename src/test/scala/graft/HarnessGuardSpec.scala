@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * so the program carries only its five runnable mains, and every one of
   * them builds its session through [[Session.local]]. Also keeps the flat
   * stores on one generation kernel: manifest commits, generation writes
-  * and the serving cache live only in `GenStore`. Scans the sources;
+  * and the serving cache live only in `GenStore`; and `IvfIndex` on one
+  * posting writer and one layout probe. Scans the sources;
   * starts no Spark session.
   */
 class HarnessGuardSpec extends AnyFunSuite {
@@ -48,6 +49,23 @@ class HarnessGuardSpec extends AnyFunSuite {
       if count(t, re) > 0
     } yield p -> re.toString
     assert(copies.isEmpty, s"lifecycle copies outside $kernel: $copies")
+  }
+
+  test("IvfIndex writes postings in one place and reads its layout from the store") {
+    val (_, t) = sources.find(_._1 == "graft/operators/IvfIndex.scala").get
+    val writer = t.indexOf("private def writePostings(")
+    val writerEnd = t.indexOf("\n  }\n", writer)
+    val writes = """(?<!read)\.parquet\(postDir\(""".r.findAllMatchIn(t)
+      .map(_.start).toSeq
+    assert(writer >= 0 && writes.size == 1 &&
+      writes.forall(w => w > writer && w < writerEnd),
+      s"posting writes outside IvfIndex.writePostings at offsets $writes")
+    assert(count(t, """postingsOf\([^)]*\)\s*\.columns""".r) == 0,
+      "IvfIndex infers a store's layout from a postings schema read")
+    val labelChecks = """(\w+)(?:\([^()]*\))?\.columns\.contains\("label"\)""".r
+      .findAllMatchIn(t).map(_.group(1)).toSeq
+    assert(labelChecks.forall(_ == "newVecs"),
+      s"label checks on stored postings, not on an ingested batch: $labelChecks")
   }
 
   test("def main only in the five kept mains") {

@@ -975,4 +975,40 @@ class IvfIndexSpec extends SparkSpec {
     rev = rev.withIngested(1L)
     assert(rev.ingestLow === 1000L && rev.ingested.isEmpty)
   }
+
+  test("every ingest entry point refuses a store of another layout before writing") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val emb = VectorOps.quantized(spark, sfDir)
+      .withColumn("label", col("vec_id") % 4)
+    val base = emb.filter($"vec_id" % 5 =!= 0)
+    val batch = emb.filter($"vec_id" % 5 === 0)
+    def tree(dir: String): Set[String] = {
+      val root = java.nio.file.Paths.get(dir, "postings")
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(p => root.relativize(p).toString).toSet
+      finally walk.close()
+    }
+    val cases = Seq[(String, String => Unit,
+        (org.apache.spark.sql.DataFrame, String) => Unit, String)](
+      ("addBatch -> labeled", d => IvfIndex.buildLabeled(base, d),
+        (b, d) => IvfIndex.addBatch(spark, d, b.select($"vec_id", $"qv")),
+        "addBatchLabeled"),
+      ("addBatch -> PQ", d => IvfIndex.buildPq(base.select($"vec_id", $"qv"), d),
+        (b, d) => IvfIndex.addBatch(spark, d, b.select($"vec_id", $"qv")),
+        "addBatchPq"),
+      ("addBatchLabeled -> labeled PQ", d => IvfIndex.buildPqLabeled(base, d),
+        (b, d) => IvfIndex.addBatchLabeled(spark, d, b),
+        "addBatchPqLabeled"))
+    cases.foreach { case (name, build, add, want) =>
+      val dir = tmp("layout")
+      build(dir)
+      val (epoch, files) = (IvfIndex.readSnapshot(spark, dir).epoch, tree(dir))
+      val e = intercept[IllegalArgumentException](add(batch, dir))
+      assert(e.getMessage.contains(s"use $want"), s"$name: ${e.getMessage}")
+      assert(IvfIndex.readSnapshot(spark, dir).epoch === epoch,
+        s"$name: the refused ingest committed an epoch")
+      assert(tree(dir) === files, s"$name: the refused ingest wrote postings")
+    }
+  }
 }
