@@ -2066,9 +2066,7 @@ object PipelineOps {
     val nw = banded.filter($"doc_id" % 10 =!= 0)
     val cand = nw.as("a")
       .join(idx.as("b"),
-        col("a.bandhash") === col("b.bandhash") &&
-          lit(5) * least(col("a.sz"), col("b.sz")) >
-            lit(4) * greatest(col("a.sz"), col("b.sz")))
+        col("a.bandhash") === col("b.bandhash") && TextOps.lshSizeCompatible)
       .select(col("a.doc_id").as("nid"), col("b.doc_id").as("iid"))
       .distinct()
     // corpus-sized sets → shuffle-join recheck (TextOps.exactJaccardRecheck)

@@ -1825,41 +1825,7 @@ object TextOps {
     val base = docs(s, d).filter($"doc_id" % 5 === 0)
       .select($"doc_id", array_sort(array_distinct($"toks")).as("set"))
       .withColumn("sig", TextHashes.minhashSig($"set", k, 1))
-    // Band join carries (doc_id, set size, band array, band index,
-    // bandhash): each band (index + its minhash slice) folds to ONE
-    // xxhash64 long, so the self-join shuffles and compares longs — and
-    // carrying the folded per-doc band ARRAY (`bands` longs, linear in
-    // corpus size) lets the join emit each pair only at its FIRST shared
-    // band: a pair matching at band i is kept iff no band k < i matched,
-    // so the output is unique by construction and the former
-    // `.distinct()` — a full exchange of the CANDIDATE-PAIR mass, the
-    // one super-linear relation in the pipeline — disappears (round-15
-    // task 3; round 14 rejected a first-match filter that compared raw
-    // k-long signature slices, ~3× the folded array's bytes). The join
-    // keys on (band index, bandhash) exactly like the DuckDB oracle's
-    // (b, bandval) candidate join; a 64-bit fold collision can only ADD
-    // a candidate, and candidates are exact-rechecked below.
-    val banded = base.select($"doc_id", size($"set").as("sz"),
-        expr(s"transform(sequence(0, ${bands - 1}), " +
-          s"b -> xxhash64(b, slice(sig, b*$rows + 1, $rows)))").as("bandarr"))
-      .select($"doc_id", $"sz", $"bandarr", posexplode($"bandarr"))
-      .withColumnRenamed("pos", "bidx")
-      .withColumnRenamed("col", "bandhash")
-    // The size-compatibility predicate is output-neutral pruning:
-    // |A∩B| ≤ min ⇒ J ≤ min/max, so 5·min ≤ 4·max can never pass the
-    // J > 0.8 recheck — dropping those pairs INSIDE the join prunes most
-    // of the candidate set before it reaches the recheck attaches (the
-    // recheck, not the banding, dominates at scale — measured 348k
-    // candidates at sf0.1).
-    val candIds = banded.as("a")
-      .join(banded.as("b").hint("merge"),
-        col("a.bidx") === col("b.bidx") &&
-          col("a.bandhash") === col("b.bandhash") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          lit(5) * least(col("a.sz"), col("b.sz")) >
-            lit(4) * greatest(col("a.sz"), col("b.sz")) &&
-          firstSharedBand(bands))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+    val candIds = lshPairs(lshBanded(base, "set", bands, rows), bands)
     // The recheck intersects sorted xxhash64 TOKEN HASHES, not token
     // strings: primitive 8-byte compares in the hot merge loop and
     // 8 bytes per token on the wire. A 64-bit collision could inflate
@@ -1874,6 +1840,62 @@ object TextOps {
       .select($"id1", $"id2", round($"jaccard", 4).as("jaccard"))
       .orderBy($"id1", $"id2")
   }
+
+  /** The MinHash band fold: band b of the `sig` column folds, with its
+    * index, to ONE xxhash64 long — the band array every banded MinHash
+    * consumer keys on (the pair joins, q88, nearDupLshStream).
+    */
+  private[graft] def lshBandFold(bands: Int, rows: Int): Column =
+    expr(s"transform(sequence(0, ${bands - 1}), " +
+      s"b -> xxhash64(b, slice(sig, b*$rows + 1, $rows)))")
+
+  /** The banded relation of the LSH pair joins, from a `base` carrying
+    * doc_id, a token-set column `set` and its minhash signature `sig`:
+    * (doc_id, sz = set size, bandarr, bidx, bandhash), one row per
+    * (doc, band). Each band (index + its minhash slice) folds to ONE
+    * xxhash64 long, so the self-join shuffles and compares longs — and
+    * carrying the folded per-doc band ARRAY (`bands` longs, linear in
+    * corpus size) lets the join emit each pair only at its FIRST shared
+    * band (see [[lshPairs]]; a first-match filter over the raw k-long
+    * signature slices would carry ~3× the folded array's bytes). A
+    * 64-bit fold collision can only ADD a candidate, and candidates
+    * are exact-rechecked downstream.
+    */
+  private[graft] def lshBanded(base: DataFrame, set: String, bands: Int,
+      rows: Int): DataFrame =
+    base.select(col("doc_id"), size(col(set)).as("sz"),
+        lshBandFold(bands, rows).as("bandarr"))
+      .select(col("doc_id"), col("sz"), col("bandarr"), posexplode(col("bandarr")))
+      .withColumnRenamed("pos", "bidx")
+      .withColumnRenamed("col", "bandhash")
+
+  /** Size compatibility of a banded candidate pair (aliases `a`, `b`):
+    * output-neutral pruning for the J > 0.8 rechecks — |A∩B| ≤ min ⇒
+    * J ≤ min/max, so 5·min ≤ 4·max can never pass. Applied INSIDE the
+    * join it prunes most of the candidate set before it reaches the
+    * recheck attaches (the recheck, not the banding, dominates at
+    * scale — measured 348k q33 candidates at sf0.1).
+    */
+  private[graft] def lshSizeCompatible: Column =
+    lit(5) * least(col("a.sz"), col("b.sz")) >
+      lit(4) * greatest(col("a.sz"), col("b.sz"))
+
+  /** The banded pair self-join of the LSH family: (id1, id2) with
+    * id1 < id2, keyed on (bidx, bandhash) exactly like the DuckDB
+    * oracle's (b, bandval) candidate join, pruned by
+    * [[lshSizeCompatible]], and each pair emitted ONCE, at its first
+    * shared band ([[firstSharedBand]]) — so the pair relation needs no
+    * `.distinct()`, which was a full exchange of the CANDIDATE-PAIR
+    * mass, the one super-linear relation in the pipeline.
+    */
+  private[graft] def lshPairs(banded: DataFrame, bands: Int): DataFrame =
+    banded.as("a")
+      .join(banded.as("b").hint("merge"),
+        col("a.bidx") === col("b.bidx") &&
+          col("a.bandhash") === col("b.bandhash") &&
+          col("a.doc_id") < col("b.doc_id") &&
+          lshSizeCompatible && firstSharedBand(bands))
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
 
   /** First-shared-band predicate for the banded pair self-joins: keep a
     * match at band index `bidx` iff no band k < bidx already matched —
@@ -1922,10 +1944,15 @@ object TextOps {
   /** SimHash near-dup pairs: 64-bit signature, 4×16-bit band blocking,
     * Hamming-distance filter on candidates.
     */
-  private def q34(s: SparkSession, d: String): DataFrame = {
+  private def q34(s: SparkSession, d: String): DataFrame =
+    simhashPairs(s, d, TextHashes.simhash64(col("toks")))
+
+  /** q34/q64's body over the %5 corpus slice, given the 64-bit
+    * signature `sig` of each doc's tokens. */
+  private def simhashPairs(s: SparkSession, d: String, sig: Column): DataFrame = {
     import s.implicits._
     val base = docs(s, d).filter($"doc_id" % 5 === 0)
-      .select($"doc_id", TextHashes.simhash64($"toks").as("sh"))
+      .select($"doc_id", sig.as("sh"))
     val banded = base.select($"doc_id", $"sh",
       posexplode(expr(
         "transform(sequence(0, 3), b -> shiftright(sh, b*16) & 65535)")))
@@ -1955,20 +1982,15 @@ object TextOps {
       .orderBy($"doc_id")
   }
 
-  /** MinHash-LSH near-dup pairs with md5-derived, oracle-reproducible
-    * signatures: k=16 minhashes over the token set, 4 bands × 4 rows,
-    * candidates re-checked against exact Jaccard > 0.8. Same pipeline
-    * shape as q33 (which uses the faster murmur hashes) but every stage
-    * is recomputed independently by the DuckDB oracle. Shared with the
-    * duplicate-cluster resolution step (PipelineOps q81), which runs
-    * connected components over exactly these pairs.
-    */
+  /** Band count of the md5 LSH family (k=16, 4 bands × 4 rows). */
+  private[graft] val Md5LshBands = 4
+
   /** The md5-LSH building blocks over the %5 corpus slice: `base` =
     * (doc_id, hset, sig) with sorted distinct 60-bit md5 token prefixes
-    * and the k=16 minhash signature; `banded` = (doc_id, sz, bandhash)
-    * with each 4-row band folded to one xxhash64 long. Shared by the
-    * pair self-join (q61/q81/q86) and the incremental new-vs-index join
-    * (PipelineOps q88).
+    * and the k=16 minhash signature; `banded` = the [[lshBanded]]
+    * relation of `base`, each 4-row band folded to one xxhash64 long.
+    * Shared by the pair self-join (q61/q81/q86) and the incremental
+    * new-vs-index join (PipelineOps q88).
     *
     * ONE md5 pass per token: the signature derives from hset (min over
     * the hash set == min over the token multiset) and the recheck
@@ -1977,48 +1999,32 @@ object TextOps {
     * hash-space Jaccard — collisions and all — is oracle-reproducible,
     * not merely collision-improbable.
     */
-  /** Band count of the md5 LSH family (k=16, 4 bands × 4 rows). */
-  private[graft] val Md5LshBands = 4
-
   private[graft] def md5LshBanded(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import s.implicits._
-    val k = 16; val bands = Md5LshBands; val rows = k / bands
+    val k = 16
     // native one-pass digest+sort+dedup (TextHashes.Md5HashSetExpr) —
     // bit-identical to the SQL chain the oracle replays, ~3× cheaper
     // than hex-string conv per token
     val base = docs(s, d).filter($"doc_id" % 5 === 0)
       .select($"doc_id", TextHashes.md5HashSet($"toks").as("hset"))
       .withColumn("sig", TextHashes.minhashFromHashes($"hset", k))
-    // folded band ARRAY carried per row so the pair join can keep each
-    // pair at its first shared band only — see q33's banded relation
-    val banded = base.select($"doc_id", size($"hset").as("sz"),
-        expr(s"transform(sequence(0, ${bands - 1}), " +
-          s"b -> xxhash64(b, slice(sig, b*$rows + 1, $rows)))").as("bandarr"))
-      .select($"doc_id", $"sz", $"bandarr", posexplode($"bandarr"))
-      .withColumnRenamed("pos", "bidx")
-      .withColumnRenamed("col", "bandhash")
-    (base, banded)
+    (base, lshBanded(base, "hset", Md5LshBands, k / Md5LshBands))
   }
 
+  /** MinHash-LSH near-dup pairs with md5-derived, oracle-reproducible
+    * signatures: k=16 minhashes over the token set, 4 bands × 4 rows,
+    * candidates re-checked against exact Jaccard > 0.8. Same pipeline
+    * shape as q33 (which uses the faster murmur hashes) but every stage
+    * is recomputed independently by the DuckDB oracle. Shared with the
+    * duplicate-cluster resolution step (PipelineOps q81), which runs
+    * connected components over exactly these pairs.
+    */
   private[graft] def md5LshScoredPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // band → single xxhash64 long + size-compatibility prune + first-
-    // shared-band uniqueness inside the join; see q33 for all three
-    // rationales (the prune cannot change the output: J ≤ min/max ≤ 0.8
-    // pairs fail the strict > 0.8 recheck; first-match makes the pair
-    // set unique by construction, so no distinct exchange is needed)
     val (base, banded) = md5LshBanded(s, d)
-    val candIds = banded.as("a")
-      .join(banded.as("b").hint("merge"),
-        col("a.bidx") === col("b.bidx") &&
-          col("a.bandhash") === col("b.bandhash") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          lit(5) * least(col("a.sz"), col("b.sz")) >
-            lit(4) * greatest(col("a.sz"), col("b.sz")) &&
-          firstSharedBand(Md5LshBands))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
     // corpus-sized sets → shuffle-join recheck (see exactJaccardRecheck)
-    exactJaccardRecheck(candIds, base.select($"doc_id", $"hset"))
+    exactJaccardRecheck(lshPairs(banded, Md5LshBands),
+      base.select($"doc_id", $"hset"))
   }
 
   private def q61(s: SparkSession, d: String): DataFrame = {
@@ -2050,11 +2056,29 @@ object TextOps {
     */
   private def q201(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (base, _) = md5LshBanded(s, d)
+    val (nTruth, counts) = lshOperatingCounts(md5LshBanded(s, d)._1)
+    counts.map { case (b, r, nCand, nHit) =>
+      (b, r, nTruth, nCand, nHit,
+        if (nTruth == 0L) -1L else nHit * 1000L / nTruth,
+        if (nCand == 0L) -1L else nHit * 1000L / nCand)
+    }.toDF("bands", "rows", "n_truth", "n_candidates", "n_hit",
+      "recall_permille", "precision_permille")
+      .orderBy($"bands")
+  }
+
+  /** The counts behind q201/q204 over an md5-LSH `base` (doc_id, hset,
+    * sig): n_truth = the (16,1) candidates (any shared raw minhash)
+    * exactly verified for J ≥ 1/2, then per banding (b, r) of the
+    * halving family — (16,1) last, whose hits are the truth itself —
+    * (b, r, n_candidates, n_hit). Candidate sets key on the raw
+    * signature slice, are distinct and checkpointed.
+    */
+  private def lshOperatingCounts(base: DataFrame): (Long, Seq[(Long, Long, Long, Long)]) = {
+    import base.sparkSession.implicits._
     val sized = base.select($"doc_id", $"hset", $"sig",
         size($"hset").cast("long").as("sz"))
       .localCheckpoint(true)
-    def candsOf(b: Int, r: Int): DataFrame = {
+    def rawBandPairs(b: Int, r: Int): DataFrame = {
       val banded = sized.select($"doc_id", explode(expr(
           s"transform(sequence(0, ${b - 1}), i -> struct(i AS bidx, slice(sig, i*$r + 1, $r) AS bandval))"))
           .as("e"))
@@ -2067,7 +2091,7 @@ object TextOps {
         .distinct()
         .localCheckpoint(true)
     }
-    val cand161 = candsOf(16, 1)
+    val cand161 = rawBandPairs(16, 1)
     // exact verify ONLY the ceiling candidates (shuffle-join the two
     // hash-set sides at pair cardinality — the exactJaccardRecheck
     // posture)
@@ -2083,22 +2107,11 @@ object TextOps {
       .select($"id1", $"id2")
       .localCheckpoint(true)
     val nTruth = truth.count()
-    val rows = Seq((2, 8), (4, 4), (8, 2)).map { case (b, r) =>
-      val cand = candsOf(b, r)
-      val nCand = cand.count()
-      val nHit = cand.join(truth, Seq("id1", "id2"), "left_semi").count()
-      (b.toLong, r.toLong, nTruth, nCand, nHit,
-        if (nTruth == 0L) -1L else nHit * 1000L / nTruth,
-        if (nCand == 0L) -1L else nHit * 1000L / nCand)
-    } :+ {
-      val nCand = cand161.count()
-      (16L, 1L, nTruth, nCand, nTruth,
-        if (nTruth == 0L) -1L else 1000L,
-        if (nCand == 0L) -1L else nTruth * 1000L / nCand)
-    }
-    rows.toDF("bands", "rows", "n_truth", "n_candidates", "n_hit",
-      "recall_permille", "precision_permille")
-      .orderBy($"bands")
+    (nTruth, Seq((2, 8), (4, 4), (8, 2)).map { case (b, r) =>
+      val cand = rawBandPairs(b, r)
+      (b.toLong, r.toLong, cand.count(),
+        cand.join(truth, Seq("id1", "id2"), "left_semi").count())
+    } :+ ((16L, 1L, cand161.count(), nTruth)))
   }
 
   /** SAMPLED ceiling mode of the LSH operating-point audit — q201
@@ -2128,40 +2141,10 @@ object TextOps {
     */
   private def q204(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val (base, _) = md5LshBanded(s, d)
-    val sized = base
+    val (tS, counts) = lshOperatingCounts(md5LshBanded(s, d)._1
       .filter(expr(
         "cast(conv(substring(md5(cast(doc_id as string)), 1, 15)," +
-          " 16, 10) as bigint) % 4") === 0L)
-      .select($"doc_id", $"hset", $"sig",
-        size($"hset").cast("long").as("sz"))
-      .localCheckpoint(true)
-    def candsOf(b: Int, r: Int): DataFrame = {
-      val banded = sized.select($"doc_id", explode(expr(
-          s"transform(sequence(0, ${b - 1}), i -> struct(i AS bidx, slice(sig, i*$r + 1, $r) AS bandval))"))
-          .as("e"))
-        .select($"doc_id", $"e.bidx".as("bidx"), $"e.bandval".as("bandval"))
-      banded.as("a").join(banded.as("b"),
-          col("a.bidx") === col("b.bidx") &&
-            col("a.bandval") === col("b.bandval") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-        .distinct()
-        .localCheckpoint(true)
-    }
-    val cand161 = candsOf(16, 1)
-    val truth = cand161
-      .join(sized.select($"doc_id".as("id1"), $"hset".as("h1"),
-        $"sz".as("sz1")), "id1")
-      .join(sized.select($"doc_id".as("id2"), $"hset".as("h2"),
-        $"sz".as("sz2")), "id2")
-      .withColumn("inter",
-        size(array_intersect($"h1", $"h2")).cast("long"))
-      .withColumn("uni", $"sz1" + $"sz2" - $"inter")
-      .filter($"uni" > 0L && $"inter" * 2L >= $"uni")
-      .select($"id1", $"id2")
-      .localCheckpoint(true)
-    val tS = truth.count()
+          " 16, 10) as bigint) % 4") === 0L))
     val truthEst = tS * 16L
     // 95% half-width on each config's recall estimate, permille — the
     // SAME double expression tree the oracle evaluates
@@ -2169,15 +2152,10 @@ object TextOps {
       if (tS == 0L) -1L
       else math.floor(1960.0 *
         math.sqrt(h.toDouble * (tS - h) / tS) / tS).toLong
-    val rows = Seq((2, 8), (4, 4), (8, 2)).map { case (b, r) =>
-      val cand = candsOf(b, r)
-      val nCand = cand.count()
-      val nHit = cand.join(truth, Seq("id1", "id2"), "left_semi").count()
-      (b.toLong, r.toLong, nCand, tS, nHit, truthEst,
+    counts.map { case (b, r, nCand, nHit) =>
+      (b, r, nCand, tS, nHit, truthEst,
         if (tS == 0L) -1L else nHit * 1000L / tS, ci(nHit))
-    } :+ ((16L, 1L, cand161.count(), tS, tS, truthEst,
-      if (tS == 0L) -1L else 1000L, ci(tS)))
-    rows.toDF("bands", "rows", "n_candidates", "n_truth_sample",
+    }.toDF("bands", "rows", "n_candidates", "n_truth_sample",
       "n_hit_sample", "truth_est", "recall_est_permille",
       "ci_halfwidth_permille")
       .orderBy($"bands")
@@ -2261,26 +2239,8 @@ object TextOps {
   /** q34's oracle-reproducible sibling: md5-based 64-bit simhash,
     * 4×16-bit band blocking, Hamming ≤ 16 on candidates.
     */
-  private def q64(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val base = docs(s, d).filter($"doc_id" % 5 === 0)
-      .select($"doc_id", TextHashes.md5Simhash64($"toks").as("sh"))
-    val banded = base.select($"doc_id", $"sh",
-      posexplode(expr(
-        "transform(sequence(0, 3), b -> shiftright(sh, b*16) & 65535)")))
-      .select($"doc_id", $"sh", $"pos".as("band"), $"col".as("bandval"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bandval") === col("b.bandval") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        col("a.sh").as("sh1"), col("b.sh").as("sh2"))
-      .distinct()
-      .withColumn("hamming", expr("bit_count(sh1 ^ sh2)"))
-      .filter($"hamming" <= 16)
-      .select($"id1", $"id2", $"hamming".cast("long").as("hamming"))
-      .orderBy($"id1", $"id2")
-  }
+  private def q64(s: SparkSession, d: String): DataFrame =
+    simhashPairs(s, d, TextHashes.md5Simhash64(col("toks")))
 
   /** The LLM ingestion pipeline END-TO-END as one composed query:
     * exact dedup (keep min doc_id per text) → quality filter (token

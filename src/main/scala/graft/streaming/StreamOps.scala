@@ -575,14 +575,12 @@ object StreamOps {
   def nearDupLshStream(docs: Dataset[DocEvent], watermark: String,
       horizonMs: Long, bands: Int = 8, k: Int = 16): Dataset[NearDupHit] = {
     import docs.sparkSession.implicits._
-    val rows = k / bands
     val banded = docs.toDF()
       .withColumn("sig",
         graft.functions.TextHashes.md5MinhashSig(split(col("text"), "\\s+"), k))
-      .select(col("doc_id"), col("ts"), posexplode(expr(
-        s"transform(sequence(0, ${bands - 1}), " +
-          s"b -> xxhash64(b, slice(sig, b*$rows + 1, $rows)))"))
-        .as(Seq("band", "bandhash")))
+      .select(col("doc_id"), col("ts"),
+        posexplode(graft.operators.TextOps.lshBandFold(bands, k / bands))
+          .as(Seq("band", "bandhash")))
       .withWatermark("ts", watermark)
       .as[(Long, Timestamp, Int, Long)]
     banded.groupByKey { case (_, _, band, bh) => (band, bh) }

@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * so the program carries only its five runnable mains, and every one of
   * them builds its session through [[Session.local]]. Also keeps the flat
   * stores on one generation kernel: manifest commits, generation writes
-  * and the serving cache live only in `GenStore`; and `IvfIndex` on one
-  * posting writer and one layout probe. Scans the sources;
+  * and the serving cache live only in `GenStore`; `IvfIndex` on one
+  * posting writer and one layout probe; and the LSH family on one
+  * banding kernel in `TextOps` (one MinHash band fold, one SimHash
+  * blocking, one operating-point candidate builder). Scans the sources;
   * starts no Spark session.
   */
 class HarnessGuardSpec extends AnyFunSuite {
@@ -66,6 +68,15 @@ class HarnessGuardSpec extends AnyFunSuite {
       .findAllMatchIn(t).map(_.group(1)).toSeq
     assert(labelChecks.forall(_ == "newVecs"),
       s"label checks on stored postings, not on an ingested batch: $labelChecks")
+  }
+
+  test("each LSH banding decision is written once in src/main") {
+    def total(lit: String): Int = sources
+      .map { case (_, t) => count(t, scala.util.matching.Regex.quote(lit).r) }.sum
+    val want = Seq("xxhash64(b, slice(sig" -> 1, "shiftright(sh, b*16)" -> 1,
+      "def candsOf" -> 0)
+    val got = want.map { case (lit, _) => lit -> total(lit) }
+    assert(got == want, s"banding decision copies (text -> count): $got")
   }
 
   test("def main only in the five kept mains") {
