@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.streaming.StreamOps
 
 /** End-to-end streaming smoke: rate-source NEXMark bids → tumbling window
@@ -10,6 +10,16 @@ import graft.streaming.StreamOps
 object StreamDemo {
   /** How long past `secs` the demo waits for a query's first data batch. */
   private val DeadlineSecs = 60L
+
+  /** Every query fires at wall-clock multiples of this period, so each
+    * has an idle window between its micro-batches.
+    */
+  private val PeriodMs = 1000L
+
+  /** A query is stopped only while idle and at least this long before
+    * its next trigger.
+    */
+  private val MarginMs = 400L
 
   def main(args: Array[String]): Unit = {
     val eps = args.headOption.map(_.toInt).getOrElse(1000)
@@ -21,16 +31,18 @@ object StreamDemo {
     val spark = Session.local(Session.cpus,
       "spark.sql.streaming.checkpointLocation" -> ckptRoot.toString)
     try {
+      val every = Trigger.ProcessingTime(PeriodMs)
       val bids = StreamOps.bidStream(spark, eps)
       val q = StreamOps.toMemory(
         StreamOps.tumblingCounts(bids.toDF(), "2 seconds", "0 seconds"),
-        "demo", OutputMode.Complete)
+        "demo", OutputMode.Complete, every)
       // KV-sink path: foreachBatch upserts per-auction counts (DynamoDB-style)
       val store = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
       import org.apache.spark.sql.functions._
       val kv = StreamOps.toForeachBatch(
         StreamOps.bidStream(spark, eps).toDF()
-          .groupBy(col("auction")).agg(count(lit(1)).as("n"))) { (batch, _) =>
+          .groupBy(col("auction")).agg(count(lit(1)).as("n")),
+        trigger = every) { (batch, _) =>
         batch.collect().foreach(r => store.put(r.getInt(0), r.getLong(1)))
       }
       // stream-stream join path: auctions ⋈ bids with range residual
@@ -40,11 +52,11 @@ object StreamDemo {
           StreamOps.bidStream(spark, eps).toDF(),
           "0 seconds", "1 hour")
           .select(col("a_id"), col("price")),
-        "ssj", OutputMode.Append)
+        "ssj", OutputMode.Append, every)
       // per-window finalize path: streaming q5 hot items
       val nWinners = new java.util.concurrent.atomic.AtomicLong()
       val hot = StreamOps.hotItemsStream(
-        StreamOps.bidStream(spark, eps).toDF(), "0 seconds") { winners =>
+        StreamOps.bidStream(spark, eps).toDF(), "0 seconds", every) { winners =>
         nWinners.addAndGet(winners.count())
       }
       val queries = Seq("demo" -> q, "kv" -> kv, "ssj" -> ssj, "hot" -> hot)
@@ -57,7 +69,14 @@ object StreamDemo {
         Option(sq.lastProgress).exists(_.batchId >= 1) }
       while (elapsed < secs || (!fed && elapsed < secs + DeadlineSecs))
         Thread.sleep(100)
-      queries.foreach(_._2.stop())
+      // a stop interrupts a running micro-batch, state-store commit and
+      // all: stop each query only between its batches
+      def between(sq: StreamingQuery) = !sq.status.isTriggerActive &&
+        PeriodMs - System.currentTimeMillis() % PeriodMs >= MarginMs
+      queries.foreach { case (_, sq) =>
+        while (!between(sq) && elapsed < secs + DeadlineSecs) Thread.sleep(5)
+        sq.stop()
+      }
       // how far each query got: its last completed micro-batch (-1: none)
       val batches = queries.map { case (n, sq) =>
         s"$n:${Option(sq.lastProgress).fold(-1L)(_.batchId)}" }.mkString(",")

@@ -114,36 +114,34 @@ private[graft] class BinaryLayout(labels: Seq[String])
       refineFetch(s, dir, snap, shortlist), queries))
   }
 
-  /** Ranked top-k — the plain serving surface. `cached = true` pins the
-    * store's relations for a serving loop (the streaming path); the
-    * rows are identical either way (spec-pinned). `epoch` time-travels
-    * a RETAINED snapshot; tombstone masks are snapshot-scoped, so an
-    * earlier epoch serves rows a later delete has since removed
-    * (uncached only — pinning history in executor memory is a caller
-    * decision, not a default).
+  /** Ranked top-k — the plain serving surface. `cached = true` serves
+    * from the per-generation [[ServingCache]] (the streaming path; the
+    * unlabeled layout); the rows and their order are identical either
+    * way (spec-pinned). `epoch` time-travels a RETAINED snapshot;
+    * tombstone masks are snapshot-scoped, so an earlier epoch serves
+    * rows a later delete has since removed (uncached only — pinning
+    * history in executor memory is a caller decision, not a default).
     *
-    * The cached path pins the live codes and vectors per committed
-    * epoch ([[GenStore]]). With both relations pinned, partition pruning
-    * is a disk win that no longer applies, so it also skips the
-    * per-trigger checkpoint and bucket collect: the shortlist feeds
-    * refine as ONE fused plan — one job per trigger instead of three
-    * (the round-12 serve-gap lead).
+    * The cached path reads the manifest, pins each live generation's
+    * vectors with their codes once, masks the snapshot's tombstone ids,
+    * and runs shortlist and refine as ONE job ([[PinnedTopK.codes]]):
+    * each pinned partition keeps every query's best `width`, the driver
+    * merges them — a constant number of jobs per serve at any epoch.
+    * Pinned rows are already in memory, so the partition pruning, the
+    * per-serve checkpoint and the bucket collect of the uncached path
+    * buy nothing there and are skipped.
     */
   def serve(s: SparkSession, dir: String, queries: DataFrame, k: Int,
       width: Int = 20, cached: Boolean = false,
       epoch: Option[Long] = None): DataFrame = {
     require(epoch.isEmpty || !cached,
       "serve: time-travel reads are uncached by design")
-    val refined =
-      if (cached) {
-        val snap = FlatManifest.read(s, dir)
-        val Seq(codeRows, vecs) = cachedRels(s, dir, snap)(Seq(
-          live(s, dir, snap),
-          rel(s, dir, snap, vecRoot).select(col("vec_id"), col("qv"))))
-        VectorOps.refineRank(VectorOps.hamShortlist(codeRows, queries,
-          width, checkpoint = false), vecs, queries)
-      } else stagesOf(s, dir, snapAt(s, dir, epoch), queries, width)._2
-    topK(refined, k)
+    if (cached) {
+      require(labels.isEmpty, "serve: the cached path is unlabeled")
+      val live = servingLive(s, dir, FlatManifest.read(s, dir),
+        noVectors(s))(servingVectors(s, dir, _))
+      PinnedTopK.codes(s, live, codeQueries(queries), k, width)
+    } else topK(stagesOf(s, dir, snapAt(s, dir, epoch), queries, width)._2, k)
   }
 }
 

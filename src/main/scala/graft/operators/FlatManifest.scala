@@ -361,7 +361,11 @@ private[graft] abstract class ManifestProtocol(noun: String) {
     * caller mistyped": the wipe only proceeds when the directory is
     * absent, empty, or recognizably this store's artifact set (every
     * child is a manifest file or satisfies `known`) — anything else
-    * fails loudly before a byte is deleted.
+    * fails loudly before a byte is deleted. Every build path (flat,
+    * raw, PQ, labeled, clone) comes through here, so this is also where
+    * the directory's [[ServingCache]] entries are dropped: a rebuild
+    * restarts epochs and generation ids, which a cache keyed by them
+    * would mistake for the state it pinned.
     */
   def prepareBuildDir(s: SparkSession, dir: String)(
       known: String => Boolean): Unit = {
@@ -379,6 +383,7 @@ private[graft] abstract class ManifestProtocol(noun: String) {
       f.delete(p, true)
     }
     f.mkdirs(p)
+    ServingCache.drop(s, dir)
   }
 }
 

@@ -14,10 +14,9 @@ import graft.operators.FlatManifest.Snap
   * Commit, retention and GC follow the [[ManifestProtocol]] state
   * machine: write new directories, commit the manifest, then collect.
   *
-  *   - build ([[create]]): wipe a recognizable store directory, write
-  *     generation 0, commit epoch 1, drop the serving cache (a rebuild
-  *     restarts epochs at 1, which the epoch-keyed cache alone could
-  *     mistake for the cached state).
+  *   - build ([[create]]): wipe a recognizable store directory (which
+  *     drops its [[ServingCache]] entries: a rebuild restarts epochs and
+  *     generation ids), write generation 0, commit epoch 1.
   *   - ingest ([[ingest]]): EXACTLY-ONCE under replay — a generation the
   *     manifest has already committed (even one a compaction has since
   *     folded) is a no-op; an EMPTY batch commits its id into the
@@ -26,8 +25,9 @@ import graft.operators.FlatManifest.Snap
   *     `foreachBatch` needs (the sink names generations batchId + 1).
   *   - delete: O(batch) append under `tombstones/del=<epoch>/`,
   *     committed as a snapshot-scoped set (a time-travel read never
-  *     sees a later delete); serves mask with a broadcast anti-join
-  *     bounded by the delete volume between compactions.
+  *     sees a later delete); an uncached serve masks with a broadcast
+  *     anti-join, a cached one with the driver-held ids, both bounded by
+  *     the delete volume between compactions.
   *   - compact: fold every live row into ONE internal generation with
   *     the tombstones applied physically, commit, GC. With no tombstone
   *     hit and one generation there is nothing to fold, but a pending
@@ -48,11 +48,14 @@ import graft.operators.FlatManifest.Snap
   * travel ([[snapAt]]) runs [[ManifestProtocol.readAt]]'s
   * data-existence check over every root and tombstone set.
   *
-  * The serving cache ([[cachedRels]]) pins relations per (session,
-  * dir) keyed by committed EPOCH: each cached serve re-reads the
-  * manifest (one small-file open), so a concurrent commit refreshes
-  * the relations on the very next call and an unchanged epoch pays
-  * zero extra jobs.
+  * The serving cache is the shared per-generation [[ServingCache]]: a
+  * cached serve ([[servingLive]]) re-reads the manifest (one small-file
+  * open, so a concurrent commit is visible on the very next call) and
+  * pins each committed generation once, under `gen=N`: an add pins only
+  * its new generation, a delete adds one driver-held tombstone id set to
+  * the serve-time mask, and a compaction unpins the generations it
+  * folds right after its commit, so the next serve pins its output
+  * once. Every pin is read from the committed files.
   */
 private[graft] abstract class GenStore {
   import GenStore._
@@ -154,7 +157,6 @@ private[graft] abstract class GenStore {
     FlatManifest.prepareBuildDir(s, dir)(roots.map(_.name).toSet ++ fixedDirs)
     write0
     FlatManifest.commit(s, dir, Fresh.copy(epoch = 1L, gens = Seq(0L)))
-    invalidateCache(s, dir)
   }
 
   /** Exactly-once ingest of `batch` as caller generation `gen` (> 0). */
@@ -177,7 +179,8 @@ private[graft] abstract class GenStore {
 
   /** Tombstone the rows whose [[tombKey]] is in `ids`. */
   def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val batch = ids.select(col(tombKey)).localCheckpoint(true)
+    val batch = ids.select(col(tombKey).cast("long").as(tombKey))
+      .localCheckpoint(true)
     if (batch.isEmpty) return
     val snap = FlatManifest.read(s, dir)
     val delId = snap.epoch + 1
@@ -213,9 +216,12 @@ private[graft] abstract class GenStore {
       FlatManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
         gens = if (any) Seq(newGen) else Seq.empty,
         tombs = Nil, nextInternal = newGen - 1L))
-    } else if (snap.tombs.nonEmpty)
+      ServingCache.retain(s, dir, servingKeys(FlatManifest.read(s, dir)))
+    } else if (snap.tombs.nonEmpty) {
       FlatManifest.commit(s, dir,
         snap.copy(epoch = snap.epoch + 1, tombs = Nil))
+      ServingCache.retain(s, dir, servingKeys(FlatManifest.read(s, dir)))
+    }
     gcSweep(s, dir)
     Seq((nBefore, nRemoved, stat.getLong(1), nBefore - nRemoved,
         if (doFold) 1L else 0L))
@@ -290,29 +296,25 @@ private[graft] abstract class GenStore {
 
   // ---------- serving cache ----------
 
-  private val relCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (Long, Seq[DataFrame])]()
+  /** Store-level entries a cached serve keeps beside its generations. */
+  protected def metaKeys: Set[String] = Set.empty
 
-  private def invalidateCache(s: SparkSession, dir: String): Unit = {
-    val old = relCache.remove((s, dir))
-    if (old != null) old._2.foreach(_.unpersist(false))
-  }
+  /** Every [[ServingCache]] key the cached serve of `snap` uses. */
+  private def servingKeys(snap: Snap): Set[String] =
+    snap.gens.map(g => s"gen=$g").toSet ++
+      snap.tombs.map(ServingCache.delKey) ++ metaKeys
 
-  /** The serving relations `rels` of `snap`, pinned until its epoch is
-    * superseded.
+  /** The live serving rows of `snap` from the [[ServingCache]]: each
+    * generation's rows `pinGen(g)` pinned once, unioned (`empty` when
+    * none is live), with the snapshot's tombstone ids masked out.
     */
-  protected def cachedRels(s: SparkSession, dir: String, snap: Snap)(
-      rels: => Seq[DataFrame]): Seq[DataFrame] = {
-    val cur = relCache.get((s, dir))
-    if (cur != null && cur._1 == snap.epoch) cur._2
-    else {
-      val pinned = rels.map(_.persist())
-      pinned.foreach(_.count())
-      relCache.put((s, dir), (snap.epoch, pinned))
-      if (cur != null) cur._2.foreach(_.unpersist(false))
-      pinned
-    }
+  protected def servingLive(s: SparkSession, dir: String, snap: Snap,
+      empty: => DataFrame)(pinGen: Long => DataFrame): DataFrame = {
+    ServingCache.retain(s, dir, servingKeys(snap))
+    val gens = snap.gens.map(g =>
+      ServingCache.relation(s, dir, s"gen=$g")(pinGen(g)))
+    ServingCache.mask(gens.reduceOption(_ unionByName _).getOrElse(empty),
+      rowKey, ServingCache.tombstones(s, dir, tombKey, snap.tombs))
   }
 }
 
@@ -394,6 +396,36 @@ private[graft] abstract class BinaryGenStore(protected val codes: GenStore.Root,
       .distinct().as[Long].collect().toSeq
     rel(s, dir, snap, vecRoot).filter($"bucket".isin(buckets: _*))
       .select($"vec_id", $"qv")
+  }
+
+  /** Generation `g`'s serving rows for the cached serve: its vectors
+    * (vec_id, qv) with their 1-bit code (w0, w1). The code is a pure
+    * function of `qv` (every write packs it from the same rows), so one
+    * read of the generation's bucket directories serves both stages
+    * without a join.
+    */
+  protected def servingVectors(s: SparkSession, dir: String,
+      g: Long): DataFrame = {
+    val gd = new Path(s"$dir/${vecRoot.name}", s"gen=$g")
+    val buckets = FlatManifest.fs(s, dir).listStatus(gd)
+      .filter(_.isDirectory).map(_.getPath.toString).toSeq
+    VectorOps.binaryCodes(ServingCache.readDirs(s,
+      "vec_id BIGINT, qv ARRAY<BIGINT>", buckets).select("vec_id", "qv"))
+  }
+
+  /** The relation [[servingVectors]] types, with no rows. */
+  protected def noVectors(s: SparkSession): DataFrame =
+    VectorOps.binaryCodes(vecRoot.empty(s).select("vec_id", "qv"))
+
+  /** A query batch (query_id, q_qv, qw0, qw1) on the driver, for
+    * [[PinnedTopK.codes]].
+    */
+  protected def codeQueries(queries: DataFrame): Seq[PinnedTopK.CodeQuery] = {
+    val s = queries.sparkSession
+    import s.implicits._
+    queries.select($"query_id", $"q_qv", $"qw0", $"qw1")
+      .as[(Long, Array[Long], Long, Long)].collect().toSeq
+      .map { case (id, qv, w0, w1) => PinnedTopK.CodeQuery(id, qv, w0, w1) }
   }
 
   /** The ranked top-k of a refined stage. */

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftInternal, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.operators.FlatManifest.Snap
 import graft.operators.GenStore.Root
 
@@ -159,23 +162,55 @@ object IvfBinaryStore extends BinaryGenStore(
       refineFetch(s, dir, snap, shortlist), queries), k)
   }
 
-  /** Cached ranked top-k serve — the cached [[BinaryStore.serve]]
-    * discipline on the composed layout: centroids + live codes (WITH
-    * their cell) + vectors pinned per committed epoch ([[GenStore]]);
-    * the probed-cell cut applies in memory as the cid equi-join. One
-    * fused job per trigger.
+  override protected val metaKeys = Set("centroids")
+
+  /** Generation `g`'s serving rows (vec_id, qv, w0, w1, cid): its
+    * vectors with their codes ([[servingVectors]]) and each one's STORED
+    * cell, read from the generation's cell-partitioned code directories.
+    * The two sides meet by vec_id in an RDD join, which stays lazy
+    * (a planned join would run its exchanges when pinned), so the pin
+    * still starts no job: the first serve that scans it runs the join.
+    */
+  private def servingCells(s: SparkSession, dir: String, g: Long): DataFrame = {
+    val vecs = servingVectors(s, dir, g)
+    val gd = new Path(s"$dir/${codes.name}", s"gen=$g")
+    val cellDirs = FlatManifest.fs(s, dir).listStatus(gd)
+      .filter(_.isDirectory).map(_.getPath.toString).toSeq
+    val cells = ServingCache.readDirs(s, "vec_id BIGINT", cellDirs,
+        Some(gd.toString))
+      .select(col("vec_id"), col("cid").cast("long"))
+      .queryExecution.toRdd.map(r => r.getLong(0) -> r.getLong(1))
+    val joined = vecs.queryExecution.toRdd.map(r => r.getLong(0) -> r.copy())
+      .join(cells, s.sparkContext.defaultParallelism)
+      .map { case (_, (v, cid)) => InternalRow(v.getLong(0), v.getArray(1),
+        v.getLong(2), v.getLong(3), cid) }
+    GraftInternal.rowsDataFrame(s, joined,
+      vecs.schema.add("cid", LongType, nullable = false))
+  }
+
+  /** Cached ranked top-k serve — the cached [[BinaryStore.serve]] on the
+    * composed layout, from the per-generation [[ServingCache]]: the
+    * router is held on the driver (fixed for the store's lifetime), each
+    * live generation's vectors are pinned once with their code and their
+    * stored cell ([[servingCells]]). The batch routes on the driver to
+    * its `nprobe` nearest cells, so each pinned row meets only the
+    * queries probing its cell — the probed-cell cut in memory. Shortlist
+    * and refine run as one job ([[PinnedTopK.codes]]); rows and order
+    * equal [[serve]] (spec-pinned).
     */
   def serveCached(s: SparkSession, dir: String, queries: DataFrame,
       k: Int, nprobe: Int = 2, width: Int = 20): DataFrame = {
-    import s.implicits._
-    val snap = FlatManifest.read(s, dir)
-    val Seq(cents, codeRows, vecs) = cachedRels(s, dir, snap)(Seq(
-      centroids(s, dir), live(s, dir, snap),
-      rel(s, dir, snap, vecRoot).select($"vec_id", $"qv")))
-    val routed = VectorOps.ivfBinRoute(queries, cents)
-      .filter($"prank" <= nprobe)
-    topK(VectorOps.refineRank(cellShortlist(codeRows, routed, width), vecs,
-      queries), k)
+    val cents = ServingCache.value(s, dir, "centroids")(
+      VectorOps.centroidRows(s, s"$dir/centroids"))
+    val live = servingLive(s, dir, FlatManifest.read(s, dir),
+      noVectors(s).withColumn("cid", col("vec_id")))(servingCells(s, dir, _))
+    val probes = math.min(nprobe, VectorOps.IvfBinMaxProbe)
+    val qs = codeQueries(queries)
+    val byCell = qs.indices.flatMap(j => VectorOps.nearestCellIds(
+        qs(j).qv.toSeq, cents, probes).map(_ -> j))
+      .groupBy(_._1).map { case (c, js) => c -> js.map(_._2).toArray }
+    PinnedTopK.codes(s, live, qs, k, width, Some("cid"),
+      c => byCell.getOrElse(c, Array.empty[Int]))
   }
 
   /** Hamming shortlist over probed-cell candidates: join codes to the

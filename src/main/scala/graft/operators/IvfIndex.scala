@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 
 /** Persisted IVF index — the missing half of q147's index-BUILD path:
@@ -350,7 +351,8 @@ object IvfIndex {
     // del= directory holding only _SUCCESS, and committing its set id
     // would make every later tombstone read fail parquet schema
     // inference on the file-less directory.
-    val batch = ids.select(col("vec_id")).localCheckpoint(true)
+    val batch = ids.select(col("vec_id").cast("long").as("vec_id"))
+      .localCheckpoint(true)
     if (batch.isEmpty) return
     val snap = readSnapshot(s, dir)
     val delId = snap.epoch + 1
@@ -548,67 +550,127 @@ object IvfIndex {
     out.orderBy($"query_id", $"rank")
   }
 
-  // ---------- serve-stream store-metadata cache ----------
+  // ---------- serving cache ----------
 
-  /** Driver-side cache of per-epoch store metadata for the STREAMING
-    * serve tier: centroid rows (k of them) and, for PQ stores, the
-    * codebook, keyed by the committed epoch. A serve trigger always
-    * re-reads the MANIFEST — one small file, which is the freshness
-    * contract: a commit landing between triggers is picked up on the
-    * very next batch — but skips the centroid/codebook parquet reads
-    * (two Spark jobs plus their plans) when the epoch is unchanged,
-    * which is every trigger on a serving-dominated stream. One entry
-    * per index directory (the latest epoch seen wins), so the cache is
-    * bounded by the number of directories a process serves.
+  /** The committed posting generations with the cells that reference
+    * them, in generation order.
     */
-  private case class CachedMeta(epoch: Long,
-      cents: Array[(Long, Array[Long])],
-      cb: Option[Array[Array[Array[Long]]]])
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, CachedMeta]()
+  private def genCells(snap: Snapshot): Seq[(Long, Seq[Long])] =
+    snap.cells.toSeq.flatMap { case (c, gs) => gs.map(_ -> c) }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (g, cs) => g -> cs.map(_._2).sorted }
 
-  private def cachedMeta(s: SparkSession, dir: String, snap: Snapshot,
-      needCb: Boolean): CachedMeta = {
-    val cur = metaCache.get(dir)
-    if (cur != null && cur.epoch == snap.epoch &&
-        (!needCb || cur.cb.isDefined)) cur
-    else {
-      import s.implicits._
-      val cents = centroidsOf(s, dir, snap)
-        .select($"cid".cast("long"), $"cq")
-        .as[(Long, Array[Long])].collect()
-      val fresh = CachedMeta(snap.epoch, cents,
-        if (needCb) Some(readCb(s, dir, snap.pqVer)) else None)
-      metaCache.put(dir, fresh)
-      fresh
-    }
+  private def genKey(g: Long, cells: Seq[Long]) =
+    s"gen=$g cid=${cells.mkString(",")}"
+
+  /** Every [[ServingCache]] key the cached serve of `snap` uses: one per
+    * posting generation TOGETHER with the cells still referencing it (a
+    * compaction or split that folds some of its cells changes the key,
+    * so a pin never holds a superseded cell), one per tombstone set, and
+    * the centroid and codebook versions.
+    */
+  private def servingKeys(snap: Snapshot): Set[String] =
+    genCells(snap).map { case (g, cs) => genKey(g, cs) }.toSet ++
+      snap.tombs.map(ServingCache.delKey) +
+      s"centroids_v${snap.centroidsVer}" +
+      s"pqcodebook_v${snap.pqVer}"
+
+  /** Posting generation `g` of `cells` as (vec_id, payload, cid): its
+    * (cid, gen) directories read with their schema.
+    */
+  private def servingPostings(s: SparkSession, dir: String, g: Long,
+      cells: Seq[Long], lay: Layout): DataFrame = {
+    val schema = s"vec_id BIGINT, ${lay.payload} " +
+      (if (lay.pq) "BIGINT" else "ARRAY<BIGINT>")
+    val root = postDir(dir)
+    ServingCache.readDirs(s, schema, cells.map(c => s"$root/cid=$c/gen=$g"),
+      Some(root))
+      .select(col("vec_id"), col(lay.payload),
+        col("cid").cast("long").as("cid"))
   }
 
-  /** [[serve]] with the per-epoch metadata cache — the streaming serve
-    * tier's entry point ([[graft.streaming.StreamOps.knnIndexServeStream]]).
-    * Identical results to [[serve]]: the manifest is still read per
-    * call, only the unchanged-epoch centroid re-read is skipped.
+  /** [[serve]] from the per-generation [[ServingCache]] — the streaming
+    * serve tier's entry point
+    * ([[graft.streaming.StreamOps.knnIndexServeStream]]). Rows and their
+    * order equal [[serve]]'s (spec-pinned). The manifest is read per
+    * call (a commit is visible on the very next one); each live posting
+    * generation is pinned once with the cells that reference it, the
+    * snapshot's tombstone ids mask at serve time, and the centroid table
+    * (and PQ codebook) of the snapshot's version is held on the driver.
     * See the header's Layouts.
     */
   def serveCached(s: SparkSession, dir: String, queries: DataFrame,
       probes: Int = 2, k: Int = 5): DataFrame =
     serveCachedAs(s, dir, RawPlain, queries, probes, k)
 
-  /** [[servePq]] with the per-epoch metadata cache (centroids AND
-    * codebook — the LUT builds from the cached codebook literal).
-    * See the header's Layouts.
+  /** [[servePq]] from the [[ServingCache]] (see [[serveCached]]; each
+    * probed cell's lookup table is computed on the driver from the held
+    * codebook). See the header's Layouts.
     */
   def servePqCached(s: SparkSession, dir: String, queries: DataFrame,
       probes: Int = 2, k: Int = 5): DataFrame =
     serveCachedAs(s, dir, PqPlain, queries, probes, k)
 
+  /** The cached serve as ONE job ([[PinnedTopK.cells]]). The batch
+    * routes on the driver to its `probes` nearest cells in
+    * [[scoredCells]]' (distance, cid) order — a serving batch is
+    * bounded; the uncached serve broadcasts it too — with one lookup
+    * table per probed cell for PQ ([[lutCol]]'s table). Each pinned
+    * posting is scored only against the queries probing its cell; the
+    * pinned rows need no static pruning.
+    */
   private def serveCachedAs(s: SparkSession, dir: String, lay: Layout,
       queries: DataFrame, probes: Int, k: Int): DataFrame = {
     import s.implicits._
     val snap = readSnapshot(s, dir)
-    val meta = cachedMeta(s, dir, snap, needCb = lay.pq)
-    serveTail(s, lay, meta.cents.toSeq.toDF("cid", "cq"), meta.cb,
-      masked(s, dir, snap), queries, nearest(probes), k)
+    ServingCache.retain(s, dir, servingKeys(snap))
+    val cents = ServingCache.value(s, dir, s"centroids_v${snap.centroidsVer}")(
+      VectorOps.centroidRows(s, centDir(dir, snap.centroidsVer)))
+    val pinned = genCells(snap).map { case (g, cells) =>
+      ServingCache.relation(s, dir, genKey(g, cells))(
+        servingPostings(s, dir, g, cells, lay)) }
+    val none = s.range(0).select($"id".as("vec_id"),
+      (if (lay.pq) $"id" else array($"id")).as(lay.payload), $"id".as("cid"))
+    val post = ServingCache.mask(pinned.reduceOption(_ unionByName _)
+      .getOrElse(none), "vec_id",
+      ServingCache.tombstones(s, dir, "vec_id", snap.tombs))
+    val batch = queries.select($"vec_id", $"qv").as[(Long, Array[Long])]
+      .collect()
+    val probed = batch.map { case (_, v) =>
+      VectorOps.nearestCellIds(v.toSeq, cents, probes).toArray }
+    val byCell = probed.indices.flatMap(j =>
+        probed(j).indices.map(slot => probed(j)(slot) -> (j, slot)))
+      .groupBy(_._1).map { case (c, js) => c -> js.map(_._2).toArray }
+    val probing = (c: Long) => byCell.getOrElse(c, Array.empty[(Int, Int)])
+    val ids = batch.map(_._1)
+    val served =
+      if (lay.pq) {
+        val cb = ServingCache.value(s, dir, s"pqcodebook_v${snap.pqVer}")(
+          readCb(s, dir, snap.pqVer))
+        val cq = cents.toMap
+        val luts = batch.indices.map(j => probed(j).map(c =>
+          pqLut(batch(j)._2.toSeq, cq(c), cb))).toArray
+        PinnedTopK.cells(s, post, ids, lay.payload, k, lay.score, probing) {
+          (r, j, slot) => graft.functions.VectorMath.pqAdcFromArrayData(
+            luts(j)(slot), r.getLong(1)) }
+          .select($"query_id", $"rank", $"neighbor", $"adc")
+      } else {
+        val vs = batch.map(_._2)
+        PinnedTopK.cells(s, post, ids, lay.payload, k, lay.score, probing) {
+          (r, j, _) => PinnedTopK.dist(r, 1, vs(j)) }
+      }
+    served
+  }
+
+  /** One query's lookup table against probed cell centroid `cq` —
+    * [[lutCol]]'s table, computed on the driver.
+    */
+  private def pqLut(v: Seq[Long], cq: Seq[Long],
+      cb: Array[Array[Array[Long]]]): ArrayData = {
+    def longs(xs: Seq[Long]) = new GenericArrayData(xs.toArray[Any])
+    graft.functions.VectorMath.pqLutFromArrayData(longs(v), longs(cq),
+      new GenericArrayData(cb.map(ms =>
+        new GenericArrayData(ms.map(c => longs(c.toSeq)).toArray[Any])).toArray[Any]))
   }
 
   /** Metadata-filtered index build: the same converged coarse quantizer,
@@ -950,6 +1012,7 @@ object IvfIndex {
         .write.mode(SaveMode.Overwrite).parquet(centDir(dir, newVer))
       IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
         centroidsVer = newVer, cells = cells, nextInternal = intGen))
+      ServingCache.retain(s, dir, servingKeys(readSnapshot(s, dir)))
       // GC strictly after the commit: the old hot-cell directories and
       // the superseded centroid version fall out of the retained set
       // (unless a wider retention window keeps them for time travel)
@@ -1028,8 +1091,9 @@ object IvfIndex {
     import s.implicits._
     require(ver > 0, s"index $dir has no PQ codebook (pqVer $ver) — " +
       "not a PQ store")
-    val rows = s.read.parquet(pqCbDir(dir, ver))
-      .select($"m".cast("int"), $"c".cast("int"), $"cvec")
+    val rows = s.read.schema("m INT, c INT, cvec ARRAY<BIGINT>")
+      .parquet(pqCbDir(dir, ver))
+      .select($"m", $"c", $"cvec")
       .as[(Int, Int, Seq[Long])].collect()
     val nCodes = rows.map(_._2).max + 1
     val cb = Array.ofDim[Array[Long]](8, nCodes)
@@ -1341,6 +1405,7 @@ object IvfIndex {
     IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
       cells = cells, nextInternal = newGen - 1L, tombs = Nil,
       pqVer = newPqVer))
+    ServingCache.retain(s, dir, servingKeys(readSnapshot(s, dir)))
     gcSweep(s, dir)
   }
 
@@ -1568,9 +1633,11 @@ object IvfIndex {
       IndexManifest.commit(s, dir,
         snap.copy(epoch = snap.epoch + 1, tombs = Nil))
     }
-    // GC strictly after the commit — the retention-aware sweep removes
-    // the superseded generation dirs and tombstone sets unless an older
-    // retained epoch (time travel) still references them.
+    // unpin what the fold superseded, then GC strictly after the commit
+    // — the retention-aware sweep removes the superseded generation dirs
+    // and tombstone sets unless an older retained epoch (time travel)
+    // still references them.
+    ServingCache.retain(s, dir, servingKeys(readSnapshot(s, dir)))
     gcSweep(s, dir)
     report
   }

@@ -875,15 +875,11 @@ object VectorOps {
     * neighbor asc) total order even past k ties (neighbor ids stay
     * < 2^40 — the MakeBigSf sf10 corpus reaches ~10^9 — and
     * 64·2^40 + 2^40 < 2^53 keeps the double carry exact).
-    * Checkpointed by default: every consumer (refine fetch, ham-recall
-    * join, the store's bucket collection) re-reads the small result.
-    * `checkpoint = false` hands back the lazy plan for single-consumer
-    * paths — the store's CACHED serving loop fuses shortlist + refine
-    * into one job per trigger instead of paying a checkpoint action it
-    * never re-reads (the round-12 binary_store_qps lead).
+    * Checkpointed: every consumer (refine fetch, ham-recall join, the
+    * store's bucket collection) re-reads the small result.
     */
   private[graft] def hamShortlist(codes: DataFrame, queries: DataFrame,
-      width: Int, checkpoint: Boolean = true): DataFrame = {
+      width: Int): DataFrame = {
     val s = codes.sparkSession
     import s.implicits._
     val out = codes.crossJoin(broadcast(
@@ -900,7 +896,7 @@ object VectorOps {
       .select($"query_id", posexplode($"top"))
       .select($"query_id", $"col.id".as("neighbor"),
         ($"pos" + 1).cast("long").as("srank"))
-    if (checkpoint) out.localCheckpoint(true) else out
+    out.localCheckpoint(true)
   }
 
   /** Labeled sibling of [[hamShortlist]]: the Hamming scan joins codes
@@ -1215,6 +1211,28 @@ object VectorOps {
       .select($"vec_id", $"qv", $"cid",
         expr(SignW0Sql).as("w0"), expr(SignW1Sql).as("w1"))
   }
+
+  /** A stored centroid table `path` (cid, cq) as driver rows — k rows,
+    * read with its schema (no footer-inference job).
+    */
+  private[graft] def centroidRows(s: SparkSession,
+      path: String): Seq[(Long, Seq[Long])] = {
+    import s.implicits._
+    s.read.schema("cid BIGINT, cq ARRAY<BIGINT>").parquet(path)
+      .as[(Long, Seq[Long])].collect().toSeq
+  }
+
+  /** Exact int64 Σ (aᵢ − bᵢ)², on the driver. */
+  private[graft] def sqDist(a: Seq[Long], b: Seq[Long]): Long =
+    a.lazyZip(b).map { (x, y) => (x - y) * (x - y) }.sum
+
+  /** The `n` cells nearest to `v` among driver centroid rows, in the
+    * (exact int64 distance, cid) order every router ranks cells by.
+    */
+  private[graft] def nearestCellIds(v: Seq[Long],
+      cents: Seq[(Long, Seq[Long])], n: Int): Seq[Long] =
+    cents.map { case (cid, cq) => (sqDist(v, cq), cid) }.sorted
+      .take(n).map(_._2)
 
   /** Route queries to their [[IvfBinMaxProbe]] nearest cells with the
     * probe rank carried — (query_id, qw0, qw1, cid, prank). Centroids

@@ -471,10 +471,11 @@ object StreamOps {
     * collect-window-then-finalize structure as the reference's hopping
     * driver (hopping.rs:54-121) with Spark managing the window state.
     */
-  def hotItemsStream(bids: DataFrame, watermark: String)(
+  def hotItemsStream(bids: DataFrame, watermark: String,
+      trigger: Trigger = Trigger.ProcessingTime(0))(
       onWinners: DataFrame => Unit): StreamingQuery = {
     val counts = hoppingCounts(bids, "10 seconds", "5 seconds", watermark)
-    toForeachBatch(counts, OutputMode.Append) { (batch, _) =>
+    toForeachBatch(counts, OutputMode.Append, trigger) { (batch, _) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("w_start")).orderBy(col("num").desc, col("auction"))
       onWinners(batch
@@ -1510,12 +1511,15 @@ object StreamOps {
     * trigger interval), the manifest re-read is one small-file open,
     * and the posting scan is pruned to the batch's probed cells — the
     * serve cost tracks nprobe/nlists of the corpus per batch exactly
-    * like the batch serve, regardless of stream length. Store metadata
-    * (centroids; the PQ codebook on the compressed tier) is CACHED per
-    * committed epoch ([[graft.operators.IvfIndex.serveCached]]), so an
-    * unchanged-epoch trigger pays one manifest read and zero metadata
-    * jobs; a commit between triggers changes the epoch and refreshes
-    * the cache on the next batch.
+    * like the batch serve, regardless of stream length. The store is
+    * served from the per-generation serving cache
+    * ([[graft.operators.IvfIndex.serveCached]],
+    * [[graft.operators.ServingCache]]): each trigger re-reads the
+    * manifest, and a commit between triggers costs the next batch only
+    * what it changed — an ingest pins its one new generation, a delete
+    * adds a tombstone id set to the mask, a compaction swaps the pins of
+    * the cells it folded — so a trigger runs a constant number of jobs
+    * at any epoch.
     */
   def knnIndexServeStream(qs: Dataset[VecEvent], dir: String,
       probes: Int = 2, k: Int = 5)(
@@ -1533,18 +1537,16 @@ object StreamOps {
     * corner of the binary serving matrix (q191 batch / binaryAnnStream
     * broadcast / q195 store): each micro-batch of query vectors packs
     * its own codes and runs [[graft.operators.BinaryStore.serve]]
-    * against the stored relations — the cached path pins both
-    * relations in executor memory, re-reading only the one-line
-    * manifest per trigger, so a generation committed by a concurrent
-    * ingest, a delete, or a compaction refreshes the cache and is
-    * visible to the very next batch (the
-    * [[graft.operators.IvfIndex.serveCached]] epoch-key discipline;
-    * spec-pinned batch-equal across a mid-stream commit). An
-    * unchanged epoch pays ONE fused shortlist+refine job per trigger —
-    * recorded at 32 cpus as 336 vs knn_store's 4.9k queries/s
-    * (BENCH_r15.json `binary_store_qps`). Same retention contract as
-    * the index serve streams: a shared-directory mutator's GC needs one
-    * epoch of slack.
+    * against the stored relations on its cached path: the store's
+    * live generations are pinned in executor memory once each
+    * ([[graft.operators.ServingCache]]) and only the one-line manifest
+    * is re-read per trigger, so a generation committed by a concurrent
+    * ingest, a delete, or a compaction is visible to the very next
+    * batch, which pins only what the commit changed (spec-pinned
+    * batch-equal across a mid-stream commit). Shortlist and refine run
+    * as one fused plan, a constant number of jobs per trigger at any
+    * epoch. Same retention contract as the index serve streams: a
+    * shared-directory mutator's GC needs one epoch of slack.
     */
   def binaryStoreServeStream(qs: Dataset[VecEvent], dir: String,
       k: Int = 5, width: Int = 20)(
@@ -1864,8 +1866,8 @@ object StreamOps {
   /** [[indexIngestStream]] for the FLAT 1-bit store
     * ([[graft.operators.BinaryStore]]) on [[flatIngestStream]]. A
     * concurrent [[binaryStoreServeStream]] picks each committed epoch up
-    * on its next trigger (epoch-keyed relation cache) under the shared
-    * retention contract.
+    * on its next trigger (the per-generation serving cache pins the new
+    * generation) under the shared retention contract.
     */
   def binaryIngestStream(vecs: Dataset[IndexVec], dir: String,
       maxGens: Int = 4, maxTombs: Int = 2): StreamingQuery =
@@ -2024,7 +2026,8 @@ object StreamOps {
     * the df-bounded "index" of the sparse system), the DENSE side
     * serves top-20 from the PERSISTED IVF store
     * ([[graft.operators.IvfIndex.serveCached]] — manifest re-read per
-    * trigger, metadata cached per epoch, probe-pruned scan), and the
+    * trigger, live generations pinned once each, probed cells joined in
+    * memory), and the
     * two rankings fuse by integer Reciprocal Rank Fusion (K = 60) into
     * the top-k per query. All three stages are the exact code q163 and
     * the batch reference share ([[graft.operators.TextOps.bm25SparseTop]] /
@@ -2081,7 +2084,7 @@ object StreamOps {
     * its rare-term prefixes route through the store's bucket-pruned
     * posting directories, and the top-k candidate docs emit with the
     * batch id. The store is MUTABLE (manifest lifecycle: addBatch /
-    * delete / compact / vacuum), so serves follow the epoch-keyed
+    * delete / compact / vacuum), so serves follow the
     * retention contract shared with the other serve streams: each
     * trigger reads the manifest committed at that moment, and
     * `spark.graft.index.retainEpochs >= 2` (enforced below) keeps the
@@ -2280,7 +2283,8 @@ object StreamOps {
     * datasink/mod.rs:68-101): foreachBatch hands each micro-batch to an
     * idempotent upsert callback keyed by batchId for exactly-once sinks.
     */
-  def toForeachBatch(df: DataFrame, mode: OutputMode = OutputMode.Update)(
+  def toForeachBatch(df: DataFrame, mode: OutputMode = OutputMode.Update,
+      trigger: Trigger = Trigger.ProcessingTime(0))(
       f: (DataFrame, Long) => Unit): StreamingQuery =
-    df.writeStream.outputMode(mode).foreachBatch(f).start()
+    df.writeStream.outputMode(mode).trigger(trigger).foreachBatch(f).start()
 }

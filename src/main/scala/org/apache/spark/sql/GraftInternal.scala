@@ -19,4 +19,13 @@ object GraftInternal {
   def dataFrame(spark: SparkSession,
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** DataFrame over rows already in Catalyst form (classic
+    * internalCreateDataFrame bridge): no per-row conversion on a scan.
+    */
+  def rowsDataFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession]
+      .internalCreateDataFrame(rows, schema, isStreaming = false)
 }

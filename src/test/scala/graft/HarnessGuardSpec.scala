@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps `src/main` at one harness: the benchmark lives in `flockbench/`,
   * so the program carries only its five runnable mains, and every one of
   * them builds its session through [[Session.local]]. Also keeps the flat
-  * stores on one generation kernel: manifest commits, generation writes
-  * and the serving cache live only in `GenStore`; `IvfIndex` on one
+  * stores on one generation kernel: manifest commits and generation
+  * writes live only in `GenStore`; the stores' serving relations are
+  * pinned only in the one `ServingCache`; `IvfIndex` on one
   * posting writer and one layout probe; and the LSH family on one
   * banding kernel in `TextOps` (one MinHash band fold, one SimHash
   * blocking, one operating-point candidate builder). Scans the sources;
@@ -47,10 +48,29 @@ class HarnessGuardSpec extends AnyFunSuite {
     val copies = for {
       (p, t) <- sources if p != kernel
       re <- Seq("""FlatManifest\.commit\(""".r,
-        """FlatManifest\.writeGenDir\(""".r, """\bva[lr]\s+relCache\b""".r)
+        """FlatManifest\.writeGenDir\(""".r)
       if count(t, re) > 0
     } yield p -> re.toString
     assert(copies.isEmpty, s"lifecycle copies outside $kernel: $copies")
+  }
+
+  test("serving relations are pinned only in the one serving cache") {
+    val cache = "graft/operators/ServingCache.scala"
+    val stores = (Seq("GenStore", "BinaryStore", "IvfBinaryStore",
+      "MaxSimStore", "IvfIndex", "FlatManifest")
+      .map(n => s"graft/operators/$n.scala") :+
+      "graft/streaming/StreamOps.scala").toSet
+    val copies = for {
+      (p, t) <- sources if stores(p)
+      re <- Seq("""\.persist\(""".r, """\.cache\(\)""".r,
+        """ConcurrentHashMap""".r, """mutable\.(Hash)?Map""".r,
+        """\b(relCache|metaCache|cachedRels|invalidateCache)\b""".r)
+      if count(t, re) > 0
+    } yield p -> re.toString
+    assert(copies.isEmpty, s"serving caches outside $cache: $copies")
+    val pins = sources.collect { case (`cache`, t) =>
+      count(t, """\.persist\(""".r) }
+    assert(pins == Seq(1), s"$cache pins in ${pins.sum} places, not one")
   }
 
   test("IvfIndex writes postings in one place and reads its layout from the store") {
