@@ -58,7 +58,7 @@ private[graft] class BinaryLayout(labels: Seq[String])
     * file, not one per task (the q156 small-files lesson).
     */
   protected def writeGen(dir: String, snap: Snap, emb: DataFrame,
-      gen: Long): Unit = {
+      gen: Long): Set[Long] = {
     val s = emb.sparkSession
     import s.implicits._
     val packed = VectorOps.binaryCodes(emb.select($"vec_id", $"qv"))
@@ -66,21 +66,22 @@ private[graft] class BinaryLayout(labels: Seq[String])
       if (labels.isEmpty) packed.select($"vec_id", $"w0", $"w1")
       else packed.join(emb.select($"vec_id", $"label"), "vec_id")
         .select($"vec_id", $"w0", $"w1", $"label").repartition($"label"),
-      gen)
-    writeVectors(dir, emb, gen)
+      gen) ++ writeVectors(dir, emb, gen)
   }
 
   /** Compaction re-packs the live vectors (labels ride along). */
-  protected def fold(dir: String, snap: Snap, counted: DataFrame,
-      masked: DataFrame => DataFrame, gen: Long): Boolean =
-    writeLive(masked(rel(counted.sparkSession, dir, snap, vecRoot))
+  protected def fold(s: SparkSession, dir: String, snap: Snap,
+      counted: DataFrame, cells: Set[Long], masked: DataFrame => DataFrame,
+      gen: Long): Set[Long] =
+    writeLive(masked(rel(s, dir, snap, vecRoot))
       .select(vecRoot.data.map(col): _*))(writeGen(dir, snap, _, gen))
 
   /** Build from a quantized corpus (vec_id, qv[, label]) as epoch 1,
     * generation 0.
     */
   def build(emb: DataFrame, dir: String): Unit =
-    create(emb.sparkSession, dir)(writeGen(dir, GenStore.Fresh, emb, 0L))
+    create(emb.sparkSession, dir)(
+      built(writeGen(dir, GenStore.Fresh, emb, 0L)))
 
   // ---------- serving ----------
 
@@ -139,7 +140,7 @@ private[graft] class BinaryLayout(labels: Seq[String])
     if (cached) {
       require(labels.isEmpty, "serve: the cached path is unlabeled")
       val live = servingLive(s, dir, FlatManifest.read(s, dir),
-        noVectors(s))(servingVectors(s, dir, _))
+        noVectors(s))((g, _) => servingVectors(s, dir, g))
       PinnedTopK.codes(s, live, codeQueries(queries), k, width)
     } else topK(stagesOf(s, dir, snapAt(s, dir, epoch), queries, width)._2, k)
   }

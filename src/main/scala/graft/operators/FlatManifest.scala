@@ -28,6 +28,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `nextInternal` hands out negative generation ids for compaction and
   * split outputs — sign-disjoint from caller generations, so an ingest
   * replay can never clobber folded data.
+  *
+  * `cells` is the committed data: the live generations per cell — the
+  * index's `cell=` map, or a flat store's one generation list as the
+  * single cell [[GenStore.Flat]].
   */
 private[graft] trait ManifestState[S] {
   def epoch: Long
@@ -35,7 +39,17 @@ private[graft] trait ManifestState[S] {
   def ingested: Set[Long]
   def ingestLow: Long
   def nextInternal: Long
-  protected def withWatermark(ingested: Set[Long], ingestLow: Long): S
+  def cells: Map[Long, Seq[Long]]
+  protected def evolve(epoch: Long, tombs: Seq[Long], ingested: Set[Long],
+      ingestLow: Long, nextInternal: Long, cells: Map[Long, Seq[Long]]): S
+
+  /** The state to commit as the next epoch, with the given parts
+    * replaced.
+    */
+  def next(tombs: Seq[Long] = this.tombs,
+      nextInternal: Long = this.nextInternal,
+      cells: Map[Long, Seq[Long]] = this.cells): S =
+    evolve(epoch + 1, tombs, ingested, ingestLow, nextInternal, cells)
 
   /** Is `gen` an already-committed ingest generation (replay = no-op)? */
   def committedIngest(gen: Long): Boolean =
@@ -48,22 +62,23 @@ private[graft] trait ManifestState[S] {
     var set = ingested + gen
     var low = ingestLow
     while (set.contains(low + 1)) { low += 1; set -= low }
-    withWatermark(set, low)
+    evolve(epoch, tombs, set, low, nextInternal, cells)
   }
 }
 
 /** The ONE manifest control plane of every persisted store —
   * [[IvfIndex]] (through `IvfIndex.IndexManifest`) and the flat stores
   * on [[FlatManifest]] ([[BinaryStore]], [[IvfBinaryStore]],
-  * [[MaxSimStore]]). Reference lifecycle:
+  * [[MaxSimStore]]), all running the one generation lifecycle of
+  * [[GenStore]]. Reference lifecycle:
   * `flock/src/datasource` keeps sources immutable; mutability here is
   * the standard manifest-pointer table design. A store kind supplies
   * only what differs — its body keys ([[layout]], [[body]],
-  * [[decode]]), its data sweep (the argument to [[gc]]) and its
-  * data-existence check (the argument to [[readAt]]); naming, listing,
-  * parsing, commit, retention, the temp-manifest and tombstone sweeps,
-  * build-dir preparation and the ingest watermark ([[ManifestState]])
-  * live here once.
+  * [[decode]]); naming, listing, parsing, commit, retention, the
+  * time-travel window check ([[readAt]], which runs the store's
+  * data-existence check), build-dir preparation and the ingest
+  * watermark ([[ManifestState]]) live here once, and the one GC
+  * (data, tombstone sets, temp manifests) in [[GenStore]].
   *
   * == State machine ==
   * Every mutation follows write-new-files -> commit-manifest ->
@@ -77,8 +92,8 @@ private[graft] trait ManifestState[S] {
   *      on an object store, where rename is a copy), with the rename
   *      return value checked and the optimistic-concurrency guard of
   *      [[commit]] in front of it.
-  *   3. Only after the commit may GC ([[gc]]) reclaim what no RETAINED
-  *      manifest references.
+  *   3. Only after the commit may GC ([[GenStore]]'s `vacuum`) reclaim
+  *      what no RETAINED manifest references.
   * The highest committed epoch IS the store.
   *
   * == Crash argument ==
@@ -89,10 +104,13 @@ private[graft] trait ManifestState[S] {
   * (pushed as a partition-pruning predicate), so orphaned uncommitted
   * files are invisible. A crash after step 2 leaves at worst
   * unreferenced garbage for the next GC. Data directories are never
-  * rewritten in place: the index writes fresh partitions only, and the
-  * flat stores publish a generation by one directory rename
-  * ([[GenStore]]) that precedes the commit, so on an object store the
-  * copy it becomes is still invisible until the manifest names it.
+  * rewritten in place: every store publishes a generation by renames
+  * out of one tmp directory ([[GenStore]]) — one for a flat store's
+  * generation, one per cell leaf for the index's cell-major postings —
+  * that precede the commit, so on an object store the copies they
+  * become are still invisible until the manifest names them, and a
+  * crash between the renames leaves an uncommitted generation the next
+  * attempt replaces or GC reclaims.
   * All control-plane I/O goes through the Hadoop [[FileSystem]] bound
   * to the session's configuration, so the same code runs against
   * local fs, HDFS, or an object store.
@@ -297,65 +315,6 @@ private[graft] abstract class ManifestProtocol(noun: String) {
       .foreach(p => f.delete(p, false))
   }
 
-  /** The one GC (step 3): `sweepData` reclaims the store's own data
-    * directories no retained snapshot references and returns its
-    * per-kind counts; this adds the tombstone sets under `tombstones/`
-    * no retained snapshot references and the dead `.manifest-tmp-`
-    * files. Runs inline after compaction-style mutations and standalone
-    * as each store's `vacuum`. Metadata-only: directory listings, no
-    * data bytes read.
-    */
-  def gc(s: SparkSession, dir: String)(
-      sweepData: (FileSystem, Seq[S]) => Map[String, Long])
-      : Map[String, Long] = {
-    val snaps = retained(s, dir)
-    val f = fs(s, dir)
-    val data = sweepData(f, snaps)
-    val liveTombs = snaps.flatMap(_.tombs).toSet
-    var orphanTombs = 0L
-    var tmpManifests = 0L
-    val rp = new Path(dir, TombRoot)
-    if (f.exists(rp)) {
-      if (liveTombs.isEmpty) {
-        orphanTombs += f.listStatus(rp).count(st =>
-          st.isDirectory && st.getPath.getName.startsWith("del="))
-        require(f.delete(rp, true), s"gc failed to delete $rp")
-      } else {
-        f.listStatus(rp).filter(_.isDirectory).map(_.getPath)
-          .filter(_.getName.startsWith("del=")).foreach { dd =>
-            if (!liveTombs.contains(dd.getName.stripPrefix("del=").toLong)) {
-              require(f.delete(dd, true), s"gc failed to delete $dd")
-              orphanTombs += 1
-            }
-          }
-      }
-    }
-    // only reclaim temp manifests that can never commit: an epoch at or
-    // below the latest committed one would lose the optimistic-
-    // concurrency check anyway. A temp for a FUTURE epoch may belong to
-    // a mutation in flight between create and rename — deleting it
-    // would fail that writer's commit, so leave it for the next sweep.
-    val head = snaps.map(_.epoch).max
-    f.listStatus(new Path(dir)).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith(".manifest-tmp-") &&
-          n.stripPrefix(".manifest-tmp-").toLong <= head) {
-        require(f.delete(p, false), s"gc failed to delete $p")
-        tmpManifests += 1
-      }
-    }
-    data ++ Map("orphan_tombstone_sets" -> orphanTombs,
-      "tmp_manifests" -> tmpManifests)
-  }
-
-  /** [[gc]]'s counts as the (kind, n_removed) frame every store's
-    * `vacuum` returns.
-    */
-  def report(s: SparkSession, removed: Map[String, Long]): DataFrame = {
-    import s.implicits._
-    removed.toSeq.sortBy(_._1).toDF("kind", "n_removed")
-  }
-
   /** Prepare a build's target directory. A build OWNS its directory,
     * but "owns" must not mean "silently destroys whatever path the
     * caller mistyped": the wipe only proceeds when the directory is
@@ -402,8 +361,11 @@ private[graft] object FlatManifest extends ManifestProtocol("store") {
   case class Snap(epoch: Long, gens: Seq[Long], tombs: Seq[Long],
       ingested: Set[Long], ingestLow: Long, nextInternal: Long)
       extends ManifestState[Snap] {
-    protected def withWatermark(ingested: Set[Long], ingestLow: Long) =
-      copy(ingested = ingested, ingestLow = ingestLow)
+    def cells: Map[Long, Seq[Long]] = Map(GenStore.Flat -> gens)
+    protected def evolve(epoch: Long, tombs: Seq[Long], ingested: Set[Long],
+        ingestLow: Long, nextInternal: Long, cells: Map[Long, Seq[Long]]) =
+      Snap(epoch, cells.getOrElse(GenStore.Flat, Nil), tombs, ingested,
+        ingestLow, nextInternal)
   }
 
   protected val layout =

@@ -1,206 +1,536 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.FlatManifest.Snap
 
-/** The ONE generation lifecycle of the flat stores ([[BinaryStore]],
-  * [[IvfBinaryStore]], [[MaxSimStore]]) on [[FlatManifest]]. A store
-  * supplies its generation-keyed [[Root]]s
-  * (`<dir>/<root>/gen=N/<inner>=…/`), its tombstone key, how a batch
-  * becomes one generation's files ([[writeGen]]), how the live rows
-  * fold into the compacted generation ([[fold]]), and its serve plan.
-  * Commit, retention and GC follow the [[ManifestProtocol]] state
-  * machine: write new directories, commit the manifest, then collect.
+/** The ONE generation lifecycle of every persisted store: the flat
+  * stores ([[BinaryStore]], [[IvfBinaryStore]], [[MaxSimStore]]) on
+  * [[FlatManifest]] and [[IvfIndex]] on its `IndexManifest`. A store
+  * names its manifest and its state `S` (the committed generations per
+  * cell, [[ManifestState.cells]]: a flat store's one generation list, or
+  * the index's `cell=` map), and supplies its generation-keyed [[Root]]s,
+  * its tombstone key, how a batch becomes one generation's files
+  * ([[writeGen]]), its compaction plan and fold ([[plan]], [[fold]]), its
+  * versioned directories ([[metaDirs]]) and its serve plan. The kernel
+  * owns the rest: build ([[create]]), exactly-once [[ingest]],
+  * [[delete]] and the tombstone [[mask]], [[compact]], the GC
+  * ([[vacuum]]), the time-travel existence check ([[snapAt]]), the
+  * serving-cache pins ([[servingLive]]) and the one generation publish
+  * ([[writeRoot]]). Commit, retention and GC follow the
+  * [[ManifestProtocol]] state machine: write new directories, commit the
+  * manifest, then collect.
   *
-  *   - build ([[create]]): wipe a recognizable store directory (which
-  *     drops its [[ServingCache]] entries: a rebuild restarts epochs and
-  *     generation ids), write generation 0, commit epoch 1.
-  *   - ingest ([[ingest]]): EXACTLY-ONCE under replay — a generation the
-  *     manifest has already committed (even one a compaction has since
-  *     folded) is a no-op; an EMPTY batch commits its id into the
-  *     watermark without a file-less generation, so its replay is a
-  *     no-op too. This is the idempotent-sink contract a streaming
-  *     `foreachBatch` needs (the sink names generations batchId + 1).
-  *   - delete: O(batch) append under `tombstones/del=<epoch>/`,
-  *     committed as a snapshot-scoped set (a time-travel read never
-  *     sees a later delete); an uncached serve masks with a broadcast
-  *     anti-join, a cached one with the driver-held ids, both bounded by
-  *     the delete volume between compactions.
-  *   - compact: fold every live row into ONE internal generation with
-  *     the tombstones applied physically, commit, GC. With no tombstone
-  *     hit and one generation there is nothing to fold, but a pending
-  *     mask still costs every serve, so a metadata-only commit retires
-  *     it.
-  *   - vacuum: the standalone GC of what no RETAINED manifest
-  *     references.
-  *
-  * A generation writes plain into `<root>/.gen-tmp-<gen>` (the leading
-  * dot hides it from partition discovery) and ONE directory rename
-  * publishes it as `gen=<gen>` before the commit; a replay overwrites
-  * its tmp dir and replaces a renamed but uncommitted generation, GC
-  * sweeps the rest (the crash argument is [[ManifestProtocol]]'s). This
-  * replaced dynamic-partition-overwrite writes, whose commit moved every
+  * The publish writes into `<root>/.gen-tmp-<gen>` (the leading dot hides
+  * it from partition discovery), then renames publish the generation
+  * before the commit. A replay overwrites its tmp dir and replaces a
+  * renamed but uncommitted generation, GC sweeps the rest (the crash
+  * argument is [[ManifestProtocol]]'s). This replaced
+  * dynamic-partition-overwrite writes, whose commit moved every
   * partition directory one by one on the driver: ~3× the write itself
   * for micro-batch generations (VERDICT.md, round 15: 64-bucket vectors
-  * 1.0–2.0 s dyn-overwrite vs 0.4 s tmp+rename at 128 rows). Time
-  * travel ([[snapAt]]) runs [[ManifestProtocol.readAt]]'s
-  * data-existence check over every root and tombstone set.
-  *
-  * The serving cache is the shared per-generation [[ServingCache]]: a
-  * cached serve ([[servingLive]]) re-reads the manifest (one small-file
-  * open, so a concurrent commit is visible on the very next call) and
-  * pins each committed generation once, under `gen=N`: an add pins only
-  * its new generation, a delete adds one driver-held tombstone id set to
-  * the serve-time mask, and a compaction unpins the generations it
-  * folds right after its commit, so the next serve pins its output
-  * once. Every pin is read from the committed files.
+  * 1.0–2.0 s dyn-overwrite vs 0.4 s tmp+rename at 128 rows).
   */
 private[graft] abstract class GenStore {
   import GenStore._
 
-  /** The data roots; the first is the counted one (compaction stats,
-    * [[genReport]], [[live]]).
-    */
+  /** The store's manifest and its committed state. */
+  private[graft] type S <: ManifestState[S]
+  protected def manifest: ManifestProtocol { type S = GenStore.this.S }
+
+  /** The data roots; the first is the counted one. */
   protected def roots: Seq[Root]
 
   /** Non-generation directories a build owns beside the roots. */
-  protected def fixedDirs: Set[String] = Set.empty
+  protected def ownsDir(name: String): Boolean = false
 
   /** The id column tombstones record, and the data column it masks. */
   protected def tombKey: String
   protected def rowKey: String = tombKey
 
-  /** The columns of an ingested batch the store keeps. */
-  protected def ingestRows(batch: DataFrame): DataFrame = batch
+  /** The rows of an ingested batch the store writes. */
+  protected def ingestRows(dir: String, snap: S, batch: DataFrame): DataFrame =
+    batch
 
-  /** Write `rows` as generation `gen` on top of `snap`. */
-  protected def writeGen(dir: String, snap: Snap, rows: DataFrame,
-      gen: Long): Unit
-
-  /** Write the live rows as compaction output `gen` (`counted`: the
-    * unmasked first root; `masked` applies the tombstones). False when
-    * nothing is live.
+  /** Write `rows` as generation `gen` on top of `snap`; returns the cells
+    * it published ([[writeRoot]]).
     */
-  protected def fold(dir: String, snap: Snap, counted: DataFrame,
-      masked: DataFrame => DataFrame, gen: Long): Boolean
+  protected def writeGen(dir: String, snap: S, rows: DataFrame,
+      gen: Long): Set[Long]
+
+  /** The report [[compact]] returns and the cells to fold, over
+    * `counted` (the first root's committed rows; `tomb`: the distinct
+    * tombstone ids).
+    */
+  protected def plan(s: SparkSession, dir: String, snap: S,
+      counted: DataFrame, tomb: Option[DataFrame]): (DataFrame, Set[Long])
+
+  /** Write the live rows of `cells` (`masked` applies the tombstones) as
+    * compaction output `gen`; returns the cells it published.
+    */
+  protected def fold(s: SparkSession, dir: String, snap: S,
+      counted: DataFrame, cells: Set[Long], masked: DataFrame => DataFrame,
+      gen: Long): Set[Long]
+
+  /** Versioned non-generation directories `snap` references (also the
+    * [[ServingCache]] keys of their driver-held values).
+    */
+  protected def metaDirs(snap: S): Seq[String] = Nil
+
+  /** Sweep the versioned directories no `snaps` reference; per-kind counts. */
+  protected def sweepMeta(f: FileSystem, dir: String,
+      snaps: Seq[S]): Map[String, Long] = Map.empty
 
   // ---------- data plane ----------
 
-  /** `root`'s rows (with `gen` and the inner partitions) in `snap`. */
-  protected def rel(s: SparkSession, dir: String, snap: Snap,
+  /** `root`'s rows (with `gen` and the inner partitions) in `snap`,
+    * filtered to its committed leaves by a partition-pruning predicate
+    * ([[Root.committed]]), so uncommitted files are never read.
+    */
+  protected def rel(s: SparkSession, dir: String, snap: S,
       root: Root): DataFrame =
-    if (snap.gens.isEmpty) root.empty(s)
+    if (snap.cells.values.forall(_.isEmpty)) root.empty(s)
     else s.read.parquet(s"$dir/${root.name}")
-      .filter(col("gen").isin(snap.gens: _*))
+      .filter(root.committed(snap.cells))
 
-  /** Publish `df` (without `gen`) as generation `gen` of `root`. */
+  /** Publish `df` (without `gen`) as generation `gen` of `root`: ONE
+    * overwriting write into `<root>/.gen-tmp-<gen>` partitioned by the
+    * inner columns, then renames — the tmp dir to `gen=<gen>` for a
+    * generation-first root, or each leaf `<inner>=…/` to
+    * `<inner>=…/gen=<gen>` for a cell-major one. Returns the cells
+    * published: the one [[Flat]] cell, or the cells of the leaves listed
+    * in the tmp dir, which the overwrite left holding only this
+    * attempt's output.
+    */
   protected def writeRoot(root: Root, dir: String, df: DataFrame,
-      gen: Long): Unit = {
-    val f = FlatManifest.fs(df.sparkSession, dir)
-    val tmp = new Path(s"$dir/${root.name}", s".gen-tmp-$gen")
+      gen: Long): Set[Long] = {
+    val f = manifest.fs(df.sparkSession, dir)
+    val base = new Path(dir, root.name)
+    val tmp = new Path(base, s".gen-tmp-$gen")
     val w = df.write.mode(SaveMode.Overwrite)
     (if (root.inner.isEmpty) w else w.partitionBy(root.inner: _*))
       .parquet(tmp.toString)
-    val dest = new Path(s"$dir/${root.name}", s"gen=$gen")
-    if (f.exists(dest))
-      require(f.delete(dest, true),
-        s"stale uncommitted generation dir $dest could not be replaced")
-    require(f.rename(tmp, dest),
-      s"generation publish failed: rename $tmp -> $dest returned false")
+    def move(from: Path, to: Path): Unit = {
+      if (f.exists(to))
+        require(f.delete(to, true),
+          s"stale uncommitted generation dir $to could not be replaced")
+      require(f.rename(from, to),
+        s"generation publish failed: rename $from -> $to returned false")
+    }
+    if (!root.cellMajor) {
+      move(tmp, new Path(base, s"gen=$gen"))
+      Set(Flat)
+    } else {
+      val leaves = root.inner.foldLeft(Seq(tmp))((ps, _) => ps.flatMap(p =>
+        f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)))
+      val cells = leaves.map { leaf =>
+        val names = Iterator.iterate(leaf)(_.getParent)
+          .take(root.inner.length).map(_.getName).toSeq.reverse
+        val dest = new Path(names.foldLeft(base)(new Path(_, _)), s"gen=$gen")
+        f.mkdirs(dest.getParent)
+        move(leaf, dest)
+        names.head.stripPrefix(s"${root.inner.head}=").toLong
+      }
+      require(f.delete(tmp, true), s"published tmp dir $tmp not removed")
+      cells.toSet
+    }
   }
 
   private def tombstonesOf(s: SparkSession, dir: String,
-      snap: Snap): Option[DataFrame] =
+      snap: S): Option[DataFrame] =
     if (snap.tombs.isEmpty) None
-    else Some(s.read.parquet(s"$dir/${FlatManifest.TombRoot}")
+    else Some(s.read.parquet(s"$dir/${manifest.TombRoot}")
       .filter(col("del").isin(snap.tombs: _*))
       .select(col(tombKey).as(rowKey)))
 
-  /** `df` with `snap`'s tombstone mask applied. */
-  protected def mask(s: SparkSession, dir: String, snap: Snap,
+  /** `df` with `snap`'s tombstone mask applied: a broadcast anti-join,
+    * bounded by the delete volume between compactions (see [[delete]]).
+    */
+  protected def mask(s: SparkSession, dir: String, snap: S,
       df: DataFrame): DataFrame =
     tombstonesOf(s, dir, snap).fold(df)(t =>
       df.join(broadcast(t.distinct()), Seq(rowKey), "left_anti"))
 
   /** The live rows (data and inner partition columns) of the first root. */
-  protected def live(s: SparkSession, dir: String, snap: Snap): DataFrame =
+  protected def live(s: SparkSession, dir: String, snap: S): DataFrame =
     mask(s, dir, snap, rel(s, dir, snap, roots.head)
       .select(roots.head.cols.map(col): _*))
 
   /** The latest snapshot, or the retained `epoch` (data-checked). */
   protected def snapAt(s: SparkSession, dir: String,
-      epoch: Option[Long]): Snap =
-    epoch.fold(FlatManifest.read(s, dir))(e =>
-      FlatManifest.readAt(s, dir, e)(verifyData(s, dir)))
+      epoch: Option[Long]): S =
+    epoch.fold(manifest.read(s, dir))(e =>
+      manifest.readAt(s, dir, e)(verifyData(s, dir)))
 
-  private def verifyData(s: SparkSession, dir: String)(snap: Snap): Unit = {
-    val f = FlatManifest.fs(s, dir)
+  /** Existence check for everything a snapshot references: every
+    * committed generation directory of every root (one listing per cell
+    * of a cell-major root, bounded by its cell count), every tombstone
+    * set and every [[metaDirs]] version. Writers never commit a
+    * generation without files (a cell a write left empty commits an
+    * empty generation LIST), so a missing directory always means
+    * reclaimed data — the check can be strict.
+    */
+  private def verifyData(s: SparkSession, dir: String)(snap: S): Unit = {
+    val f = manifest.fs(s, dir)
     def gone(what: String): Nothing = throw new IllegalStateException(
       s"store $dir epoch ${snap.epoch}: $what no longer exists — its " +
-        "data was GC'd under a narrower retention window")
-    for (g <- snap.gens; r <- roots)
-      if (!f.exists(new Path(s"$dir/${r.name}", s"gen=$g")))
-        gone(s"${r.name} generation $g")
+        "data was reclaimed by GC under a narrower retention window")
+    val gens = snap.cells.values.flatten.toSeq.distinct
+    roots.foreach { r =>
+      val rp = new Path(dir, r.name)
+      if (!r.cellMajor) gens.foreach { g =>
+        if (!f.exists(new Path(rp, s"gen=$g"))) gone(s"${r.name} generation $g")
+      } else snap.cells.filter(_._2.nonEmpty).foreach { case (c, cg) =>
+        val cd = new Path(rp, s"${r.inner.head}=$c")
+        val found: Set[Long] =
+          if (f.exists(cd)) genLeaves(f, cd).map(genOf).toSet else Set.empty
+        cg.filterNot(found).foreach(g =>
+          gone(s"${r.name} generation ${cd.getName}/gen=$g"))
+      }
+    }
     snap.tombs.foreach { t =>
-      if (!f.exists(new Path(s"$dir/${FlatManifest.TombRoot}", s"del=$t")))
+      if (!f.exists(new Path(s"$dir/${manifest.TombRoot}", s"del=$t")))
         gone(s"tombstone set $t")
     }
+    metaDirs(snap).foreach(m => if (!f.exists(new Path(dir, m))) gone(m))
+  }
+
+  // ---------- serving cache ----------
+
+  /** The committed generations with the cells that reference them, in
+    * generation order.
+    */
+  private def genCells(snap: S): Seq[(Long, Seq[Long])] =
+    snap.cells.toSeq.flatMap { case (c, gs) => gs.map(_ -> c) }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (g, cs) => g -> cs.map(_._2).sorted }
+
+  private def genKey(g: Long, cells: Seq[Long]) =
+    s"gen=$g cells=${cells.mkString(",")}"
+
+  /** Every [[ServingCache]] key the cached serve of `snap` uses: one per
+    * generation TOGETHER with the cells still referencing it (a fold of
+    * some of its cells changes the key, so a pin never holds a
+    * superseded cell), one per tombstone set, and the [[metaDirs]].
+    */
+  private def servingKeys(snap: S): Set[String] =
+    genCells(snap).map { case (g, cs) => genKey(g, cs) }.toSet ++
+      snap.tombs.map(ServingCache.delKey) ++ metaDirs(snap)
+
+  /** The live serving rows of `snap` from the [[ServingCache]]: each
+    * generation's rows `pin(g, cells)` pinned once, unioned (`empty`
+    * when none is live), with the snapshot's tombstone ids masked out.
+    */
+  protected def servingLive(s: SparkSession, dir: String, snap: S,
+      empty: => DataFrame)(pin: (Long, Seq[Long]) => DataFrame): DataFrame = {
+    ServingCache.retain(s, dir, servingKeys(snap))
+    val pinned = genCells(snap).map { case (g, cells) =>
+      ServingCache.relation(s, dir, genKey(g, cells))(pin(g, cells)) }
+    ServingCache.mask(pinned.reduceOption(_ unionByName _).getOrElse(empty),
+      rowKey, ServingCache.tombstones(s, dir, tombKey, snap.tombs))
   }
 
   // ---------- lifecycle ----------
 
-  /** Build: `write0` writes generation 0 (and any [[fixedDirs]]). */
-  protected def create(s: SparkSession, dir: String)(
-      write0: => Unit): Unit = {
-    FlatManifest.prepareBuildDir(s, dir)(roots.map(_.name).toSet ++ fixedDirs)
-    write0
-    FlatManifest.commit(s, dir, Fresh.copy(epoch = 1L, gens = Seq(0L)))
+  /** Build: wipe a recognizable store directory (which drops its
+    * [[ServingCache]] entries: a rebuild restarts epochs and generation
+    * ids); `write0` writes generation 0 (and any owned directories) and
+    * returns the epoch-1 state to commit.
+    */
+  protected def create(s: SparkSession, dir: String)(write0: => S): Unit = {
+    manifest.prepareBuildDir(s, dir)(n =>
+      roots.exists(_.name == n) || ownsDir(n))
+    manifest.commit(s, dir, write0)
   }
 
-  /** Exactly-once ingest of `batch` as caller generation `gen` (> 0). */
+  /** Exactly-once ingest of `batch` as caller generation `gen` (> 0),
+    * committed over the cells its write published. A generation the
+    * manifest has already committed (even one a compaction has since
+    * folded) is a no-op; an EMPTY batch commits its id into the
+    * watermark without a file-less generation, so its replay is a no-op
+    * too. This is the idempotent-sink contract a streaming `foreachBatch`
+    * needs (the sink names generations batchId + 1).
+    */
   private[graft] def ingest(s: SparkSession, dir: String, batch: DataFrame,
       gen: Long): Unit = {
     require(gen > 0L,
       s"ingest generations are caller-named positives (got $gen); " +
         "internal generations are negative by construction")
-    val snap = FlatManifest.read(s, dir)
+    val snap = manifest.read(s, dir)
     if (snap.committedIngest(gen)) return
-    val rows = ingestRows(batch).localCheckpoint(true)
-    val next = snap.withIngested(gen).copy(epoch = snap.epoch + 1)
-    if (rows.isEmpty) FlatManifest.commit(s, dir, next)
+    val rows = ingestRows(dir, snap, batch).localCheckpoint(true)
+    val marked = snap.withIngested(gen)
+    if (rows.isEmpty) manifest.commit(s, dir, marked.next())
     else {
-      writeGen(dir, snap, rows, gen)
-      FlatManifest.commit(s, dir,
-        next.copy(gens = (snap.gens :+ gen).distinct))
+      val touched = writeGen(dir, snap, rows, gen)
+      manifest.commit(s, dir, marked.next(cells = snap.cells ++ touched.map(
+        c => c -> (snap.cells.getOrElse(c, Nil) :+ gen).distinct)))
     }
   }
 
-  /** Tombstone the rows whose [[tombKey]] is in `ids`. */
+  /** Tombstone deletes: record the rows whose [[tombKey]] is in `ids`
+    * under `tombstones/del=<epoch>/` without touching a data byte — the
+    * LSM discipline every mutable index uses at scale — and COMMIT the
+    * set in the manifest, so the mask is snapshot-scoped: a time-travel
+    * read of an earlier epoch never sees a later delete. Serves mask
+    * tombstones logically ([[mask]]); [[compact]] later removes them
+    * physically; a cached serve masks with the driver-held ids
+    * ([[servingLive]]). Deletes cost O(batch) regardless of corpus size,
+    * and the tombstone set stays bounded by the delete volume between
+    * compactions (which is what makes the serve-side broadcast
+    * anti-join safe). A crashed delete attempt's files are invisible
+    * (not in any manifest) and a re-run replaces them via dynamic
+    * partition overwrite before committing its own epoch; masking is
+    * idempotent, so a replayed delete of the same ids only costs a
+    * redundant set. An empty batch is a full no-op: writing it would
+    * create a `del=` directory holding only `_SUCCESS`, and committing
+    * its set id would make every later tombstone read fail parquet
+    * schema inference on the file-less directory.
+    */
   def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = {
     val batch = ids.select(col(tombKey).cast("long").as(tombKey))
       .localCheckpoint(true)
     if (batch.isEmpty) return
-    val snap = FlatManifest.read(s, dir)
+    val snap = manifest.read(s, dir)
     val delId = snap.epoch + 1
     batch.withColumn("del", lit(delId))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("del").parquet(s"$dir/${FlatManifest.TombRoot}")
-    FlatManifest.commit(s, dir, snap.copy(epoch = delId,
-      tombs = snap.tombs :+ delId))
+      .partitionBy("del").parquet(s"$dir/${manifest.TombRoot}")
+    manifest.commit(s, dir, snap.next(tombs = snap.tombs :+ delId))
   }
 
-  /** Fold, commit, GC. Returns the one-row report (n_before, n_removed,
-    * n_gens_before, n_after, compacted) over the counted root.
+  /** Physically apply the accumulated tombstones and fold generations —
+    * the LSM compaction to [[delete]]'s logical mask. The store's
+    * [[plan]] picks the cells to fold and builds the report; their
+    * survivors are written as ONE fresh internal generation
+    * ([[fold]]), the manifest swap retires the old generations and the
+    * tombstone sets (the deletes are now physical; a folded cell left
+    * with no survivor commits an EMPTY generation list), and only then
+    * are the old directories deleted — every other cell's files are
+    * left byte-untouched, and a crash at any point leaves the previous
+    * snapshot fully readable. With nothing to fold, pending tombstones
+    * are retired by a metadata-only commit (they would otherwise cost
+    * every serve; clearing is idempotent). Returns the plan's report.
     */
   def compact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val snap = FlatManifest.read(s, dir)
-    val counted = rel(s, dir, snap, roots.head)
+    val snap = manifest.read(s, dir)
     val tomb = tombstonesOf(s, dir, snap)
       .map(_.distinct().localCheckpoint(true))
+    val counted = rel(s, dir, snap, roots.head)
+    val (report, cells) = plan(s, dir, snap, counted, tomb)
+    if (cells.nonEmpty) {
+      val newGen = snap.nextInternal
+      val kept = fold(s, dir, snap, counted, cells, df => tomb.fold(df)(t =>
+        df.join(broadcast(t), Seq(rowKey), "left_anti")), newGen)
+      commitAndSweep(s, dir, snap.next(tombs = Nil,
+        nextInternal = newGen - 1L, cells = snap.cells ++ cells.map(c =>
+          c -> (if (kept(c)) Seq(newGen) else Seq.empty[Long]))))
+    } else if (snap.tombs.nonEmpty)
+      commitAndSweep(s, dir, snap.next(tombs = Nil))
+    else gcSweep(s, dir)
+    report
+  }
+
+  /** The tail of every folding mutation: commit `next`, unpin what it
+    * superseded, then GC strictly after the commit — the retention-aware
+    * sweep removes the superseded directories unless an older retained
+    * epoch (time travel) still references them.
+    */
+  protected def commitAndSweep(s: SparkSession, dir: String, next: S): Unit = {
+    manifest.commit(s, dir, next)
+    ServingCache.retain(s, dir, servingKeys(next))
+    gcSweep(s, dir)
+  }
+
+  /** Garbage-collect everything no RETAINED manifest references: data
+    * generation directories orphaned by a crashed attempt or left behind
+    * by a pre-crash mutation's skipped GC, whole cell directories a
+    * mutation retired, tmp dirs a crash left between write and rename,
+    * superseded versioned directories ([[sweepMeta]]), tombstone sets
+    * and stray manifest temp files. The commit protocol makes such
+    * orphans INVISIBLE to readers (the committed-leaf predicate never
+    * matches them), so vacuum is pure space reclamation with respect to
+    * READERS — it reads the retained manifests and deletes only paths
+    * they provably do not own. It is a WRITER-SIDE maintenance
+    * operation, though: like every mutation it assumes the single
+    * logical writer, and runs under that writer's schedule (temp
+    * manifests for epochs past the committed head are left alone so an
+    * in-flight commit is never yanked mid-rename). Returns one row per
+    * reclaimed path kind: (kind, n_removed).
+    *
+    * Scale: directory listings of the store root, each data root and
+    * each cell directory — metadata-only, no data bytes read; a
+    * deployment runs it on the maintenance cadence (after compactions)
+    * or from a crash janitor.
+    */
+  def vacuum(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    gcSweep(s, dir).toSeq.sortBy(_._1).toDF("kind", "n_removed")
+  }
+
+  /** The one GC (the protocol's step 3), over what the RETAINED
+    * snapshots reference ([[ManifestProtocol.retained]]). A
+    * generation-first root's top-level `gen=` directories are kept while
+    * a retained snapshot names the generation; a cell-major root's cell
+    * directories are kept while a retained snapshot names the cell
+    * (`orphan_cell_dirs` otherwise), and their `gen=` leaves while it
+    * names the generation in that cell. A `.gen-tmp-` dir survives only
+    * a crash between write and rename; it is garbage once its generation
+    * is committed anywhere (the committing replay wrote and renamed its
+    * OWN tmp): `tmp_gen_dirs`. Then the versioned directories
+    * ([[sweepMeta]]), the tombstone sets under `tombstones/`, and the
+    * dead `.manifest-tmp-` files. Runs inline after folding mutations
+    * and standalone as [[vacuum]]. Metadata-only: directory listings, no
+    * data bytes read.
+    */
+  private def gcSweep(s: SparkSession, dir: String): Map[String, Long] = {
+    val snaps = manifest.retained(s, dir)
+    val f = manifest.fs(s, dir)
+    val liveCells = snaps.flatMap(_.cells.toSeq).groupBy(_._1)
+      .map { case (c, gs) => c -> gs.flatMap(_._2).toSet }
+    val liveGens = liveCells.values.flatten.toSet
+    val liveTombs = snaps.flatMap(_.tombs).toSet
+    var orphanGens = 0L
+    var orphanCells = 0L
+    var tmpGens = 0L
+    var orphanTombs = 0L
+    var tmpManifests = 0L
+    def drop(p: Path): Unit =
+      require(f.delete(p, true), s"gc failed to delete $p")
+    roots.map(r => r -> new Path(dir, r.name)).filter(rp => f.exists(rp._2))
+      .foreach { case (r, rp) =>
+        f.listStatus(rp).filter(_.isDirectory).map(_.getPath).foreach { d =>
+          val n = d.getName
+          if (n.startsWith(".gen-tmp-")) {
+            val g = n.stripPrefix(".gen-tmp-").toLong
+            if (liveGens(g) || snaps.exists(_.committedIngest(g))) {
+              drop(d); tmpGens += 1
+            }
+          } else if (!r.cellMajor) {
+            if (n.startsWith("gen=") && !liveGens(genOf(d))) {
+              drop(d); orphanGens += 1
+            }
+          } else if (n.startsWith(s"${r.inner.head}=")) {
+            liveCells.get(n.stripPrefix(s"${r.inner.head}=").toLong) match {
+              case None => drop(d); orphanCells += 1
+              case Some(gens) => genLeaves(f, d).filterNot(g => gens(genOf(g)))
+                .foreach { g => drop(g); orphanGens += 1 }
+            }
+          }
+        }
+      }
+    val meta = sweepMeta(f, dir, snaps)
+    val tp = new Path(dir, manifest.TombRoot)
+    if (f.exists(tp)) {
+      val dead = f.listStatus(tp).filter(_.isDirectory).map(_.getPath)
+        .filter(_.getName.startsWith("del="))
+        .filterNot(d => liveTombs(d.getName.stripPrefix("del=").toLong))
+      orphanTombs = dead.length.toLong
+      if (liveTombs.isEmpty) drop(tp) else dead.foreach(drop)
+    }
+    // only reclaim temp manifests that can never commit: an epoch at or
+    // below the latest committed one would lose the optimistic-
+    // concurrency check anyway. A temp for a FUTURE epoch may belong to
+    // a mutation in flight between create and rename — deleting it
+    // would fail that writer's commit, so leave it for the next sweep.
+    val head = snaps.map(_.epoch).max
+    f.listStatus(new Path(dir)).map(_.getPath).filter { p =>
+      p.getName.startsWith(".manifest-tmp-") &&
+        p.getName.stripPrefix(".manifest-tmp-").toLong <= head
+    }.foreach { p =>
+      require(f.delete(p, false), s"gc failed to delete $p")
+      tmpManifests += 1
+    }
+    Map("orphan_gen_dirs" -> orphanGens, "tmp_gen_dirs" -> tmpGens,
+      "orphan_tombstone_sets" -> orphanTombs,
+      "tmp_manifests" -> tmpManifests) ++
+      (if (roots.exists(_.cellMajor)) Map("orphan_cell_dirs" -> orphanCells)
+       else Map.empty) ++ meta
+  }
+}
+
+private[graft] object GenStore {
+
+  /** The one cell of a flat state: a generation-first root publishes a
+    * whole generation as one directory.
+    */
+  val Flat = 0L
+
+  /** A generation-keyed data root: its data columns and inner partition
+    * columns, laid out `<dir>/<name>/gen=N/<inner>=…/` — or, CELL-MAJOR,
+    * `<dir>/<name>/<inner>=…/gen=N/` with the first inner partition as
+    * the manifest's cell. Every column is a long except the vectors
+    * (`qv`, `vb`: array<long>) and tokens (`tok`: string), which is all
+    * [[empty]] needs to type a relation for a snapshot with no
+    * generations.
+    */
+  case class Root(name: String, data: Seq[String], inner: Seq[String] = Nil,
+      cellMajor: Boolean = false) {
+    def cols: Seq[String] = data ++ inner
+
+    def empty(s: SparkSession): DataFrame =
+      s.range(0).select((data ++ ("gen" +: inner)).map {
+        case c @ ("qv" | "vb") => array(col("id")).as(c)
+        case "tok" => col("id").cast("string").as("tok")
+        case c => col("id").as(c)
+      }: _*)
+
+    /** The committed leaves of `cells` as a partition-pruning predicate:
+      * the live generations, or for a cell-major root a disjunction over
+      * cells, each restricting `gen` to that cell's generations.
+      * References only partition columns, so Catalyst turns it into
+      * directory pruning — uncommitted or superseded generation
+      * directories are never even listed into the scan.
+      */
+    def committed(cells: Map[Long, Seq[Long]]): Column =
+      if (!cellMajor) col("gen").isin(cells.values.flatten.toSeq.distinct: _*)
+      else cells.toSeq.sortBy(_._1).map { case (c, gens) =>
+        if (gens.isEmpty) lit(false)
+        else col(inner.head) === c && col("gen").isin(gens: _*)
+      }.foldLeft(lit(false))(_ || _)
+  }
+
+  /** The generation of a `gen=` directory. */
+  def genOf(p: Path): Long = p.getName.stripPrefix("gen=").toLong
+
+  /** The `gen=` directories under a cell directory, through any further
+    * inner partition levels. Metadata only.
+    */
+  def genLeaves(f: FileSystem, p: Path): Seq[Path] =
+    f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath).flatMap(c =>
+      if (c.getName.startsWith("gen=")) Seq(c)
+      else if (c.getName.contains("=")) genLeaves(f, c)
+      else Nil)
+
+  /** The state before a flat build's first commit. */
+  val Fresh = Snap(epoch = 0L, gens = Nil, tombs = Nil, ingested = Set.empty,
+    ingestLow = 0L, nextInternal = -1L)
+
+}
+
+/** The flat stores' side of [[GenStore]]: the [[FlatManifest]] state,
+  * generation-first roots, a whole-store compaction plan (fold every
+  * live row into one generation when a tombstone hits or more than one
+  * generation is live) and the per-generation report.
+  */
+private[graft] abstract class FlatStore extends GenStore {
+  import GenStore._
+
+  private[graft] type S = Snap
+  protected def manifest: FlatManifest.type = FlatManifest
+
+  /** The epoch-1 state of a build whose `write0` wrote generation 0. */
+  protected def built(write0: => Set[Long]): Snap =
+    Fresh.next(cells = write0.map(_ -> Seq(0L)).toMap)
+
+  /** One row (n_before, n_removed, n_gens_before, n_after, compacted)
+    * over the counted root.
+    */
+  protected def plan(s: SparkSession, dir: String, snap: Snap,
+      counted: DataFrame, tomb: Option[DataFrame]): (DataFrame, Set[Long]) = {
+    import s.implicits._
     val Array(stat) = counted
       .agg(count(lit(1)).as("n_before"),
         coalesce(countDistinct($"gen"), lit(0L)).as("n_gens"))
@@ -209,62 +539,12 @@ private[graft] abstract class GenStore {
     val nRemoved = tomb.fold(0L)(t =>
       counted.join(broadcast(t), rowKey).count())
     val doFold = nRemoved > 0 || snap.gens.length > 1
-    if (doFold) {
-      val newGen = snap.nextInternal
-      val any = fold(dir, snap, counted, df => tomb.fold(df)(t =>
-        df.join(broadcast(t), Seq(rowKey), "left_anti")), newGen)
-      FlatManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-        gens = if (any) Seq(newGen) else Seq.empty,
-        tombs = Nil, nextInternal = newGen - 1L))
-      ServingCache.retain(s, dir, servingKeys(FlatManifest.read(s, dir)))
-    } else if (snap.tombs.nonEmpty) {
-      FlatManifest.commit(s, dir,
-        snap.copy(epoch = snap.epoch + 1, tombs = Nil))
-      ServingCache.retain(s, dir, servingKeys(FlatManifest.read(s, dir)))
-    }
-    gcSweep(s, dir)
-    Seq((nBefore, nRemoved, stat.getLong(1), nBefore - nRemoved,
+    (Seq((nBefore, nRemoved, stat.getLong(1), nBefore - nRemoved,
         if (doFold) 1L else 0L))
       .toDF("n_before", "n_removed", "n_gens_before", "n_after",
-        "compacted")
+        "compacted"),
+      if (doFold) Set(Flat) else Set.empty)
   }
-
-  /** Standalone GC sweep (the inline one runs after [[compact]]). */
-  def vacuum(s: SparkSession, dir: String): DataFrame =
-    FlatManifest.report(s, gcSweep(s, dir))
-
-  /** [[FlatManifest.gc]] over the data roots: reclaims `gen=`
-    * directories no retained manifest references, and `.gen-tmp-`
-    * directories whose generation has committed (`tmp_gen_dirs`). Only
-    * the TOP level of a root is generation-keyed, and that is the level
-    * GC removes.
-    */
-  private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
-    FlatManifest.gc(s, dir) { (f, snaps) =>
-      val liveGens = snaps.flatMap(_.gens).toSet
-      var orphanGens = 0L
-      var tmpGens = 0L
-      roots.map(r => new Path(dir, r.name)).filter(f.exists).foreach { rp =>
-        f.listStatus(rp).filter(_.isDirectory).map(_.getPath).foreach { gd =>
-          val n = gd.getName
-          if (n.startsWith("gen=") &&
-              !liveGens.contains(n.stripPrefix("gen=").toLong)) {
-            require(f.delete(gd, true), s"gc failed to delete $gd")
-            orphanGens += 1
-          } else if (n.startsWith(".gen-tmp-")) {
-            // a tmp dir survives only a crash between write and rename;
-            // it is garbage once its generation is committed anywhere
-            // (the committing replay wrote and renamed its OWN tmp)
-            val g = n.stripPrefix(".gen-tmp-").toLong
-            if (liveGens.contains(g) || snaps.exists(_.committedIngest(g))) {
-              require(f.delete(gd, true), s"gc failed to delete $gd")
-              tmpGens += 1
-            }
-          }
-        }
-      }
-      Map("orphan_gen_dirs" -> orphanGens, "tmp_gen_dirs" -> tmpGens)
-    }
 
   /** Per-generation live occupancy of the committed snapshot: (gen
     * [internal generations read as 0], n_codes) over the counted root,
@@ -286,60 +566,11 @@ private[graft] abstract class GenStore {
   }
 
   /** Checkpoint a fold's live `rows`; `write` them unless empty. */
-  protected def writeLive(rows: DataFrame)(write: DataFrame => Unit)
-      : Boolean = {
+  protected def writeLive(rows: DataFrame)(write: DataFrame => Set[Long])
+      : Set[Long] = {
     val pinned = rows.localCheckpoint(true)
-    val any = !pinned.isEmpty
-    if (any) write(pinned)
-    any
+    if (pinned.isEmpty) Set.empty else write(pinned)
   }
-
-  // ---------- serving cache ----------
-
-  /** Store-level entries a cached serve keeps beside its generations. */
-  protected def metaKeys: Set[String] = Set.empty
-
-  /** Every [[ServingCache]] key the cached serve of `snap` uses. */
-  private def servingKeys(snap: Snap): Set[String] =
-    snap.gens.map(g => s"gen=$g").toSet ++
-      snap.tombs.map(ServingCache.delKey) ++ metaKeys
-
-  /** The live serving rows of `snap` from the [[ServingCache]]: each
-    * generation's rows `pinGen(g)` pinned once, unioned (`empty` when
-    * none is live), with the snapshot's tombstone ids masked out.
-    */
-  protected def servingLive(s: SparkSession, dir: String, snap: Snap,
-      empty: => DataFrame)(pinGen: Long => DataFrame): DataFrame = {
-    ServingCache.retain(s, dir, servingKeys(snap))
-    val gens = snap.gens.map(g =>
-      ServingCache.relation(s, dir, s"gen=$g")(pinGen(g)))
-    ServingCache.mask(gens.reduceOption(_ unionByName _).getOrElse(empty),
-      rowKey, ServingCache.tombstones(s, dir, tombKey, snap.tombs))
-  }
-}
-
-private[graft] object GenStore {
-
-  /** A generation-keyed data root `<dir>/<name>/gen=N/<inner>=…/`: its
-    * data columns and inner partition columns. Every flat-store column
-    * is a long except the vectors (`qv`, `vb`: array<long>) and tokens
-    * (`tok`: string), which is all [[empty]] needs to type a relation
-    * for a snapshot with no generations.
-    */
-  case class Root(name: String, data: Seq[String], inner: Seq[String] = Nil) {
-    def cols: Seq[String] = data ++ inner
-
-    def empty(s: SparkSession): DataFrame =
-      s.range(0).select((data ++ ("gen" +: inner)).map {
-        case c @ ("qv" | "vb") => array(col("id")).as(c)
-        case "tok" => col("id").cast("string").as("tok")
-        case c => col("id").as(c)
-      }: _*)
-  }
-
-  /** The state before a build's first commit. */
-  val Fresh = Snap(epoch = 0L, gens = Nil, tombs = Nil, ingested = Set.empty,
-    ingestLow = 0L, nextInternal = -1L)
 
 }
 
@@ -353,7 +584,7 @@ private[graft] object GenStore {
   * side.
   */
 private[graft] abstract class BinaryGenStore(protected val codes: GenStore.Root,
-    extra: Seq[String]) extends GenStore {
+    extra: Seq[String]) extends FlatStore {
   import GenStore._
 
   /** Refine-side fan-out: vectors partition into this many id buckets. */
@@ -364,7 +595,8 @@ private[graft] abstract class BinaryGenStore(protected val codes: GenStore.Root,
   protected val roots = Seq(codes, vecRoot)
   protected val tombKey = "vec_id"
 
-  override protected def ingestRows(batch: DataFrame): DataFrame =
+  override protected def ingestRows(dir: String, snap: Snap,
+      batch: DataFrame): DataFrame =
     batch.select(vecRoot.data.map(col): _*)
 
   /** Pack and commit `newVecs` as caller generation `gen` (> 0),
@@ -380,7 +612,8 @@ private[graft] abstract class BinaryGenStore(protected val codes: GenStore.Root,
     live(s, dir, FlatManifest.read(s, dir))
 
   /** One file per bucket directory (the q156 small-files lesson). */
-  protected def writeVectors(dir: String, rows: DataFrame, gen: Long): Unit =
+  protected def writeVectors(dir: String, rows: DataFrame,
+      gen: Long): Set[Long] =
     writeRoot(vecRoot, dir, rows.select(vecRoot.data.map(col) :+
         pmod(col("vec_id"), lit(Buckets)).as("bucket"): _*)
       .repartition(col("bucket")), gen)

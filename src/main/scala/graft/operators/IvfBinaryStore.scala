@@ -1,10 +1,7 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, GraftInternal, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import graft.operators.FlatManifest.Snap
 import graft.operators.GenStore.Root
 
@@ -20,7 +17,8 @@ import graft.operators.GenStore.Root
   *     store's lifetime — ingests assign against it, so cell
   *     membership is a pure function of the vector and the build
   *     (re-clustering is a rebuild, the release-cadence pattern; the
-  *     routed mutable-retrain path is [[IvfIndex.retrain]]).
+  *     routed mutable-retrain paths are [[IvfIndex.splitCells]] and
+  *     [[IvfIndex.retrainPq]]).
   *   - `codes/gen=N/cid=C/` (vec_id, w0, w1): 16 logical bytes per
   *     vector, PARTITIONED BY CELL — a serve pushes its probed cid
   *     set as a partition filter and reads only those directories
@@ -50,7 +48,8 @@ import graft.operators.GenStore.Root
   */
 object IvfBinaryStore extends BinaryGenStore(
     Root("codes", Seq("vec_id", "w0", "w1"), Seq("cid")), Nil) {
-  override protected val fixedDirs = Set("centroids")
+  override protected def ownsDir(name: String): Boolean =
+    name == "centroids"
 
   /** The stored router (cid, cq). k rows — read once per serve batch
     * and broadcast.
@@ -60,7 +59,7 @@ object IvfBinaryStore extends BinaryGenStore(
 
   /** An ingest assigns against the STORED centroids. */
   protected def writeGen(dir: String, snap: Snap, batch: DataFrame,
-      gen: Long): Unit =
+      gen: Long): Set[Long] =
     writeAssigned(dir, assign(batch, centroids(batch.sparkSession, dir)),
       gen)
 
@@ -72,12 +71,11 @@ object IvfBinaryStore extends BinaryGenStore(
     * rows (vec_id, qv, cid).
     */
   private def writeAssigned(dir: String, assigned: DataFrame,
-      gen: Long): Unit = {
+      gen: Long): Set[Long] =
     writeRoot(codes, dir, assigned.select(col("vec_id"), col("cid"),
       expr(VectorOps.SignW0Sql).as("w0"),
-      expr(VectorOps.SignW1Sql).as("w1")), gen)
-    writeVectors(dir, assigned, gen)
-  }
+      expr(VectorOps.SignW1Sql).as("w1")), gen) ++
+      writeVectors(dir, assigned, gen)
 
   /** Compaction rewrites the live vectors under their STORED cell —
     * assignment is NOT recomputed (the router is fixed, but recomputing
@@ -85,9 +83,10 @@ object IvfBinaryStore extends BinaryGenStore(
     * identical source). Centroids are untouched: compaction changes
     * bytes, never routing.
     */
-  protected def fold(dir: String, snap: Snap, counted: DataFrame,
-      masked: DataFrame => DataFrame, gen: Long): Boolean =
-    writeLive(masked(rel(counted.sparkSession, dir, snap, vecRoot))
+  protected def fold(s: SparkSession, dir: String, snap: Snap,
+      counted: DataFrame, cells: Set[Long], masked: DataFrame => DataFrame,
+      gen: Long): Set[Long] =
+    writeLive(masked(rel(s, dir, snap, vecRoot))
       .select(col("vec_id"), col("qv"))
       .join(counted.select(col("vec_id"), col("cid")), "vec_id")
       .select(col("vec_id"), col("qv"), col("cid")))(
@@ -99,7 +98,7 @@ object IvfBinaryStore extends BinaryGenStore(
   def build(emb: DataFrame, dir: String): Unit = {
     val s = emb.sparkSession
     import s.implicits._
-    create(s, dir) {
+    create(s, dir)(built {
       val seeds = emb.filter($"vec_id" < 16)
         .select($"vec_id".as("cid"), $"qv".as("cq"))
       val (learned, _) = VectorOps.lloydTrain(emb, seeds,
@@ -107,7 +106,7 @@ object IvfBinaryStore extends BinaryGenStore(
       learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
         .parquet(s"$dir/centroids")
       writeAssigned(dir, assign(emb, learned), 0L)
-    }
+    })
   }
 
   // ---------- serving ----------
@@ -160,57 +159,6 @@ object IvfBinaryStore extends BinaryGenStore(
       .localCheckpoint(true)
     topK(VectorOps.refineRank(shortlist,
       refineFetch(s, dir, snap, shortlist), queries), k)
-  }
-
-  override protected val metaKeys = Set("centroids")
-
-  /** Generation `g`'s serving rows (vec_id, qv, w0, w1, cid): its
-    * vectors with their codes ([[servingVectors]]) and each one's STORED
-    * cell, read from the generation's cell-partitioned code directories.
-    * The two sides meet by vec_id in an RDD join, which stays lazy
-    * (a planned join would run its exchanges when pinned), so the pin
-    * still starts no job: the first serve that scans it runs the join.
-    */
-  private def servingCells(s: SparkSession, dir: String, g: Long): DataFrame = {
-    val vecs = servingVectors(s, dir, g)
-    val gd = new Path(s"$dir/${codes.name}", s"gen=$g")
-    val cellDirs = FlatManifest.fs(s, dir).listStatus(gd)
-      .filter(_.isDirectory).map(_.getPath.toString).toSeq
-    val cells = ServingCache.readDirs(s, "vec_id BIGINT", cellDirs,
-        Some(gd.toString))
-      .select(col("vec_id"), col("cid").cast("long"))
-      .queryExecution.toRdd.map(r => r.getLong(0) -> r.getLong(1))
-    val joined = vecs.queryExecution.toRdd.map(r => r.getLong(0) -> r.copy())
-      .join(cells, s.sparkContext.defaultParallelism)
-      .map { case (_, (v, cid)) => InternalRow(v.getLong(0), v.getArray(1),
-        v.getLong(2), v.getLong(3), cid) }
-    GraftInternal.rowsDataFrame(s, joined,
-      vecs.schema.add("cid", LongType, nullable = false))
-  }
-
-  /** Cached ranked top-k serve — the cached [[BinaryStore.serve]] on the
-    * composed layout, from the per-generation [[ServingCache]]: the
-    * router is held on the driver (fixed for the store's lifetime), each
-    * live generation's vectors are pinned once with their code and their
-    * stored cell ([[servingCells]]). The batch routes on the driver to
-    * its `nprobe` nearest cells, so each pinned row meets only the
-    * queries probing its cell — the probed-cell cut in memory. Shortlist
-    * and refine run as one job ([[PinnedTopK.codes]]); rows and order
-    * equal [[serve]] (spec-pinned).
-    */
-  def serveCached(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int, nprobe: Int = 2, width: Int = 20): DataFrame = {
-    val cents = ServingCache.value(s, dir, "centroids")(
-      VectorOps.centroidRows(s, s"$dir/centroids"))
-    val live = servingLive(s, dir, FlatManifest.read(s, dir),
-      noVectors(s).withColumn("cid", col("vec_id")))(servingCells(s, dir, _))
-    val probes = math.min(nprobe, VectorOps.IvfBinMaxProbe)
-    val qs = codeQueries(queries)
-    val byCell = qs.indices.flatMap(j => VectorOps.nearestCellIds(
-        qs(j).qv.toSeq, cents, probes).map(_ -> j))
-      .groupBy(_._1).map { case (c, js) => c -> js.map(_._2).toArray }
-    PinnedTopK.codes(s, live, qs, k, width, Some("cid"),
-      c => byCell.getOrElse(c, Array.empty[Int]))
   }
 
   /** Hamming shortlist over probed-cell candidates: join codes to the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
+import graft.operators.GenStore.{Root, genLeaves}
 
 /** Persisted IVF index — the missing half of q147's index-BUILD path:
   * q147 relearns its centroids on every query run; a real vector-serving
@@ -68,15 +69,19 @@ import org.apache.spark.sql.expressions.Window
   * GC; the stale-epoch guard, retention window, crash argument and the
   * ingest watermark that makes a replayed [[addBatch]] a no-op — is the
   * shared one in [[ManifestProtocol]]; [[IndexManifest]] supplies only
-  * the index's body keys (`centroids`, `pqcodebook`, `cell=`), and
-  * [[gcSweep]] / [[verifySnapshotData]] its layout's data sweep and
-  * existence check. Index data is never renamed: a mutation writes
-  * fresh partitions, and a replay of an UNcommitted attempt re-writes
-  * the same (cid, gen) partitions via dynamic partition overwrite,
-  * replacing any partial leftovers instead of appending to them.
-  * Readers filter [[postings]] to the manifest's valid (cid, gen) set,
-  * pushed as a partition-pruning predicate, so uncommitted files are
-  * invisible.
+  * the index's body keys (`centroids`, `pqcodebook`, `cell=`). The
+  * generation lifecycle on it — the publish, exactly-once ingest,
+  * delete and the tombstone mask, compaction, GC ([[vacuum]]) and the
+  * time-travel existence check — is [[GenStore]]'s, with the `postings`
+  * root CELL-MAJOR (`gen=` below `cid[, label]`): a posting write lands
+  * in one tmp directory and each of its (cid[, label]) leaves is renamed
+  * into that cell's `gen=` directory before the commit; a replay of an
+  * UNcommitted attempt rewrites the tmp directory and replaces the
+  * renamed leftovers instead of appending to them. The index adds its
+  * versioned centroid and codebook directories to the existence check
+  * and the sweep. Readers filter [[postings]] to the manifest's valid
+  * (cid, gen) set, pushed as a partition-pruning predicate, so
+  * uncommitted files are invisible.
   *
   * Operations:
   *   - [[build]]: train to convergence, write both relations, commit
@@ -100,12 +105,11 @@ import org.apache.spark.sql.expressions.Window
   * keeps cell sizes bounded so neither ever degrades to a full scan.
   * The manifest is O(nlists × live generations) text — driver-trivial.
   */
-object IvfIndex {
+object IvfIndex extends GenStore {
 
   type Q = (SparkSession, String) => DataFrame
 
   private def postDir(dir: String) = s"$dir/postings"
-  private def tombDir(dir: String) = s"$dir/tombstones"
   private def centDir(dir: String, ver: Long) = s"$dir/centroids_v$ver"
 
   // ---------- posting layouts ----------
@@ -116,6 +120,11 @@ object IvfIndex {
     val keys: Seq[String] = "cid" +: carry
     val payload: String = if (pq) "code" else "qv"
     val score: String = if (pq) "adc" else "dist"
+    /** The cell-major posting root: (vec_id, payload) under
+      * `postings/cid=/[label=/]gen=/`.
+      */
+    val root: Root = Root("postings", Seq("vec_id", payload), keys,
+      cellMajor = true)
     /** The entry-point suffix: `addBatch` + suffix ingests this layout. */
     val suffix: String =
       (if (pq) "Pq" else "") + (if (labeled) "Labeled" else "")
@@ -127,34 +136,28 @@ object IvfIndex {
   private val PqPlain = Layout(labeled = false, pq = true)
   private val PqLabeled = Layout(labeled = true, pq = true)
 
-  /** The `gen=` directories under one cell directory, through the
-    * `label=` level when the layout has one. Metadata only.
-    */
-  private def genDirs(f: FileSystem, cell: Path): Seq[Path] =
-    f.listStatus(cell).toSeq.filter(_.isDirectory).map(_.getPath)
-      .flatMap(p => if (p.getName.startsWith("label="))
-        f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
-      else Seq(p))
-      .filter(_.getName.startsWith("gen="))
-
   /** The layout of a committed store: PQ when the snapshot names a
     * codebook version, labeled when the first committed non-empty cell
-    * holds a `label=` level (one [[genDirs]] listing). A store with no
-    * committed postings reads as plain.
+    * holds a `label=` level (one [[GenStore.genLeaves]] listing). A
+    * store with no committed postings reads as plain.
     */
   private def layoutOf(s: SparkSession, dir: String,
       snap: Snapshot): Layout = {
     val f = IndexManifest.fs(s, dir)
     val labeled = snap.cells.collectFirst {
       case (c, gens) if gens.nonEmpty => new Path(postDir(dir), s"cid=$c")
-    }.exists(genDirs(f, _).exists(_.getParent.getName.startsWith("label=")))
+    }.exists(genLeaves(f, _).exists(_.getParent.getName.startsWith("label=")))
     Layout(labeled, snap.pqVer > 0)
   }
 
-  /** The one posting write: `rows` in layout `lay` land as (vec_id,
-    * payload) under `postings/cid=/[label=/]gen=/`, by dynamic partition
-    * overwrite — a re-run REPLACES a crashed attempt's leftovers in its
-    * own directories and touches no other. Labeled writes repartition
+  /** The one posting write: `rows` in layout `lay` are published as
+    * (vec_id, payload) generation `gen` of the cell-major `postings`
+    * root ([[GenStore.writeRoot]]: one tmp-dir write, then one rename
+    * per (cid[, label]) leaf into `postings/cid=/[label=/]gen=/`) — a
+    * re-run REPLACES a crashed attempt's leftovers and touches no other
+    * directory. Returns the cells it published: the cells left with no
+    * row publish nothing, so a caller commits them an EMPTY generation
+    * list, never a generation with no files. Labeled writes repartition
     * by (cid, label) so each directory gets ONE file: ~8k tiny files at
     * 32 tasks × 16 cells × 16 labels made the create storm dominate the
     * labeled build at sf10. Plain writes are NOT repartitioned: 16 cell
@@ -162,14 +165,11 @@ object IvfIndex {
     * (vec_id, qv) shuffle costs more than 512 creates save (q152 sf10
     * 12.0 → 14.3 s with the repartition).
     */
-  private def writePostings(rows: DataFrame, dir: String,
-      lay: Layout): Unit = {
-    val parts = lay.keys :+ "gen"
-    val out = rows.select(("vec_id" +: lay.payload +: parts).map(col): _*)
-    (if (lay.labeled) out.repartition(lay.keys.map(col): _*) else out)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(parts: _*).parquet(postDir(dir))
+  private def writePostings(rows: DataFrame, dir: String, lay: Layout,
+      gen: Long): Set[Long] = {
+    val out = rows.select(lay.root.cols.map(col): _*)
+    writeRoot(lay.root, dir,
+      if (lay.labeled) out.repartition(lay.keys.map(col): _*) else out, gen)
   }
 
   // ---------- control plane: the shared manifest protocol ----------
@@ -186,8 +186,10 @@ object IvfIndex {
       cells: Map[Long, Seq[Long]], ingested: Set[Long], nextInternal: Long,
       tombs: Seq[Long] = Nil, pqVer: Long = 0L, ingestLow: Long = 0L)
       extends ManifestState[Snapshot] {
-    protected def withWatermark(ingested: Set[Long], ingestLow: Long) =
-      copy(ingested = ingested, ingestLow = ingestLow)
+    protected def evolve(epoch: Long, tombs: Seq[Long], ingested: Set[Long],
+        ingestLow: Long, nextInternal: Long, cells: Map[Long, Seq[Long]]) =
+      Snapshot(epoch, centroidsVer, cells, ingested, nextInternal, tombs,
+        pqVer, ingestLow)
   }
 
   /** The index's body keys on the shared protocol: the centroid
@@ -223,83 +225,44 @@ object IvfIndex {
     }
   }
 
+  // ---------- the store on the generation kernel ----------
+
+  private[graft] type S = Snapshot
+  protected def manifest: IndexManifest.type = IndexManifest
+  protected val roots = Seq(RawPlain.root)
+  protected val tombKey = "vec_id"
+
+  override protected def ownsDir(name: String): Boolean =
+    name.startsWith("centroids_v") || name.startsWith("pqcodebook")
+
+  /** The centroid version and, for a PQ store, the codebook version. */
+  override protected def metaDirs(snap: Snapshot): Seq[String] =
+    s"centroids_v${snap.centroidsVer}" +:
+      (if (snap.pqVer > 0) Seq(s"pqcodebook_v${snap.pqVer}") else Nil)
+
+  /** Superseded centroid and codebook versions. */
+  override protected def sweepMeta(f: FileSystem, dir: String,
+      snaps: Seq[Snapshot]): Map[String, Long] = {
+    val live = snaps.flatMap(metaDirs).toSet
+    val stale = f.listStatus(new Path(dir)).map(_.getPath)
+      .filter(p => ownsDir(p.getName) && !live(p.getName))
+    stale.foreach(p =>
+      require(f.delete(p, true), s"vacuum failed to delete $p"))
+    val names = stale.map(_.getName)
+    Map("stale_centroid_versions" ->
+        names.count(_.startsWith("centroids_v")).toLong,
+      "stale_pq_codebooks" -> names.count(_.startsWith("pqcodebook")).toLong)
+  }
+
   private[graft] def readSnapshot(s: SparkSession, dir: String): Snapshot =
     IndexManifest.read(s, dir)
 
-  /** The time-travel read: [[ManifestProtocol.readAt]] with the index's
-    * [[verifySnapshotData]] existence check.
+  /** The time-travel read: [[ManifestProtocol.readAt]] with the
+    * [[GenStore]] existence check.
     */
   private[graft] def readSnapshotAt(s: SparkSession, dir: String,
       epoch: Long): Snapshot =
-    IndexManifest.readAt(s, dir, epoch)(verifySnapshotData(s, dir, _))
-
-  /** Existence check for everything a snapshot references: the centroid
-    * version directory, every committed tombstone set, and every
-    * (cid, gen) posting directory (one [[genDirs]] listing per cell,
-    * bounded by nlists). Writers never commit a (cid, gen) pair
-    * without files (emptied cells commit an empty generation LIST), so a
-    * missing directory always means reclaimed data, never a legitimately
-    * empty partition — the check can be strict.
-    */
-  private def verifySnapshotData(s: SparkSession, dir: String,
-      snap: Snapshot): Unit = {
-    val f = IndexManifest.fs(s, dir)
-    def gone(what: String): Nothing = throw new IllegalStateException(
-      s"index $dir epoch ${snap.epoch}: $what no longer exists — its " +
-        "data was reclaimed by GC under an earlier (narrower) " +
-        "retention window; the historical epoch is unserveable")
-    if (!f.exists(new Path(centDir(dir, snap.centroidsVer))))
-      gone(s"centroid version ${snap.centroidsVer}")
-    if (snap.pqVer > 0 && !f.exists(new Path(pqCbDir(dir, snap.pqVer))))
-      gone(s"PQ codebook version ${snap.pqVer}")
-    snap.tombs.foreach { t =>
-      if (!f.exists(new Path(tombDir(dir), s"del=$t")))
-        gone(s"tombstone set $t")
-    }
-    snap.cells.foreach { case (cid, gens) =>
-      if (gens.nonEmpty) {
-        val cd = new Path(postDir(dir), s"cid=$cid")
-        if (!f.exists(cd)) gone(s"cell directory cid=$cid")
-        val found = genDirs(f, cd)
-          .map(_.getName.stripPrefix("gen=").toLong).toSet
-        gens.filterNot(found.contains)
-          .foreach(g => gone(s"posting generation cid=$cid/gen=$g"))
-      }
-    }
-  }
-
-  /** The manifest's valid (cid, gen) set as a partition-pruning
-    * predicate: a disjunction over cells (bounded by nlists), each
-    * restricting `gen` to that cell's committed generations. References
-    * only partition columns, so Catalyst turns it into directory
-    * pruning — uncommitted or superseded generation directories are
-    * never even listed into the scan.
-    */
-  private def validPredicate(snap: Snapshot): Column =
-    snap.cells.toSeq.sortBy(_._1).map { case (cid, gens) =>
-      if (gens.isEmpty) lit(false)
-      else col("cid") === cid && col("gen").isin(gens: _*)
-    }.foldLeft(lit(false))(_ || _)
-
-  /** The cid= directories physically present under the posting root —
-    * builders consult this before committing so a cell the assignment
-    * left empty commits an EMPTY generation list instead of a
-    * (cid, gen) pair with no files (the invariant
-    * [[verifySnapshotData]]'s strict existence check relies on).
-    */
-  private def presentCids(s: SparkSession, dir: String): Set[Long] = {
-    val f = IndexManifest.fs(s, dir)
-    val root = new Path(postDir(dir))
-    if (!f.exists(root)) Set.empty
-    else f.listStatus(root).filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("cid=")).map(_.stripPrefix("cid=").toLong).toSet
-  }
-
-  /** [[ManifestProtocol.prepareBuildDir]] over the index's artifacts. */
-  private def prepareBuildDir(s: SparkSession, dir: String): Unit =
-    IndexManifest.prepareBuildDir(s, dir)(n =>
-      n.startsWith("centroids_v") || n.startsWith("pqcodebook") ||
-        n == "postings")
+    snapAt(s, dir, Some(epoch))
 
   private def centroidsOf(s: SparkSession, dir: String,
       snap: Snapshot): DataFrame =
@@ -310,10 +273,11 @@ object IvfIndex {
 
   private def postingsOf(s: SparkSession, dir: String,
       snap: Snapshot): DataFrame =
-    s.read.parquet(postDir(dir))
-      .filter(validPredicate(snap))
-      .withColumn("gen",
-        when(col("gen") <= 0, 0L).otherwise(col("gen").cast("long")))
+    logical(rel(s, dir, snap, roots.head))
+
+  private def logical(post: DataFrame): DataFrame =
+    post.withColumn("gen",
+      when(col("gen") <= 0, 0L).otherwise(col("gen").cast("long")))
 
   /** The committed posting snapshot. `gen` is reported as LOGICAL
     * lineage: internal (<= 0) generations — the build and anything
@@ -329,58 +293,15 @@ object IvfIndex {
     * ranks and a [[mergeFrom]] moves.
     */
   def liveContents(s: SparkSession, dir: String): DataFrame =
-    masked(s, dir, readSnapshot(s, dir))
+    live(s, dir, readSnapshot(s, dir))
       .select(col("vec_id"), col("cid").cast("long").as("cid"))
 
-  /** Tombstone deletes: record the ids under `tombstones/del=<epoch>/`
-    * without touching a posting byte — the LSM discipline every mutable
-    * index uses at scale — and COMMIT the set in the manifest, so the
-    * mask is snapshot-scoped: a [[serveAt]] read of an earlier epoch
-    * never sees a later delete. Serving masks tombstones logically
-    * ([[masked]]); [[compact]] later removes them physically. Deletes
-    * cost O(batch) regardless of corpus size, and the tombstone set
-    * stays bounded by the delete volume between compactions (which is
-    * what makes the serve-side broadcast anti-join safe). A crashed
-    * delete attempt's files are invisible (not in any manifest) and a
-    * re-run replaces them via dynamic partition overwrite before
-    * committing its own epoch; masking is idempotent, so a replayed
-    * delete of the same ids only costs a redundant set.
-    */
-  def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    // An empty batch must be a full no-op: writing it would create a
-    // del= directory holding only _SUCCESS, and committing its set id
-    // would make every later tombstone read fail parquet schema
-    // inference on the file-less directory.
-    val batch = ids.select(col("vec_id").cast("long").as("vec_id"))
-      .localCheckpoint(true)
-    if (batch.isEmpty) return
-    val snap = readSnapshot(s, dir)
-    val delId = snap.epoch + 1
-    batch.withColumn("del", lit(delId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("del").parquet(tombDir(dir))
-    IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-      tombs = snap.tombs :+ delId))
-  }
-
-  private def tombstonesOf(s: SparkSession, dir: String,
-      snap: Snapshot): Option[DataFrame] =
-    if (snap.tombs.isEmpty) None
-    else Some(s.read.parquet(tombDir(dir))
-      .filter(col("del").isin(snap.tombs: _*)).select(col("vec_id")))
-
   /** Postings with the snapshot's tombstone mask applied — the relation
-    * every serve ranks against. Broadcast anti-join: see [[delete]] for
-    * the bound.
+    * every serve ranks against.
     */
-  private def masked(s: SparkSession, dir: String,
-      snap: Snapshot): DataFrame = {
-    val post = postingsOf(s, dir, snap)
-    tombstonesOf(s, dir, snap).fold(post)(t =>
-      post.join(broadcast(t.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti"))
-  }
+  override protected def live(s: SparkSession, dir: String,
+      snap: Snapshot): DataFrame =
+    mask(s, dir, snap, postingsOf(s, dir, snap))
 
   /** Train coarse centroids to convergence on `emb` (vec_id, qv) and
     * commit centroids + cell/generation-partitioned postings (gen 0)
@@ -395,50 +316,49 @@ object IvfIndex {
   /** The one build body (see the header's Layouts): seed, train the
     * coarse centroids to convergence, write them as version 1, for PQ
     * train and write codebook version 1, write the gen-0 postings and
-    * commit epoch 1 over the cells the write left on disk.
+    * commit epoch 1 over the cells the write published.
     */
   private def buildAs(emb: DataFrame, dir: String, lay: Layout,
       seedSmallest: Boolean): Unit = {
     val s = emb.sparkSession
     import s.implicits._
-    prepareBuildDir(s, dir)
-    // Seed rule: the fixture-contiguous id space seeds on `vec_id < 16`.
-    // A shard or a filtered corpus (q172's budget-admitted release) may
-    // hold few or no ids below 16, so `seedSmallest` seeds on the 16
-    // smallest ids present — a 16-long driver list, same cost class as
-    // the cid collect below — and the PQ codebook reuses those ids, so
-    // both quantizers share one rule.
-    val seedF: Column =
-      if (seedSmallest) {
-        val sids = emb.select($"vec_id").orderBy($"vec_id").limit(16)
-          .as[Long].collect()
-        $"vec_id".isInCollection(sids)
-      } else $"vec_id" < 16
-    val seeds = emb.filter(seedF)
-      .select($"vec_id".as("cid"), $"qv".as("cq"))
-    val (learned, _) = VectorOps.lloydTrain(emb.select($"vec_id", $"qv"),
-      seeds, VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
-    learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
-      .parquet(centDir(dir, 1L))
-    // a label rides the argmin aggregate as a min_by carry — no
-    // join-back exchange
-    val assigned = VectorOps.argminPacked(emb, learned, carryQv = true,
-      carry = lay.carry)
-    val rows = if (!lay.pq) assigned else {
-      // residuals feed BOTH the codebook training and the encode — one
-      // assignment pass, one checkpoint
-      val resid = residualsOf(assigned, learned, lay.carry)
-      val cb = trainPqCodebook(resid.select($"vec_id", $"rv"), seedF)
-      writeCb(s, dir, 1L, cb)
-      resid.withColumn("code", codeCol(cbLiteral(cb), $"rv"))
+    create(s, dir) {
+      // Seed rule: the fixture-contiguous id space seeds on `vec_id < 16`.
+      // A shard or a filtered corpus (q172's budget-admitted release) may
+      // hold few or no ids below 16, so `seedSmallest` seeds on the 16
+      // smallest ids present — a 16-long driver list, same cost class as
+      // the cid collect below — and the PQ codebook reuses those ids, so
+      // both quantizers share one rule.
+      val seedF: Column =
+        if (seedSmallest) {
+          val sids = emb.select($"vec_id").orderBy($"vec_id").limit(16)
+            .as[Long].collect()
+          $"vec_id".isInCollection(sids)
+        } else $"vec_id" < 16
+      val seeds = emb.filter(seedF)
+        .select($"vec_id".as("cid"), $"qv".as("cq"))
+      val (learned, _) = VectorOps.lloydTrain(emb.select($"vec_id", $"qv"),
+        seeds, VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
+      learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
+        .parquet(centDir(dir, 1L))
+      // a label rides the argmin aggregate as a min_by carry — no
+      // join-back exchange
+      val assigned = VectorOps.argminPacked(emb, learned, carryQv = true,
+        carry = lay.carry)
+      val rows = if (!lay.pq) assigned else {
+        // residuals feed BOTH the codebook training and the encode — one
+        // assignment pass, one checkpoint
+        val resid = residualsOf(assigned, learned, lay.carry)
+        val cb = trainPqCodebook(resid.select($"vec_id", $"rv"), seedF)
+        writeCb(s, dir, 1L, cb)
+        resid.withColumn("code", codeCol(cbLiteral(cb), $"rv"))
+      }
+      val present = writePostings(rows, dir, lay, 0L)
+      val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
+      Snapshot(1L, 1L, cids.map(c => c -> (if (present(c)) Seq(0L)
+          else Seq.empty[Long])).toMap, Set.empty, -1L,
+        pqVer = if (lay.pq) 1L else 0L)
     }
-    writePostings(rows.withColumn("gen", lit(0L)), dir, lay)
-    val cids = learned.select($"cid".cast("long")).as[Long].collect().toSeq
-    val present = presentCids(s, dir)
-    IndexManifest.commit(s, dir, Snapshot(1L, 1L,
-      cids.map(c => c -> (if (present.contains(c)) Seq(0L)
-        else Seq.empty[Long])).toMap, Set.empty, -1L,
-      pqVer = if (lay.pq) 1L else 0L))
   }
 
   /** Top-k exact-re-rank serve from the stored index: probe the
@@ -495,7 +415,7 @@ object IvfIndex {
       lay: Layout, queries: DataFrame, route: Column, k: Int): DataFrame =
     serveTail(s, lay, centroidsOf(s, dir, snap),
       if (lay.pq) Some(readCb(s, dir, snap.pqVer)) else None,
-      masked(s, dir, snap), queries, route, k)
+      live(s, dir, snap), queries, route, k)
 
   /** The one serve tail (see the header's Layouts): the cells `route`
     * selects from [[scoredCells]], then one bounded per-query top-k over
@@ -552,29 +472,6 @@ object IvfIndex {
 
   // ---------- serving cache ----------
 
-  /** The committed posting generations with the cells that reference
-    * them, in generation order.
-    */
-  private def genCells(snap: Snapshot): Seq[(Long, Seq[Long])] =
-    snap.cells.toSeq.flatMap { case (c, gs) => gs.map(_ -> c) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (g, cs) => g -> cs.map(_._2).sorted }
-
-  private def genKey(g: Long, cells: Seq[Long]) =
-    s"gen=$g cid=${cells.mkString(",")}"
-
-  /** Every [[ServingCache]] key the cached serve of `snap` uses: one per
-    * posting generation TOGETHER with the cells still referencing it (a
-    * compaction or split that folds some of its cells changes the key,
-    * so a pin never holds a superseded cell), one per tombstone set, and
-    * the centroid and codebook versions.
-    */
-  private def servingKeys(snap: Snapshot): Set[String] =
-    genCells(snap).map { case (g, cs) => genKey(g, cs) }.toSet ++
-      snap.tombs.map(ServingCache.delKey) +
-      s"centroids_v${snap.centroidsVer}" +
-      s"pqcodebook_v${snap.pqVer}"
-
   /** Posting generation `g` of `cells` as (vec_id, payload, cid): its
     * (cid, gen) directories read with their schema.
     */
@@ -623,17 +520,11 @@ object IvfIndex {
       queries: DataFrame, probes: Int, k: Int): DataFrame = {
     import s.implicits._
     val snap = readSnapshot(s, dir)
-    ServingCache.retain(s, dir, servingKeys(snap))
+    val post = servingLive(s, dir, snap,
+      lay.root.empty(s).select("vec_id", lay.payload, "cid"))(
+      servingPostings(s, dir, _, _, lay))
     val cents = ServingCache.value(s, dir, s"centroids_v${snap.centroidsVer}")(
       VectorOps.centroidRows(s, centDir(dir, snap.centroidsVer)))
-    val pinned = genCells(snap).map { case (g, cells) =>
-      ServingCache.relation(s, dir, genKey(g, cells))(
-        servingPostings(s, dir, g, cells, lay)) }
-    val none = s.range(0).select($"id".as("vec_id"),
-      (if (lay.pq) $"id" else array($"id")).as(lay.payload), $"id".as("cid"))
-    val post = ServingCache.mask(pinned.reduceOption(_ unionByName _)
-      .getOrElse(none), "vec_id",
-      ServingCache.tombstones(s, dir, "vec_id", snap.tombs))
     val batch = queries.select($"vec_id", $"qv").as[(Long, Array[Long])]
       .collect()
     val probed = batch.map { case (_, v) =>
@@ -643,23 +534,21 @@ object IvfIndex {
       .groupBy(_._1).map { case (c, js) => c -> js.map(_._2).toArray }
     val probing = (c: Long) => byCell.getOrElse(c, Array.empty[(Int, Int)])
     val ids = batch.map(_._1)
-    val served =
-      if (lay.pq) {
-        val cb = ServingCache.value(s, dir, s"pqcodebook_v${snap.pqVer}")(
-          readCb(s, dir, snap.pqVer))
-        val cq = cents.toMap
-        val luts = batch.indices.map(j => probed(j).map(c =>
-          pqLut(batch(j)._2.toSeq, cq(c), cb))).toArray
-        PinnedTopK.cells(s, post, ids, lay.payload, k, lay.score, probing) {
-          (r, j, slot) => graft.functions.VectorMath.pqAdcFromArrayData(
-            luts(j)(slot), r.getLong(1)) }
-          .select($"query_id", $"rank", $"neighbor", $"adc")
-      } else {
-        val vs = batch.map(_._2)
-        PinnedTopK.cells(s, post, ids, lay.payload, k, lay.score, probing) {
-          (r, j, _) => PinnedTopK.dist(r, 1, vs(j)) }
-      }
-    served
+    if (lay.pq) {
+      val cb = ServingCache.value(s, dir, s"pqcodebook_v${snap.pqVer}")(
+        readCb(s, dir, snap.pqVer))
+      val cq = cents.toMap
+      val luts = batch.indices.map(j => probed(j).map(c =>
+        pqLut(batch(j)._2.toSeq, cq(c), cb))).toArray
+      PinnedTopK.cells(s, post, ids, lay.payload, k, lay.score, probing) {
+        (r, j, slot) => graft.functions.VectorMath.pqAdcFromArrayData(
+          luts(j)(slot), r.getLong(1)) }
+        .select($"query_id", $"rank", $"neighbor", $"adc")
+    } else {
+      val vs = batch.map(_._2)
+      PinnedTopK.cells(s, post, ids, lay.payload, k, lay.score, probing) {
+        (r, j, _) => PinnedTopK.dist(r, 1, vs(j)) }
+    }
   }
 
   /** One query's lookup table against probed cell centroid `cq` —
@@ -716,16 +605,12 @@ object IvfIndex {
       nearest(probes), k)
 
   /** Step 1 of an ingest, in the store's own layout: assign the batch
-    * against the stored centroids, PQ-encode it in the same pass, and
-    * write its postings as generation `gen`. Returns the touched cell
-    * ids (from the materialized assignment, never from a listing, which
-    * could pick up a crashed attempt's orphans). private[graft] so the
-    * crash-recovery spec can stop between data write and commit.
+    * against the stored centroids and PQ-encode it in the same pass.
     */
-  private[graft] def ingestFiles(s: SparkSession, dir: String,
-      newVecs: DataFrame, gen: Long): Seq[Long] = {
+  override protected def ingestRows(dir: String, snap: Snapshot,
+      newVecs: DataFrame): DataFrame = {
+    val s = newVecs.sparkSession
     import s.implicits._
-    val snap = readSnapshot(s, dir)
     val lay = layoutOf(s, dir, snap)
     val cents = centroidsOf(s, dir, snap)
     val assigned = VectorOps.argminPacked(
@@ -737,13 +622,25 @@ object IvfIndex {
       assigned.join(broadcast(cents.select($"cid", $"cq")), Seq("cid"))
         .withColumn("code", codeCol(cbc, residCol($"qv", $"cq")))
     }
-    val batch = rows.select(("vec_id" +: lay.payload +: lay.keys).map(col) :+
-        lit(gen).as("gen"): _*)
-      .localCheckpoint(true) // batch-bounded; feeds both collect + write
-    val touched = batch.select($"cid".cast("long")).distinct()
-      .as[Long].collect().toSeq
-    writePostings(batch, dir, lay)
-    touched
+    rows.select(lay.root.cols.map(col): _*)
+  }
+
+  /** Step 2: publish the assigned rows as generation `gen`. */
+  protected def writeGen(dir: String, snap: Snapshot, rows: DataFrame,
+      gen: Long): Set[Long] =
+    writePostings(rows, dir, layoutOf(rows.sparkSession, dir, snap), gen)
+
+  /** Both steps of an ingest without its commit: the batch's postings
+    * published as generation `gen` and never committed. Returns the
+    * cells the publish renamed — read from the listing of this attempt's
+    * own tmp directory, never from the posting root, which could hold a
+    * crashed attempt's orphans. private[graft] so the crash-recovery
+    * spec can stop between data write and commit.
+    */
+  private[graft] def ingestFiles(s: SparkSession, dir: String,
+      newVecs: DataFrame, gen: Long): Seq[Long] = {
+    val snap = readSnapshot(s, dir)
+    writeGen(dir, snap, ingestRows(dir, snap, newVecs), gen).toSeq.sorted
   }
 
   /** Incremental ingest: assign `newVecs` (vec_id, qv) to the stored
@@ -761,32 +658,23 @@ object IvfIndex {
     */
   def addBatch(s: SparkSession, dir: String, newVecs: DataFrame,
       gen: Long = 1L): DataFrame =
-    ingest(s, dir, newVecs, gen, RawPlain)
+    ingestAs(s, dir, newVecs, gen, RawPlain)
 
   /** The one exactly-once ingest body (see the header's Layouts): refuse
-    * a store of another layout, write the batch ([[ingestFiles]]) unless
-    * the manifest already committed `gen`, commit it, and report
+    * a store of another layout, ingest the batch ([[GenStore]]: assign
+    * and encode it, publish it and commit it over the cells the publish
+    * renamed, unless the manifest already committed `gen`), and report
     * occupancy ([[splitReport]]).
     */
-  private def ingest(s: SparkSession, dir: String, newVecs: DataFrame,
+  private def ingestAs(s: SparkSession, dir: String, newVecs: DataFrame,
       gen: Long, lay: Layout): DataFrame = {
     val who = s"addBatch${lay.suffix}"
-    require(gen > 0L,
-      s"ingest generations are caller-named positives (got $gen); " +
-        "internal generations are negative by construction")
     require(!lay.labeled || newVecs.columns.contains("label"),
       s"$who: the batch must carry a label column")
-    val snap = readSnapshot(s, dir)
-    val got = layoutOf(s, dir, snap)
+    val got = layoutOf(s, dir, readSnapshot(s, dir))
     require(got == lay, s"$who: $dir is a $got store, not $lay — use " +
       s"addBatch${got.suffix}")
-    if (!snap.committedIngest(gen)) {
-      val touched = ingestFiles(s, dir, newVecs, gen)
-      val cells = snap.cells ++ touched.map(c =>
-        c -> (snap.cells.getOrElse(c, Seq.empty) :+ gen).distinct)
-      IndexManifest.commit(s, dir, snap.withIngested(gen)
-        .copy(epoch = snap.epoch + 1, cells = cells))
-    }
+    ingest(s, dir, newVecs, gen)
     splitReport(s, dir)
   }
 
@@ -802,7 +690,7 @@ object IvfIndex {
     */
   def addBatchLabeled(s: SparkSession, dir: String, newVecs: DataFrame,
       gen: Long = 1L): DataFrame =
-    ingest(s, dir, newVecs, gen, RawLabeled)
+    ingestAs(s, dir, newVecs, gen, RawLabeled)
 
   /** [[mergeFrom]] for LABELED stores — the labeled-aware path the
     * label-blind merge refuses toward: the source's masked postings
@@ -861,7 +749,7 @@ object IvfIndex {
 
   /** The one merge body: both stores must hold the raw layout `lay`,
     * then the source's masked postings commit into the destination as
-    * one exactly-once ingest generation ([[ingest]]).
+    * one exactly-once ingest generation ([[ingestAs]]).
     */
   private def merge(s: SparkSession, dstDir: String, srcDir: String,
       gen: Long, allowReplay: Boolean, lay: Layout): DataFrame = {
@@ -883,7 +771,7 @@ object IvfIndex {
         "another source under a reused generation id would be silently " +
         "skipped and its rows lost; use a fresh gen per source, or pass " +
         "allowReplay=true if this IS a recovery replay of the same source")
-    ingest(s, dstDir, masked(s, srcDir, srcSnap)
+    ingestAs(s, dstDir, live(s, srcDir, srcSnap)
       .select(("vec_id" +: "qv" +: lay.carry).map(col): _*), gen, lay)
   }
 
@@ -918,19 +806,19 @@ object IvfIndex {
         new Path(dstDir).toUri.getPath,
       s"cloneAt: source and destination are the same directory ($srcDir)")
     val snap = readSnapshotAt(s, srcDir, epoch)
-    prepareBuildDir(s, dstDir)
-    s.read.parquet(centDir(srcDir, snap.centroidsVer))
-      .write.mode(SaveMode.Overwrite).parquet(centDir(dstDir, 1L))
-    if (snap.pqVer > 0)
-      s.read.parquet(pqCbDir(srcDir, snap.pqVer))
-        .write.mode(SaveMode.Overwrite).parquet(pqCbDir(dstDir, 1L))
-    writePostings(masked(s, srcDir, snap).withColumn("gen", lit(0L)),
-      dstDir, layoutOf(s, srcDir, snap))
-    val present = presentCids(s, dstDir)
-    val cells = snap.cells.map { case (c, _) =>
-      c -> (if (present.contains(c)) Seq(0L) else Seq.empty[Long]) }
-    IndexManifest.commit(s, dstDir, Snapshot(1L, 1L, cells, Set.empty,
-      snap.nextInternal, Nil, pqVer = if (snap.pqVer > 0) 1L else 0L))
+    create(s, dstDir) {
+      s.read.parquet(centDir(srcDir, snap.centroidsVer))
+        .write.mode(SaveMode.Overwrite).parquet(centDir(dstDir, 1L))
+      if (snap.pqVer > 0)
+        s.read.parquet(pqCbDir(srcDir, snap.pqVer))
+          .write.mode(SaveMode.Overwrite).parquet(pqCbDir(dstDir, 1L))
+      val present = writePostings(live(s, srcDir, snap), dstDir,
+        layoutOf(s, srcDir, snap), 0L)
+      val cells = snap.cells.map { case (c, _) =>
+        c -> (if (present(c)) Seq(0L) else Seq.empty[Long]) }
+      Snapshot(1L, 1L, cells, Set.empty, snap.nextInternal, Nil,
+        pqVer = if (snap.pqVer > 0) 1L else 0L)
+    }
     splitReport(s, dstDir)
   }
 
@@ -992,31 +880,24 @@ object IvfIndex {
         val g = intGen; intGen -= 1
         val remapped = learned.select(($"cid" + lo).as("cid"), $"cq")
           .localCheckpoint(true)
-        writePostings(VectorOps.argminPacked(cell, learned,
+        val halves = writePostings(VectorOps.argminPacked(cell, learned,
             carryQv = true, carry = lay.carry)
-          .withColumn("cid", $"cid" + lo).withColumn("gen", lit(g)), dir, lay)
+          .withColumn("cid", $"cid" + lo), dir, lay, g)
         // a degenerate 2-way train can leave one half memberless: that
-        // half commits an EMPTY generation list, never a file-less gen.
-        // The new cids are fresh, so directory existence IS membership
-        // (labeled layouts nest label= between cid= and gen=).
-        val f = IndexManifest.fs(s, dir)
-        def gensOf(c: Long): Seq[Long] =
-          if (f.exists(new Path(postDir(dir), s"cid=$c"))) Seq(g)
-          else Seq.empty[Long]
-        cells = cells - hot + (lo -> gensOf(lo)) +
-          ((lo + 1) -> gensOf(lo + 1))
+        // half published nothing and commits an EMPTY generation list,
+        // never a file-less gen
+        cells = cells - hot ++ Seq(lo, lo + 1).map(c =>
+          c -> (if (halves(c)) Seq(g) else Seq.empty[Long]))
         remapped
       }.reduce(_ unionByName _)
       val newVer = snap.centroidsVer + 1
       keptCents.unionByName(newCents)
         .write.mode(SaveMode.Overwrite).parquet(centDir(dir, newVer))
-      IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-        centroidsVer = newVer, cells = cells, nextInternal = intGen))
-      ServingCache.retain(s, dir, servingKeys(readSnapshot(s, dir)))
-      // GC strictly after the commit: the old hot-cell directories and
-      // the superseded centroid version fall out of the retained set
-      // (unless a wider retention window keeps them for time travel)
-      gcSweep(s, dir)
+      // the old hot-cell directories and the superseded centroid version
+      // fall out of the retained set (unless a wider retention window
+      // keeps them for time travel)
+      commitAndSweep(s, dir, snap.next(cells = cells, nextInternal = intGen)
+        .copy(centroidsVer = newVer))
     }
     splitReport(s, dir)
   }
@@ -1088,18 +969,25 @@ object IvfIndex {
 
   private def readCb(s: SparkSession, dir: String,
       ver: Long): Array[Array[Array[Long]]] = {
-    import s.implicits._
     require(ver > 0, s"index $dir has no PQ codebook (pqVer $ver) — " +
       "not a PQ store")
-    val rows = s.read.schema("m INT, c INT, cvec ARRAY<BIGINT>")
-      .parquet(pqCbDir(dir, ver))
-      .select($"m", $"c", $"cvec")
-      .as[(Int, Int, Seq[Long])].collect()
-    val nCodes = rows.map(_._2).max + 1
-    val cb = Array.ofDim[Array[Long]](8, nCodes)
-    rows.foreach { case (m, c, v) => cb(m)(c) = v.toArray }
+    cbOf(s.read.schema("m INT, c INT, cvec ARRAY<BIGINT>")
+      .parquet(pqCbDir(dir, ver)))
+  }
+
+  /** The 8 × codes codebook array of (m, c, cvec) rows. A filtered build
+    * may have fewer than 16 seed ids below 16 — the codebook is then
+    * smaller (codes stay dense 0..n-1, still 4-bit).
+    */
+  private def cbOf(rows: DataFrame): Array[Array[Array[Long]]] = {
+    val s = rows.sparkSession
+    import s.implicits._
+    val got = rows.select($"m", $"c", $"cvec").as[(Int, Int, Seq[Long])]
+      .collect()
+    val cb = Array.ofDim[Array[Long]](8, got.map(_._2).max + 1)
+    got.foreach { case (m, c, v) => cb(m)(c) = v.toArray }
     cb.foreach(ms => require(ms.forall(_ != null), "codebook has gaps"))
-    cb.map(_.map(x => x))
+    cb
   }
 
   /** TRAIN the PQ codebook: per-subspace k-means (16 codes × 8
@@ -1152,16 +1040,7 @@ object IvfIndex {
         .select($"m", $"c", coalesce($"ncvec", $"cvec").as("cvec"))
         .localCheckpoint(true)
     }
-    val rows = cb.select($"m", $"c", $"cvec")
-      .as[(Int, Int, Seq[Long])].collect()
-    // a filtered build may have fewer than 16 seed ids below 16 — the
-    // codebook is then smaller (codes stay dense 0..n-1, still 4-bit)
-    val nCodes = rows.map(_._2).max + 1
-    val out = Array.ofDim[Array[Long]](8, nCodes)
-    rows.foreach { case (m, c, v) => out(m)(c) = v.toArray }
-    out.foreach(ms => require(ms.forall(_ != null),
-      "trained codebook has gaps"))
-    out.map(_.map(x => x))
+    cbOf(cb)
   }
 
   private def writeCb(s: SparkSession, dir: String, ver: Long,
@@ -1338,7 +1217,7 @@ object IvfIndex {
     */
   def addBatchPq(s: SparkSession, dir: String, newVecs: DataFrame,
       gen: Long = 1L): DataFrame =
-    ingest(s, dir, newVecs, gen, PqPlain)
+    ingestAs(s, dir, newVecs, gen, PqPlain)
 
   /** [[addBatchPq]] for LABELED PQ stores — the matrix's fourth cell
     * ({PQ} × {filtered}) gets its incremental ingest: the batch
@@ -1352,7 +1231,7 @@ object IvfIndex {
     */
   def addBatchPqLabeled(s: SparkSession, dir: String, newVecs: DataFrame,
       gen: Long = 1L): DataFrame =
-    ingest(s, dir, newVecs, gen, PqLabeled)
+    ingestAs(s, dir, newVecs, gen, PqLabeled)
 
   /** RETRAIN the PQ codebook on the LIVE corpus's residuals and
     * re-encode every live posting under a NEW codebook version — the
@@ -1383,12 +1262,12 @@ object IvfIndex {
     val lay = layoutOf(s, dir, snap)
     val cents = centroidsOf(s, dir, snap)
       .select($"cid".cast("long").as("cid"), $"cq")
-    val live = masked(s, dir, snap)
-    val withV = live.select(("vec_id" +: lay.keys).map(c =>
+    val liveRows = live(s, dir, snap)
+    val withV = liveRows.select(("vec_id" +: lay.keys).map(c =>
         col(c).cast("long").as(c)): _*)
       .join(corpus.select($"vec_id", $"qv"), Seq("vec_id"))
     val resid = residualsOf(withV, cents, lay.carry)
-    val nLive = live.count()
+    val nLive = liveRows.count()
     require(resid.count() == nLive,
       s"retrainPq: corpus covers only ${resid.count()} of $nLive live " +
         "vectors — refusing a lossy re-encode")
@@ -1396,17 +1275,13 @@ object IvfIndex {
     val newPqVer = snap.pqVer + 1
     writeCb(s, dir, newPqVer, newCb)
     val newGen = snap.nextInternal
-    writePostings(resid.withColumn("code", codeCol(cbLiteral(newCb), $"rv"))
-      .withColumn("gen", lit(newGen)), dir, lay)
-    val touched = resid.select($"cid".cast("long")).distinct()
-      .as[Long].collect().toSet
+    val touched = writePostings(
+      resid.withColumn("code", codeCol(cbLiteral(newCb), $"rv")), dir, lay,
+      newGen)
     val cells = snap.cells.map { case (c, _) =>
       c -> (if (touched(c)) Seq(newGen) else Seq.empty[Long]) }
-    IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-      cells = cells, nextInternal = newGen - 1L, tombs = Nil,
-      pqVer = newPqVer))
-    ServingCache.retain(s, dir, servingKeys(readSnapshot(s, dir)))
-    gcSweep(s, dir)
+    commitAndSweep(s, dir, snap.next(cells = cells,
+      nextInternal = newGen - 1L, tombs = Nil).copy(pqVer = newPqVer))
   }
 
   /** The matrix's fourth cell — {uncompressed, PQ} × {unfiltered,
@@ -1454,9 +1329,9 @@ object IvfIndex {
   def snapshotDiff(s: SparkSession, dir: String, epochA: Long,
       epochB: Long): DataFrame = {
     import s.implicits._
-    val a = masked(s, dir, readSnapshotAt(s, dir, epochA))
+    val a = live(s, dir, readSnapshotAt(s, dir, epochA))
       .select($"vec_id", $"cid".cast("long").as("cid_a"))
-    val b = masked(s, dir, readSnapshotAt(s, dir, epochB))
+    val b = live(s, dir, readSnapshotAt(s, dir, epochB))
       .select($"vec_id", $"cid".cast("long").as("cid_b"))
     val contrib = a.join(b, Seq("vec_id"), "full_outer")
       .select(explode(expr(
@@ -1484,114 +1359,27 @@ object IvfIndex {
     per.unionByName(overall).orderBy($"cid")
   }
 
-  /** Garbage-collect everything the committed manifest does not
-    * reference: posting generation directories orphaned by a crashed
-    * ingest attempt or left behind by a pre-crash mutation's skipped GC,
-    * whole cell directories a split retired, superseded centroid
-    * versions, and stray manifest temp files. The commit protocol makes
-    * such orphans INVISIBLE to readers (the validity predicate never
-    * matches them), so vacuum is pure space reclamation with respect to
-    * READERS — it reads the manifest once and deletes only paths the
-    * manifest provably does not own. It is a WRITER-SIDE maintenance
-    * operation, though: like every mutation it assumes the single
-    * logical writer, and runs under that writer's schedule (temp
-    * manifests for epochs past the committed head are left alone so an
-    * in-flight commit is never yanked mid-rename). Returns one row per
-    * reclaimed path kind: (kind, n_removed).
-    *
-    * Scale: two directory listings of the index root + one per cell
-    * directory — metadata-only, no data bytes read; a deployment runs
-    * it on the maintenance cadence (after compactions) or from a crash
-    * janitor.
-    */
-  def vacuum(s: SparkSession, dir: String): DataFrame =
-    IndexManifest.report(s, gcSweep(s, dir))
-
-  /** The index's data sweep on the shared GC ([[ManifestProtocol.gc]],
-    * which adds the tombstone sets and temp manifests): reclaims posting
-    * generations and whole cell directories no RETAINED manifest
-    * references, and superseded centroid and codebook versions. Runs
-    * inline after [[compact]] and [[splitCells]] and standalone as
-    * [[vacuum]].
-    */
-  private def gcSweep(s: SparkSession, dir: String): Map[String, Long] =
-    IndexManifest.gc(s, dir) { (f, snaps) =>
-      val liveCells: Map[Long, Set[Long]] = snaps.flatMap(_.cells.toSeq)
-        .groupBy(_._1).map { case (c, gs) => c -> gs.flatMap(_._2).toSet }
-      val liveCentVers = snaps.map(_.centroidsVer).toSet
-      val livePqVers = snaps.map(_.pqVer).filter(_ > 0).toSet
-      var orphanGens = 0L
-      var orphanCells = 0L
-      var staleCentroids = 0L
-      var stalePqCodebooks = 0L
-      val postRoot = new Path(postDir(dir))
-      if (f.exists(postRoot)) {
-        f.listStatus(postRoot).filter(_.isDirectory)
-          .map(_.getPath).filter(_.getName.startsWith("cid=")).foreach { cd =>
-            val cid = cd.getName.stripPrefix("cid=").toLong
-            liveCells.get(cid) match {
-              case None =>
-                require(f.delete(cd, true), s"vacuum failed to delete $cd")
-                orphanCells += 1
-              case Some(gens) =>
-                genDirs(f, cd).foreach { gd =>
-                  if (!gens.contains(gd.getName.stripPrefix("gen=").toLong)) {
-                    require(f.delete(gd, true), s"vacuum failed to delete $gd")
-                    orphanGens += 1
-                  }
-                }
-            }
-          }
-      }
-      f.listStatus(new Path(dir)).map(_.getPath).foreach { p =>
-        val n = p.getName
-        if (n.startsWith("centroids_v") &&
-            !liveCentVers.contains(n.stripPrefix("centroids_v").toLong)) {
-          require(f.delete(p, true), s"vacuum failed to delete $p")
-          staleCentroids += 1
-        }
-        if (n.startsWith("pqcodebook_v") &&
-            !livePqVers.contains(n.stripPrefix("pqcodebook_v").toLong)) {
-          require(f.delete(p, true), s"vacuum failed to delete $p")
-          stalePqCodebooks += 1
-        }
-      }
-      Map("orphan_gen_dirs" -> orphanGens, "orphan_cell_dirs" -> orphanCells,
-        "stale_centroid_versions" -> staleCentroids,
-        "stale_pq_codebooks" -> stalePqCodebooks)
-    }
-
-  /** Physically apply the accumulated tombstones and fold each affected
-    * cell's generations into one — the LSM compaction to [[delete]]'s
-    * logical mask. Affected cells = those holding a tombstoned vector
-    * or more than one generation; their survivors are written as a
-    * fresh internal generation in ONE Spark pass (filter + anti-join,
-    * dynamic partition overwrite into new gen directories), the
-    * manifest swap retires the old generations, and only then are the
-    * old directories deleted — every other cell's files are left
-    * byte-untouched, and a crash at any point leaves the previous
-    * snapshot fully readable. The tombstone log is cleared at the end,
-    * so serve-side mask cost resets to zero (clearing is idempotent: a
-    * crash before it re-masks ids that are already physically gone).
-    *
-    * Returns the per-cell report (cid, n_before, n_removed,
-    * n_gens_before, n_after, compacted). Scale: the decision scan reads
-    * only (vec_id, gen) + the cid partition column (postings' payload
-    * bytes untouched); the rewrite reads and writes exactly the
-    * affected cells' bytes — compaction cost tracks delete/ingest
-    * volume, not corpus size.
+  /** The index's compaction plan (the fold and its tail are
+    * [[GenStore.compact]]'s): affected cells = those holding a
+    * tombstoned vector or more than one generation; their survivors are
+    * written as ONE fresh internal generation in ONE Spark pass (filter
+    * + anti-join), every other cell's files are left byte-untouched.
+    * The report is per cell: (cid, n_before, n_removed, n_gens_before,
+    * n_after, compacted). Scale: the decision scan reads only (vec_id,
+    * gen) + the cid partition column (postings' payload bytes
+    * untouched); the rewrite reads and writes exactly the affected
+    * cells' bytes — compaction cost tracks delete/ingest volume, not
+    * corpus size.
     *
     * Layout-agnostic: the rewrite carries whatever payload columns the
     * store holds (full vectors, packed PQ codes, a label level) and
     * re-partitions by the store's own partition scheme, so the same
     * compaction serves the plain, labeled, and PQ-compressed stores.
     */
-  def compact(s: SparkSession, dir: String): DataFrame = {
+  protected def plan(s: SparkSession, dir: String, snap: Snapshot,
+      counted: DataFrame, tomb: Option[DataFrame]): (DataFrame, Set[Long]) = {
     import s.implicits._
-    val snap = readSnapshot(s, dir)
-    val post = postingsOf(s, dir, snap)
-    val tomb = tombstonesOf(s, dir, snap)
-      .map(_.select($"vec_id").distinct().localCheckpoint(true))
+    val post = logical(counted)
     val tombCells = tomb.fold(
       post.select($"cid").distinct().withColumn("n_tomb", lit(0L)).limit(0))(
       t => post.join(broadcast(t), "vec_id")
@@ -1609,38 +1397,16 @@ object IvfIndex {
         $"n_after", $"compacted")
       .orderBy($"cid")
       .localCheckpoint(true)
-    val affectedRows = report.filter($"compacted" === 1L)
-      .select($"cid", $"n_after").as[(Long, Long)].collect().toSeq
-    val affected = affectedRows.map(_._1)
-    if (affected.nonEmpty) {
-      val newGen = snap.nextInternal
-      val rewritten = post.filter($"cid".isin(affected: _*))
-      writePostings(tomb.fold(rewritten)(t =>
-          rewritten.join(broadcast(t), Seq("vec_id"), "left_anti"))
-        .withColumn("gen", lit(newGen)), dir, layoutOf(s, dir, snap))
-      // a fully-tombstoned cell writes no partition: it commits an
-      // EMPTY generation list (the centroid row stays; occupancy reads
-      // 0) — never a generation id with no files, so snapshot
-      // existence checks stay strict. The new manifest clears the
-      // tombstone-set list: the deletes are now physical.
-      val cells = snap.cells ++ affectedRows.map { case (c, nAfter) =>
-        c -> (if (nAfter > 0) Seq(newGen) else Seq.empty[Long]) }
-      IndexManifest.commit(s, dir, snap.copy(epoch = snap.epoch + 1,
-        cells = cells, nextInternal = newGen - 1L, tombs = Nil))
-    } else if (snap.tombs.nonEmpty) {
-      // tombstoned ids that hit no stored posting: nothing to rewrite,
-      // but the mask still costs the serve path — retire it.
-      IndexManifest.commit(s, dir,
-        snap.copy(epoch = snap.epoch + 1, tombs = Nil))
-    }
-    // unpin what the fold superseded, then GC strictly after the commit
-    // — the retention-aware sweep removes the superseded generation dirs
-    // and tombstone sets unless an older retained epoch (time travel)
-    // still references them.
-    ServingCache.retain(s, dir, servingKeys(readSnapshot(s, dir)))
-    gcSweep(s, dir)
-    report
+    (report, report.filter($"compacted" === 1L)
+      .select($"cid".cast("long")).as[Long].collect().toSet)
   }
+
+  /** Rewrite the affected cells' live postings as generation `gen`. */
+  protected def fold(s: SparkSession, dir: String, snap: Snapshot,
+      counted: DataFrame, cells: Set[Long], masked: DataFrame => DataFrame,
+      gen: Long): Set[Long] =
+    writePostings(masked(counted.filter(col("cid").isin(cells.toSeq: _*))),
+      dir, layoutOf(s, dir, snap), gen)
 
   /** Per-cell occupancy over every committed generation (see
     * [[addBatch]]). n_base counts logical generation 0 (the build plus
@@ -2161,9 +1927,9 @@ object IvfIndex {
     val exK = ex.groupBy().agg(count(lit(1)).as("k_total"))
     val snap = readSnapshot(s, dir)
     val cents = centroidsOf(s, dir, snap)
-    val live = masked(s, dir, snap)
-    val sizes = live.groupBy($"cid").agg(count(lit(1)).as("csz"))
-    val homes = live.select($"vec_id".as("neighbor"), $"cid")
+    val liveRows = live(s, dir, snap)
+    val sizes = liveRows.groupBy($"cid").agg(count(lit(1)).as("csz"))
+    val homes = liveRows.select($"vec_id".as("neighbor"), $"cid")
       .localCheckpoint(true)
     val scoredc = scoredCells(s, cents, queries)
       .join(broadcast(sizes), Seq("cid"))

@@ -62,7 +62,7 @@ import graft.operators.GenStore.Root
   * SHUFFLE_HASH pass of the chunks relation at candidate cardinality;
   * nothing driver-sized but the bucket lists and the manifest.
   */
-object MaxSimStore extends GenStore {
+object MaxSimStore extends FlatStore {
 
   /** Token-routing fan-out: postings/df partition into this many md5
     * buckets. 64 keeps directory counts trivial while a small serving
@@ -95,7 +95,7 @@ object MaxSimStore extends GenStore {
     * df partials.
     */
   protected def writeGen(dir: String, snap: Snap, docs: DataFrame,
-      gen: Long): Unit = {
+      gen: Long): Set[Long] = {
     val s = docs.sparkSession
     import s.implicits._
     val (vec, mRel, tokd) = TextOps.maxSimChunkRels(docs)
@@ -107,19 +107,20 @@ object MaxSimStore extends GenStore {
         .groupBy($"tok").agg(sum($"tok_df").as("tok_df"))
     writeRoot(chunks, dir, vec.join(mRel, Seq("doc_id", "h"))
       .select($"doc_id".as("cdoc"), $"h".as("cc"),
-        $"v".as("vb"), $"n2".as("n2b"), $"m"), gen)
-    writeRoot(postings, dir, bucketed(TextOps.maxSimRarePrefix(tokd,
-      dfAtCommit).select($"doc_id".as("cdoc"), $"h".as("cc"), $"tok")), gen)
-    writeRoot(dfParts, dir, bucketed(batchDf), gen)
+        $"v".as("vb"), $"n2".as("n2b"), $"m"), gen) ++
+      writeRoot(postings, dir, bucketed(TextOps.maxSimRarePrefix(tokd,
+        dfAtCommit).select($"doc_id".as("cdoc"), $"h".as("cc"), $"tok")),
+        gen) ++
+      writeRoot(dfParts, dir, bucketed(batchDf), gen)
   }
 
   /** Chunks and postings rewrite masked (committed prefixes PRESERVED —
     * compaction is serve-transparent, spec-pinned), the df partials
     * fold to their sum.
     */
-  protected def fold(dir: String, snap: Snap, counted: DataFrame,
-      masked: DataFrame => DataFrame, gen: Long): Boolean = {
-    val s = counted.sparkSession
+  protected def fold(s: SparkSession, dir: String, snap: Snap,
+      counted: DataFrame, cells: Set[Long], masked: DataFrame => DataFrame,
+      gen: Long): Set[Long] = {
     import s.implicits._
     val livePost = masked(rel(s, dir, snap, postings))
       .select(postings.cols.map(col): _*).localCheckpoint(true)
@@ -127,9 +128,9 @@ object MaxSimStore extends GenStore {
       .groupBy($"tok").agg(sum($"tok_df").as("tok_df"))
       .withColumn("bucket", bucketCol($"tok")).localCheckpoint(true)
     writeLive(masked(counted).select(chunks.data.map(col): _*)) { c =>
-      writeRoot(chunks, dir, c, gen)
-      writeRoot(postings, dir, livePost.repartition($"bucket"), gen)
-      writeRoot(dfParts, dir, dfSum.repartition($"bucket"), gen)
+      writeRoot(chunks, dir, c, gen) ++
+        writeRoot(postings, dir, livePost.repartition($"bucket"), gen) ++
+        writeRoot(dfParts, dir, dfSum.repartition($"bucket"), gen)
     }
   }
 
@@ -138,8 +139,8 @@ object MaxSimStore extends GenStore {
     * relation and the chunk derivation see the SAME materialization.
     */
   def build(dset: DataFrame, dir: String): Unit =
-    create(dset.sparkSession, dir)(
-      writeGen(dir, GenStore.Fresh, dset.localCheckpoint(true), 0L))
+    create(dset.sparkSession, dir)(built(
+      writeGen(dir, GenStore.Fresh, dset.localCheckpoint(true), 0L)))
 
   /** Ingest a doc batch as caller generation `gen` ([[GenStore]]). */
   def addBatch(s: SparkSession, dir: String, batch: DataFrame,

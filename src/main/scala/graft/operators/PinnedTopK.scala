@@ -77,30 +77,24 @@ private[graft] object PinnedTopK {
   /** A binary-code query: id, vector, and its two code words. */
   final case class CodeQuery(id: Long, qv: Array[Long], w0: Long, w1: Long)
 
-  /** The two-stage binary serve over pinned (vec_id, qv, w0, w1[, cid])
-    * rows: each query's `width` best by (Hamming distance, neighbor) —
-    * the q191 shortlist order — then its top `k` of those by (exact
-    * distance, neighbor). `probing(cid)` names the queries a row's cell
-    * is probed by (the composed store); without `cellCol` every query
-    * sees every row. Returns (query_id, rank, neighbor, dist).
+  /** The two-stage binary serve over pinned (vec_id, qv, w0, w1) rows:
+    * each query's `width` best by (Hamming distance, neighbor) — the
+    * q191 shortlist order — then its top `k` of those by (exact
+    * distance, neighbor). Every query sees every row. Returns
+    * (query_id, rank, neighbor, dist).
     */
   def codes(s: SparkSession, live: DataFrame, queries: Seq[CodeQuery],
-      k: Int, width: Int, cellCol: Option[String] = None,
-      probing: Long => Array[Int] = _ => Array.empty): DataFrame = {
+      k: Int, width: Int): DataFrame = {
     val qs = queries.toArray
-    val all = qs.indices.toArray
-    val rows = live.select((Seq("vec_id", "qv", "w0", "w1") ++ cellCol)
-      .map(org.apache.spark.sql.functions.col): _*).queryExecution.toRdd
+    val rows = live.select("vec_id", "qv", "w0", "w1").queryExecution.toRdd
     gather(s, rows, longs("query_id", "rank", "neighbor", "dist")) { it =>
       val best = Array.fill(qs.length)(new Best(width))
       it.foreach { r =>
         val id = r.getLong(0)
         val w0 = r.getLong(2)
         val w1 = r.getLong(3)
-        val js = if (cellCol.isEmpty) all else probing(r.getLong(4))
-        var i = 0
-        while (i < js.length) {
-          val j = js(i)
+        var j = 0
+        while (j < qs.length) {
           val q = qs(j)
           if (id != q.id) {
             val ham = (java.lang.Long.bitCount(w0 ^ q.w0) +
@@ -108,7 +102,7 @@ private[graft] object PinnedTopK {
             if (best(j).admits(ham, id))
               best(j).add(ham, id, sqDist(r.getArray(1), q.qv))
           }
-          i += 1
+          j += 1
         }
       }
       best.iterator.zipWithIndex.flatMap { case (h, j) =>

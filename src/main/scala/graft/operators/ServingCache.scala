@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** The ONE serving cache of the persisted stores ([[BinaryStore]],
-  * [[IvfBinaryStore]], [[IvfIndex]]): what a cached serve reuses from one
+  * [[IvfIndex]]): what a cached serve reuses from one
   * call to the next, keyed by what never changes once committed.
   *
   *   - A data GENERATION is immutable from its commit until a compaction

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{BinaryStore, VectorOps}
+import graft.operators.{BinaryStore, IvfIndex, VectorOps}
 
 /** q195 persisted binary tier: the stored serve must be row-identical
   * to the in-memory q191 stages, the refine fetch must prune vector
@@ -223,17 +223,31 @@ class BinaryStoreSpec extends SparkSpec {
 
   test("vacuum counts a committed generation's leftover tmp dir as tmp_gen_dirs") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_bin_tmpgen")
-      .toString
-    BinaryStore.build(VectorOps.quantized(spark, sfDir), d) // commits gen 0
-    // the write-then-rename crash window, replayed to a commit since:
-    // the tmp data dir of the committed generation is garbage
-    val leftover = new java.io.File(s"$d/codes/.gen-tmp-0")
-    assert(leftover.mkdirs())
-    val report = BinaryStore.vacuum(spark, d).as[(String, Long)].collect()
-      .toMap
-    assert(report("tmp_gen_dirs") === 1L, report.toString)
-    assert(report("tmp_manifests") === 0L, report.toString)
-    assert(!leftover.exists)
+    val emb = VectorOps.quantized(spark, sfDir)
+    val shared = Set("orphan_gen_dirs", "tmp_gen_dirs",
+      "orphan_tombstone_sets", "tmp_manifests")
+    // per store: its build (commits gen 0), vacuum, the data root whose
+    // tmp dir a crash leaves, and the kinds its vacuum reports
+    Seq[(String, String => Unit, String => org.apache.spark.sql.DataFrame,
+        String, Set[String])](
+      ("BinaryStore", BinaryStore.build(emb, _), BinaryStore.vacuum(spark, _),
+        "codes", shared),
+      ("IvfIndex", IvfIndex.build(emb, _), IvfIndex.vacuum(spark, _),
+        "postings", shared ++ Set("orphan_cell_dirs",
+          "stale_centroid_versions", "stale_pq_codebooks"))
+    ).foreach { case (kind, build, vacuum, root, kinds) =>
+      val d = java.nio.file.Files.createTempDirectory("graft_bin_tmpgen")
+        .toString
+      build(d)
+      // the write-then-rename crash window, replayed to a commit since:
+      // the tmp data dir of the committed generation is garbage
+      val leftover = new java.io.File(s"$d/$root/.gen-tmp-0")
+      assert(leftover.mkdirs())
+      val report = vacuum(d).as[(String, Long)].collect().toMap
+      assert(report.keySet === kinds, s"$kind: $report")
+      assert(report("tmp_gen_dirs") === 1L, s"$kind: $report")
+      assert(report("tmp_manifests") === 0L, s"$kind: $report")
+      assert(!leftover.exists, kind)
+    }
   }
 }

@@ -6,11 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps `src/main` at one harness: the benchmark lives in `flockbench/`,
   * so the program carries only its five runnable mains, and every one of
-  * them builds its session through [[Session.local]]. Also keeps the flat
-  * stores on one generation kernel: manifest commits and generation
-  * writes live only in `GenStore`; the stores' serving relations are
-  * pinned only in the one `ServingCache`; `IvfIndex` on one
-  * posting writer and one layout probe; and the LSH family on one
+  * them builds its session through [[Session.local]]. Also keeps every
+  * store on one generation kernel: manifest commits, generation
+  * publishes and the lifecycle bodies live only in `GenStore`; the
+  * stores' serving relations are pinned only in the one `ServingCache`;
+  * `IvfIndex` on one posting writer and one layout probe; and the LSH
+  * family on one
   * banding kernel in `TextOps` (one MinHash band fold, one SimHash
   * blocking, one operating-point candidate builder). Scans the sources;
   * starts no Spark session.
@@ -43,15 +44,21 @@ class HarnessGuardSpec extends AnyFunSuite {
       s"builder sites outside graft.Session: $sites")
   }
 
-  test("the flat-store generation lifecycle is written only in GenStore") {
+  test("every store's generation lifecycle is written only in GenStore") {
     val kernel = "graft/operators/GenStore.scala"
     val copies = for {
       (p, t) <- sources if p != kernel
-      re <- Seq("""FlatManifest\.commit\(""".r,
-        """FlatManifest\.writeGenDir\(""".r)
+      re <- Seq("""IndexManifest\.commit\(""".r,
+        """FlatManifest\.commit\(""".r, """partitionOverwriteMode""".r,
+        """\.gen-tmp-""".r)
       if count(t, re) > 0
     } yield p -> re.toString
     assert(copies.isEmpty, s"lifecycle copies outside $kernel: $copies")
+    val (_, ivf) = sources.find(_._1 == "graft/operators/IvfIndex.scala").get
+    val bodies =
+      """def\s+(delete|tombstonesOf|masked|ingest|compact|gcSweep|vacuum)\b"""
+        .r.findAllMatchIn(ivf).map(_.group(1)).toSeq
+    assert(bodies.isEmpty, s"IvfIndex writes its own lifecycle bodies: $bodies")
   }
 
   test("serving relations are pinned only in the one serving cache") {
@@ -77,11 +84,12 @@ class HarnessGuardSpec extends AnyFunSuite {
     val (_, t) = sources.find(_._1 == "graft/operators/IvfIndex.scala").get
     val writer = t.indexOf("private def writePostings(")
     val writerEnd = t.indexOf("\n  }\n", writer)
-    val writes = """(?<!read)\.parquet\(postDir\(""".r.findAllMatchIn(t)
-      .map(_.start).toSeq
-    assert(writer >= 0 && writes.size == 1 &&
-      writes.forall(w => w > writer && w < writerEnd),
-      s"posting writes outside IvfIndex.writePostings at offsets $writes")
+    val publishes = """writeRoot\(""".r.findAllMatchIn(t).map(_.start).toSeq
+    assert(writer >= 0 && publishes.size == 1 &&
+      publishes.forall(w => w > writer && w < writerEnd),
+      s"posting publishes outside IvfIndex.writePostings at offsets $publishes")
+    assert(count(t, """(?<!read)\.parquet\(postDir\(""".r) == 0,
+      "IvfIndex writes postings without the generation publish")
     assert(count(t, """postingsOf\([^)]*\)\s*\.columns""".r) == 0,
       "IvfIndex infers a store's layout from a postings schema read")
     val labelChecks = """(\w+)(?:\([^()]*\))?\.columns\.contains\("label"\)""".r

@@ -5,10 +5,9 @@ import graft.operators.{IvfBinaryStore, VectorOps}
 
 /** q207/q208 composed tier: the persisted serve must be row-identical
   * to the in-memory q207 report, a serve's codes scan must
-  * partition-prune to the probed cells' directories, the cached serve
-  * must equal the uncached one, and the lifecycle (exactly-once
-  * ingest, delete masking, compaction, time travel) must hold under
-  * the fixed router.
+  * partition-prune to the probed cells' directories, and the lifecycle
+  * (exactly-once ingest, delete masking, compaction, time travel) must
+  * hold under the fixed router.
   */
 class IvfBinaryStoreSpec extends SparkSpec {
 
@@ -64,26 +63,6 @@ class IvfBinaryStoreSpec extends SparkSpec {
       .map(_.metrics("numFiles").value).max
     assert(scanned < allFiles,
       s"one-cell serve read $scanned of $allFiles code files — no pruning")
-  }
-
-  test("cached serve equals the uncached serve and tracks commits") {
-    import spark.implicits._
-    withIndexRetention(2) {
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_ivfbin_cache").toString
-      val emb = VectorOps.quantized(spark, sfDir)
-      IvfBinaryStore.build(emb.filter($"vec_id" % 5 =!= 4), d)
-      val queries = VectorOps.binaryQueries(emb).limit(8)
-        .localCheckpoint(true)
-      def srv(cached: Boolean) =
-        if (cached) IvfBinaryStore.serveCached(spark, d, queries, k = 5)
-        else IvfBinaryStore.serve(spark, d, queries, k = 5)
-      assert(rows(srv(cached = true)) == rows(srv(cached = false)))
-      // a committed ingest refreshes the cached relations next call
-      IvfBinaryStore.addBatch(spark, d,
-        emb.filter($"vec_id" % 5 === 4), gen = 1L)
-      assert(rows(srv(cached = true)) == rows(srv(cached = false)))
-    }
   }
 
   test("lifecycle: exactly-once ingest, delete mask, compaction, travel") {

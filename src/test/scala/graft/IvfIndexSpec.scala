@@ -738,9 +738,9 @@ class IvfIndexSpec extends SparkSpec {
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(servedCrashed === servedBefore,
       "serve changed while the ingest was uncommitted")
-    // recovery replays the SAME batch: dynamic partition overwrite
-    // replaces the orphaned attempt's files, so contents come out
-    // exactly-once
+    // recovery replays the SAME batch: its publish rewrites the tmp dir
+    // and replaces the orphaned attempt's renamed cid=/gen= directories,
+    // so contents come out exactly-once
     IvfIndex.addBatch(spark, dir, batch, gen = 1L)
     assert(IvfIndex.postings(spark, dir).count()
       === base.count() + batch.count())

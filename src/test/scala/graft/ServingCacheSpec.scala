@@ -5,8 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd,
   SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
-import graft.operators.{BinaryStore, IvfBinaryStore, IvfIndex, ServingCache,
-  VectorOps}
+import graft.operators.{BinaryStore, IvfIndex, ServingCache, VectorOps}
 
 /** The per-generation serving cache under the stores' cached serves:
   * cached rows (and their order) equal the uncached serve after every
@@ -59,12 +58,6 @@ class ServingCacheSpec extends SparkSpec {
       d => BinaryStore.compact(spark, d),
       d => BinaryStore.serve(spark, d, binQueries(queries), 5, cached = true),
       d => BinaryStore.serve(spark, d, binQueries(queries), 5)),
-    Store("IvfBinaryStore", IvfBinaryStore.build,
-      (d, v, g) => IvfBinaryStore.addBatch(spark, d, v, g),
-      (d, ids) => IvfBinaryStore.delete(spark, d, ids),
-      d => IvfBinaryStore.compact(spark, d),
-      d => IvfBinaryStore.serveCached(spark, d, binQueries(queries), 5),
-      d => IvfBinaryStore.serve(spark, d, binQueries(queries), 5)),
     Store("IvfIndex raw", (e, d) => IvfIndex.build(e, d),
       (d, v, g) => IvfIndex.addBatch(spark, d, v, g),
       (d, ids) => IvfIndex.delete(spark, d, ids),
