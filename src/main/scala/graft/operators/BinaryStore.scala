@@ -14,8 +14,8 @@ import graft.operators.GenStore.Root
   *     Stage 1 reads ONLY this relation — at 1B vectors it is 16 GB
   *     against the float tier's 256 GB, and the scan is two
   *     xor+popcount per candidate.
-  *   - `vectors/gen=N/bucket=…/` (vec_id, qv): the bucket-pruned
-  *     refine tier ([[BinaryGenStore]]).
+  *   - `vectors/gen=N/` (vec_id, qv): the refine tier, a few files per
+  *     generation sorted by vec_id ([[BinaryGenStore]]).
   *   - `tombstones/del=…/` (vec_id), `manifest-…`: the [[GenStore]]
   *     lifecycle — exactly-once [[addBatch]], delete, compact, time
   *     travel via `epoch`, vacuum — under the same write-new-files →
@@ -44,30 +44,28 @@ import graft.operators.GenStore.Root
   * shortlist is already same-label). A store is labeled or not for its
   * lifetime.
   *
-  * Scale: a build/ingest is one code-pack map pass plus two
-  * partitioned writes, cost tracking the BATCH, never the corpus; a
-  * serve is the codes scan folding map-side to `width` rows per query
-  * plus a bucket-pruned fetch of shortlist ids only. Nothing
-  * driver-sized but the bucket list and the manifest.
+  * Scale: a build/ingest is one code-pack map pass plus two writes of
+  * about one file per 512 KiB of payload, cost tracking the BATCH, never
+  * the corpus; a serve is the codes scan folding map-side to `width`
+  * rows per query plus a fetch of the shortlist ids only. Nothing
+  * driver-sized but the shortlist ids and the manifest.
   */
 private[graft] class BinaryLayout(labels: Seq[String])
     extends BinaryGenStore(Root("codes", Seq("vec_id", "w0", "w1"), labels),
       labels) {
 
-  /** The codes write repartitions on label so each directory gets one
-    * file, not one per task (the q156 small-files lesson).
+  /** Codes packed from the same rows as the vectors; a labeled write
+    * repartitions them on label so each label directory gets one file,
+    * not one per task (the q156 small-files lesson).
     */
   protected def writeGen(dir: String, snap: Snap, emb: DataFrame,
-      gen: Long): Set[Long] = {
-    val s = emb.sparkSession
-    import s.implicits._
-    val packed = VectorOps.binaryCodes(emb.select($"vec_id", $"qv"))
-    writeRoot(codes, dir,
-      if (labels.isEmpty) packed.select($"vec_id", $"w0", $"w1")
-      else packed.join(emb.select($"vec_id", $"label"), "vec_id")
-        .select($"vec_id", $"w0", $"w1", $"label").repartition($"label"),
-      gen) ++ writeVectors(dir, emb, gen)
-  }
+      gen: Long): Set[Long] =
+    writeTiers(dir, emb, gen) { rows =>
+      val packed = rows.withColumn("w0", expr(VectorOps.SignW0Sql))
+        .withColumn("w1", expr(VectorOps.SignW1Sql))
+        .select(codes.cols.map(col): _*)
+      if (labels.isEmpty) packed else packed.repartition(col("label"))
+    }
 
   /** Compaction re-packs the live vectors (labels ride along). */
   protected def fold(s: SparkSession, dir: String, snap: Snap,
@@ -81,7 +79,8 @@ private[graft] class BinaryLayout(labels: Seq[String])
     */
   def build(emb: DataFrame, dir: String): Unit =
     create(emb.sparkSession, dir)(
-      built(writeGen(dir, GenStore.Fresh, emb, 0L)))
+      built(writeLive(emb.select(vecRoot.data.map(col): _*))(
+        writeGen(dir, GenStore.Fresh, _, 0L))))
 
   // ---------- serving ----------
 
@@ -129,8 +128,8 @@ private[graft] class BinaryLayout(labels: Seq[String])
     * each pinned partition keeps every query's best `width`, the driver
     * merges them — a constant number of jobs per serve at any epoch.
     * Pinned rows are already in memory, so the partition pruning, the
-    * per-serve checkpoint and the bucket collect of the uncached path
-    * buy nothing there and are skipped.
+    * per-serve checkpoint and the shortlist-id collect of the uncached
+    * path buy nothing there and are skipped.
     */
   def serve(s: SparkSession, dir: String, queries: DataFrame, k: Int,
       width: Int = 20, cached: Boolean = false,

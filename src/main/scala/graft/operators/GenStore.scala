@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 import graft.operators.FlatManifest.Snap
 
 /** The ONE generation lifecycle of every persisted store: the flat
@@ -18,7 +19,10 @@ import graft.operators.FlatManifest.Snap
   * [[delete]] and the tombstone [[mask]], [[compact]], the GC
   * ([[vacuum]]), the time-travel existence check ([[snapAt]]), the
   * serving-cache pins ([[servingLive]]) and the one generation publish
-  * ([[writeRoot]]). Commit, retention and GC follow the
+  * ([[writeRoot]]). An ingest, a fold and a delete write their rows
+  * [[GenStore.sized]]: one partition, and so one file per directory, per
+  * 512 KiB of payload (Flock's payload batch), so a micro-batch
+  * generation is a handful of files. Commit, retention and GC follow the
   * [[ManifestProtocol]] state machine: write new directories, commit the
   * manifest, then collect.
   *
@@ -42,6 +46,10 @@ private[graft] abstract class GenStore {
   /** The data roots; the first is the counted one. */
   protected def roots: Seq[Root]
 
+  /** The counted root as `snap` stores it (its data columns' types). */
+  protected def countedRoot(s: SparkSession, dir: String, snap: S): Root =
+    roots.head
+
   /** Non-generation directories a build owns beside the roots. */
   protected def ownsDir(name: String): Boolean = false
 
@@ -54,17 +62,18 @@ private[graft] abstract class GenStore {
     batch
 
   /** Write `rows` as generation `gen` on top of `snap`; returns the cells
-    * it published ([[writeRoot]]).
+    * it published ([[writeRoot]]). An ingest passes its rows [[sized]]:
+    * one partition per file the generation's payload fills.
     */
   protected def writeGen(dir: String, snap: S, rows: DataFrame,
       gen: Long): Set[Long]
 
   /** The report [[compact]] returns and the cells to fold, over
-    * `counted` (the first root's committed rows; `tomb`: the distinct
-    * tombstone ids).
+    * `counted` (the counted root's committed rows; `dead`: the ids of
+    * every committed tombstone set).
     */
   protected def plan(s: SparkSession, dir: String, snap: S,
-      counted: DataFrame, tomb: Option[DataFrame]): (DataFrame, Set[Long])
+      counted: DataFrame, dead: Set[Long]): (DataFrame, Set[Long])
 
   /** Write the live rows of `cells` (`masked` applies the tombstones) as
     * compaction output `gen`; returns the cells it published.
@@ -86,12 +95,15 @@ private[graft] abstract class GenStore {
 
   /** `root`'s rows (with `gen` and the inner partitions) in `snap`,
     * filtered to its committed leaves by a partition-pruning predicate
-    * ([[Root.committed]]), so uncommitted files are never read.
+    * ([[Root.committed]]), so uncommitted files are never read. The
+    * data columns are read with the root's schema, so no parquet footer
+    * is opened to infer it; partition columns come from the directory
+    * names.
     */
   protected def rel(s: SparkSession, dir: String, snap: S,
       root: Root): DataFrame =
     if (snap.cells.values.forall(_.isEmpty)) root.empty(s)
-    else s.read.parquet(s"$dir/${root.name}")
+    else s.read.schema(root.dataSchema).parquet(s"$dir/${root.name}")
       .filter(root.committed(snap.cells))
 
   /** Publish `df` (without `gen`) as generation `gen` of `root`: ONE
@@ -140,7 +152,8 @@ private[graft] abstract class GenStore {
   private def tombstonesOf(s: SparkSession, dir: String,
       snap: S): Option[DataFrame] =
     if (snap.tombs.isEmpty) None
-    else Some(s.read.parquet(s"$dir/${manifest.TombRoot}")
+    else Some(s.read.schema(s"$tombKey BIGINT")
+      .parquet(s"$dir/${manifest.TombRoot}")
       .filter(col("del").isin(snap.tombs: _*))
       .select(col(tombKey).as(rowKey)))
 
@@ -152,10 +165,11 @@ private[graft] abstract class GenStore {
     tombstonesOf(s, dir, snap).fold(df)(t =>
       df.join(broadcast(t.distinct()), Seq(rowKey), "left_anti"))
 
-  /** The live rows (data and inner partition columns) of the first root. */
-  protected def live(s: SparkSession, dir: String, snap: S): DataFrame =
-    mask(s, dir, snap, rel(s, dir, snap, roots.head)
-      .select(roots.head.cols.map(col): _*))
+  /** The live rows (data and inner partition columns) of the counted root. */
+  protected def live(s: SparkSession, dir: String, snap: S): DataFrame = {
+    val root = countedRoot(s, dir, snap)
+    mask(s, dir, snap, rel(s, dir, snap, root).select(root.cols.map(col): _*))
+  }
 
   /** The latest snapshot, or the retained `epoch` (data-checked). */
   protected def snapAt(s: SparkSession, dir: String,
@@ -259,13 +273,13 @@ private[graft] abstract class GenStore {
         "internal generations are negative by construction")
     val snap = manifest.read(s, dir)
     if (snap.committedIngest(gen)) return
-    val rows = ingestRows(dir, snap, batch).localCheckpoint(true)
     val marked = snap.withIngested(gen)
-    if (rows.isEmpty) manifest.commit(s, dir, marked.next())
-    else {
-      val touched = writeGen(dir, snap, rows, gen)
-      manifest.commit(s, dir, marked.next(cells = snap.cells ++ touched.map(
-        c => c -> (snap.cells.getOrElse(c, Nil) :+ gen).distinct)))
+    sized(ingestRows(dir, snap, batch).localCheckpoint(true)) match {
+      case None => manifest.commit(s, dir, marked.next())
+      case Some(rows) =>
+        val touched = writeGen(dir, snap, rows, gen)
+        manifest.commit(s, dir, marked.next(cells = snap.cells ++ touched.map(
+          c => c -> (snap.cells.getOrElse(c, Nil) :+ gen).distinct)))
     }
   }
 
@@ -283,23 +297,22 @@ private[graft] abstract class GenStore {
     * (not in any manifest) and a re-run replaces them via dynamic
     * partition overwrite before committing its own epoch; masking is
     * idempotent, so a replayed delete of the same ids only costs a
-    * redundant set. An empty batch is a full no-op: writing it would
-    * create a `del=` directory holding only `_SUCCESS`, and committing
-    * its set id would make every later tombstone read fail parquet
-    * schema inference on the file-less directory.
+    * redundant set. The ids are written [[GenStore.sized]] (a
+    * micro-batch's set is one file). An empty batch is a full no-op:
+    * writing it would create a `del=` directory holding only `_SUCCESS`,
+    * and committing its set id would name a set with no file.
     */
-  def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val batch = ids.select(col(tombKey).cast("long").as(tombKey))
-      .localCheckpoint(true)
-    if (batch.isEmpty) return
-    val snap = manifest.read(s, dir)
-    val delId = snap.epoch + 1
-    batch.withColumn("del", lit(delId))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("del").parquet(s"$dir/${manifest.TombRoot}")
-    manifest.commit(s, dir, snap.next(tombs = snap.tombs :+ delId))
-  }
+  def delete(s: SparkSession, dir: String, ids: DataFrame): Unit =
+    sized(ids.select(col(tombKey).cast("long").as(tombKey))
+        .localCheckpoint(true)).foreach { batch =>
+      val snap = manifest.read(s, dir)
+      val delId = snap.epoch + 1
+      batch.withColumn("del", lit(delId))
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("del").parquet(s"$dir/${manifest.TombRoot}")
+      manifest.commit(s, dir, snap.next(tombs = snap.tombs :+ delId))
+    }
 
   /** Physically apply the accumulated tombstones and fold generations —
     * the LSM compaction to [[delete]]'s logical mask. The store's
@@ -313,17 +326,21 @@ private[graft] abstract class GenStore {
     * snapshot fully readable. With nothing to fold, pending tombstones
     * are retired by a metadata-only commit (they would otherwise cost
     * every serve; clearing is idempotent). Returns the plan's report.
+    *
+    * The tombstone ids are held on the driver ([[ServingCache.tombstones]]:
+    * each committed set is read once, and a set a cached serve already
+    * holds costs no read), so the plan and the fold mask them with an id
+    * filter — the same bound the serve-side broadcast relies on.
     */
   def compact(s: SparkSession, dir: String): DataFrame = {
     val snap = manifest.read(s, dir)
-    val tomb = tombstonesOf(s, dir, snap)
-      .map(_.distinct().localCheckpoint(true))
-    val counted = rel(s, dir, snap, roots.head)
-    val (report, cells) = plan(s, dir, snap, counted, tomb)
+    val dead = ServingCache.tombstones(s, dir, tombKey, snap.tombs)
+    val rows = rel(s, dir, snap, countedRoot(s, dir, snap))
+    val (report, cells) = plan(s, dir, snap, rows, dead)
     if (cells.nonEmpty) {
       val newGen = snap.nextInternal
-      val kept = fold(s, dir, snap, counted, cells, df => tomb.fold(df)(t =>
-        df.join(broadcast(t), Seq(rowKey), "left_anti")), newGen)
+      val kept = fold(s, dir, snap, rows, cells,
+        ServingCache.mask(_, rowKey, dead), newGen)
       commitAndSweep(s, dir, snap.next(tombs = Nil,
         nextInternal = newGen - 1L, cells = snap.cells ++ cells.map(c =>
           c -> (if (kept(c)) Seq(newGen) else Seq.empty[Long]))))
@@ -462,20 +479,26 @@ private[graft] object GenStore {
     * columns, laid out `<dir>/<name>/gen=N/<inner>=…/` — or, CELL-MAJOR,
     * `<dir>/<name>/<inner>=…/gen=N/` with the first inner partition as
     * the manifest's cell. Every column is a long except the vectors
-    * (`qv`, `vb`: array<long>) and tokens (`tok`: string), which is all
-    * [[empty]] needs to type a relation for a snapshot with no
-    * generations.
+    * (`qv`, `vb`: array<long>) and tokens (`tok`: string), which types
+    * both the stored data columns ([[dataSchema]]) and a relation for a
+    * snapshot with no generations ([[empty]]).
     */
   case class Root(name: String, data: Seq[String], inner: Seq[String] = Nil,
       cellMajor: Boolean = false) {
     def cols: Seq[String] = data ++ inner
 
+    private def ddl(cs: Seq[String]): String = cs.map {
+      case c @ ("qv" | "vb") => s"$c ARRAY<BIGINT>"
+      case "tok" => "tok STRING"
+      case c => s"$c BIGINT"
+    }.mkString(", ")
+
+    /** The stored data columns as a DDL schema. */
+    def dataSchema: String = ddl(data)
+
     def empty(s: SparkSession): DataFrame =
-      s.range(0).select((data ++ ("gen" +: inner)).map {
-        case c @ ("qv" | "vb") => array(col("id")).as(c)
-        case "tok" => col("id").cast("string").as("tok")
-        case c => col("id").as(c)
-      }: _*)
+      s.createDataFrame(java.util.List.of[Row](),
+        StructType.fromDDL(ddl(data ++ ("gen" +: inner))))
 
     /** The committed leaves of `cells` as a partition-pruning predicate:
       * the live generations, or for a cell-major root a disjunction over
@@ -508,6 +531,47 @@ private[graft] object GenStore {
   val Fresh = Snap(epoch = 0L, gens = Nil, tombs = Nil, ingested = Set.empty,
     ingestLow = 0L, nextInternal = -1L)
 
+  /** The payload a written file holds: Flock's 524,288-byte payload
+    * batch. A generation is written as about (its bytes / this) files.
+    */
+  val PayloadBytes = 524288L
+
+  /** `rows` coalesced to one partition per [[PayloadBytes]] of payload
+    * (at least one; a partition is written as one file per directory),
+    * or None when there is no row. One Spark job sizes them, so `rows`
+    * should be checkpointed.
+    */
+  def sized(rows: DataFrame): Option[DataFrame] = {
+    val Seq(bytes) = sums(rows, rowBytes(rows))
+    if (bytes == 0) None
+    else Some(rows.coalesce(((bytes + PayloadBytes - 1) / PayloadBytes).toInt))
+  }
+
+  /** The payload bytes of one row of `df`: 8 per fixed-width column,
+    * 8 per array element, the UTF-8 bytes of a string.
+    */
+  def rowBytes(df: DataFrame): Column =
+    df.schema.fields.map { f => f.dataType match {
+      case a: ArrayType => size(col(f.name)) * a.elementType.defaultSize
+      case StringType => octet_length(col(f.name))
+      case _ => lit(8)
+    }}.map(_.cast("long")).reduce(_ + _)
+
+  /** The column sums `cols` (long) over `df`, in ONE Spark job and no
+    * exchange: each partition sums its rows, the driver adds the
+    * partials.
+    */
+  def sums(df: DataFrame, cols: Column*): Seq[Long] = {
+    val n = cols.length
+    df.select(cols.map(_.cast("long")): _*).queryExecution.toRdd
+      .mapPartitions { it =>
+        val acc = new Array[Long](n)
+        it.foreach(r => (0 until n).foreach(i => acc(i) += r.getLong(i)))
+        Iterator(acc)
+      }.fold(new Array[Long](n))((a, b) => a.lazyZip(b).map(_ + _))
+      .toSeq
+  }
+
 }
 
 /** The flat stores' side of [[GenStore]]: the [[FlatManifest]] state,
@@ -526,20 +590,16 @@ private[graft] abstract class FlatStore extends GenStore {
     Fresh.next(cells = write0.map(_ -> Seq(0L)).toMap)
 
   /** One row (n_before, n_removed, n_gens_before, n_after, compacted)
-    * over the counted root.
+    * over the counted root: both counts in one pass ([[GenStore.sums]]),
+    * the generation count from the manifest.
     */
   protected def plan(s: SparkSession, dir: String, snap: Snap,
-      counted: DataFrame, tomb: Option[DataFrame]): (DataFrame, Set[Long]) = {
+      counted: DataFrame, dead: Set[Long]): (DataFrame, Set[Long]) = {
     import s.implicits._
-    val Array(stat) = counted
-      .agg(count(lit(1)).as("n_before"),
-        coalesce(countDistinct($"gen"), lit(0L)).as("n_gens"))
-      .collect()
-    val nBefore = stat.getLong(0)
-    val nRemoved = tomb.fold(0L)(t =>
-      counted.join(broadcast(t), rowKey).count())
+    val Seq(nBefore, nRemoved) = sums(counted, lit(1L),
+      col(rowKey).isInCollection(dead).cast("long"))
     val doFold = nRemoved > 0 || snap.gens.length > 1
-    (Seq((nBefore, nRemoved, stat.getLong(1), nBefore - nRemoved,
+    (Seq((nBefore, nRemoved, snap.gens.length.toLong, nBefore - nRemoved,
         if (doFold) 1L else 0L))
       .toDF("n_before", "n_removed", "n_gens_before", "n_after",
         "compacted"),
@@ -554,7 +614,7 @@ private[graft] abstract class FlatStore extends GenStore {
   def genReport(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val snap = FlatManifest.read(s, dir)
-    val per = mask(s, dir, snap, rel(s, dir, snap, roots.head)
+    val per = mask(s, dir, snap, rel(s, dir, snap, countedRoot(s, dir, snap))
         .withColumn("lgen",
           when($"gen" <= 0, 0L).otherwise($"gen".cast("long"))))
       .groupBy($"lgen".as("gen"))
@@ -565,33 +625,30 @@ private[graft] abstract class FlatStore extends GenStore {
       .orderBy($"gen")
   }
 
-  /** Checkpoint a fold's live `rows`; `write` them unless empty. */
+  /** Checkpoint `rows` (a fold's live rows, a build's corpus); `write`
+    * them [[GenStore.sized]] unless empty.
+    */
   protected def writeLive(rows: DataFrame)(write: DataFrame => Set[Long])
-      : Set[Long] = {
-    val pinned = rows.localCheckpoint(true)
-    if (pinned.isEmpty) Set.empty else write(pinned)
-  }
+      : Set[Long] =
+    sized(rows.localCheckpoint(true)).fold(Set.empty[Long])(write)
 
 }
 
 /** The shape both binary stores share: a `codes` root (vec_id, w0, w1
   * plus its inner partition), tombstones by vec_id, and the
-  * full-precision refine tier `vectors/gen=N/bucket=B/` (vec_id, qv,
-  * `extra`…) with B = vec_id mod [[Buckets]]. The refine fetch collects
-  * the shortlist's bucket set (≤ 64 values, driver-bounded) and pushes
-  * it as a partition filter, so a small serving batch reads a handful
-  * of directories — the IvfIndex probe-list discipline on the refine
-  * side.
+  * full-precision refine tier `vectors/gen=N/` (vec_id, qv, `extra`…).
+  * A generation is published as a few parquet files per root, each
+  * holding about [[GenStore.PayloadBytes]] of rows sorted by vec_id
+  * ([[writeTiers]]): a micro-batch add is one codes file and one vectors
+  * file, a build or a fold enough files to scan in parallel. The refine
+  * fetch filters the live generations' vectors by the shortlist ids,
+  * which parquet's row-group statistics prune on the sorted files.
   */
 private[graft] abstract class BinaryGenStore(protected val codes: GenStore.Root,
     extra: Seq[String]) extends FlatStore {
   import GenStore._
 
-  /** Refine-side fan-out: vectors partition into this many id buckets. */
-  val Buckets = 64L
-
-  protected val vecRoot =
-    Root("vectors", Seq("vec_id", "qv") ++ extra, Seq("bucket"))
+  protected val vecRoot = Root("vectors", Seq("vec_id", "qv") ++ extra)
   protected val roots = Seq(codes, vecRoot)
   protected val tombKey = "vec_id"
 
@@ -611,40 +668,42 @@ private[graft] abstract class BinaryGenStore(protected val codes: GenStore.Root,
   def liveCodes(s: SparkSession, dir: String): DataFrame =
     live(s, dir, FlatManifest.read(s, dir))
 
-  /** One file per bucket directory (the q156 small-files lesson). */
-  protected def writeVectors(dir: String, rows: DataFrame,
-      gen: Long): Set[Long] =
-    writeRoot(vecRoot, dir, rows.select(vecRoot.data.map(col) :+
-        pmod(col("vec_id"), lit(Buckets)).as("bucket"): _*)
-      .repartition(col("bucket")), gen)
+  /** Publish [[GenStore.sized]] `rows` (vec_id, qv, …) as generation
+    * `gen`: their codes (`codesOf`) and their vectors, one file per
+    * partition and directory, sorted by vec_id.
+    */
+  protected def writeTiers(dir: String, rows: DataFrame, gen: Long)(
+      codesOf: DataFrame => DataFrame): Set[Long] = {
+    def sorted(root: Root, df: DataFrame) = writeRoot(root, dir,
+      df.sortWithinPartitions((root.inner :+ "vec_id").map(col): _*), gen)
+    sorted(codes, codesOf(rows)) ++
+      sorted(vecRoot, rows.select(vecRoot.data.map(col): _*))
+  }
 
   /** The (vec_id, qv) rows a `shortlist` (…, neighbor, …) can refine
-    * against, bucket-pruned.
+    * against: the live generations' vectors filtered by the shortlist's
+    * ids (collected on the driver — a batch's queries × width), a filter
+    * parquet pushes down to the row-group statistics of the sorted
+    * files.
     */
-  protected def refineFetch(s: SparkSession, dir: String, snap: Snap,
+  private[graft] def refineFetch(s: SparkSession, dir: String, snap: Snap,
       shortlist: DataFrame): DataFrame = {
     import s.implicits._
-    val buckets = shortlist
-      .select(pmod($"neighbor", lit(Buckets)).as("bucket"))
-      .distinct().as[Long].collect().toSeq
-    rel(s, dir, snap, vecRoot).filter($"bucket".isin(buckets: _*))
+    val ids = shortlist.select($"neighbor").distinct().as[Long].collect()
+    rel(s, dir, snap, vecRoot).filter($"vec_id".isInCollection(ids))
       .select($"vec_id", $"qv")
   }
 
   /** Generation `g`'s serving rows for the cached serve: its vectors
     * (vec_id, qv) with their 1-bit code (w0, w1). The code is a pure
     * function of `qv` (every write packs it from the same rows), so one
-    * read of the generation's bucket directories serves both stages
-    * without a join.
+    * read of the generation's directory, with its schema, serves both
+    * stages without a join.
     */
   protected def servingVectors(s: SparkSession, dir: String,
-      g: Long): DataFrame = {
-    val gd = new Path(s"$dir/${vecRoot.name}", s"gen=$g")
-    val buckets = FlatManifest.fs(s, dir).listStatus(gd)
-      .filter(_.isDirectory).map(_.getPath.toString).toSeq
-    VectorOps.binaryCodes(ServingCache.readDirs(s,
-      "vec_id BIGINT, qv ARRAY<BIGINT>", buckets).select("vec_id", "qv"))
-  }
+      g: Long): DataFrame =
+    VectorOps.binaryCodes(s.read.schema("vec_id BIGINT, qv ARRAY<BIGINT>")
+      .parquet(s"$dir/${vecRoot.name}/gen=$g"))
 
   /** The relation [[servingVectors]] types, with no rows. */
   protected def noVectors(s: SparkSession): DataFrame =

@@ -25,8 +25,9 @@ import graft.operators.GenStore.Root
   *     (numFiles spec-pinned), which is the whole point of the
   *     composition: the flat [[BinaryStore]] scans every code,
   *     this store scans ~(nprobe/k)·N.
-  *   - `vectors/gen=N/bucket=…/` (vec_id, qv): the bucket-pruned
-  *     refine tier, shared with [[BinaryStore]] ([[BinaryGenStore]]).
+  *   - `vectors/gen=N/` (vec_id, qv): the refine tier, a few files per
+  *     generation sorted by vec_id, shared with [[BinaryStore]]
+  *     ([[BinaryGenStore]]).
   *   - `tombstones/del=…/` (vec_id), `manifest-…`: the [[GenStore]]
   *     lifecycle — exactly-once [[addBatch]], delete, compact, epoch
   *     time travel, vacuum.
@@ -44,7 +45,7 @@ import graft.operators.GenStore.Root
   * + writes); a serve reads probed cells' codes only, folds
   * candidates map-side to ≤ width rows per (query, cell), and fetches
   * full vectors for shortlist ids alone. Nothing driver-sized but the
-  * k-row centroid table, the probed cid set, and the bucket list.
+  * k-row centroid table, the probed cid set, and the shortlist ids.
   */
 object IvfBinaryStore extends BinaryGenStore(
     Root("codes", Seq("vec_id", "w0", "w1"), Seq("cid")), Nil) {
@@ -55,7 +56,7 @@ object IvfBinaryStore extends BinaryGenStore(
     * and broadcast.
     */
   def centroids(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/centroids")
+    s.read.schema(VectorOps.CentroidSchema).parquet(s"$dir/centroids")
 
   /** An ingest assigns against the STORED centroids. */
   protected def writeGen(dir: String, snap: Snap, batch: DataFrame,
@@ -67,15 +68,14 @@ object IvfBinaryStore extends BinaryGenStore(
     VectorOps.argminPacked(rows, cents, carryQv = true)
       .select(col("vec_id"), col("qv"), col("cid"))
 
-  /** Cell-partitioned codes + bucketed vectors from ALREADY-ASSIGNED
-    * rows (vec_id, qv, cid).
+  /** Cell-partitioned codes + the vectors from ALREADY-ASSIGNED rows
+    * (vec_id, qv, cid).
     */
   private def writeAssigned(dir: String, assigned: DataFrame,
       gen: Long): Set[Long] =
-    writeRoot(codes, dir, assigned.select(col("vec_id"), col("cid"),
+    writeTiers(dir, assigned, gen)(_.select(col("vec_id"),
       expr(VectorOps.SignW0Sql).as("w0"),
-      expr(VectorOps.SignW1Sql).as("w1")), gen) ++
-      writeVectors(dir, assigned, gen)
+      expr(VectorOps.SignW1Sql).as("w1"), col("cid")))
 
   /** Compaction rewrites the live vectors under their STORED cell —
     * assignment is NOT recomputed (the router is fixed, but recomputing
@@ -105,7 +105,7 @@ object IvfBinaryStore extends BinaryGenStore(
         VectorOps.LloydMaxIters, VectorOps.LloydMinImprove)
       learned.select($"cid", $"cq").write.mode(SaveMode.Overwrite)
         .parquet(s"$dir/centroids")
-      writeAssigned(dir, assign(emb, learned), 0L)
+      writeLive(assign(emb, learned))(writeAssigned(dir, _, 0L))
     })
   }
 
@@ -128,8 +128,8 @@ object IvfBinaryStore extends BinaryGenStore(
 
   /** The q207 operating-point report served from the store — shared
     * verbatim with the in-memory tier, so the q208 gate hashes against
-    * q207's own oracle family. Refine vectors are fetched
-    * bucket-pruned (the [[BinaryStore]] discipline).
+    * q207's own oracle family. Refine vectors are fetched by the
+    * shortlist ids (the [[BinaryStore]] discipline).
     */
   def serveReport(s: SparkSession, d: String, dir: String,
       queries: DataFrame, exactTag: String = "full"): DataFrame = {

@@ -163,13 +163,17 @@ object IvfIndex extends GenStore {
     * labeled build at sf10. Plain writes are NOT repartitioned: 16 cell
     * dirs × 32 tasks is no storm, and the A/B showed the full-corpus
     * (vec_id, qv) shuffle costs more than 512 creates save (q152 sf10
-    * 12.0 → 14.3 s with the repartition).
+    * 12.0 → 14.3 s with the repartition). An ingest's rows arrive sized
+    * ([[GenStore.sized]]: a micro-batch is one task, one file per cell);
+    * a compaction's fold (`byCell`) repartitions by cell as well, so the
+    * cells it rewrites hold one file each, not one per scan task.
     */
   private def writePostings(rows: DataFrame, dir: String, lay: Layout,
-      gen: Long): Set[Long] = {
+      gen: Long, byCell: Boolean = false): Set[Long] = {
     val out = rows.select(lay.root.cols.map(col): _*)
     writeRoot(lay.root, dir,
-      if (lay.labeled) out.repartition(lay.keys.map(col): _*) else out, gen)
+      if (lay.labeled || byCell) out.repartition(lay.keys.map(col): _*)
+      else out, gen)
   }
 
   // ---------- control plane: the shared manifest protocol ----------
@@ -266,14 +270,21 @@ object IvfIndex extends GenStore {
 
   private def centroidsOf(s: SparkSession, dir: String,
       snap: Snapshot): DataFrame =
-    s.read.parquet(centDir(dir, snap.centroidsVer))
+    s.read.schema(VectorOps.CentroidSchema)
+      .parquet(centDir(dir, snap.centroidsVer))
 
   def centroids(s: SparkSession, dir: String): DataFrame =
     centroidsOf(s, dir, readSnapshot(s, dir))
 
   private def postingsOf(s: SparkSession, dir: String,
       snap: Snapshot): DataFrame =
-    logical(rel(s, dir, snap, roots.head))
+    logical(rel(s, dir, snap, countedRoot(s, dir, snap)))
+
+  /** The posting root of the store's layout: its payload column is the
+    * raw vector or the PQ code.
+    */
+  override protected def countedRoot(s: SparkSession, dir: String,
+      snap: Snapshot): Root = layoutOf(s, dir, snap).root
 
   private def logical(post: DataFrame): DataFrame =
     post.withColumn("gen",
@@ -481,7 +492,7 @@ object IvfIndex extends GenStore {
       (if (lay.pq) "BIGINT" else "ARRAY<BIGINT>")
     val root = postDir(dir)
     ServingCache.readDirs(s, schema, cells.map(c => s"$root/cid=$c/gen=$g"),
-      Some(root))
+      root)
       .select(col("vec_id"), col(lay.payload),
         col("cid").cast("long").as("cid"))
   }
@@ -1362,8 +1373,9 @@ object IvfIndex extends GenStore {
   /** The index's compaction plan (the fold and its tail are
     * [[GenStore.compact]]'s): affected cells = those holding a
     * tombstoned vector or more than one generation; their survivors are
-    * written as ONE fresh internal generation in ONE Spark pass (filter
-    * + anti-join), every other cell's files are left byte-untouched.
+    * written as ONE fresh internal generation in ONE Spark pass (cell
+    * filter + tombstone id mask), every other cell's files are left
+    * byte-untouched.
     * The report is per cell: (cid, n_before, n_removed, n_gens_before,
     * n_after, compacted). Scale: the decision scan reads only (vec_id,
     * gen) + the cid partition column (postings' payload bytes
@@ -1377,19 +1389,12 @@ object IvfIndex extends GenStore {
     * compaction serves the plain, labeled, and PQ-compressed stores.
     */
   protected def plan(s: SparkSession, dir: String, snap: Snapshot,
-      counted: DataFrame, tomb: Option[DataFrame]): (DataFrame, Set[Long]) = {
+      counted: DataFrame, dead: Set[Long]): (DataFrame, Set[Long]) = {
     import s.implicits._
-    val post = logical(counted)
-    val tombCells = tomb.fold(
-      post.select($"cid").distinct().withColumn("n_tomb", lit(0L)).limit(0))(
-      t => post.join(broadcast(t), "vec_id")
-        .groupBy($"cid").agg(count(lit(1)).as("n_tomb")))
-    val report = post.groupBy($"cid")
+    val report = logical(counted).groupBy($"cid")
       .agg(count(lit(1)).as("n_before"),
+        sum($"vec_id".isInCollection(dead).cast("long")).as("n_removed"),
         countDistinct($"gen").as("n_gens_before"))
-      .join(tombCells, Seq("cid"), "left")
-      .select($"cid", $"n_before",
-        coalesce($"n_tomb", lit(0L)).as("n_removed"), $"n_gens_before")
       .withColumn("n_after", $"n_before" - $"n_removed")
       .withColumn("compacted",
         when($"n_removed" > 0 || $"n_gens_before" > 1, 1L).otherwise(0L))
@@ -1406,7 +1411,7 @@ object IvfIndex extends GenStore {
       counted: DataFrame, cells: Set[Long], masked: DataFrame => DataFrame,
       gen: Long): Set[Long] =
     writePostings(masked(counted.filter(col("cid").isin(cells.toSeq: _*))),
-      dir, layoutOf(s, dir, snap), gen)
+      dir, layoutOf(s, dir, snap), gen, byCell = true)
 
   /** Per-cell occupancy over every committed generation (see
     * [[addBatch]]). n_base counts logical generation 0 (the build plus

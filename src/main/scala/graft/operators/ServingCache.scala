@@ -146,19 +146,20 @@ private[graft] object ServingCache {
       }
     }.toSet
 
-  /** The leaf directories `dirs` of one generation read with `schema`
-    * (partition columns discovered below `basePath`, when given), in
-    * groups no larger than the session's parallel-discovery threshold,
-    * so the driver lists each group itself (one read of more directories
-    * would start a listing job per pin).
+  /** The leaf directories `dirs` of one index posting generation (one
+    * `cid=C/gen=G` directory per cell) read with `schema`, partition
+    * columns discovered below `basePath`, in groups no larger than the
+    * session's parallel-discovery threshold, so the driver lists each
+    * group itself (one read of more directories would start a listing
+    * job per pin). A flat store's generation is one directory, read
+    * directly.
     */
   def readDirs(s: SparkSession, schema: String, dirs: Seq[String],
-      basePath: Option[String] = None): DataFrame = {
+      basePath: String): DataFrame = {
     val n = s.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
       .toInt
     dirs.grouped(math.max(1, n)).map { g =>
-      val r = s.read.schema(schema)
-      basePath.fold(r)(r.option("basePath", _)).parquet(g: _*)
+      s.read.schema(schema).option("basePath", basePath).parquet(g: _*)
     }.reduce(_ unionByName _)
   }
 

@@ -1212,13 +1212,16 @@ object VectorOps {
         expr(SignW0Sql).as("w0"), expr(SignW1Sql).as("w1"))
   }
 
+  /** The schema every stored centroid table (cid, cq) is read with. */
+  private[graft] val CentroidSchema = "cid BIGINT, cq ARRAY<BIGINT>"
+
   /** A stored centroid table `path` (cid, cq) as driver rows — k rows,
     * read with its schema (no footer-inference job).
     */
   private[graft] def centroidRows(s: SparkSession,
       path: String): Seq[(Long, Seq[Long])] = {
     import s.implicits._
-    s.read.schema("cid BIGINT, cq ARRAY<BIGINT>").parquet(path)
+    s.read.schema(CentroidSchema).parquet(path)
       .as[(Long, Seq[Long])].collect().toSeq
   }
 

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import graft.operators.{BinaryStore, IvfIndex, VectorOps}
 
 /** q195 persisted binary tier: the stored serve must be row-identical
-  * to the in-memory q191 stages, the refine fetch must prune vector
-  * bucket directories, and stage 1 must read only the codes relation.
+  * to the in-memory q191 stages, the refine fetch must read only the
+  * live generations' vectors and return only the shortlist ids, and a
+  * micro-batch add must publish one file per root.
   */
 class BinaryStoreSpec extends SparkSpec {
 
@@ -36,35 +37,71 @@ class BinaryStoreSpec extends SparkSpec {
     assert(rows(q195) == rows(q191))
   }
 
-  test("a single-query serve prunes vector bucket directories") {
+  private def scans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+      scans(a.executedPlan)
+    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+      scans(q.plan)
+    case f: org.apache.spark.sql.execution.FileSourceScanExec => Seq(f)
+    case other =>
+      other.children.flatMap(scans) ++
+        other.subqueries.flatMap(scans) ++
+        other.innerChildren.collect {
+          case sp: org.apache.spark.sql.execution.SparkPlan => sp
+        }.flatMap(scans)
+  }
+
+  /** The parquet files directly under `path`. */
+  private def parquetFiles(path: String): Seq[String] =
+    Option(new java.io.File(path).list()).toSeq.flatten
+      .filter(_.endsWith(".parquet"))
+
+  test("a single-query fetch reads only the live generations' vectors files") {
     import spark.implicits._
+    val d = java.nio.file.Files
+      .createTempDirectory("graft_binstore_fetch").toString
     val emb = VectorOps.quantized(spark, sfDir)
+    BinaryStore.build(emb.filter($"vec_id" % 2 === 0), d)
+    BinaryStore.addBatch(spark, d, emb.filter($"vec_id" % 2 === 1), gen = 1L)
+    // an attempt that never committed: generation 1's vectors again as
+    // generation 7, which no manifest names
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$d/vectors/gen=1"), new java.io.File(s"$d/vectors/gen=7"))
+    val live = Seq(0, 1).map(g => parquetFiles(s"$d/vectors/gen=$g").size).sum
+    assert(live > 0 && parquetFiles(s"$d/vectors/gen=7").nonEmpty)
     val one = VectorOps.binaryQueries(emb).limit(1)
-    val (_, refined) = BinaryStore.serveStages(spark, dir, one, 20)
-    refined.collect()
-    def scans(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[(String, Long)] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        scans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        scans(q.plan)
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        Seq(f.relation.location.rootPaths.head.toString ->
-          f.metrics("numFiles").value)
-      case other =>
-        other.children.flatMap(scans) ++
-          other.subqueries.flatMap(scans) ++
-          other.innerChildren.collect {
-            case sp: org.apache.spark.sql.execution.SparkPlan => sp
-          }.flatMap(scans)
+    val (shortlist, _) = BinaryStore.serveStages(spark, d, one, 20)
+    val ids = shortlist.select($"neighbor").as[Long].collect().toSet
+    val fetch = BinaryStore.refineFetch(spark, d,
+      graft.operators.FlatManifest.read(spark, d), shortlist)
+    val rows = fetch.collect().map(_.getAs[Long]("vec_id"))
+    // exactly the shortlist ids, each once
+    assert(ids.size == 20 && rows.sorted.toSeq == ids.toSeq.sorted)
+    // from the live generations' files only
+    val read = scans(fetch.queryExecution.executedPlan)
+      .filter(_.relation.location.rootPaths.exists(_.toString.contains("vectors")))
+      .map(_.metrics("numFiles").value).sum
+    assert(read == live,
+      s"the fetch read $read vectors files, the live generations hold $live")
+  }
+
+  test("a 256-row addBatch publishes exactly one vectors file and one codes file") {
+    import spark.implicits._
+    val d = java.nio.file.Files
+      .createTempDirectory("graft_binstore_files").toString
+    BinaryStore.build(VectorOps.quantized(spark, sfDir), d)
+    val rng = new scala.util.Random(7)
+    val batch = (0 until 256).map(i =>
+      (1000000L + i, Seq.fill(64)(rng.nextInt(2001) - 1000L))).toDF("vec_id", "qv")
+    assert(batch.rdd.getNumPartitions > 1)
+    BinaryStore.addBatch(spark, d, batch, gen = 1L)
+    Seq("codes", "vectors").foreach { root =>
+      val files = parquetFiles(s"$d/$root/gen=1")
+      assert(files.size == 1, s"$root generation 1 holds ${files.size} files")
     }
-    val vecScans = scans(refined.queryExecution.executedPlan)
-      .filter(_._1.contains("vectors")).distinct
-    assert(vecScans.nonEmpty)
-    val scanned = vecScans.map(_._2).sum
-    // 20 shortlist ids touch at most 20 of the 64 bucket files
-    assert(scanned > 0 && scanned <= 20,
-      s"vector fetch read $scanned bucket files for one query")
+    // and nothing below the generation directory
+    assert(new java.io.File(s"$d/vectors/gen=1").listFiles().forall(_.isFile))
   }
 
   test("store serve stream equals the batch serve at every boundary") {

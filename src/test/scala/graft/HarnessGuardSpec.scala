@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * store on one generation kernel: manifest commits, generation
   * publishes and the lifecycle bodies live only in `GenStore`; the
   * stores' serving relations are pinned only in the one `ServingCache`;
+  * the binary stores' vectors are one directory per generation, with no
+  * bucket partition;
   * `IvfIndex` on one posting writer and one layout probe; and the LSH
   * family on one
   * banding kernel in `TextOps` (one MinHash band fold, one SimHash
@@ -78,6 +80,17 @@ class HarnessGuardSpec extends AnyFunSuite {
     val pins = sources.collect { case (`cache`, t) =>
       count(t, """\.persist\(""".r) }
     assert(pins == Seq(1), s"$cache pins in ${pins.sum} places, not one")
+  }
+
+  test("the binary stores' vectors root has no bucket fan-out") {
+    val copies = for {
+      n <- Seq("GenStore", "BinaryStore", "IvfBinaryStore")
+      p = s"graft/operators/$n.scala"
+      (_, t) <- sources.find(_._1 == p).toSeq
+      re <- Seq("""\bBuckets\b""".r, "\"bucket\"".r)
+      if count(t, re) > 0
+    } yield p -> re.toString
+    assert(copies.isEmpty, s"bucket partitioning in the binary stores: $copies")
   }
 
   test("IvfIndex writes postings in one place and reads its layout from the store") {

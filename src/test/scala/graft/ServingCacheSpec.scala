@@ -175,6 +175,50 @@ class ServingCacheSpec extends SparkSpec {
     }
   }
 
+  // the benchmark's store shape: an 8,192-row build, 256-row adds,
+  // 32-id deletes
+  private val bench = corpus(5, 0 until 8192)
+  private val benchAdd = corpus(6, 10000 until 10256)
+  private val benchDel = (0L until 8192L by 256L) :+ 10003L
+
+  test("the 8,192-row build's vectors pin to >= defaultParallelism partitions") {
+    val d = tmp("bench_pin")
+    BinaryStore.build(df(bench), d)
+    stores.head.cached(d).collect()
+    val Seq(pin) = ServingCache.pinnedRdds(spark, d).toSeq
+    val parts = spark.sparkContext.getPersistentRDDs(pin).getNumPartitions
+    assert(parts >= spark.sparkContext.defaultParallelism,
+      s"generation 0 pinned in $parts partitions")
+  }
+
+  test("a bench-shaped BinaryStore compaction runs <= 8 jobs; cached equals uncached throughout") {
+    withIndexRetention(2) {
+      val st = stores.head
+      val d = tmp("bench_compact")
+      st.build(df(bench), d)
+      check(st, d, "after build")
+      st.add(d, df(benchAdd), 1L)
+      check(st, d, "after add")
+      st.delete(d, { import spark.implicits._; benchDel.toDF("vec_id") })
+      check(st, d, "after delete")
+      val (report, jobs) = jobsOf(BinaryStore.compact(spark, d).collect())
+      assert(jobs.size <= 8, s"compaction ran ${jobs.size} jobs: $jobs")
+      assert(report.map(_.toSeq) sameElements Seq(Seq(8448L, 33L, 2L, 8415L, 1L)),
+        report.mkString(","))
+      check(st, d, "after compact")
+    }
+  }
+
+  test("IvfIndex.addBatch runs <= 7 jobs and leaves its report lazy") {
+    val d = tmp("ivf_add_jobs")
+    IvfIndex.build(df(bench), d)
+    val (report, jobs) = jobsOf(IvfIndex.addBatch(spark, d, df(benchAdd), 1L))
+    assert(jobs.size <= 7, s"addBatch ran ${jobs.size} jobs: $jobs")
+    val rows = report.collect()
+    assert(rows.length == 16 && rows.map(_.getAs[Long]("n_added")).sum == 256L &&
+      rows.map(_.getAs[Long]("n_total")).sum == 8448L, rows.mkString(","))
+  }
+
   test("an ended application leaves nothing pinned or held") {
     val st = stores.head
     val d = tmp("app_end")
